@@ -46,17 +46,17 @@ def _expected_values_sql() -> str:
     """
 
 
-#: Per-session memo of the demo fact table: the pipeline output is
-#: deterministic and already localCheckpointed, so consumer queries
-#: (annual agg, wide reconstruction) reuse the materialized table
-#: instead of re-running ingest+normalize per query.
+#: Per-session memo of the demo fact plan: the pipeline output is
+#: deterministic, so consumer queries (annual agg, wide
+#: reconstruction) reuse one built plan instead of re-ingesting the
+#: workbook and re-building the normalize plan per query.
 _FACT_MEMO: dict["SparkSession", DataFrame] = {}
 
 
 @query("epe_pipeline_demo", oracle=_expected_values_sql())
 def epe_pipeline_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full EPE pipeline (ingest → normalize A/B → 5-branch semantic
-    map → selector key) over the demo workbook; sf_dir is unused —
+    """Full EPE pipeline (ingest → normalize A/B → single-projection
+    semantic map → selector key) over the demo workbook; sf_dir is unused —
     the workbook is the reference's own data shape, not star-schema."""
     from epe_data_wrangling_spark.plans.epe_demo import demo_workbook
     from epe_data_wrangling_spark.plans.epe_pipeline import run_pipeline

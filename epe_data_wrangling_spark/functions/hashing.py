@@ -33,12 +33,6 @@ from epe_data_wrangling_spark.functions.expr import bind
 HEX_DIGITS = "0123456789abcdef"
 
 
-def seeded_md5(col: Column | str, seed: int) -> Column:
-    """md5 of ``seed|value`` — the k-th member of a seeded hash family."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.md5(F.concat(F.lit(f"{seed}|"), c))
-
-
 #: Mersenne prime modulus of the universal hash family.
 MINHASH_P = 2**31 - 1
 #: Frozen (a, b) coefficients (numpy default_rng(11)) — shared

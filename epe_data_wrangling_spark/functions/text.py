@@ -76,10 +76,6 @@ def stopword_ratio_of(w: Column, lang: str) -> Column:
     return F.when(F.size(w) > 0, hits / F.size(w)).otherwise(F.lit(0.0))
 
 
-def stopword_ratio(col: Column | str, lang: str = "en") -> Column:
-    return bind(words(col), lambda w: stopword_ratio_of(w, lang))
-
-
 def punct_ratio(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     n = F.length(c)

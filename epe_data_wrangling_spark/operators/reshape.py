@@ -38,15 +38,6 @@ def unpivot_regex(
     return df.unpivot(list(id_cols), value_cols, var_name, value_name)
 
 
-def split_col(df: DataFrame, col: str, into: Sequence[str], sep: str) -> DataFrame:
-    """tidyr::separate (`tratamento_epe.R:187` — R3): split one string
-    column into several by a separator; the source column is dropped."""
-    parts = F.split(F.col(col), sep)
-    for i, name in enumerate(into):
-        df = df.withColumn(name, parts.getItem(i))
-    return df.drop(col)
-
-
 def pivot_wide(
     df: DataFrame,
     *,

@@ -1,4 +1,5 @@
-"""Window-shaped operators: LOCF fill, grouped top-k, sessionization.
+"""Window-shaped operators: LOCF fill, global ranks and prefix scans,
+sessionization.
 
 ``locf`` is the engine form of the reference's only window operator
 (zoo::na.locf0, `tratamento_epe.R:100,140` — W1/W2 in SURVEY §2.6):
@@ -34,23 +35,6 @@ def locf(
     )
     c = F.col(col) if isinstance(col, str) else col
     return F.last(c, ignorenulls=True).over(w)
-
-
-def topk_per_group(
-    df: DataFrame,
-    *,
-    partition_by: Sequence[str],
-    order_by: Sequence[Column],
-    k: int,
-    rank_col: str = "rn",
-) -> DataFrame:
-    """Top-k rows per group via row_number. Callers must pass a
-    deterministic (tie-broken) order_by."""
-    w = Window.partitionBy(*partition_by).orderBy(*order_by)
-    return (
-        df.withColumn(rank_col, F.row_number().over(w).cast("int"))
-        .filter(F.col(rank_col) <= k)
-    )
 
 
 def _range_shards(df: DataFrame, value: Column, n_shards: int | None) -> DataFrame:

@@ -2,12 +2,14 @@
 (SURVEY §3): ingest → per-sheet normalize → union → semantic map →
 partitioned parquet sink.
 
-One Spark job: ingest is driver-side pandas (sheets are small), every
-transformation is lazy, and the only wide operations are the
-per-sheet LOCF window and nothing else — the pipeline scales linearly
-with fact-table size. The sink partitions by month (`data`), the
-natural pruning key for the monthly-refresh consumption data
-(SURVEY §4.4).
+Ingest is driver-side (sheets are small, §4.3.1) and hands Spark each
+sheet as an Arrow-built frame, so no Python worker runs. Every
+transformation is lazy and the semantic map is one filter plus one
+projection, so ``run_pipeline`` submits zero Spark jobs: the first job
+is the sink's. The only wide operations are the per-sheet LOCF window
+and the sink's rebalance exchange on the month. The sink partitions by
+month (`data`), the natural pruning key for the monthly-refresh
+consumption data (SURVEY §4.4).
 """
 
 from __future__ import annotations
@@ -23,33 +25,27 @@ def run_pipeline(
     source: str | dict[str, DataFrame],
     *,
     split_sheet: str = "CONSUMIDORES TOTAIS",
-    materialize: bool = True,
 ) -> DataFrame:
     """Full pipeline. ``source`` is a workbook path or an
     already-ingested ``{sheet: grid DataFrame}`` dict (ordered).
 
-    ``materialize`` localCheckpoints the normalized union before the
-    five-branch semantic fan-out (C3): the union-of-N-sheets plan is
-    deep (a window + unpivot subtree per sheet), and without lineage
-    truncation Catalyst re-analyzes that whole tree once per branch —
-    driver time quadratic-ish in sheets × branches. The checkpoint
-    pins the (small) normalized table and the semantic stage plans
-    over a leaf. The fact table is the scale-bearing output; the
-    normalized workbook is bounded by workbook size (§4.3.1)."""
+    Returns a lazy plan: the normalized union feeds the single-pass
+    semantic map directly, with no checkpoint or cache in between."""
     if isinstance(source, str):
         from epe_data_wrangling_spark.sources.workbook import read_workbook
 
         sheets = read_workbook(spark, source)
     else:
         sheets = source
-    normalized = normalize_workbook(sheets, split_sheet=split_sheet)
-    if materialize:
-        normalized = normalized.localCheckpoint(eager=True)
-        return semantic_map(normalized, cache=False)
-    return semantic_map(normalized)
+    return semantic_map(normalize_workbook(sheets, split_sheet=split_sheet))
 
 
 def write_fact(df: DataFrame, path: str, *, mode: str = "overwrite") -> None:
     """S5 — columnar, splittable, month-partitioned sink (the
-    scale-correct analogue of `tratamento_epe.R:290`'s saveRDS)."""
-    df.write.mode(mode).partitionBy("data").parquet(path)
+    scale-correct analogue of `tratamento_epe.R:290`'s saveRDS).
+
+    The rebalance hint shuffles rows by month before the write, so AQE
+    sizes the write tasks: small months share one file each, and a
+    skewed month is split instead of landing in one task. The file
+    count tracks the months, not tasks × months."""
+    df.hint("rebalance", "data").write.mode(mode).partitionBy("data").parquet(path)

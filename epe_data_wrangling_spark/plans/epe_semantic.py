@@ -1,10 +1,13 @@
 """Final semantic mapping — the reference's
 ``tratamento_dados_completos_epe`` (`tratamento_epe.R:210-278`).
 
-Input: the normalized union (atributo_1..4, data, valor). One parent,
-five semantic branch plans (C3) — the parent is cached before fan-out
-so the whole normalize stage is not recomputed five times (SURVEY
-§4.3.3) — then a name-aligned union and the ``chave_seletora``
+Input: the normalized union (atributo_1..4, data, valor). The
+reference's five semantic branches (C3) filter on mutually exclusive
+predicates over ``atributo_1``, so their union is one filter and their
+derivations one projection: each output column is a ``when`` chain
+over the five predicates. ``atributo_1`` is a literal per sheet, so
+Catalyst folds the chains per sheet and prunes the excluded sheets
+from the plan. The projection also adds the ``chave_seletora``
 selector key (X9, `R:274`), which exists precisely so downstream
 consumers can *filter* instead of join (`tratamento_epe.rmd:275`).
 
@@ -14,14 +17,15 @@ abertura, atributo string, data date, valor double``.
 
 from __future__ import annotations
 
+import functools
+import operator
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from epe_data_wrangling_spark.functions.cleaning import regexp_extract_na
 
 FINAL_COLS = ("chave_seletora", "mercado", "dado", "classe", "abertura", "atributo", "data", "valor")
-
-_BRANCH_COLS = ("mercado", "dado", "classe", "abertura", "atributo", "data", "valor")
 
 #: Class-name extraction — anchored variant used on sheet names
 #: (`R:214`), unanchored on UF sheet names / CATIVO row labels
@@ -59,87 +63,69 @@ def _paste_key(dado: Column, mercado: Column, classe: Column, abertura: Column) 
     )
 
 
-def semantic_map(normalized: DataFrame, *, cache: bool = True) -> DataFrame:
-    """Five filter+derive branch plans over one cached parent, then
-    union-by-name and the selector key. All branch logic is pure
+def semantic_map(normalized: DataFrame) -> DataFrame:
+    """One filter and one projection: each output column is a single
+    ``when`` chain over the five mutually exclusive branch predicates
+    on ``atributo_1`` — no fan-out, no union. All branch logic is pure
     Catalyst expressions (when/otherwise, regexp, upper) — zero UDFs."""
-    t = normalized.cache() if cache else normalized
     a1, a2, a3, a4 = (F.col(f"atributo_{i}") for i in range(1, 5))
-
-    # Branch 1 (`R:212-221`): market TOTAL × class sheets, broken down
-    # by region/subsystem (or CLASSE rows).
-    b1 = (
-        t.filter(
-            ~a1.isin("TOTAL", "CONSUMO POR UF")
-            & ~a1.rlike("CATIVO|INDUSTRIAL GENERO|POR (U|)F$")
-        )
-        .withColumn("classe", _clean_classe(regexp_extract_na(a1, CLASS_ANCHORED)))
-        .withColumn("dado", _dado(a2))
-        .withColumn("abertura", a3)
-        .withColumn("atributo", F.upper(a4))
-        .withColumn("mercado", F.lit("TOTAL"))
-        .select(*_BRANCH_COLS)
-    )
-
-    # Branch 2 (`R:223-231`): industrial consumption by industry
-    # branch (RAMO); constants except the sector label.
-    b2 = (
-        t.filter(a1 == "INDUSTRIAL GENERO")
-        .withColumn("classe", F.lit("INDUSTRIAL"))
-        .withColumn("dado", F.lit("CONSUMO"))
-        .withColumn("abertura", F.lit("RAMO"))
-        .withColumn("atributo", a3)
-        .withColumn("mercado", F.lit("TOTAL"))
-        .select(*_BRANCH_COLS)
-    )
-
-    # Branch 3 (`R:233-242`): market TOTAL × UF sheets.
-    b3 = (
-        t.filter(a1.rlike("POR (U|)F$") & ~a1.rlike("CATIVO|CONSUMO POR UF"))
-        .withColumn("classe", _clean_classe(regexp_extract_na(a1, CLASS_UNANCHORED)))
-        .withColumn("dado", _dado(a2))
-        .withColumn("abertura", F.lit("UF"))
-        .withColumn("atributo", F.upper(a3))
-        .withColumn("mercado", F.lit("TOTAL"))
-        .select(*_BRANCH_COLS)
-    )
-
-    # Branch 4 (`R:244-255`): captive market by region/subsystem; the
-    # class lives in the row label (atributo_4); class rows then get
+    dado = _dado(a2)
+    # Branch 4's class lives in the row label; class rows get
     # abertura/atributo reset to TOTAL (X8, `R:254`).
-    b4_classe = _clean_classe(regexp_extract_na(F.upper(a4), CLASS_UNANCHORED))
-    b4 = (
-        t.filter(a1 == "CATIVO")
-        .withColumn("classe", F.coalesce(b4_classe, F.lit("TOTAL")))
-        .withColumn("dado", _dado(a2))
-        .withColumn("abertura", a3)
-        .withColumn("atributo", F.upper(a4))
-        .withColumn("mercado", F.lit("CATIVO"))
-        .select(*_BRANCH_COLS)
+    b4_classe = F.coalesce(
+        _clean_classe(regexp_extract_na(F.upper(a4), CLASS_UNANCHORED)), F.lit("TOTAL")
     )
-    for c in ("abertura", "atributo"):
-        b4 = b4.withColumn(
-            c, F.when(F.col("classe") != "TOTAL", F.lit("TOTAL")).otherwise(F.col(c))
-        )
-    b4 = b4.select(*_BRANCH_COLS)
+    b4_class_row = b4_classe != "TOTAL"
 
-    # Branch 5 (`R:257-265`): captive market by UF.
-    b5 = (
-        t.filter(a1 == "CONSUMO CATIVO POR UF")
-        .withColumn("classe", F.lit("TOTAL"))
-        .withColumn("dado", _dado(a2))
-        .withColumn("abertura", F.lit("UF"))
-        .withColumn("atributo", F.upper(a3))
-        .withColumn("mercado", F.lit("CATIVO"))
-        .select(*_BRANCH_COLS)
-    )
+    # One row per branch, in R order; plain strings are literals.
+    cols = ("mercado", "dado", "classe", "abertura", "atributo")
+    branches = [
+        # Branch 1 (`R:212-221`): market TOTAL × class sheets, broken
+        # down by region/subsystem (or CLASSE rows).
+        (
+            ~a1.isin("TOTAL", "CONSUMO POR UF")
+            & ~a1.rlike("CATIVO|INDUSTRIAL GENERO|POR (U|)F$"),
+            ("TOTAL", dado, _clean_classe(regexp_extract_na(a1, CLASS_ANCHORED)), a3, F.upper(a4)),
+        ),
+        # Branch 2 (`R:223-231`): industrial consumption by industry
+        # branch (RAMO); constants except the sector label.
+        (a1 == "INDUSTRIAL GENERO", ("TOTAL", "CONSUMO", "INDUSTRIAL", "RAMO", a3)),
+        # Branch 3 (`R:233-242`): market TOTAL × UF sheets.
+        (
+            a1.rlike("POR (U|)F$") & ~a1.rlike("CATIVO|CONSUMO POR UF"),
+            (
+                "TOTAL",
+                dado,
+                _clean_classe(regexp_extract_na(a1, CLASS_UNANCHORED)),
+                "UF",
+                F.upper(a3),
+            ),
+        ),
+        # Branch 4 (`R:244-255`): captive market by region/subsystem.
+        (
+            a1 == "CATIVO",
+            (
+                "CATIVO",
+                dado,
+                b4_classe,
+                F.when(b4_class_row, "TOTAL").otherwise(a3),
+                F.when(b4_class_row, "TOTAL").otherwise(F.upper(a4)),
+            ),
+        ),
+        # Branch 5 (`R:257-265`): captive market by UF.
+        (a1 == "CONSUMO CATIVO POR UF", ("CATIVO", dado, "TOTAL", "UF", F.upper(a3))),
+    ]
 
-    # U2 (`R:267-273`) + X9 key + key-first ordering (`R:274-275`).
-    out = b1
-    for b in (b2, b3, b4, b5):
-        out = out.unionByName(b)
-    out = out.withColumn(
-        "chave_seletora",
-        _paste_key(F.col("dado"), F.col("mercado"), F.col("classe"), F.col("abertura")),
-    )
-    return out.select(*FINAL_COLS)
+    # U2 (`R:267-273`): the branch filters' union is one filter; the
+    # branches' derivations are one projection. X9 key + key-first
+    # ordering (`R:274-275`).
+    keep = functools.reduce(operator.or_, (pred for pred, _ in branches))
+    out = {}
+    for j, c in enumerate(cols):
+        chain = F  # F.when starts the chain, Column.when extends it
+        for pred, values in branches:
+            chain = chain.when(pred, values[j])
+        out[c] = chain
+    out["chave_seletora"] = _paste_key(out["dado"], out["mercado"], out["classe"], out["abertura"])
+    out["data"], out["valor"] = F.col("data"), F.col("valor")
+    return normalized.filter(keep).select(*[out[c].alias(c) for c in FINAL_COLS])

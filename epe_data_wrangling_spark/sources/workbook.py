@@ -14,6 +14,9 @@ Spark contract implemented here:
   0-based ``_row_idx`` **before** ``createDataFrame``, because Spark
   provides no row-order guarantee and ``monotonically_increasing_id``
   is not stable across re-planning.
+- Each sheet reaches Spark as a ``pyarrow.Table``: the JVM decodes the
+  Arrow batches itself, so building a frame submits no job and no
+  Python worker ever serves sheet rows.
 - All data cells are strings (read_xls parity); typed casts happen in
   the normalize stage with ``try_cast`` (R's as.numeric-to-NA).
 - At cluster scale the same grid contract can be produced by a
@@ -61,7 +64,13 @@ def readxl_names(header: Sequence[Cell]) -> list[str]:
 
 def grid_to_df(spark: SparkSession, grid: Grid, sheet: str) -> DataFrame:
     """One raw sheet grid (first row = header) → string DataFrame with
-    ``_sheet`` and 0-based ``_row_idx`` over the data rows (S3)."""
+    ``_sheet`` and 0-based ``_row_idx`` over the data rows (S3).
+
+    The frame is built from a ``pyarrow.Table``: Spark parses the Arrow
+    batches in the JVM (a local relation at workbook size), so the
+    sheet never passes through a ``PythonRDD`` or a Python worker."""
+    import pyarrow as pa
+
     header, *rows = grid
     names = readxl_names(header)
     width = len(names)
@@ -73,10 +82,15 @@ def grid_to_df(spark: SparkSession, grid: Grid, sheet: str) -> DataFrame:
         (sheet, i, *[(None if c is None else str(c)) for c in (list(r) + [None] * width)[:width]])
         for i, r in enumerate(rows)
     ]
+    columns = list(zip(*data)) if data else [()] * (width + 2)
+    types = [pa.string(), pa.int64()] + [pa.string()] * width
+    table = pa.Table.from_arrays(
+        [pa.array(c, t) for c, t in zip(columns, types)], names=schema.names
+    )
     # One partition per sheet: sheets are small by contract (§4.3.1),
     # and a single partition keeps the per-sheet LOCF window sort
     # shuffle-free while sheets still parallelize across each other.
-    df = spark.createDataFrame(data, schema).coalesce(1)
+    df = spark.createDataFrame(table, schema).coalesce(1)
     # Driver-side ingest already holds the rows, so expose them for
     # plan-time inspection (title cell, Shape-B year header — SURVEY
     # §4.3.2's inspect-then-plan points). Saves one Spark job per

@@ -87,12 +87,3 @@ def stream_events(
         df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
-
-def stream_rate(spark: SparkSession, rows_per_second: int = 100) -> DataFrame:
-    """Built-in rate source — the standing load generator for manual
-    latency/throughput probes (not used by the correctness gate)."""
-    return (
-        spark.readStream.format("rate")
-        .option("rowsPerSecond", rows_per_second)
-        .load()
-    )

@@ -273,3 +273,29 @@ class TestGoldenProvenance:
         for cell, w in self.WITNESSES.items():
             t = (*w[:7], float(w[7]))
             assert t in got, (cell, w)
+
+
+def test_grid_to_df_lineage_has_no_python_rdd(spark):
+    """Sheet frames are built from Arrow in the JVM: no PythonRDD, so
+    no Python worker serves the sheet rows."""
+    from epe_data_wrangling_spark.plans.epe_demo import demo_workbook
+
+    for sheet, df in demo_workbook(spark).items():
+        lineage = df._jdf.queryExecution().toRdd().toDebugString()
+        assert "PythonRDD" not in lineage, (sheet, lineage)
+
+
+def test_run_pipeline_submits_no_jobs(spark):
+    """Ingest, normalize and the single-projection semantic map are all
+    plan building: the first Spark job is the consumer's."""
+    from epe_data_wrangling_spark.plans.epe_demo import demo_workbook
+
+    sc = spark.sparkContext
+    group = "test_run_pipeline_submits_no_jobs"
+    sc.setJobGroup(group, "run_pipeline job count")
+    try:
+        fact = run_pipeline(spark, demo_workbook(spark))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert fact.count() == 288

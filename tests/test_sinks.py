@@ -3,6 +3,8 @@ pruning on read-back, CSV and JSON interchange."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from epe_data_wrangling_spark.sources import sinks
@@ -58,6 +60,13 @@ def test_epe_fact_month_partitioned_write(spark, tmp_path):
     out = str(tmp_path / "epe_fact")
     fact = run_pipeline(spark, demo_workbook(spark))
     write_fact(fact, out)
+
+    # the rebalance exchange before the sink leaves one file per month
+    months = [d for d in os.listdir(out) if d.startswith("data=")]
+    assert len(months) == 24
+    for d in months:
+        files = [f for f in os.listdir(os.path.join(out, d)) if f.endswith(".parquet")]
+        assert len(files) == 1, (d, files)
 
     back = spark.read.parquet(out)
     assert back.count() == fact.count()
