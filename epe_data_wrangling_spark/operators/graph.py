@@ -33,8 +33,13 @@ this module exists for the 100 TB training-data-pipeline posture
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+#: Serializes `_pin`'s get/set/restore of the session-global AQE flag.
+_AQE_PIN_LOCK = threading.Lock()
 
 
 def _pin(df: DataFrame) -> DataFrame:
@@ -65,14 +70,22 @@ def _pin(df: DataFrame) -> DataFrame:
     (pagerank's 1-row ``nn`` checkpoint) materializes the whole
     edges→nodes chain in a single job instead of one serialized job
     per pin (measured r17: eager pins cost ~1.3 s of extra
-    job-serialization at sf0.1)."""
+    job-serialization at sf0.1).
+
+    SINGLE-THREADED ONLY with respect to the session: the AQE flag is
+    session-global, so any other query planned on the same session
+    while a pin is in flight (e.g. a streaming micro-batch thread)
+    compiles with AQE OFF. The get/set/restore runs under a
+    module-level lock, so concurrent pins cannot interleave and leave
+    the flag wrong — but the lock does not shield other planners."""
     spark = df.sparkSession
-    old = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        return df.localCheckpoint(eager=False)
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", old)
+    with _AQE_PIN_LOCK:
+        old = spark.conf.get("spark.sql.adaptive.enabled", "true")
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
+        try:
+            return df.localCheckpoint(eager=False)
+        finally:
+            spark.conf.set("spark.sql.adaptive.enabled", old)
 
 
 def _damped_update(nodes: DataFrame, nn: DataFrame, s: DataFrame,

@@ -144,7 +144,17 @@ def _cells_array(centroids: DataFrame, *, vec_col: str, id_col: str) -> DataFram
     row holding ``_cells`` = cell-sorted array<struct<cell, cv>> — the
     broadcast side of the row-wise argmax below. Empty centroids give
     zero rows (the ``size > 0`` filter), preserving the former inner
-    join's empty-result semantics."""
+    join's empty-result semantics. The cell id must be NUMERIC — the
+    tie-break negates it (`_best_cell`) — so any other type raises a
+    TypeError here instead of an analysis error far downstream."""
+    id_type = dict(centroids.dtypes)[id_col]
+    if not id_type.startswith(
+        ("tinyint", "smallint", "int", "bigint", "float", "double", "decimal")
+    ):
+        raise TypeError(
+            f"centroid id column {id_col!r} is {id_type}; IVF cell ids must "
+            "be numeric (the lowest-cell tie-break negates them)"
+        )
     return (
         centroids.select(F.col(id_col).alias("cell"), F.col(vec_col).alias("cv"))
         .agg(F.array_sort(F.collect_list(F.struct("cell", "cv"))).alias("_cells"))

@@ -34,10 +34,11 @@ compaction), plus one touched-cell read for the duplicate-id witness
 the broadcast centroids and scan ~probe/K of the index, exactly the
 trained-IVF serve path of `ann_ivf_trained_topk`.
 
-Exactly-once: appends double-count on re-application, so the sink
-follows the module discipline — applied batch_id + source-file
-provenance committed inside the target in the same atomic swap as
-the data; replays skip, new data under a fresh checkpoint raises.
+Exactly-once: appends double-count on re-application, so every sink
+here commits through `streaming.ops._exactly_once_sink` (replays
+skip, new data under a fresh checkpoint raises unless the caller
+declares the handoff with ``adopt=True``), and the maintenance ops
+(vacuum, retrain, rebuild) through its open/commit halves.
 Duplicate-id guard: a batch id that already exists in its assigned
 cell raises (exact for the common duplicate-delivery case — an
 identical vector re-assigns to the identical cell under the frozen
@@ -78,6 +79,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -97,45 +99,12 @@ from epe_data_wrangling_spark.streaming.manifest import (
 )
 from epe_data_wrangling_spark.streaming.ops import (
     STREAM_TIMEOUT_SEC,
-    _atomic_swap,
-    _batch_provenance,
-    _clean_stale_stages,
-    _is_committed_replay,
+    _check_layout,
+    _commit_target,
+    _exactly_once_sink,
+    _open_target,
     _read_sink_meta,
-    _recover_swap,
-    _run_foreach_batch,
 )
-from epe_data_wrangling_spark.streaming.manifest import sweep_orphans
-
-
-def _is_replay_or_handoff(
-    meta: dict, batch_files: set, batch_id: int, tag: str,
-    adopt: bool = False,
-) -> bool:
-    """`_is_committed_replay` with one OPT-IN admissible case — the
-    CHECKPOINT HANDOFF: batch ids are a per-checkpoint counter, so a
-    target adopted by a new stream (a fresh checkpoint over a fresh
-    landing dir — exactly how a plain-append index graduates to the
-    CDC sink) legitimately arrives with batch_id 0 against a
-    committed last_batch_id > 0. When the caller declared the
-    handoff (``adopt=True``) and every file in the batch is
-    NEVER-applied, the batch cannot be a replay (a replay's files
-    are all in applied by definition) — apply it. WITHOUT the
-    declaration the shared helper's fresh-checkpoint witness stands:
-    the same signature also describes a MISWIRED job (the wrong
-    landing dir pointed at an existing target would silently mix two
-    corpora under one quantizer), and the sink cannot tell adoption
-    from accident — only the operator can, so adoption is explicit.
-    A batch MIXING applied and fresh files raises either way."""
-    applied = set(meta.get("applied_files", []))
-    if (
-        adopt
-        and batch_id <= meta["last_batch_id"]
-        and batch_files
-        and not (batch_files & applied)
-    ):
-        return False
-    return _is_committed_replay(meta, batch_files, batch_id, tag)
 
 
 def _next_gen(meta: dict) -> int:
@@ -289,6 +258,48 @@ def _assign_cells(batch: DataFrame, cents: DataFrame, id_col: str) -> DataFrame:
     )
 
 
+def _train_quantizer(vecs: DataFrame, k: int, iters: int, id_col: str,
+                     init: str = "lowest") -> DataFrame:
+    """Train the coarse quantizer on ``vecs`` (``id_col``, ``v``) with
+    the shared Lloyd trainer and re-key it to DENSE 0..k-1 cell ids
+    (`_dense_cids`), checkpointed — it feeds every later job. 'lowest'
+    seeds with the k lowest ids; 'spread' seeds farthest-first on the
+    MATERIALIZED corpus (the sample draw scans it once and Lloyd once
+    per iteration, which would otherwise recompute its lineage each
+    time; the k-1 argmax passes run on the seeding sample)."""
+    ev = vecs.withColumn("vv", V.dot(F.col("v"), F.col("v")))
+    seeds = None
+    if init == "spread":
+        ev = ev.localCheckpoint(eager=True)
+        seeds = farthest_first_seeds(ev, k, id_col=id_col)
+    return _dense_cids(
+        means_to_centroids(lloyd_means(ev, k, iters, id_col=id_col, init=seeds))
+    ).localCheckpoint(eager=True)
+
+
+def _cell_counts(rows: DataFrame, rows_per_entry: int = 1) -> list:
+    """(cell, entries) pairs of a ``_kb``-bucketed frame, from one
+    delta-sized agg (cell-count rows collected). PQ codes carry
+    ``pq_m`` rows per vector — pass it so occupancy counts VECTORS."""
+    return [
+        (int(r["_kb"]), int(r["c"]) // rows_per_entry)
+        for r in rows.groupBy("_kb").agg(F.count(F.lit(1)).alias("c")).collect()
+    ]
+
+
+def _stage_quantizers(target_dir: str, stage: str, fresh: dict) -> None:
+    """Carry the quantizer dirs (``centroids``, ``codebooks``) into the
+    stage: a committed (frozen) dir copies byte-identical — no Spark
+    round-trip, no re-serialization drift; otherwise the freshly
+    trained frame ``fresh[sub]`` is written, if there is one."""
+    for sub, df in fresh.items():
+        committed = os.path.join(target_dir, sub)
+        if os.path.isdir(committed):
+            shutil.copytree(committed, os.path.join(stage, sub))
+        elif df is not None:
+            df.write.mode("overwrite").parquet(os.path.join(stage, sub))
+
+
 def ivf_index_foreach_batch(
     vectors: DataFrame,
     target_dir: str,
@@ -307,20 +318,10 @@ def ivf_index_foreach_batch(
     The bootstrap batch trains the quantizer; every batch (bootstrap
     included) appends its vectors to the cell-bucketed store."""
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
+    def _step(batch_df: DataFrame, batch_id: int, meta: dict, stage: str):
         spark = batch_df.sparkSession
-        _recover_swap(target_dir)
-        _clean_stale_stages(target_dir)
-        sweep_orphans(target_dir)
-        meta = _read_sink_meta(target_dir)
-        batch_files = _batch_provenance(batch_df)
-        applied = set(meta.get("applied_files", []))
-        if _is_replay_or_handoff(
-            meta, batch_files, batch_id, "ivf_index", adopt
-        ):
-            return
         if batch_df.isEmpty():
-            return
+            return None
         gen = _next_gen(meta)
         if meta.get("pq_layout") is not None:
             # cross-sink witness: the whole-dir atomic swap would
@@ -343,14 +344,7 @@ def ivf_index_foreach_batch(
                 "locator sidecar stale; use "
                 "ivf_index_changes_foreach_batch (op='I') instead"
             )
-        committed_k = meta.get("k_cells")
-        if committed_k is not None and committed_k != k_cells:
-            raise RuntimeError(
-                f"ivf_index sink: target was committed with k_cells="
-                f"{committed_k} but the sink is configured with "
-                f"{k_cells} — the stored cell layout would be misread; "
-                "use the committed value or rebuild the target"
-            )
+        _check_layout(meta, "ivf_index", "k_cells", k_cells)
         batch = batch_df.select(
             id_col, F.col(vec_col).cast("array<double>").alias("v")
         )
@@ -359,15 +353,8 @@ def ivf_index_foreach_batch(
         manifest = read_manifest(target_dir, "vectors")
         _require_gen_schema(manifest, "vectors", "ivf_index")
         if manifest is None and not os.path.isdir(cent_dir):
-            # bootstrap: this batch IS the training corpus; re-key the
-            # trained centroids dense 0..k-1 (vec_id-seeded cids can
-            # exceed int32 — see _dense_cids)
-            ev = batch.withColumn("vv", V.dot(F.col("v"), F.col("v")))
-            cents = _dense_cids(
-                means_to_centroids(
-                    lloyd_means(ev, k_cells, train_iters, id_col=id_col)
-                )
-            ).localCheckpoint(eager=True)  # barrier: feeds every later job
+            # bootstrap: this batch IS the training corpus
+            cents = _train_quantizer(batch, k_cells, train_iters, id_col)
         else:
             cents = spark.read.parquet(cent_dir)
         delta = (
@@ -384,12 +371,7 @@ def ivf_index_foreach_batch(
                 eager=True  # assignment feeds the guard, the commit
             )
         )
-        delta_counts = [
-            (int(r["_kb"]), int(r["c"]))
-            for r in delta.groupBy("_kb")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .collect()
-        ]
+        delta_counts = _cell_counts(delta)
         touched = sorted(b for b, _ in delta_counts)
         existing = read_store(
             spark, target_dir, "vectors", buckets=touched, manifest=manifest
@@ -410,42 +392,25 @@ def ivf_index_foreach_batch(
                     "batch replay (appending would duplicate it); dedup "
                     "upstream or rebuild the target"
                 )
-        stage = f"{target_dir}.stage-{batch_id}"
         os.makedirs(stage, exist_ok=True)
         write_store_delta(
             spark, delta, target_dir, "vectors", stage,
             batch_id=batch_id, touched=touched, manifest=manifest,
             append=True,
         )
-        if os.path.isdir(cent_dir):
-            # frozen quantizer: byte-identical carry into the stage (no
-            # per-batch Spark round-trip, no re-serialization drift)
-            import shutil
+        _stage_quantizers(target_dir, stage, {"centroids": cents})
+        return {
+            "last_gen": gen,
+            "k_cells": k_cells,
+            **_occupancy_meta(
+                meta.get("cell_counts"), delta_counts, warn_skew=warn_skew,
+            ),
+        }
 
-            shutil.copytree(cent_dir, os.path.join(stage, "centroids"))
-        else:
-            cents.write.mode("overwrite").parquet(
-                os.path.join(stage, "centroids")
-            )
-        with open(os.path.join(stage, "_ivm_meta.json"), "w") as f:
-            json.dump(
-                {
-                    # max(): a checkpoint handoff restarts batch ids at
-                    # 0 — the committed high-water mark must not regress
-                    "last_batch_id": max(batch_id, meta["last_batch_id"]),
-                    "last_gen": gen,
-                    "k_cells": k_cells,
-                    "applied_files": sorted(applied | batch_files),
-                    **_occupancy_meta(
-                        meta.get("cell_counts"), delta_counts,
-                        warn_skew=warn_skew,
-                    ),
-                },
-                f,
-            )
-        _atomic_swap(stage, target_dir, batch_id)
-
-    _run_foreach_batch(vectors, _apply, checkpoint_dir, "ivf_index", timeout_sec)
+    _exactly_once_sink(
+        vectors, target_dir, "ivf_index", _step, adopt=adopt,
+        checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec,
+    )
 
 
 def ivf_index_topk(
@@ -826,27 +791,17 @@ def ivf_index_changes_foreach_batch(
     `ivf_index_foreach_batch` is adopted — with the EXPLICIT
     ``adopt=True`` declaration, since the adopting stream's fresh
     checkpoint is otherwise indistinguishable from a miswired job
-    (`_is_replay_or_handoff`) — by backfilling the locator from the
+    (`ops._is_committed_replay`) — by backfilling the locator from the
     full vectors store ONCE (corpus-sized, the one-time adoption
     cost; every later batch is touched-bucket-sized), after which
     the plain append sink refuses the target (meta ``cdc`` flag) —
     the two lifecycles cannot interleave and strand the locator
     stale."""
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
+    def _step(batch_df: DataFrame, batch_id: int, meta: dict, stage: str):
         spark = batch_df.sparkSession
-        _recover_swap(target_dir)
-        _clean_stale_stages(target_dir)
-        sweep_orphans(target_dir)
-        meta = _read_sink_meta(target_dir)
-        batch_files = _batch_provenance(batch_df)
-        applied = set(meta.get("applied_files", []))
-        if _is_replay_or_handoff(
-            meta, batch_files, batch_id, "ivf_index_changes", adopt
-        ):
-            return
         if batch_df.isEmpty():
-            return
+            return None
         gen = _next_gen(meta)
         if meta.get("pq_layout") is not None:
             raise RuntimeError(
@@ -854,22 +809,8 @@ def ivf_index_changes_foreach_batch(
                 "index (meta carries pq_layout) — committing raw vectors "
                 "over it would destroy the codes store; use a fresh target"
             )
-        committed_k = meta.get("k_cells")
-        if committed_k is not None and committed_k != k_cells:
-            raise RuntimeError(
-                f"ivf_index_changes sink: target was committed with "
-                f"k_cells={committed_k} but the sink is configured with "
-                f"{k_cells} — the stored cell layout would be misread; "
-                "use the committed value or rebuild the target"
-            )
-        committed_lb = meta.get("loc_buckets")
-        if committed_lb is not None and committed_lb != loc_buckets:
-            raise RuntimeError(
-                f"ivf_index_changes sink: target's locator was committed "
-                f"with loc_buckets={committed_lb} but the sink is "
-                f"configured with {loc_buckets} — the key buckets would be "
-                "misread; use the committed value or rebuild the target"
-            )
+        _check_layout(meta, "ivf_index_changes", "k_cells", k_cells)
+        _check_layout(meta, "ivf_index_changes", "loc_buckets", loc_buckets)
         ops = _cdc_validate_ops(
             batch_df, id_col, vec_col, op_col, "ivf_index_changes"
         )
@@ -883,12 +824,7 @@ def ivf_index_changes_foreach_batch(
                     "batch carries no I/U vectors — nothing to train the "
                     "quantizer on"
                 )
-            ev = present.withColumn("vv", V.dot(F.col("v"), F.col("v")))
-            cents = _dense_cids(
-                means_to_centroids(
-                    lloyd_means(ev, k_cells, train_iters, id_col=id_col)
-                )
-            ).localCheckpoint(eager=True)
+            cents = _train_quantizer(present, k_cells, train_iters, id_col)
         else:
             cents = spark.read.parquet(cent_dir)
 
@@ -914,15 +850,9 @@ def ivf_index_changes_foreach_batch(
             .withColumn("_gen", F.lit(gen).cast("bigint"))
             .localCheckpoint(eager=True)
         )
-        delta_counts = [
-            (int(r["_kb"]), int(r["c"]))
-            for r in delta.groupBy("_kb")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .collect()
-        ]
+        delta_counts = _cell_counts(delta)
         touched = sorted(b for b, _ in delta_counts)
         # --- commit: vectors append + tombs append + locator rewrite
-        stage = f"{target_dir}.stage-{batch_id}"
         os.makedirs(stage, exist_ok=True)
         if touched:
             write_store_delta(
@@ -938,34 +868,21 @@ def ivf_index_changes_foreach_batch(
             kk, touched_kk, loc_backfill, loc_manifest,
             retire, retire_cells,
         )
-        if os.path.isdir(cent_dir):
-            import shutil
+        _stage_quantizers(target_dir, stage, {"centroids": cents})
+        return {
+            "last_gen": gen,
+            "k_cells": k_cells,
+            "loc_buckets": loc_buckets,
+            "cdc": True,
+            **_occupancy_meta(
+                meta.get("cell_counts"), delta_counts, retire_counts,
+                warn_skew=warn_skew,
+            ),
+        }
 
-            shutil.copytree(cent_dir, os.path.join(stage, "centroids"))
-        else:
-            cents.write.mode("overwrite").parquet(
-                os.path.join(stage, "centroids")
-            )
-        with open(os.path.join(stage, "_ivm_meta.json"), "w") as f:
-            json.dump(
-                {
-                    "last_batch_id": max(batch_id, meta["last_batch_id"]),
-                    "last_gen": gen,
-                    "k_cells": k_cells,
-                    "loc_buckets": loc_buckets,
-                    "cdc": True,
-                    "applied_files": sorted(applied | batch_files),
-                    **_occupancy_meta(
-                        meta.get("cell_counts"), delta_counts, retire_counts,
-                        warn_skew=warn_skew,
-                    ),
-                },
-                f,
-            )
-        _atomic_swap(stage, target_dir, batch_id)
-
-    _run_foreach_batch(
-        changes, _apply, checkpoint_dir, "ivf_index_changes", timeout_sec
+    _exactly_once_sink(
+        changes, target_dir, "ivf_index_changes", _step, adopt=adopt,
+        checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec,
     )
 
 
@@ -984,12 +901,7 @@ def ivf_index_vacuum(spark, target_dir: str) -> int:
     Handles BOTH index forms (raw ``vectors`` and PQ ``codes`` — the
     store is resolved from the committed meta); ``ivfpq_index_vacuum``
     is the same function under the PQ name."""
-    import shutil
-
-    _recover_swap(target_dir)
-    _clean_stale_stages(target_dir)
-    sweep_orphans(target_dir)
-    meta = _read_sink_meta(target_dir)
+    meta = _open_target(target_dir)
     store = "codes" if meta.get("pq_layout") else "vectors"
     tombs_manifest = read_manifest(target_dir, "tombs")
     if not store_has_files(tombs_manifest):
@@ -1024,13 +936,8 @@ def ivf_index_vacuum(spark, target_dir: str) -> int:
         batch_id=batch_id, touched=dead_cells, manifest=tombs_manifest,
     )
     carry_store(target_dir, "locator", stage)
-    for sub in ("centroids", "codebooks"):
-        committed_dir = os.path.join(target_dir, sub)
-        if os.path.isdir(committed_dir):
-            shutil.copytree(committed_dir, os.path.join(stage, sub))
-    with open(os.path.join(stage, "_ivm_meta.json"), "w") as f:
-        json.dump(meta, f)
-    _atomic_swap(stage, target_dir, batch_id)
+    _stage_quantizers(target_dir, stage, {"centroids": None, "codebooks": None})
+    _commit_target(stage, target_dir, batch_id, meta)
     return len(dead_cells)
 
 
@@ -1071,8 +978,6 @@ def ivf_index_retrain(
     `ivfpq_index_rebuild` (the same contract, corpus re-read from the
     caller's system-of-record vectors table). Returns the number of
     live rows re-assigned."""
-    import shutil
-
     if init not in ("lowest", "spread"):
         # before any I/O or side-effectful maintenance: a bad literal
         # is known bad at call time
@@ -1082,10 +987,7 @@ def ivf_index_retrain(
             "for drifted multi-cluster corpora; see "
             "operators.kmeans.farthest_first_seeds)"
         )
-    _recover_swap(target_dir)
-    _clean_stale_stages(target_dir)
-    sweep_orphans(target_dir)
-    meta = _read_sink_meta(target_dir)
+    meta = _open_target(target_dir)
     if meta.get("pq_layout"):
         raise RuntimeError(
             "ivf_index_retrain: target is a PQ-coded index — its store "
@@ -1123,24 +1025,9 @@ def ivf_index_retrain(
             "that silently swallows all future inserts; rebuild the "
             "target from the stream instead"
         )
-    ev = live.select(id_col, "v").withColumn(
-        "vv", V.dot(F.col("v"), F.col("v"))
+    cents = _train_quantizer(
+        live.select(id_col, "v"), k, train_iters, id_col, init
     )
-    if init == "spread":
-        # materialize before seeding: the sample draw scans the full
-        # corpus once (and Lloyd scans it per iteration below), which
-        # would otherwise re-read the vectors store and recompute the
-        # tombstone anti-join from scratch; the k-1 argmax passes
-        # themselves run on the seeding sample (SPREAD_SAMPLE_CAP)
-        ev = ev.localCheckpoint(eager=True)
-        seed_df = farthest_first_seeds(ev, k, id_col=id_col)
-    else:
-        seed_df = None
-    cents = _dense_cids(
-        means_to_centroids(
-            lloyd_means(ev, k, train_iters, id_col=id_col, init=seed_df)
-        )
-    ).localCheckpoint(eager=True)
     gen_of = live.select(id_col, "_gen")
     reassigned = (
         _assign_cells(live.select(id_col, "v"), cents, id_col)
@@ -1149,12 +1036,7 @@ def ivf_index_retrain(
         .select(id_col, "v", "_kb", "_gen")
         .localCheckpoint(eager=True)  # feeds counts, store, locator
     )
-    new_counts = [
-        (int(r["_kb"]), int(r["c"]))
-        for r in reassigned.groupBy("_kb")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .collect()
-    ]
+    new_counts = _cell_counts(reassigned)
     n_rows = sum(c for _, c in new_counts)
     batch_id = int(meta.get("last_batch_id", 0))
     stage = f"{target_dir}.stage-retrain-{batch_id}"
@@ -1202,9 +1084,7 @@ def ivf_index_retrain(
     new_meta.pop("occupancy_skew", None)
     new_meta.pop("cell_counts", None)
     new_meta.update(_occupancy_meta(None, new_counts, warn_skew=warn_skew))
-    with open(os.path.join(stage, "_ivm_meta.json"), "w") as f:
-        json.dump(new_meta, f)
-    _atomic_swap(stage, target_dir, batch_id)
+    _commit_target(stage, target_dir, batch_id, new_meta)
     return n_rows
 
 
@@ -1263,20 +1143,10 @@ def ivfpq_index_foreach_batch(
         with_cc,
     )
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
+    def _step(batch_df: DataFrame, batch_id: int, meta: dict, stage: str):
         spark = batch_df.sparkSession
-        _recover_swap(target_dir)
-        _clean_stale_stages(target_dir)
-        sweep_orphans(target_dir)
-        meta = _read_sink_meta(target_dir)
-        batch_files = _batch_provenance(batch_df)
-        applied = set(meta.get("applied_files", []))
-        if _is_replay_or_handoff(
-            meta, batch_files, batch_id, "ivfpq_index", adopt
-        ):
-            return
         if batch_df.isEmpty():
-            return
+            return None
         gen = _next_gen(meta)
         if meta.get("cdc"):
             # cross-sink witness (as in the raw sink): a plain append
@@ -1296,15 +1166,8 @@ def ivfpq_index_foreach_batch(
                 "would destroy the vectors store; use "
                 "ivf_index_foreach_batch or a fresh target"
             )
-        committed = meta.get("pq_layout")
-        layout = [k_cells, pq_m, pq_sub, cbk]
-        if committed is not None and committed != layout:
-            raise RuntimeError(
-                f"ivfpq_index sink: target was committed with "
-                f"[k_cells, m, sub, cbk]={committed} but the sink is "
-                f"configured with {layout} — the stored cells/codes would "
-                "be misread; use the committed layout or rebuild the target"
-            )
+        layout = [k_cells, pq_m, pq_sub, cbk]  # [k_cells, m, sub, cbk]
+        _check_layout(meta, "ivfpq_index", "pq_layout", layout)
         batch = batch_df.select(
             id_col, F.col(vec_col).cast("array<double>").alias("v")
         )
@@ -1326,14 +1189,8 @@ def ivfpq_index_foreach_batch(
         _require_gen_schema(manifest, "codes", "ivfpq_index")
         bootstrap = manifest is None and not os.path.isdir(cent_dir)
         if bootstrap:
-            # bootstrap: this batch trains BOTH frozen stages; dense
-            # cell re-key as in the raw sink (see _dense_cids)
-            ev = batch.withColumn("vv", V.dot(F.col("v"), F.col("v")))
-            cents = _dense_cids(
-                means_to_centroids(
-                    lloyd_means(ev, k_cells, train_iters, id_col=id_col)
-                )
-            ).localCheckpoint(eager=True)
+            # bootstrap: this batch trains BOTH frozen stages
+            cents = _train_quantizer(batch, k_cells, train_iters, id_col)
         else:
             cents = spark.read.parquet(cent_dir)
         rsub = _pq_residual_subspaces(batch, cents, id_col, pq_m, pq_sub)
@@ -1353,13 +1210,7 @@ def ivfpq_index_foreach_batch(
             .withColumn("_gen", F.lit(gen).cast("bigint"))
             .localCheckpoint(eager=True)
         )
-        delta_counts = [
-            # codes carry pq_m rows per vector: occupancy counts VECTORS
-            (int(r["_kb"]), int(r["c"]) // pq_m)
-            for r in delta.groupBy("_kb")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .collect()
-        ]
+        delta_counts = _cell_counts(delta, pq_m)
         touched = sorted(b for b, _ in delta_counts)
         existing = read_store(
             spark, target_dir, "codes", buckets=touched, manifest=manifest
@@ -1380,43 +1231,26 @@ def ivfpq_index_foreach_batch(
                     "outside batch replay (appending would duplicate its "
                     "codes); dedup upstream or rebuild the target"
                 )
-        stage = f"{target_dir}.stage-{batch_id}"
         os.makedirs(stage, exist_ok=True)
         write_store_delta(
             spark, delta, target_dir, "codes", stage,
             batch_id=batch_id, touched=touched, manifest=manifest,
             append=True,
         )
-        import shutil
+        _stage_quantizers(
+            target_dir, stage, {"centroids": cents, "codebooks": cb.drop("cc")}
+        )
+        return {
+            "last_gen": gen,
+            "pq_layout": layout,
+            **_occupancy_meta(
+                meta.get("cell_counts"), delta_counts, warn_skew=warn_skew,
+            ),
+        }
 
-        for sub_dir, df_fresh in (("centroids", cents), ("codebooks", cb)):
-            committed_dir = os.path.join(target_dir, sub_dir)
-            if os.path.isdir(committed_dir):
-                # frozen stages: byte-identical carry into the stage
-                shutil.copytree(committed_dir, os.path.join(stage, sub_dir))
-            else:
-                out_df = df_fresh.drop("cc") if sub_dir == "codebooks" else df_fresh
-                out_df.write.mode("overwrite").parquet(
-                    os.path.join(stage, sub_dir)
-                )
-        with open(os.path.join(stage, "_ivm_meta.json"), "w") as f:
-            json.dump(
-                {
-                    "last_batch_id": max(batch_id, meta["last_batch_id"]),
-                    "last_gen": gen,
-                    "pq_layout": layout,
-                    "applied_files": sorted(applied | batch_files),
-                    **_occupancy_meta(
-                        meta.get("cell_counts"), delta_counts,
-                        warn_skew=warn_skew,
-                    ),
-                },
-                f,
-            )
-        _atomic_swap(stage, target_dir, batch_id)
-
-    _run_foreach_batch(
-        vectors, _apply, checkpoint_dir, "ivfpq_index", timeout_sec
+    _exactly_once_sink(
+        vectors, target_dir, "ivfpq_index", _step, adopt=adopt,
+        checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec,
     )
 
 
@@ -1447,6 +1281,8 @@ def ivfpq_index_topk(
         with_cc,
     )
 
+    # read-only: serve must not run `_open_target`, whose stage cleanup
+    # and orphan sweep would race a live writer
     meta = _read_sink_meta(target_dir)
     layout = meta.get("pq_layout")
     if layout is None:
@@ -1591,20 +1427,10 @@ def ivfpq_index_changes_foreach_batch(
         with_cc,
     )
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
+    def _step(batch_df: DataFrame, batch_id: int, meta: dict, stage: str):
         spark = batch_df.sparkSession
-        _recover_swap(target_dir)
-        _clean_stale_stages(target_dir)
-        sweep_orphans(target_dir)
-        meta = _read_sink_meta(target_dir)
-        batch_files = _batch_provenance(batch_df)
-        applied = set(meta.get("applied_files", []))
-        if _is_replay_or_handoff(
-            meta, batch_files, batch_id, "ivfpq_index_changes", adopt
-        ):
-            return
         if batch_df.isEmpty():
-            return
+            return None
         gen = _next_gen(meta)
         if meta.get("k_cells") is not None:
             raise RuntimeError(
@@ -1613,23 +1439,9 @@ def ivfpq_index_changes_foreach_batch(
                 "over it would destroy the vectors store; use "
                 "ivf_index_changes_foreach_batch or a fresh target"
             )
-        committed = meta.get("pq_layout")
-        layout = [k_cells, pq_m, pq_sub, cbk]
-        if committed is not None and committed != layout:
-            raise RuntimeError(
-                f"ivfpq_index_changes sink: target was committed with "
-                f"[k_cells, m, sub, cbk]={committed} but the sink is "
-                f"configured with {layout} — the stored cells/codes would "
-                "be misread; use the committed layout or rebuild the target"
-            )
-        committed_lb = meta.get("loc_buckets")
-        if committed_lb is not None and committed_lb != loc_buckets:
-            raise RuntimeError(
-                f"ivfpq_index_changes sink: target's locator was committed "
-                f"with loc_buckets={committed_lb} but the sink is "
-                f"configured with {loc_buckets} — the key buckets would be "
-                "misread; use the committed value or rebuild the target"
-            )
+        layout = [k_cells, pq_m, pq_sub, cbk]  # [k_cells, m, sub, cbk]
+        _check_layout(meta, "ivfpq_index_changes", "pq_layout", layout)
+        _check_layout(meta, "ivfpq_index_changes", "loc_buckets", loc_buckets)
         ops = _cdc_validate_ops(
             batch_df, id_col, vec_col, op_col, "ivfpq_index_changes"
         )
@@ -1652,12 +1464,7 @@ def ivfpq_index_changes_foreach_batch(
                     "batch carries no I/U vectors — nothing to train the "
                     "quantizer/codebooks on"
                 )
-            ev = present.withColumn("vv", V.dot(F.col("v"), F.col("v")))
-            cents = _dense_cids(
-                means_to_centroids(
-                    lloyd_means(ev, k_cells, train_iters, id_col=id_col)
-                )
-            ).localCheckpoint(eager=True)
+            cents = _train_quantizer(present, k_cells, train_iters, id_col)
             rsub = _pq_residual_subspaces(
                 present, cents, id_col, pq_m, pq_sub
             ).localCheckpoint(eager=True)
@@ -1694,15 +1501,8 @@ def ivfpq_index_changes_foreach_batch(
             .withColumn("_gen", F.lit(gen).cast("bigint"))
             .localCheckpoint(eager=True)
         )
-        delta_counts = [
-            # codes carry pq_m rows per vector: occupancy counts VECTORS
-            (int(r["_kb"]), int(r["c"]) // pq_m)
-            for r in delta.groupBy("_kb")
-            .agg(F.count(F.lit(1)).alias("c"))
-            .collect()
-        ]
+        delta_counts = _cell_counts(delta, pq_m)
         touched = sorted(b for b, _ in delta_counts)
-        stage = f"{target_dir}.stage-{batch_id}"
         os.makedirs(stage, exist_ok=True)
         if touched:
             write_store_delta(
@@ -1719,39 +1519,23 @@ def ivfpq_index_changes_foreach_batch(
             kk, touched_kk, loc_backfill, loc_manifest,
             retire, retire_cells,
         )
-        import shutil
+        _stage_quantizers(
+            target_dir, stage, {"centroids": cents, "codebooks": cb.drop("cc")}
+        )
+        return {
+            "last_gen": gen,
+            "pq_layout": layout,
+            "loc_buckets": loc_buckets,
+            "cdc": True,
+            **_occupancy_meta(
+                meta.get("cell_counts"), delta_counts, retire_counts,
+                warn_skew=warn_skew,
+            ),
+        }
 
-        for sub_dir, df_fresh in (("centroids", cents), ("codebooks", cb)):
-            committed_dir = os.path.join(target_dir, sub_dir)
-            if os.path.isdir(committed_dir):
-                shutil.copytree(committed_dir, os.path.join(stage, sub_dir))
-            else:
-                out_df = (
-                    df_fresh.drop("cc") if sub_dir == "codebooks" else df_fresh
-                )
-                out_df.write.mode("overwrite").parquet(
-                    os.path.join(stage, sub_dir)
-                )
-        with open(os.path.join(stage, "_ivm_meta.json"), "w") as f:
-            json.dump(
-                {
-                    "last_batch_id": max(batch_id, meta["last_batch_id"]),
-                    "last_gen": gen,
-                    "pq_layout": layout,
-                    "loc_buckets": loc_buckets,
-                    "cdc": True,
-                    "applied_files": sorted(applied | batch_files),
-                    **_occupancy_meta(
-                        meta.get("cell_counts"), delta_counts, retire_counts,
-                        warn_skew=warn_skew,
-                    ),
-                },
-                f,
-            )
-        _atomic_swap(stage, target_dir, batch_id)
-
-    _run_foreach_batch(
-        changes, _apply, checkpoint_dir, "ivfpq_index_changes", timeout_sec
+    _exactly_once_sink(
+        changes, target_dir, "ivfpq_index_changes", _step, adopt=adopt,
+        checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec,
     )
 
 def ivfpq_index_rebuild(
@@ -1796,8 +1580,6 @@ def ivfpq_index_rebuild(
     duplicate source ids and a source dim != pq_m·pq_sub refuse (the
     plain sink's layout witness, re-checked because the corpus is
     re-read from outside the index)."""
-    import shutil
-
     from epe_data_wrangling_spark.operators.pq import (
         assign_codes,
         train_residual_codebooks,
@@ -1813,10 +1595,7 @@ def ivfpq_index_rebuild(
             "codebooks keep the lowest-id init — cell subtraction "
             "removes the drift component the coarse stage absorbs)"
         )
-    _recover_swap(target_dir)
-    _clean_stale_stages(target_dir)
-    sweep_orphans(target_dir)
-    meta = _read_sink_meta(target_dir)
+    meta = _open_target(target_dir)
     layout = meta.get("pq_layout")
     if layout is None:
         raise RuntimeError(
@@ -1885,21 +1664,7 @@ def ivfpq_index_rebuild(
             f"!= pq_m*pq_sub = {pq_m * pq_sub} — the subspace slices "
             "would drop trailing dimensions; fix the source table"
         )
-    ev = live.withColumn("vv", V.dot(F.col("v"), F.col("v")))
-    if init == "spread":
-        # materialize before seeding: the sample draw scans the full
-        # live corpus once (and Lloyd scans it per iteration below),
-        # which would otherwise re-run the source join from scratch;
-        # the k-1 argmax passes run on the seeding sample
-        ev = ev.localCheckpoint(eager=True)
-        seed_df = farthest_first_seeds(ev, k, id_col=id_col)
-    else:
-        seed_df = None
-    cents = _dense_cids(
-        means_to_centroids(
-            lloyd_means(ev, k, train_iters, id_col=id_col, init=seed_df)
-        )
-    ).localCheckpoint(eager=True)
+    cents = _train_quantizer(live, k, train_iters, id_col, init)
     # one assignment/split feeds BOTH codebook training and encoding —
     # the bootstrap path's idiom (the rebuild corpus IS the training
     # corpus, by definition of rebuild-from-source)
@@ -1916,13 +1681,7 @@ def ivfpq_index_rebuild(
         .select(id_col, "m", "cid", "_kb", "_gen")  # committed order
         .localCheckpoint(eager=True)  # feeds counts, store, locator
     )
-    delta_counts = [
-        # codes carry pq_m rows per vector: occupancy counts VECTORS
-        (int(r["_kb"]), int(r["c"]) // pq_m)
-        for r in recoded.groupBy("_kb")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .collect()
-    ]
+    delta_counts = _cell_counts(recoded, pq_m)
     n_rows = sum(c for _, c in delta_counts)
     batch_id = int(meta.get("last_batch_id", 0))
     stage = f"{target_dir}.stage-rebuild-{batch_id}"
@@ -1977,9 +1736,7 @@ def ivfpq_index_rebuild(
     new_meta.update(
         _occupancy_meta(None, delta_counts, warn_skew=warn_skew)
     )
-    with open(os.path.join(stage, "_ivm_meta.json"), "w") as f:
-        json.dump(new_meta, f)
-    _atomic_swap(stage, target_dir, batch_id)
+    _commit_target(stage, target_dir, batch_id, new_meta)
     return n_rows
 
 def ann_index_maintain(
@@ -2022,11 +1779,10 @@ def ann_index_maintain(
         SPREAD_SEED_MAX_K,
     )
     # the recovery contract every entry point honors: a crash between
-    # the two renames of a prior _atomic_swap leaves the committed
-    # state in <target>.old-N — reading meta without recovering first
+    # the two renames of a prior swap leaves the committed state in
+    # <target>.old-N — reading meta without opening the target first
     # would report a half-swapped index as a healthy virgin sink
-    _recover_swap(target_dir)
-    meta = _read_sink_meta(target_dir)
+    meta = _open_target(target_dir)
     store = "codes" if meta.get("pq_layout") else "vectors"
     if not store_has_files(read_manifest(target_dir, store)):
         # refuse loudly like the sibling entry points: a typo'd path
@@ -2079,7 +1835,7 @@ def ann_index_maintain(
             warn_skew=tuned,
         )
         action = "retrain"
-    new_meta = _read_sink_meta(target_dir)
+    new_meta = _open_target(target_dir)
     skew_before = warning["skew"]
     skew_after = new_meta.get("occupancy_skew")
     improved = (

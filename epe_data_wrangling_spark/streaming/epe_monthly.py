@@ -28,10 +28,10 @@ of recomputing the world:
   recompute oracle precisely when the table gets old, which is the
   one regime this sink exists for.
 
-Both tables commit in ONE atomic swap with the batch-id + file
-provenance record (the module's exactly-once discipline; provenance
-comes from the workbook source's own ``file`` column —
-``input_file_name()`` is empty on Python-datasource streams). A drop
+Both tables commit in ONE atomic swap through
+`streaming.ops._exactly_once_sink`; the provenance it records comes
+from the workbook source's own ``file`` column —
+``input_file_name()`` is empty on Python-datasource streams. A drop
 that REVISES a prior month retracts the old row's contribution and
 inserts the new one; months that appear for the first time are pure
 inserts — so after any number of drops the standing fact and annual
@@ -51,7 +51,6 @@ changelog manufacture feeds unchanged.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame
@@ -60,13 +59,8 @@ from pyspark.sql import functions as F
 from epe_data_wrangling_spark.streaming.ops import (
     STREAM_TIMEOUT_SEC,
     _additive_merge,
-    _atomic_swap,
-    _clean_stale_stages,
-    _is_committed_replay,
-    _read_sink_meta,
-    _recover_swap,
+    _exactly_once_sink,
     _row_digest,
-    _run_foreach_batch,
     _signed_image_diff,
 )
 
@@ -113,19 +107,18 @@ def epe_monthly_refresh(
         )
     stream = reader.load(drops_dir)
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        _recover_swap(target_dir)
-        _clean_stale_stages(target_dir)
-        meta = _read_sink_meta(target_dir)
-        batch_files = {
+    drops: list[str] = []  # this batch's drop files, for the step
+
+    def _drop_files(batch_df: DataFrame) -> set[str]:
+        drops[:] = sorted(
             r["f"]
             for r in batch_df.select(F.col("file").alias("f")).distinct().collect()
-        }
-        applied = set(meta.get("applied_files", []))
-        if _is_committed_replay(meta, batch_files, batch_id, "epe_monthly"):
-            return
-        if not batch_files:
-            return
+        )
+        return set(drops)
+
+    def _step(batch_df: DataFrame, batch_id: int, meta: dict, stage: str):
+        if not drops:
+            return None
         cells = batch_df.localCheckpoint(eager=True)  # feeds one pass per drop
         have = os.path.isdir(target_dir)
         snap = (
@@ -139,7 +132,7 @@ def epe_monthly_refresh(
         # a batch may carry several drops (files); landed order is
         # name order by the drop_NNN landing convention, and each drop
         # is a full snapshot so they must apply in sequence
-        for f in sorted(batch_files):
+        for f in drops:
             grids = grids_from_cells(cells.filter(F.col("file") == f))
             frames = {s: grid_to_df(spark, g, s) for s, g in grids.items()}
             fact = run_pipeline(spark, frames)
@@ -167,20 +160,14 @@ def epe_monthly_refresh(
                 view, dview, ["chave_seletora", "ano"], ["n_meses", "valor_micro"]
             )
             snap = img
-        stage = f"{target_dir}.stage-{batch_id}"
         snap.write.mode("overwrite").parquet(os.path.join(stage, "snapshot"))
         view.write.mode("overwrite").parquet(os.path.join(stage, "view"))
-        with open(os.path.join(stage, "_ivm_meta.json"), "w") as fh:
-            json.dump(
-                {
-                    "last_batch_id": batch_id,
-                    "applied_files": sorted(applied | batch_files),
-                },
-                fh,
-            )
-        _atomic_swap(stage, target_dir, batch_id)
+        return {}
 
-    _run_foreach_batch(stream, _apply, checkpoint_dir, "epe_monthly", timeout_sec)
+    _exactly_once_sink(
+        stream, target_dir, "epe_monthly", _step, provenance=_drop_files,
+        checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec,
+    )
     fact = spark.read.parquet(os.path.join(target_dir, "snapshot")).select(
         *FACT_DIMS, "valor"
     )

@@ -318,7 +318,12 @@ def _write_pool_files(
     bucket rows cluster for row-group stat pruning once files grow
     real row groups. Files rename into the flat pool under fresh
     unique names (immutable — a name is never reused, so readers of
-    the previous committed manifest are never disturbed)."""
+    the previous committed manifest are never disturbed). A supplied
+    ``counts`` that misses a bucket present in ``df`` RAISES before
+    any rename: that bucket's rows land in a partition dir the plan
+    does not know (in the packed path the assignment routes them to a
+    sentinel group instead of a neighbor's file)."""
+    supplied = counts is not None
     if counts is None:
         counts = df.groupBy("_kb").agg(F.count(F.lit(1)).alias("c")).collect()
     if not counts:
@@ -338,6 +343,10 @@ def _write_pool_files(
         for gi in range(1, len(groups) - 1):
             kbg = kbg.when(F.col("_kb") <= F.lit(uppers[gi]), F.lit(gi))
         kbg = kbg.otherwise(F.lit(len(groups) - 1))
+        if supplied:
+            kbg = F.when(F.col("_kb").isin([b for b, _ in by_id]), kbg).otherwise(
+                F.lit(-1)
+            )
         group_of = {b: gi for gi, g in enumerate(groups) for b in g}
     token = _uuid.uuid4().hex[:12]
     tmp = os.path.join(pool, f"_tmp-{batch_id}-{token}")
@@ -349,6 +358,17 @@ def _write_pool_files(
         .mode("overwrite")
         .parquet(tmp)
     )
+    planned = {f"_kbg={g}" for g in group_of.values()}
+    unplanned = sorted(
+        d for d in os.listdir(tmp) if d.startswith("_kbg=") and d not in planned
+    )
+    if unplanned:
+        shutil.rmtree(tmp)
+        raise RuntimeError(
+            f"pool write produced partition(s) {unplanned[:8]} that map to no "
+            "bucket of the row tally — the caller-supplied counts miss a "
+            "bucket present in the delta; refusing to commit misrouted rows"
+        )
     files_of_group: dict[str, list[str]] = {}
     for d in sorted(os.listdir(tmp)):
         if not d.startswith("_kbg="):
@@ -480,8 +500,9 @@ def write_store_delta(
     support sinks' negative-count guard aggregates per bucket anyway —
     passing it here lets BOTH the stray-bucket witness and the pool
     write's packing plan run without their own count job: one fewer
-    Spark job per commit. Must tally exactly the rows in ``df``;
-    when omitted the commit counts for itself as before."""
+    Spark job per commit. Must tally exactly the rows in ``df`` — a
+    tally missing a bucket the delta carries raises before any pool
+    rename; when omitted the commit counts for itself as before."""
     pool = pool_store_dir(target_dir, store)
     os.makedirs(pool, exist_ok=True)
     buckets = dict(manifest["buckets"]) if manifest is not None else {}

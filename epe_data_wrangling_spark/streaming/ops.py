@@ -14,11 +14,29 @@ window aggregations run in *complete* output mode in the test
 harness so results are independent of watermark-driven flush timing;
 in production append/update mode plus the same watermark is the
 latency-oriented choice.
+
+Exactly-once sinks: every stateful ``*_foreach_batch`` sink here, in
+``streaming.ann_index`` and in ``streaming.epe_monthly`` commits
+through ONE protocol, owned by `_exactly_once_sink` — open the target
+(`_open_target`: repair a torn swap, drop stale stages, reclaim
+orphaned pool files, read the committed meta), check the bucket
+layout, apply the replay/handoff rule (`_is_committed_replay`) to the
+batch's source-file provenance, run the sink's step into a staging
+dir, and commit (`_commit_target`: ``_ivm_meta.json`` into the stage,
+then `_atomic_swap`). A sink is therefore just its step: one
+changelog producer (`_snapshot_changes`, `_oplog_changes`,
+`_tombstone_changes`) feeding one state refresh (additive
+`_sum_view_refresh`, `_distinct_state_refresh`,
+`_minmax_state_refresh`, or a sink-specific top-k / join / IVF
+refresh). The maintenance entry points (vacuum, retrain, rebuild) use
+the open and commit halves directly.
 """
 
 from __future__ import annotations
 
+import json
 import os
+import shutil
 import tempfile
 from collections.abc import Callable, Iterator
 from typing import Any
@@ -289,18 +307,15 @@ def upsert_latest_foreach_batch(
     Returns the final target as a batch DataFrame. Restartable: the
     checkpoint tracks consumed files, the swap is atomic, and re-
     merging an already-applied batch is idempotent (latest-per-key is
-    a set operation).
+    a set operation) — so this sink uses only the open half of the
+    `_exactly_once_sink` protocol and swaps without a meta record.
     """
-    import os
-    import shutil
-
     order = [F.col(c).desc() for c in order_cols]
     w = Window.partitionBy(*key_cols).orderBy(*order)
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        _recover_swap(target_dir)
-        _clean_stale_stages(target_dir)
+        _open_target(target_dir)
         exists = os.path.isdir(target_dir)
         merged = (
             spark.read.parquet(target_dir).unionByName(batch_df)
@@ -328,10 +343,8 @@ def _recover_swap(target_dir: str) -> None:
     the IVM sink's `_applied_batch` would read -1 and a replayed
     batch would merge against an empty base). A crash AFTER promotion
     leaves a superseded old dir; delete it. MUST run before any read
-    of the target and before the next swap."""
+    of the target and before the next swap (`_open_target`)."""
     import glob as _glob
-    import os
-    import shutil
 
     olds = sorted(
         _glob.glob(f"{_glob.escape(target_dir)}.old-*"),
@@ -354,7 +367,6 @@ def _clean_stale_stages(target_dir: str) -> None:
     and foreachBatch applies serially, so anything matching is
     superseded by definition."""
     import glob as _glob
-    import shutil
 
     for p in _glob.glob(f"{_glob.escape(target_dir)}.stage-*"):
         shutil.rmtree(p, ignore_errors=True)
@@ -606,52 +618,82 @@ class _DigestPrunedImage:
         )
 
 
-def _digest_pruned_version_diffs(
+def _snapshot_versions(batch_df: DataFrame, version_col: str, meta: dict):
+    """The snapshot sinks' version list: sorted distinct versions of a
+    non-empty batch (``None`` for an empty one — nothing to commit),
+    checked against the committed ``last_version`` so a landing that
+    violates the monotonic version contract raises instead of
+    applying a diff backwards."""
+    if batch_df.isEmpty():
+        return None
+    versions = sorted(
+        r["v"]
+        for r in batch_df.select(F.col(version_col).alias("v"))
+        .distinct()
+        .collect()
+    )
+    last_v = meta.get("last_version")
+    if last_v is not None and versions and min(versions) <= last_v:
+        raise RuntimeError(
+            f"sink: version {min(versions)} arrived after version "
+            f"{last_v} was applied — the landing violated the "
+            "monotonic version contract (equal/inverted file mtimes?); "
+            "refusing to apply a diff backwards"
+        )
+    return versions
+
+
+def _snapshot_changes(
     spark,
     target_dir: str,
-    store: str,
     batch_df: DataFrame,
-    versions: list,
-    version_col: str,
-    hashed_fn,
+    meta: dict,
+    *,
     key_cols: list[str],
-    cols: list[str],
-    kb,
+    version_col: str,
+    business: list[str],
+    n_buckets: int,
 ):
-    """The digest-pruned snapshot diff loop the SINGLE-image
-    snapshot-fed sinks share — a thin loop over `_DigestPrunedImage`
-    (one instance, one store): per version, bucket the hashed image,
+    """Snapshot-version-diff changelog producer (the single-image
+    snapshot sinks): per version, bucket the hashed image by key hash,
     compare per-bucket digests against the previous image's (the
     committed manifest's for the first version — stored at commit
     time, so an untouched bucket is pruned from the diff by a
     DRIVER-side compare, never a join), and run `_signed_image_diff`
-    over ONLY the buckets whose digest moved. At 100 TB this turns
-    the per-version diff from a corpus×corpus keyed join into a
-    changed-bucket join: the full snapshot is still SCANNED (it is
-    the input), but unchanged buckets never shuffle.
+    over ONLY the buckets whose digest moved. At 100 TB this turns the
+    per-version diff from a corpus×corpus keyed join into a
+    changed-bucket join: the full snapshot is still SCANNED (it is the
+    input), but unchanged buckets never shuffle.
 
-    Returns ``(signed, dpi)``: the union of all versions' signed rows
-    (``cols`` + ``_sign``) and the `_DigestPrunedImage` whose
-    ``commit(stage, batch_id)`` the caller runs alongside its other
-    state writes."""
+    Returns ``(signed, fields, dpi)`` — the union of all versions'
+    signed rows (``business`` + ``_sign``), the ``last_version`` meta
+    field, and the `_DigestPrunedImage` whose ``commit(stage,
+    batch_id)`` writes the ``snapimg`` store — or ``None`` for an
+    empty batch."""
+    versions = _snapshot_versions(batch_df, version_col, meta)
+    if versions is None:
+        return None
+    # a key column may also be a business column; carry each name once
+    extra = [c for c in business if c not in key_cols]
+    kb = F.pmod(F.hash(*[F.col(k) for k in key_cols]), F.lit(n_buckets))
     dpi = _DigestPrunedImage(
-        spark, target_dir, store, key_cols, cols, kb,
+        spark, target_dir, "snapimg", key_cols, business, kb,
         legacy_subdir="snapshot",
     )
     signed = None
     for v in versions:
-        sv = dpi.diff(hashed_fn(batch_df.filter(F.col(version_col) == v)))
+        img = batch_df.filter(F.col(version_col) == v).select(
+            *key_cols, *extra, _row_digest(business).alias("rh")
+        )
+        sv = dpi.diff(img)
         signed = sv if signed is None else signed.unionByName(sv)
-    return signed, dpi
+    return signed, {"last_version": versions[-1]}, dpi
 
 
 def _read_sink_meta(target_dir: str) -> dict:
     """Read the exactly-once commit record a stateful foreachBatch
     sink stores INSIDE its target (written in the same atomic swap as
     the data). Absent target → a virgin sink."""
-    import json
-    import os
-
     meta = os.path.join(target_dir, "_ivm_meta.json")
     if not os.path.isfile(meta):
         return {"last_batch_id": -1, "applied_files": []}
@@ -674,7 +716,8 @@ def _batch_provenance(batch_df: DataFrame) -> set[str]:
 
 
 def _is_committed_replay(
-    meta: dict, batch_files: set[str], batch_id: int, tag: str
+    meta: dict, batch_files: set[str], batch_id: int, tag: str,
+    adopt: bool = False,
 ) -> bool:
     """The skip-vs-raise rule for non-idempotent (+=) sinks. Same
     checkpoint + already-committed batch_id → replay, skip. A FRESH
@@ -684,8 +727,21 @@ def _is_committed_replay(
     provenance at all: there the only distinguishable replay is the
     same-checkpoint crash redelivery of the LAST committed batch_id;
     an OLDER batch_id without provenance is indistinguishable from
-    fresh-checkpoint new data and must raise, never skip."""
+    fresh-checkpoint new data and must raise, never skip.
+
+    ``adopt`` admits one more case, the declared CHECKPOINT HANDOFF: a
+    target adopted by a new stream (a fresh checkpoint over a fresh
+    landing dir — how a plain-append index graduates to its CDC sink)
+    legitimately arrives with a low batch_id, and a batch whose files
+    are ALL never-applied cannot be a replay — apply it. Without the
+    declaration the same signature describes a MISWIRED job (the
+    wrong landing dir pointed at an existing target), which only the
+    operator can tell apart, so adoption is opt-in. A batch MIXING
+    applied and fresh files raises either way."""
     if batch_id > meta["last_batch_id"]:
+        return False
+    applied = set(meta.get("applied_files", []))
+    if adopt and batch_files and not batch_files & applied:
         return False
     if not batch_files:
         if batch_id == meta["last_batch_id"]:
@@ -698,7 +754,7 @@ def _is_committed_replay(
             "checkpoint, use a file-based source, or point at a new "
             "target dir"
         )
-    fresh = batch_files - set(meta.get("applied_files", []))
+    fresh = batch_files - applied
     if fresh:
         raise RuntimeError(
             f"{tag} sink: batch_id {batch_id} <= committed "
@@ -712,18 +768,13 @@ def _is_committed_replay(
 
 def _atomic_swap(stage: str, target_dir: str, batch_id: int) -> None:
     """Promote a fully-materialized staging dir to the target via
-    directory rename — the copy-on-write commit both foreachBatch
-    sinks share. NOT a single atomic step: it is rename(target→old),
-    rename(stage→target), rmtree(old), and a crash between the two
-    renames is repaired by `_recover_swap` (run here and before every
-    target read). Requires stage/target/old on ONE filesystem —
-    os.rename cannot cross devices. On object storage this pair is
-    what a table format's transaction log replaces; everything before
-    it is restartable."""
-    import os
-    import shutil
-
-    _recover_swap(target_dir)
+    directory rename — the copy-on-write commit every sink shares. NOT
+    a single atomic step: it is rename(target→old), rename(stage→
+    target), rmtree(old), and a crash between the two renames is
+    repaired by `_recover_swap` at the next `_open_target`. Requires
+    stage/target/old on ONE filesystem — os.rename cannot cross
+    devices. On object storage this pair is what a table format's
+    transaction log replaces; everything before it is restartable."""
     if os.path.isdir(target_dir):
         old = f"{target_dir}.old-{batch_id}"
         os.rename(target_dir, old)
@@ -731,6 +782,30 @@ def _atomic_swap(stage: str, target_dir: str, batch_id: int) -> None:
         shutil.rmtree(old)
     else:
         os.rename(stage, target_dir)
+
+
+def _open_target(target_dir: str) -> dict:
+    """The commit protocol's opening half, run before anything reads
+    the target: restore a target a crash left mid-swap, delete stages
+    a crashed batch left behind, delete pool files no committed
+    manifest references (a single ``isdir`` when the target keeps no
+    pool), and return the committed meta. The order is load-bearing —
+    the orphan sweep must see the recovered manifests, and all of it
+    must precede this batch's own stage and pool writes."""
+    _recover_swap(target_dir)
+    _clean_stale_stages(target_dir)
+    sweep_orphans(target_dir)
+    return _read_sink_meta(target_dir)
+
+
+def _commit_target(stage: str, target_dir: str, batch_id: int, meta: dict) -> None:
+    """The commit protocol's closing half: write ``meta`` as the
+    stage's ``_ivm_meta.json``, then promote the stage by
+    `_atomic_swap` — data and commit record move together."""
+    os.makedirs(stage, exist_ok=True)
+    with open(os.path.join(stage, "_ivm_meta.json"), "w") as f:
+        json.dump(meta, f)
+    _atomic_swap(stage, target_dir, batch_id)
 
 
 def _run_foreach_batch(stream, apply_fn, checkpoint_dir, tag: str, timeout_sec: int) -> None:
@@ -748,6 +823,110 @@ def _run_foreach_batch(stream, apply_fn, checkpoint_dir, tag: str, timeout_sec: 
             raise TimeoutError(f"{tag} stream still running after {timeout_sec}s")
     finally:
         q.stop()
+
+
+def _exactly_once_sink(
+    stream: DataFrame,
+    target_dir: str,
+    tag: str,
+    step: Callable,
+    *,
+    n_buckets: int | None = None,
+    adopt: bool = False,
+    provenance: Callable[[DataFrame], set] = _batch_provenance,
+    checkpoint_dir: str | None,
+    timeout_sec: int,
+) -> None:
+    """THE exactly-once commit protocol for every non-idempotent
+    foreachBatch sink — the one place it lives. Per micro-batch:
+
+    1. `_open_target` (recover a torn swap, clean stale stages, sweep
+       orphaned pool files, read the committed meta);
+    2. `_check_layout` of ``n_buckets`` when the sink keeps bucketed
+       state;
+    3. ``provenance(batch_df)`` (source files; the default is the
+       distributed ``input_file_name()`` distinct) and the replay /
+       handoff rule `_is_committed_replay` — a replay of committed
+       data skips, new data under a fresh checkpoint raises;
+    4. ``step(batch_df, batch_id, meta, stage)`` materializes the
+       batch's new state into ``stage`` (plans may still read the
+       committed target) and returns its sink-specific meta fields,
+       or ``None`` when there is nothing to commit;
+    5. `_commit_target` with ``last_batch_id`` = max(batch_id,
+       committed) — a checkpoint handoff restarts ids at 0 and the
+       high-water mark must not regress; outside a handoff a batch
+       only commits above the committed id — and ``applied_files`` =
+       committed ∪ this batch's files, plus ``n_buckets`` and the
+       step's fields.
+
+    Because the batch id and provenance commit INSIDE the target in
+    the same swap as the data, a crash anywhere before the swap's
+    second rename replays the batch against the old state, and a
+    crash after it replays into a skip."""
+
+    def _apply(batch_df: DataFrame, batch_id: int) -> None:
+        meta = _open_target(target_dir)
+        if n_buckets is not None:
+            _check_layout(meta, tag, "n_buckets", n_buckets)
+        files = provenance(batch_df)
+        if _is_committed_replay(meta, files, batch_id, tag, adopt):
+            return  # re-applying committed data would double-count
+        stage = f"{target_dir}.stage-{batch_id}"
+        fields = step(batch_df, batch_id, meta, stage)
+        if fields is None:
+            return
+        record = {
+            "last_batch_id": max(batch_id, meta["last_batch_id"]),
+            "applied_files": sorted(set(meta.get("applied_files", [])) | files),
+        }
+        if n_buckets is not None:
+            record["n_buckets"] = n_buckets
+        _commit_target(stage, target_dir, batch_id, {**record, **fields})
+
+    _run_foreach_batch(stream, _apply, checkpoint_dir, tag, timeout_sec)
+
+
+def _committed_view(spark, target_dir: str) -> DataFrame | None:
+    """The committed ``view/`` of a view-maintaining sink (None before
+    its first commit)."""
+    view_dir = os.path.join(target_dir, "view")
+    return spark.read.parquet(view_dir) if os.path.isdir(view_dir) else None
+
+
+def _merge_signed_sums(
+    view: DataFrame | None,
+    signed: DataFrame,
+    group_cols: list[str],
+    sum_cols: list[str],
+) -> DataFrame:
+    """Signed rows (``_sign`` ±1) → one (``n``, ``sum_<c>``) delta row
+    per group (exact bigint algebra) → `_additive_merge` into
+    ``view``."""
+    dview = signed.groupBy(*group_cols).agg(
+        F.sum("_sign").cast("bigint").alias("n"),
+        *[
+            F.sum(F.col("_sign") * F.col(c)).cast("bigint").alias(f"sum_{c}")
+            for c in sum_cols
+        ],
+    )
+    return _additive_merge(
+        view, dview, list(group_cols), ["n"] + [f"sum_{c}" for c in sum_cols]
+    )
+
+
+def _sum_view_refresh(
+    spark,
+    target_dir: str,
+    stage: str,
+    signed: DataFrame,
+    group_cols: list[str],
+    sum_cols: list[str],
+) -> None:
+    """The additive state refresh: the committed view plus the signed
+    rows' (``n``, ``sum_<c>``) delta → ``view/`` in the stage."""
+    _merge_signed_sums(
+        _committed_view(spark, target_dir), signed, group_cols, sum_cols
+    ).write.mode("overwrite").parquet(os.path.join(stage, "view"))
 
 
 def ivm_agg_foreach_batch(
@@ -773,62 +952,32 @@ def ivm_agg_foreach_batch(
 
     Unlike the latest-per-key upsert (a set operation, naturally
     idempotent), ``+=`` state double-counts on re-application, so the
-    sink is exactly-once by construction: the applied ``batch_id`` is
-    committed INSIDE the target in the same atomic swap as the data
-    (``_ivm_meta.json``), and ``_apply`` skips any batch_id already
-    recorded — the documented foreachBatch discipline for
-    non-idempotent sinks. Crash replay (same checkpoint, same
-    batch_id) therefore merges exactly once.
-
-    A FRESH checkpoint restarts batch ids at 0, so ``batch_id <=
-    committed`` alone cannot distinguish "replay of applied data"
-    from "genuinely new data under a new checkpoint" — silently
-    skipping the latter would lose data. The meta therefore records
-    source-FILE provenance (``batch_df.inputFiles()``): a
-    low-batch-id batch whose files were all applied before is a
-    replay and skips; one carrying ANY unseen file raises instead of
-    discarding it (resume with the original checkpoint, or point at a
-    fresh target). Provenance comes from a distributed
-    ``input_file_name()`` distinct (``DataFrame.inputFiles()`` is
-    empty on micro-batch plans) — one delta-scan-sized metadata job
-    per batch, file-count rows collected, file-path-sized on disk; a
-    production deployment over unbounded landing history would
-    compact it into a table-format transaction log.
+    sink commits through `_exactly_once_sink`: batch id and source-file
+    provenance ride the same atomic swap as the state, a crash replay
+    merges exactly once, and a fresh checkpoint over never-applied
+    files raises instead of silently dropping them.
 
     Returns the final state table as a batch DataFrame; callers
     finalize (e.g. cast decimal sums to double) downstream.
     """
-    import json
-    import os
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        _recover_swap(target_dir)
-        _clean_stale_stages(target_dir)
-        meta = _read_sink_meta(target_dir)
-        batch_files = _batch_provenance(batch_df)
-        applied = set(meta.get("applied_files", []))
-        if _is_committed_replay(meta, batch_files, batch_id, "ivm"):
-            return  # replay of committed data: merging again would double-count
+    def _step(batch_df: DataFrame, batch_id: int, meta: dict, stage: str):
         delta = partial_agg(batch_df)
         state_cols = [c for c in delta.columns if c not in group_cols]
         base = (
-            spark.read.parquet(target_dir) if os.path.isdir(target_dir) else None
+            batch_df.sparkSession.read.parquet(target_dir)
+            if os.path.isdir(target_dir)
+            else None
         )
-        merged = _additive_merge(base, delta, list(group_cols), state_cols)
-        stage = f"{target_dir}.stage-{batch_id}"
-        merged.write.mode("overwrite").parquet(stage)
-        with open(os.path.join(stage, "_ivm_meta.json"), "w") as f:
-            json.dump(
-                {
-                    "last_batch_id": batch_id,
-                    "applied_files": sorted(applied | batch_files),
-                },
-                f,
-            )
-        _atomic_swap(stage, target_dir, batch_id)
+        _additive_merge(base, delta, list(group_cols), state_cols).write.mode(
+            "overwrite"
+        ).parquet(stage)
+        return {}
 
-    _run_foreach_batch(stream, _apply, checkpoint_dir, "ivm", timeout_sec)
+    _exactly_once_sink(
+        stream, target_dir, "ivm", _step,
+        checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec,
+    )
     return stream.sparkSession.read.parquet(target_dir)
 
 
@@ -862,11 +1011,8 @@ def cdc_retraction_foreach_batch(
     n_buckets)`` with PER-BUCKET CONTENT DIGESTS riding the manifest)
     and ``view/`` (one additive row per group: ``n`` + ``sum_<c>``
     per ``sum_cols`` entry). Because image and view move in the same
-    commit, a crash can never apply a version to one but not the
-    other. Exactly-once follows the module's non-idempotent-sink
-    discipline: batch_id + source-file provenance in
-    ``_ivm_meta.json`` inside the swap; replays skip, a fresh
-    checkpoint over genuinely new files raises.
+    commit (`_exactly_once_sink`), a crash can never apply a version
+    to one but not the other.
 
     Contracts: ``key_cols`` are non-null and unique per version;
     business columns (``group_cols`` + ``sum_cols``) render
@@ -890,87 +1036,30 @@ def cdc_retraction_foreach_batch(
 
     Returns the final view as a batch DataFrame.
     """
-    import json
-    import os
-
     business = list(group_cols) + list(sum_cols)
-    # A key column may legitimately also be a group/sum column (e.g.
-    # grouping by the key); selecting it twice would raise an
-    # ambiguous-reference error downstream, so carry each name once.
-    extra = [c for c in business if c not in key_cols]
 
-    def _hashed(img: DataFrame) -> DataFrame:
-        return img.select(*key_cols, *extra, _row_digest(business).alias("rh"))
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
+    def _step(batch_df: DataFrame, batch_id: int, meta: dict, stage: str):
         spark = batch_df.sparkSession
-        _recover_swap(target_dir)
-        _clean_stale_stages(target_dir)
-        sweep_orphans(target_dir)
-        meta = _read_sink_meta(target_dir)
-        batch_files = _batch_provenance(batch_df)
-        applied = set(meta.get("applied_files", []))
-        if _is_committed_replay(meta, batch_files, batch_id, "cdc"):
-            return
-        if batch_df.isEmpty():
-            return  # no versions to apply; committing nothing keeps replay trivial
-        _check_bucket_layout(meta, n_buckets, "cdc")
-        view = (
-            spark.read.parquet(os.path.join(target_dir, "view"))
-            if os.path.isdir(os.path.join(target_dir, "view"))
-            else None
+        changes = _snapshot_changes(
+            spark, target_dir, batch_df, meta, key_cols=key_cols,
+            version_col=version_col, business=business, n_buckets=n_buckets,
         )
-        versions = sorted(
-            r["v"]
-            for r in batch_df.select(F.col(version_col).alias("v"))
-            .distinct()
-            .collect()
+        if changes is None:
+            return None
+        signed, fields, dpi = changes
+        _sum_view_refresh(
+            spark, target_dir, stage,
+            signed.localCheckpoint(eager=True),  # delta-sized
+            group_cols, sum_cols,
         )
-        last_v = meta.get("last_version")
-        if last_v is not None and versions and min(versions) <= last_v:
-            raise RuntimeError(
-                f"sink: version {min(versions)} arrived after version "
-                f"{last_v} was applied — the landing violated the "
-                "monotonic version contract (equal/inverted file mtimes?); "
-                "refusing to apply a diff backwards"
-            )
-        kb = F.pmod(F.hash(*[F.col(k) for k in key_cols]), F.lit(n_buckets))
-        signed, dpi = _digest_pruned_version_diffs(
-            spark, target_dir, "snapimg", batch_df, versions,
-            version_col,
-            lambda d: _hashed(d.select(*key_cols, *extra)),
-            key_cols, business, kb,
-        )
-        signed = signed.localCheckpoint(eager=True)  # delta-sized
-        dview = signed.groupBy(*group_cols).agg(
-            F.sum("_sign").cast("bigint").alias("n"),
-            *[
-                F.sum(F.col("_sign") * F.col(c)).cast("bigint").alias(f"sum_{c}")
-                for c in sum_cols
-            ],
-        )
-        view = _additive_merge(
-            view, dview, list(group_cols), ["n"] + [f"sum_{c}" for c in sum_cols]
-        )
-        # materialize into the stage (plans still read the pre-swap
-        # target), then promote image+view+meta in one swap; untouched
-        # image buckets carry as manifest rows, never rewritten
-        stage = f"{target_dir}.stage-{batch_id}"
+        # untouched image buckets carry as manifest rows, never rewritten
         dpi.commit(stage, batch_id)
-        view.write.mode("overwrite").parquet(os.path.join(stage, "view"))
-        with open(os.path.join(stage, "_ivm_meta.json"), "w") as f:
-            json.dump(
-                {
-                    "last_batch_id": batch_id,
-                    "n_buckets": n_buckets,
-                    "applied_files": sorted(applied | batch_files),
-                    "last_version": versions[-1] if versions else None,
-                },
-                f,
-            )
-        _atomic_swap(stage, target_dir, batch_id)
+        return fields
 
-    _run_foreach_batch(snapshots, _apply, checkpoint_dir, "cdc", timeout_sec)
+    _exactly_once_sink(
+        snapshots, target_dir, "cdc", _step, n_buckets=n_buckets,
+        checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec,
+    )
     return snapshots.sparkSession.read.parquet(os.path.join(target_dir, "view"))
 
 
@@ -1020,6 +1109,123 @@ def _validate_oplog_batch(
     return v
 
 
+def _oplog_changes(
+    batch_df: DataFrame,
+    meta: dict,
+    *,
+    op_col: str,
+    seq_col: str,
+    business: list[str],
+    prev_prefix: str,
+    tag: str,
+):
+    """Before-image op-log changelog producer: one validation pass
+    (`_validate_oplog_batch`), then the signed expansion straight from
+    the log — I → after image +1, D → before image (``prev_<c>``) −1,
+    U → both. Returns ``(signed, fields)`` — ``business`` + ``_sign``
+    rows and the ``last_seq`` high-water meta field — or ``None`` for
+    an empty batch."""
+    v = _validate_oplog_batch(
+        batch_df, op_col, seq_col, ("I", "U", "D"), meta.get("last_seq"), tag
+    )
+    if v is None:
+        return None
+    op = F.col(op_col)
+    retract = batch_df.filter(op.isin("U", "D")).select(
+        *[F.col(f"{prev_prefix}{c}").alias(c) for c in business],
+        F.lit(-1).alias("_sign"),
+    )
+    insert = batch_df.filter(op.isin("I", "U")).select(
+        *business, F.lit(1).alias("_sign")
+    )
+    return retract.unionByName(insert), {"last_seq": int(v["hi"])}
+
+
+def _op_per_key(ops: DataFrame, key_cols: list[str], seq_col: str,
+                last: bool = True) -> DataFrame:
+    """The LAST (or, ``last=False``, the FIRST) op per key by
+    ``seq_col`` — rows keep their columns plus ``_rn``."""
+    seq = F.col(seq_col).desc() if last else F.col(seq_col).asc()
+    w = Window.partitionBy(*key_cols).orderBy(seq)
+    return ops.withColumn("_rn", F.row_number().over(w)).filter(
+        F.col("_rn") == 1
+    )
+
+
+def _tombstone_changes(
+    spark,
+    target_dir: str,
+    batch_df: DataFrame,
+    meta: dict,
+    *,
+    key_cols: list[str],
+    op_col: str,
+    seq_col: str,
+    business: list[str],
+    n_buckets: int,
+    tag: str,
+):
+    """Tombstone changelog producer (rows are 'U' upserts carrying only
+    the AFTER image or 'D' tombstones carrying only the KEY): retractions
+    are MANUFACTURED from the standing keyed ``image`` store, bucketed
+    by ``pmod(hash(key), n_buckets)``. Per batch: validation, the last
+    op per key (intermediate signed states cancel — materialized once,
+    it feeds the lookup, the inserts and the rewrite), the touched key
+    buckets (≤ n_buckets collected), the image read pruned to them,
+    the stored rows of the batch's keys as −1 rows (an upsert
+    replaces, a tombstone retracts, a tombstone for an absent key
+    retracts nothing — compaction semantics) and the final upserts as
+    +1 rows.
+
+    Returns ``(signed, fields, write_image)`` — ``business`` +
+    ``_sign`` rows, the ``last_seq`` meta field, and
+    ``write_image(stage, batch_id)`` committing the touched buckets
+    (survivors ⊎ upserts; untouched buckets carry as manifest rows) —
+    or ``None`` for an empty batch."""
+    v = _validate_oplog_batch(
+        batch_df, op_col, seq_col, ("U", "D"), meta.get("last_seq"), tag
+    )
+    if v is None:
+        return None
+    extra = [c for c in business if c not in key_cols]
+    kb = F.pmod(F.hash(*[F.col(k) for k in key_cols]), F.lit(n_buckets))
+    last_ops = (
+        _op_per_key(batch_df, key_cols, seq_col)
+        .select(*key_cols, op_col, *extra)
+        .localCheckpoint(eager=True)
+    )
+    touched = sorted(
+        int(r["b"]) for r in last_ops.select(kb.alias("b")).distinct().collect()
+    )
+    m_img = read_manifest(target_dir, "image")
+    old = read_store(spark, target_dir, "image", buckets=touched, manifest=m_img)
+    upserts = last_ops.filter(F.col(op_col) == "U").select(
+        *key_cols, *extra, kb.alias("_kb")
+    )
+    signed = upserts.select(*business, F.lit(1).alias("_sign"))
+    image = upserts
+    if old is not None:
+        keyset = F.broadcast(last_ops.select(*key_cols))
+        signed = (
+            old.join(keyset, key_cols)
+            .select(*business, F.lit(-1).alias("_sign"))
+            .unionByName(signed)
+        )
+        image = (
+            old.join(keyset, key_cols, "left_anti")
+            .select(*key_cols, *extra, "_kb")
+            .unionByName(upserts)
+        )
+
+    def write_image(stage: str, batch_id: int) -> None:
+        write_store_delta(
+            spark, image, target_dir, "image", stage,
+            batch_id=batch_id, touched=touched, manifest=m_img,
+        )
+
+    return signed, {"last_seq": int(v["hi"])}, write_image
+
+
 def cdc_oplog_foreach_batch(
     oplog: DataFrame,
     target_dir: str,
@@ -1054,13 +1260,12 @@ def cdc_oplog_foreach_batch(
     Because the view is additive, signed application is COMMUTATIVE —
     a batch may carry any number of transactions in any file order,
     and batch-split invariance holds algebraically (pytest-pinned).
-    Order therefore matters only for exactly-once, which follows the
-    module's non-idempotent-sink discipline: batch_id + source-file
-    provenance + the high-water ``last_seq`` commit atomically with
-    the view; replays skip; a batch whose minimum sequence is ≤ the
-    committed high-water mark raises (duplicate delivery outside the
-    replay protocol would double-apply), as does a duplicate sequence
-    number within the batch or an unknown op tag.
+    Order therefore matters only for exactly-once
+    (`_exactly_once_sink`), plus the high-water ``last_seq`` committed
+    with the view: a batch whose minimum sequence is ≤ it raises
+    (duplicate delivery outside the replay protocol would
+    double-apply), as does a duplicate sequence number within the
+    batch or an unknown op tag.
 
     Contracts (the upstream log producer's side of the deal): U rows
     carry BOTH images and never change the key — a key change must be
@@ -1072,67 +1277,26 @@ def cdc_oplog_foreach_batch(
 
     Returns the final view as a batch DataFrame.
     """
-    import json
-    import os
-
     business = list(group_cols) + list(sum_cols)
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        _recover_swap(target_dir)
-        _clean_stale_stages(target_dir)
-        meta = _read_sink_meta(target_dir)
-        batch_files = _batch_provenance(batch_df)
-        applied = set(meta.get("applied_files", []))
-        if _is_committed_replay(meta, batch_files, batch_id, "cdc_oplog"):
-            return
-        op = F.col(op_col)
-        v = _validate_oplog_batch(
-            batch_df, op_col, seq_col, ("I", "U", "D"),
-            meta.get("last_seq"), "cdc_oplog",
+    def _step(batch_df: DataFrame, batch_id: int, meta: dict, stage: str):
+        changes = _oplog_changes(
+            batch_df, meta, op_col=op_col, seq_col=seq_col,
+            business=business, prev_prefix=prev_prefix, tag="cdc_oplog",
         )
-        if v is None:
-            return  # nothing to apply; committing nothing keeps replay trivial
-        retract = batch_df.filter(op.isin("U", "D")).select(
-            *[F.col(f"{prev_prefix}{c}").alias(c) for c in business],
-            F.lit(-1).alias("_sign"),
+        if changes is None:
+            return None
+        signed, fields = changes
+        _sum_view_refresh(
+            batch_df.sparkSession, target_dir, stage, signed,
+            group_cols, sum_cols,
         )
-        insert = batch_df.filter(op.isin("I", "U")).select(
-            *business, F.lit(1).alias("_sign")
-        )
-        dview = (
-            retract.unionByName(insert)
-            .groupBy(*group_cols)
-            .agg(
-                F.sum("_sign").cast("bigint").alias("n"),
-                *[
-                    F.sum(F.col("_sign") * F.col(c)).cast("bigint").alias(f"sum_{c}")
-                    for c in sum_cols
-                ],
-            )
-        )
-        view = (
-            spark.read.parquet(os.path.join(target_dir, "view"))
-            if os.path.isdir(target_dir)
-            else None
-        )
-        view = _additive_merge(
-            view, dview, list(group_cols), ["n"] + [f"sum_{c}" for c in sum_cols]
-        )
-        stage = f"{target_dir}.stage-{batch_id}"
-        view.write.mode("overwrite").parquet(os.path.join(stage, "view"))
-        with open(os.path.join(stage, "_ivm_meta.json"), "w") as f:
-            json.dump(
-                {
-                    "last_batch_id": batch_id,
-                    "applied_files": sorted(applied | batch_files),
-                    "last_seq": int(v["hi"]),
-                },
-                f,
-            )
-        _atomic_swap(stage, target_dir, batch_id)
+        return fields
 
-    _run_foreach_batch(oplog, _apply, checkpoint_dir, "cdc_oplog", timeout_sec)
+    _exactly_once_sink(
+        oplog, target_dir, "cdc_oplog", _step,
+        checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec,
+    )
     return oplog.sparkSession.read.parquet(os.path.join(target_dir, "view"))
 
 
@@ -1273,24 +1437,24 @@ def _write_bucketed_support(
     )
 
 
-def _check_bucket_layout(meta: dict, n_buckets: int, tag: str) -> None:
-    """Fail-loud bucket-layout guard for every sink that keeps
-    bucketed standing state: the committed ``_kb`` values are
-    pmod(hash(...), n_buckets-at-write-time), so resuming a target
-    with a DIFFERENT n_buckets (config drift, changed default) would
-    silently misread the layout — touched-bucket filters load the
-    wrong rows, old counts read as zero, and the view corrupts in
-    ways the value-level guards cannot see (nothing goes negative).
-    The sinks commit ``n_buckets`` inside ``_ivm_meta.json`` and this
-    check runs at batch start. Targets written before the field
-    existed pass (None) and adopt the configured value on their next
-    commit."""
-    committed = meta.get("n_buckets")
-    if committed is not None and committed != n_buckets:
+def _check_layout(meta: dict, tag: str, key: str, configured) -> None:
+    """Fail-loud layout guard for every sink that keeps bucketed
+    standing state: the committed layout parameter ``key`` (e.g.
+    ``n_buckets`` — the committed ``_kb`` values are
+    pmod(hash(...), n_buckets-at-write-time) — or an index's
+    ``k_cells`` / ``pq_layout`` / ``loc_buckets``) rides
+    ``_ivm_meta.json``, and resuming a target with a DIFFERENT value
+    (config drift, changed default) would silently misread the layout
+    — touched-bucket filters load the wrong rows, old counts read as
+    zero, and the state corrupts in ways the value-level guards cannot
+    see. Targets written before the field existed pass (None) and
+    adopt the configured value on their next commit."""
+    committed = meta.get(key)
+    if committed is not None and committed != configured:
         raise RuntimeError(
-            f"{tag} sink: target was committed with n_buckets={committed} "
-            f"but the sink is configured with n_buckets={n_buckets} — the "
-            "stored bucket layout would be misread (wrong touched-bucket "
+            f"{tag} sink: target was committed with {key}={committed} "
+            f"but the sink is configured with {key}={configured} — the "
+            "stored layout would be misread (wrong touched-bucket "
             "filters, spurious transitions); use the committed value or "
             "rebuild the target"
         )
@@ -1298,7 +1462,7 @@ def _check_bucket_layout(meta: dict, n_buckets: int, tag: str) -> None:
 
 def _check_image_bucketing(meta: dict, r_join: str, s_join: str,
                            tag: str) -> None:
-    """Join-column twin of `_check_bucket_layout`: the join-view
+    """Join-column twin of `_check_layout`: the join-view
     sinks bucket their standing images by the JOIN column's hash, so
     resuming a target with DIFFERENT r_join/s_join would prune the
     wrong buckets in the bilinear Δ-terms — a corruption the
@@ -1452,114 +1616,35 @@ def cdc_tombstone_foreach_batch(
     Within a batch, a key may carry several ops; signed algebra makes
     intermediate states cancel, so the sink applies the NET effect:
     retract the stored image (if the key has one), insert the LAST op
-    by ``seq_col`` if it is an upsert. A tombstone for an absent key
-    retracts nothing (deletes are idempotent — compaction semantics).
-    Exactly-once follows the module's discipline: batch-id + file
-    provenance + the ``last_seq`` high-water mark commit with the
-    swap; seq regression, in-batch duplicate seq, and unknown op tags
-    raise. Contracts otherwise as the op-log sink (deterministic
-    business rendering, integer ``sum_cols``; n=0 groups persist).
+    by ``seq_col`` if it is an upsert (`_tombstone_changes`). A
+    tombstone for an absent key retracts nothing (deletes are
+    idempotent — compaction semantics). Exactly-once and the
+    ``last_seq`` guards as the op-log sink; contracts otherwise as
+    well (deterministic business rendering, integer ``sum_cols``; n=0
+    groups persist).
 
     Returns the final view as a batch DataFrame.
     """
-    import json
-    import os
-
     business = list(group_cols) + list(sum_cols)
-    extra = [c for c in business if c not in key_cols]
-    kb = F.pmod(F.hash(*[F.col(k) for k in key_cols]), F.lit(n_buckets))
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
+    def _step(batch_df: DataFrame, batch_id: int, meta: dict, stage: str):
         spark = batch_df.sparkSession
-        _recover_swap(target_dir)
-        _clean_stale_stages(target_dir)
-        sweep_orphans(target_dir)
-        meta = _read_sink_meta(target_dir)
-        _check_bucket_layout(meta, n_buckets, "cdc_tombstone")
-        batch_files = _batch_provenance(batch_df)
-        applied = set(meta.get("applied_files", []))
-        if _is_committed_replay(meta, batch_files, batch_id, "cdc_tombstone"):
-            return
-        op = F.col(op_col)
-        v = _validate_oplog_batch(
-            batch_df, op_col, seq_col, ("U", "D"),
-            meta.get("last_seq"), "cdc_tombstone",
+        changes = _tombstone_changes(
+            spark, target_dir, batch_df, meta, key_cols=key_cols,
+            op_col=op_col, seq_col=seq_col, business=business,
+            n_buckets=n_buckets, tag="cdc_tombstone",
         )
-        if v is None:
-            return
-        # net effect per key: the LAST op wins (intermediate signed
-        # states cancel); materialize once — it feeds the retraction
-        # join, the insert set, and the image rewrite
-        w = Window.partitionBy(*key_cols).orderBy(F.col(seq_col).desc())
-        last_ops = (
-            batch_df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select(*key_cols, op_col, *extra)
-            .localCheckpoint(eager=True)
-        )
-        touched = sorted(
-            int(r["b"]) for r in last_ops.select(kb.alias("b")).distinct().collect()
-        )
-        m_img = read_manifest(target_dir, "image")
-        old_touched = read_store(
-            spark, target_dir, "image", buckets=touched, manifest=m_img
-        )
-        keyset = last_ops.select(*key_cols)
-        if old_touched is not None:
-            retract = old_touched.join(F.broadcast(keyset), key_cols).select(
-                *business, F.lit(-1).alias("_sign")
-            )
-            survivors = old_touched.join(
-                F.broadcast(keyset), key_cols, "left_anti"
-            ).select(*key_cols, *extra, "_kb")
-        else:
-            retract = None
-            survivors = None
-        upserts = last_ops.filter(op == "U").select(
-            *key_cols, *extra, kb.alias("_kb")
-        )
-        inserts = upserts.select(*business, F.lit(1).alias("_sign"))
-        signed = retract.unionByName(inserts) if retract is not None else inserts
-        dview = signed.groupBy(*group_cols).agg(
-            F.sum("_sign").cast("bigint").alias("n"),
-            *[
-                F.sum(F.col("_sign") * F.col(c)).cast("bigint").alias(f"sum_{c}")
-                for c in sum_cols
-            ],
-        )
-        view = (
-            spark.read.parquet(os.path.join(target_dir, "view"))
-            if os.path.isdir(target_dir)
-            else None
-        )
-        view = _additive_merge(
-            view, dview, list(group_cols), ["n"] + [f"sum_{c}" for c in sum_cols]
-        )
-        stage = f"{target_dir}.stage-{batch_id}"
-        new_touched = (
-            survivors.unionByName(upserts) if survivors is not None else upserts
-        )
-        # touched buckets only: the manifest carries untouched buckets
-        # forward as rows, so the swap commits a complete image without
-        # rewriting (or even stat-ing) unchanged data files
-        write_store_delta(
-            spark, new_touched, target_dir, "image", stage,
-            batch_id=batch_id, touched=touched, manifest=m_img,
-        )
-        view.write.mode("overwrite").parquet(os.path.join(stage, "view"))
-        with open(os.path.join(stage, "_ivm_meta.json"), "w") as f:
-            json.dump(
-                {
-                    "last_batch_id": batch_id,
-                    "n_buckets": n_buckets,
-                    "applied_files": sorted(applied | batch_files),
-                    "last_seq": int(v["hi"]),
-                },
-                f,
-            )
-        _atomic_swap(stage, target_dir, batch_id)
+        if changes is None:
+            return None
+        signed, fields, write_image = changes
+        write_image(stage, batch_id)
+        _sum_view_refresh(spark, target_dir, stage, signed, group_cols, sum_cols)
+        return fields
 
-    _run_foreach_batch(oplog, _apply, checkpoint_dir, "cdc_tombstone", timeout_sec)
+    _exactly_once_sink(
+        oplog, target_dir, "cdc_tombstone", _step, n_buckets=n_buckets,
+        checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec,
+    )
     return oplog.sparkSession.read.parquet(os.path.join(target_dir, "view"))
 
 
@@ -1617,87 +1702,41 @@ def distinct_count_view_foreach_batch(
     levels committed in ONE atomic swap — the ``snapimg`` manifest
     store (keyed image + digests), the bucketed ``support`` store,
     and ``view/`` — so a crash can never apply a version to one
-    state level but not the other; batch-id + file provenance + the
-    monotonic-version guard follow the module's non-idempotent-sink
-    discipline. Support rows that reach zero are dropped by the
+    state level but not the other (`_exactly_once_sink`, plus the
+    monotonic-version guard). Support rows that reach zero are dropped by the
     shared refresh (indistinguishable from absent in the transition
     rule); n=0 view groups remain — finalize with ``n > 0``
     downstream.
 
     Returns the final view as a batch DataFrame.
     """
-    import json
-    import os
+    sup_kb = F.pmod(F.hash(F.col(group_col), F.col(value_col)), F.lit(n_buckets))
 
-    business = [group_col, value_col]
-    extra = [c for c in business if c not in key_cols]
-
-    def _hashed(img: DataFrame) -> DataFrame:
-        return img.select(*key_cols, *extra, _row_digest(business).alias("rh"))
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
+    def _step(batch_df: DataFrame, batch_id: int, meta: dict, stage: str):
         spark = batch_df.sparkSession
-        _recover_swap(target_dir)
-        _clean_stale_stages(target_dir)
-        sweep_orphans(target_dir)
-        meta = _read_sink_meta(target_dir)
-        batch_files = _batch_provenance(batch_df)
-        applied = set(meta.get("applied_files", []))
-        if _is_committed_replay(meta, batch_files, batch_id, "distinct_count"):
-            return
-        if batch_df.isEmpty():
-            return
-        _check_bucket_layout(meta, n_buckets, "distinct_count")
-        versions = sorted(
-            r["v"]
-            for r in batch_df.select(F.col(version_col).alias("v"))
-            .distinct()
-            .collect()
+        changes = _snapshot_changes(
+            spark, target_dir, batch_df, meta, key_cols=key_cols,
+            version_col=version_col, business=[group_col, value_col],
+            n_buckets=n_buckets,
         )
-        last_v = meta.get("last_version")
-        if last_v is not None and versions and min(versions) <= last_v:
-            raise RuntimeError(
-                f"sink: version {min(versions)} arrived after version "
-                f"{last_v} was applied — the landing violated the "
-                "monotonic version contract (equal/inverted file mtimes?); "
-                "refusing to apply a diff backwards"
-            )
-        key_kb = F.pmod(F.hash(*[F.col(k) for k in key_cols]), F.lit(n_buckets))
-        sup_kb = F.pmod(
-            F.hash(F.col(group_col), F.col(value_col)), F.lit(n_buckets)
-        )
-        signed, dpi = _digest_pruned_version_diffs(
-            spark, target_dir, "snapimg", batch_df, versions,
-            version_col,
-            lambda d: _hashed(d.select(*key_cols, *extra)),
-            key_cols, business, key_kb,
-        )
+        if changes is None:
+            return None
+        signed, fields, dpi = changes
         # net signed rows across the batch's versions apply in ONE
         # support refresh: the view's d is a function of the FINAL
         # support counts, so sequential per-version transitions and a
         # single net-delta application land on the same state.
-        # COUNT(DISTINCT) ignores NULL values (SQL semantics) and the
-        # support lookup inside the shared refresh is NULL-SAFE on the
-        # group — both pinned where every dialect shares them.
-        stage = f"{target_dir}.stage-{batch_id}"
         _distinct_state_refresh(
             spark, target_dir, stage, signed, group_col, value_col,
             sup_kb, "distinct_count", batch_id,
         )
         dpi.commit(stage, batch_id)
-        with open(os.path.join(stage, "_ivm_meta.json"), "w") as f:
-            json.dump(
-                {
-                    "last_batch_id": batch_id,
-                    "n_buckets": n_buckets,
-                    "applied_files": sorted(applied | batch_files),
-                    "last_version": versions[-1] if versions else None,
-                },
-                f,
-            )
-        _atomic_swap(stage, target_dir, batch_id)
+        return fields
 
-    _run_foreach_batch(snapshots, _apply, checkpoint_dir, "distinct_count", timeout_sec)
+    _exactly_once_sink(
+        snapshots, target_dir, "distinct_count", _step, n_buckets=n_buckets,
+        checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec,
+    )
     return snapshots.sparkSession.read.parquet(os.path.join(target_dir, "view"))
 
 
@@ -1722,9 +1761,7 @@ def _distinct_state_refresh(
     touched buckets' support (zero-count rows dropped; a NEGATIVE
     count RAISES — the support table is the divergence witness), and
     commit the ``support`` store's manifest and ``view/`` into the
-    caller's stage. The caller owns meta + the atomic swap."""
-    import os
-
+    caller's stage."""
     # ONE pass over the signed rows: the (group, value) partial agg is
     # the only corpus-delta-sized work, and both downstream deltas
     # derive from its (touched-pairs-sized) result — dn by re-summing
@@ -1769,12 +1806,9 @@ def _distinct_state_refresh(
         .alias("d"),
     )
     dview = _combine_n_d(dn, dd, group_col)
-    view = (
-        spark.read.parquet(os.path.join(target_dir, "view"))
-        if os.path.isdir(os.path.join(target_dir, "view"))
-        else None
+    view = _additive_merge(
+        _committed_view(spark, target_dir), dview, [group_col], ["n", "d"]
     )
-    view = _additive_merge(view, dview, [group_col], ["n", "d"])
     _write_bucketed_support(
         spark, target_dir, stage, merged, kb, touched, manifest, batch_id,
         counts=counts,
@@ -1832,12 +1866,10 @@ def distinct_count_oplog_foreach_batch(
     Signed support deltas commute, so batch-split invariance holds
     algebraically (the transition is a function of the committed old
     count and the batch's NET delta — pytest-pinned along with the
-    1→0→1 round trip). Exactly-once follows the module's discipline:
-    batch-id + file provenance + the ``last_seq`` high-water mark
-    commit inside the same swap as both state levels; replays skip,
-    seq regression / duplicate seq / unknown ops raise. Producer
-    contracts as ``cdc_oplog_foreach_batch`` (exact before-images,
-    key changes as D+I, deterministic value rendering).
+    1→0→1 round trip). Exactly-once (`_exactly_once_sink`) commits
+    both state levels in one swap; the ``last_seq`` guards and
+    producer contracts are ``cdc_oplog_foreach_batch``'s (exact
+    before-images, key changes as D+I, deterministic value rendering).
 
     Scale: per batch — one delta-sized validation agg, one
     (group, value) partial agg over the signed rows, a touched-
@@ -1848,56 +1880,27 @@ def distinct_count_oplog_foreach_batch(
 
     Returns the final view as a batch DataFrame.
     """
-    import json
-    import os
-
     kb = F.pmod(F.hash(F.col(group_col), F.col(value_col)), F.lit(n_buckets))
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        _recover_swap(target_dir)
-        _clean_stale_stages(target_dir)
-        sweep_orphans(target_dir)
-        meta = _read_sink_meta(target_dir)
-        _check_bucket_layout(meta, n_buckets, "distinct_oplog")
-        batch_files = _batch_provenance(batch_df)
-        applied = set(meta.get("applied_files", []))
-        if _is_committed_replay(meta, batch_files, batch_id, "distinct_oplog"):
-            return
-        op = F.col(op_col)
-        v = _validate_oplog_batch(
-            batch_df, op_col, seq_col, ("I", "U", "D"),
-            meta.get("last_seq"), "distinct_oplog",
+    def _step(batch_df: DataFrame, batch_id: int, meta: dict, stage: str):
+        changes = _oplog_changes(
+            batch_df, meta, op_col=op_col, seq_col=seq_col,
+            business=[group_col, value_col], prev_prefix=prev_prefix,
+            tag="distinct_oplog",
         )
-        if v is None:
-            return
-        business = [group_col, value_col]
-        retract = batch_df.filter(op.isin("U", "D")).select(
-            *[F.col(f"{prev_prefix}{c}").alias(c) for c in business],
-            F.lit(-1).alias("_sign"),
-        )
-        insert = batch_df.filter(op.isin("I", "U")).select(
-            *business, F.lit(1).alias("_sign")
-        )
-        stage = f"{target_dir}.stage-{batch_id}"
+        if changes is None:
+            return None
+        signed, fields = changes
         _distinct_state_refresh(
-            spark, target_dir, stage,
-            retract.unionByName(insert),
+            batch_df.sparkSession, target_dir, stage, signed,
             group_col, value_col, kb, "distinct_oplog", batch_id,
         )
-        with open(os.path.join(stage, "_ivm_meta.json"), "w") as f:
-            json.dump(
-                {
-                    "last_batch_id": batch_id,
-                    "n_buckets": n_buckets,
-                    "applied_files": sorted(applied | batch_files),
-                    "last_seq": int(v["hi"]),
-                },
-                f,
-            )
-        _atomic_swap(stage, target_dir, batch_id)
+        return fields
 
-    _run_foreach_batch(oplog, _apply, checkpoint_dir, "distinct_oplog", timeout_sec)
+    _exactly_once_sink(
+        oplog, target_dir, "distinct_oplog", _step, n_buckets=n_buckets,
+        checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec,
+    )
     return oplog.sparkSession.read.parquet(os.path.join(target_dir, "view"))
 
 
@@ -1938,8 +1941,8 @@ def distinct_count_tombstone_foreach_batch(
     transitions, zero rows dropped, negative counts raise). Target
     layout in ONE atomic swap: ``image/`` (key-hash-bucketed),
     ``support/`` (hash(group, value)-bucketed), ``view/``,
-    ``_ivm_meta.json``. Exactly-once and validation follow the
-    tombstone sink's discipline.
+    ``_ivm_meta.json``; the changelog producer is
+    `_tombstone_changes`.
 
     Scale: per batch — delta-sized dedup/validation, touched
     KEY-bucket image I/O (lookup + rewrite), touched SUPPORT-bucket
@@ -1948,92 +1951,28 @@ def distinct_count_tombstone_foreach_batch(
 
     Returns the final view as a batch DataFrame.
     """
-    import json
-    import os
-
-    business = [group_col, value_col]
-    extra = [c for c in business if c not in key_cols]
-    key_kb = F.pmod(F.hash(*[F.col(k) for k in key_cols]), F.lit(n_buckets))
     sup_kb = F.pmod(F.hash(F.col(group_col), F.col(value_col)), F.lit(n_buckets))
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
+    def _step(batch_df: DataFrame, batch_id: int, meta: dict, stage: str):
         spark = batch_df.sparkSession
-        _recover_swap(target_dir)
-        _clean_stale_stages(target_dir)
-        sweep_orphans(target_dir)
-        meta = _read_sink_meta(target_dir)
-        _check_bucket_layout(meta, n_buckets, "distinct_tombstone")
-        batch_files = _batch_provenance(batch_df)
-        applied = set(meta.get("applied_files", []))
-        if _is_committed_replay(meta, batch_files, batch_id, "distinct_tombstone"):
-            return
-        op = F.col(op_col)
-        v = _validate_oplog_batch(
-            batch_df, op_col, seq_col, ("U", "D"),
-            meta.get("last_seq"), "distinct_tombstone",
+        changes = _tombstone_changes(
+            spark, target_dir, batch_df, meta, key_cols=key_cols,
+            op_col=op_col, seq_col=seq_col, business=[group_col, value_col],
+            n_buckets=n_buckets, tag="distinct_tombstone",
         )
-        if v is None:
-            return
-        w = Window.partitionBy(*key_cols).orderBy(F.col(seq_col).desc())
-        last_ops = (
-            batch_df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select(*key_cols, op_col, *extra)
-            .localCheckpoint(eager=True)
-        )
-        touched = sorted(
-            int(r["b"])
-            for r in last_ops.select(key_kb.alias("b")).distinct().collect()
-        )
-        m_img = read_manifest(target_dir, "image")
-        old_touched = read_store(
-            spark, target_dir, "image", buckets=touched, manifest=m_img
-        )
-        if old_touched is None:
-            old_touched = spark.createDataFrame(
-                [],
-                last_ops.select(
-                    *key_cols, *extra, F.lit(0).alias("_kb")
-                ).schema,
-            )
-        keyset = last_ops.select(*key_cols)
-        # manufactured retractions: the stored rows of the batch's
-        # keys (whether the last op upserts or tombstones them)
-        retract = old_touched.join(F.broadcast(keyset), key_cols).select(
-            *business, F.lit(-1).alias("_sign")
-        )
-        upserts = last_ops.filter(op == "U")
-        insert = upserts.select(*business, F.lit(1).alias("_sign"))
-        stage = f"{target_dir}.stage-{batch_id}"
+        if changes is None:
+            return None
+        signed, fields, write_image = changes
         _distinct_state_refresh(
-            spark, target_dir, stage,
-            retract.unionByName(insert),
-            group_col, value_col, sup_kb, "distinct_tombstone", batch_id,
+            spark, target_dir, stage, signed, group_col, value_col,
+            sup_kb, "distinct_tombstone", batch_id,
         )
-        survivors = old_touched.join(
-            F.broadcast(keyset), key_cols, "left_anti"
-        ).select(*key_cols, *extra, "_kb")
-        new_touched = survivors.unionByName(
-            upserts.select(*key_cols, *extra, key_kb.alias("_kb"))
-        )
-        write_store_delta(
-            spark, new_touched, target_dir, "image", stage,
-            batch_id=batch_id, touched=touched, manifest=m_img,
-        )
-        with open(os.path.join(stage, "_ivm_meta.json"), "w") as f:
-            json.dump(
-                {
-                    "last_batch_id": batch_id,
-                    "n_buckets": n_buckets,
-                    "applied_files": sorted(applied | batch_files),
-                    "last_seq": int(v["hi"]),
-                },
-                f,
-            )
-        _atomic_swap(stage, target_dir, batch_id)
+        write_image(stage, batch_id)
+        return fields
 
-    _run_foreach_batch(
-        oplog, _apply, checkpoint_dir, "distinct_tombstone", timeout_sec
+    _exactly_once_sink(
+        oplog, target_dir, "distinct_tombstone", _step, n_buckets=n_buckets,
+        checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec,
     )
     return oplog.sparkSession.read.parquet(os.path.join(target_dir, "view"))
 
@@ -2059,9 +1998,7 @@ def _minmax_state_refresh(
     inside the touched buckets because the bucket key is the group
     hash; untouched groups' stored extrema are never read), and commit
     the ``support`` store manifest + ``view/`` into the caller's
-    stage. The caller owns meta + the atomic swap."""
-    import os
-
+    stage."""
     # ONE pass over the signed rows (same shape as
     # `_distinct_state_refresh`, r16): aggregate to (group, value)
     # first, derive dn by re-summing per-pair counts (exact bigint)
@@ -2096,11 +2033,9 @@ def _minmax_state_refresh(
             F.max(value_col).alias("mx"),
         )
     )
-    view_dir = os.path.join(target_dir, "view")
-    view_old = (
-        spark.read.parquet(view_dir)
-        if os.path.isdir(view_dir)
-        else spark.createDataFrame(
+    view_old = _committed_view(spark, target_dir)
+    if view_old is None:
+        view_old = spark.createDataFrame(
             [],
             dn.select(
                 *group_cols,
@@ -2109,7 +2044,6 @@ def _minmax_state_refresh(
                 F.lit(None).cast(dict(dsup.dtypes)[value_col]).alias("mx"),
             ).schema,
         )
-    )
     vo, dnn = view_old.alias("vo"), dn.alias("dn")
     base = vo.join(dnn, _ns_cond("vo", "dn", group_cols), "full_outer").select(
         *[
@@ -2195,10 +2129,8 @@ def minmax_view_oplog_foreach_batch(
     persist as (n=0, NULL, NULL) rows — additive state never forgets;
     finalize with ``n > 0``.
 
-    Exactly-once follows the module's discipline (batch-id + file
-    provenance + ``last_seq`` inside the swap; replays skip; seq
-    regression / duplicate seq / unknown ops raise). Producer
-    contracts as ``cdc_oplog_foreach_batch``. Batch-split invariance
+    Exactly-once (`_exactly_once_sink`), the ``last_seq`` guards and
+    producer contracts as ``cdc_oplog_foreach_batch``. Batch-split invariance
     holds because support deltas commute and extremum re-derivation
     depends only on the committed support plus the batch's net delta
     (pytest-pinned along with extremum eviction and the
@@ -2214,56 +2146,27 @@ def minmax_view_oplog_foreach_batch(
 
     Returns the final view as a batch DataFrame.
     """
-    import json
-    import os
-
     kb = F.pmod(F.hash(*[F.col(g) for g in group_cols]), F.lit(n_buckets))
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        _recover_swap(target_dir)
-        _clean_stale_stages(target_dir)
-        sweep_orphans(target_dir)
-        meta = _read_sink_meta(target_dir)
-        _check_bucket_layout(meta, n_buckets, "minmax_oplog")
-        batch_files = _batch_provenance(batch_df)
-        applied = set(meta.get("applied_files", []))
-        if _is_committed_replay(meta, batch_files, batch_id, "minmax_oplog"):
-            return
-        op = F.col(op_col)
-        v = _validate_oplog_batch(
-            batch_df, op_col, seq_col, ("I", "U", "D"),
-            meta.get("last_seq"), "minmax_oplog",
+    def _step(batch_df: DataFrame, batch_id: int, meta: dict, stage: str):
+        changes = _oplog_changes(
+            batch_df, meta, op_col=op_col, seq_col=seq_col,
+            business=list(group_cols) + [value_col],
+            prev_prefix=prev_prefix, tag="minmax_oplog",
         )
-        if v is None:
-            return
-        business = list(group_cols) + [value_col]
-        retract = batch_df.filter(op.isin("U", "D")).select(
-            *[F.col(f"{prev_prefix}{c}").alias(c) for c in business],
-            F.lit(-1).alias("_sign"),
-        )
-        insert = batch_df.filter(op.isin("I", "U")).select(
-            *business, F.lit(1).alias("_sign")
-        )
-        stage = f"{target_dir}.stage-{batch_id}"
+        if changes is None:
+            return None
+        signed, fields = changes
         _minmax_state_refresh(
-            spark, target_dir, stage,
-            retract.unionByName(insert),
+            batch_df.sparkSession, target_dir, stage, signed,
             group_cols, value_col, kb, "minmax_oplog", batch_id,
         )
-        with open(os.path.join(stage, "_ivm_meta.json"), "w") as f:
-            json.dump(
-                {
-                    "last_batch_id": batch_id,
-                    "n_buckets": n_buckets,
-                    "applied_files": sorted(applied | batch_files),
-                    "last_seq": int(v["hi"]),
-                },
-                f,
-            )
-        _atomic_swap(stage, target_dir, batch_id)
+        return fields
 
-    _run_foreach_batch(oplog, _apply, checkpoint_dir, "minmax_oplog", timeout_sec)
+    _exactly_once_sink(
+        oplog, target_dir, "minmax_oplog", _step, n_buckets=n_buckets,
+        checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec,
+    )
     return oplog.sparkSession.read.parquet(os.path.join(target_dir, "view"))
 
 
@@ -2300,10 +2203,9 @@ def minmax_view_tombstone_foreach_batch(
     support, touched-group extremum re-derivation, negative counts
     RAISE). Target layout in ONE atomic swap: the ``image`` store
     (key-hash-bucketed manifest), the ``support`` store (group-hash-
-    bucketed manifest), ``view/``, ``_ivm_meta.json``. Exactly-once
-    and validation follow the tombstone sinks' discipline; the two
-    dialects are pinned hash-identical on the same carving by the
-    catalog query + oracle.
+    bucketed manifest), ``view/``, ``_ivm_meta.json``; the changelog
+    producer is `_tombstone_changes`. The two dialects are pinned
+    hash-identical on the same carving by the catalog query + oracle.
 
     Scale: per batch — delta-sized dedup/validation, touched
     KEY-bucket image I/O, touched GROUP-bucket support I/O, an
@@ -2313,94 +2215,90 @@ def minmax_view_tombstone_foreach_batch(
 
     Returns the final view as a batch DataFrame.
     """
-    import json
-    import os
-
-    business = list(group_cols) + [value_col]
-    extra = [c for c in business if c not in key_cols]
-    key_kb = F.pmod(F.hash(*[F.col(k) for k in key_cols]), F.lit(n_buckets))
     sup_kb = F.pmod(F.hash(*[F.col(g) for g in group_cols]), F.lit(n_buckets))
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
+    def _step(batch_df: DataFrame, batch_id: int, meta: dict, stage: str):
         spark = batch_df.sparkSession
-        _recover_swap(target_dir)
-        _clean_stale_stages(target_dir)
-        sweep_orphans(target_dir)
-        meta = _read_sink_meta(target_dir)
-        _check_bucket_layout(meta, n_buckets, "minmax_tombstone")
-        batch_files = _batch_provenance(batch_df)
-        applied = set(meta.get("applied_files", []))
-        if _is_committed_replay(meta, batch_files, batch_id, "minmax_tombstone"):
-            return
-        op = F.col(op_col)
-        v = _validate_oplog_batch(
-            batch_df, op_col, seq_col, ("U", "D"),
-            meta.get("last_seq"), "minmax_tombstone",
+        changes = _tombstone_changes(
+            spark, target_dir, batch_df, meta, key_cols=key_cols,
+            op_col=op_col, seq_col=seq_col,
+            business=list(group_cols) + [value_col],
+            n_buckets=n_buckets, tag="minmax_tombstone",
         )
-        if v is None:
-            return
-        w = Window.partitionBy(*key_cols).orderBy(F.col(seq_col).desc())
-        last_ops = (
-            batch_df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select(*key_cols, op_col, *extra)
-            .localCheckpoint(eager=True)
-        )
-        touched = sorted(
-            int(r["b"])
-            for r in last_ops.select(key_kb.alias("b")).distinct().collect()
-        )
-        m_img = read_manifest(target_dir, "image")
-        old_touched = read_store(
-            spark, target_dir, "image", buckets=touched, manifest=m_img
-        )
-        if old_touched is None:
-            old_touched = spark.createDataFrame(
-                [],
-                last_ops.select(
-                    *key_cols, *extra, F.lit(0).alias("_kb")
-                ).schema,
-            )
-        keyset = last_ops.select(*key_cols)
-        # manufactured retractions: the stored rows of the batch's
-        # keys (whether the last op upserts or tombstones them)
-        retract = old_touched.join(F.broadcast(keyset), key_cols).select(
-            *business, F.lit(-1).alias("_sign")
-        )
-        upserts = last_ops.filter(op == "U")
-        insert = upserts.select(*business, F.lit(1).alias("_sign"))
-        stage = f"{target_dir}.stage-{batch_id}"
+        if changes is None:
+            return None
+        signed, fields, write_image = changes
         _minmax_state_refresh(
-            spark, target_dir, stage,
-            retract.unionByName(insert),
-            group_cols, value_col, sup_kb, "minmax_tombstone", batch_id,
+            spark, target_dir, stage, signed, group_cols, value_col,
+            sup_kb, "minmax_tombstone", batch_id,
         )
-        survivors = old_touched.join(
-            F.broadcast(keyset), key_cols, "left_anti"
-        ).select(*key_cols, *extra, "_kb")
-        new_touched = survivors.unionByName(
-            upserts.select(*key_cols, *extra, key_kb.alias("_kb"))
-        )
-        write_store_delta(
-            spark, new_touched, target_dir, "image", stage,
-            batch_id=batch_id, touched=touched, manifest=m_img,
-        )
-        with open(os.path.join(stage, "_ivm_meta.json"), "w") as f:
-            json.dump(
-                {
-                    "last_batch_id": batch_id,
-                    "n_buckets": n_buckets,
-                    "applied_files": sorted(applied | batch_files),
-                    "last_seq": int(v["hi"]),
-                },
-                f,
-            )
-        _atomic_swap(stage, target_dir, batch_id)
+        write_image(stage, batch_id)
+        return fields
 
-    _run_foreach_batch(
-        oplog, _apply, checkpoint_dir, "minmax_tombstone", timeout_sec
+    _exactly_once_sink(
+        oplog, target_dir, "minmax_tombstone", _step, n_buckets=n_buckets,
+        checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec,
     )
     return oplog.sparkSession.read.parquet(os.path.join(target_dir, "view"))
+
+
+def _topk_state_refresh(
+    spark,
+    target_dir: str,
+    stage: str,
+    batch_id: int,
+    new_touched: DataFrame,
+    tg: DataFrame,
+    touched: list,
+    m_img: dict | None,
+    *,
+    group_cols: list[str],
+    key_cols: list[str],
+    value_col: str,
+    k: int,
+) -> None:
+    """The affected-group top-k refresh both top-k sinks share:
+    ``new_touched`` (the post-batch image rows of the ``touched``
+    group-hash buckets) re-ranks for exactly the affected groups
+    ``tg`` — ``row_number() OVER (PARTITION BY group ORDER BY value
+    DESC NULLS LAST, key)`` ≤ k, the repo's deterministic tie-break.
+    The view is bucketed exactly like the image, so only the touched
+    buckets rewrite: their untouched-GROUP rows pass through
+    (anti-join), affected groups take the recompute. Both stores
+    commit their touched buckets into the stage; untouched buckets
+    carry as manifest rows."""
+    rank_w = Window.partitionBy(*group_cols).orderBy(
+        F.desc_nulls_last(value_col), *[F.col(c) for c in key_cols]
+    )
+    recomputed = (
+        new_touched.alias("nt")
+        .join(F.broadcast(tg.alias("tg")), _ns_cond("nt", "tg", group_cols), "left_semi")
+        .select(
+            *group_cols,
+            F.row_number().over(rank_w).cast("bigint").alias("rnk"),
+            *key_cols,
+            value_col,
+            "_kb",
+        )
+        .filter(F.col("rnk") <= k)
+    )
+    m_view = read_manifest(target_dir, "view")
+    new_view = recomputed
+    old_view = read_store(
+        spark, target_dir, "view", buckets=touched, manifest=m_view
+    )
+    if old_view is not None:
+        new_view = old_view.alias("ov").join(
+            F.broadcast(tg.alias("tg")), _ns_cond("ov", "tg", group_cols), "left_anti"
+        ).unionByName(recomputed)
+    write_store_delta(
+        spark, new_touched, target_dir, "image", stage,
+        batch_id=batch_id, touched=touched, manifest=m_img,
+    )
+    write_store_delta(
+        spark, new_view, target_dir, "view", stage,
+        batch_id=batch_id, touched=touched, manifest=m_view,
+    )
 
 
 def topk_view_tombstone_foreach_batch(
@@ -2459,36 +2357,22 @@ def topk_view_tombstone_foreach_batch(
     Returns the final view as a batch DataFrame (without the bucket
     column).
     """
-    import json
-    import os
-
     business = list(group_cols) + [value_col]
     extra = [c for c in business if c not in key_cols]
     kb = F.pmod(F.hash(*[F.col(g) for g in group_cols]), F.lit(n_buckets))
     key_kb = F.pmod(F.hash(*[F.col(c) for c in key_cols]), F.lit(n_buckets))
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
+    def _step(batch_df: DataFrame, batch_id: int, meta: dict, stage: str):
         spark = batch_df.sparkSession
-        _recover_swap(target_dir)
-        _clean_stale_stages(target_dir)
-        sweep_orphans(target_dir)
-        meta = _read_sink_meta(target_dir)
-        _check_bucket_layout(meta, n_buckets, "topk_tombstone")
-        batch_files = _batch_provenance(batch_df)
-        applied = set(meta.get("applied_files", []))
-        if _is_committed_replay(meta, batch_files, batch_id, "topk_tombstone"):
-            return
         op = F.col(op_col)
         v = _validate_oplog_batch(
             batch_df, op_col, seq_col, ("U", "D"),
             meta.get("last_seq"), "topk_tombstone",
         )
         if v is None:
-            return
-        w = Window.partitionBy(*key_cols).orderBy(F.col(seq_col).desc())
+            return None
         last_ops = (
-            batch_df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
+            _op_per_key(batch_df, key_cols, seq_col)
             .select(*key_cols, op_col, *extra)
             .localCheckpoint(eager=True)
         )
@@ -2570,40 +2454,10 @@ def topk_view_tombstone_foreach_batch(
         ).select(*key_cols, *extra, "_kb")
         up_img = upserts.select(*key_cols, *extra, kb.alias("_kb"))
         new_touched = survivors.unionByName(up_img).localCheckpoint(eager=True)
-        rank_w = Window.partitionBy(*group_cols).orderBy(
-            F.desc_nulls_last(value_col), *[F.col(c) for c in key_cols]
-        )
-        recomputed = (
-            new_touched.alias("nt")
-            .join(F.broadcast(tg.alias("tg")), _ns_cond("nt", "tg", group_cols), "left_semi")
-            .select(
-                *group_cols,
-                F.row_number().over(rank_w).cast("bigint").alias("rnk"),
-                *key_cols,
-                value_col,
-                "_kb",
-            )
-            .filter(F.col("rnk") <= k)
-        )
-        m_view = read_manifest(target_dir, "view")
-        old_view_touched = read_store(
-            spark, target_dir, "view", buckets=touched_img, manifest=m_view
-        )
-        if old_view_touched is not None:
-            kept_in_touched = old_view_touched.alias("ov").join(
-                F.broadcast(tg.alias("tg")), _ns_cond("ov", "tg", group_cols), "left_anti"
-            )
-            new_view_touched = kept_in_touched.unionByName(recomputed)
-        else:
-            new_view_touched = recomputed
-        stage = f"{target_dir}.stage-{batch_id}"
-        write_store_delta(
-            spark, new_touched, target_dir, "image", stage,
-            batch_id=batch_id, touched=touched_img, manifest=m_img,
-        )
-        write_store_delta(
-            spark, new_view_touched, target_dir, "view", stage,
-            batch_id=batch_id, touched=touched_img, manifest=m_view,
+        _topk_state_refresh(
+            spark, target_dir, stage, batch_id, new_touched, tg, touched_img,
+            m_img, group_cols=group_cols, key_cols=key_cols,
+            value_col=value_col, k=k,
         )
         loc_survivors = loc_old.join(
             F.broadcast(keyset), key_cols, "left_anti"
@@ -2621,20 +2475,11 @@ def topk_view_tombstone_foreach_batch(
             touched=touched_kk,
             manifest=m_loc,
         )
-        with open(os.path.join(stage, "_ivm_meta.json"), "w") as f:
-            json.dump(
-                {
-                    "last_batch_id": batch_id,
-                    "n_buckets": n_buckets,
-                    "applied_files": sorted(applied | batch_files),
-                    "last_seq": int(v["hi"]),
-                },
-                f,
-            )
-        _atomic_swap(stage, target_dir, batch_id)
+        return {"last_seq": int(v["hi"])}
 
-    _run_foreach_batch(
-        oplog, _apply, checkpoint_dir, "topk_tombstone", timeout_sec
+    _exactly_once_sink(
+        oplog, target_dir, "topk_tombstone", _step, n_buckets=n_buckets,
+        checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec,
     )
     out = read_store(oplog.sparkSession, target_dir, "view")
     if out is None:
@@ -2715,9 +2560,6 @@ def topk_view_oplog_foreach_batch(
     Returns the final view as a batch DataFrame (without the bucket
     column).
     """
-    import json
-    import os
-
     business = list(group_cols) + [value_col]
     extra = [c for c in business if c not in key_cols]
     kb = F.pmod(F.hash(*[F.col(g) for g in group_cols]), F.lit(n_buckets))
@@ -2728,29 +2570,18 @@ def topk_view_oplog_foreach_batch(
 
     prev_kb = F.pmod(F.hash(*[_prev(g) for g in group_cols]), F.lit(n_buckets))
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
+    def _step(batch_df: DataFrame, batch_id: int, meta: dict, stage: str):
         spark = batch_df.sparkSession
-        _recover_swap(target_dir)
-        _clean_stale_stages(target_dir)
-        sweep_orphans(target_dir)
-        meta = _read_sink_meta(target_dir)
-        _check_bucket_layout(meta, n_buckets, "topk_oplog")
-        batch_files = _batch_provenance(batch_df)
-        applied = set(meta.get("applied_files", []))
-        if _is_committed_replay(meta, batch_files, batch_id, "topk_oplog"):
-            return
         op = F.col(op_col)
         v = _validate_oplog_batch(
             batch_df, op_col, seq_col, ("I", "U", "D"),
             meta.get("last_seq"), "topk_oplog",
         )
         if v is None:
-            return
+            return None
         ops_df = batch_df.localCheckpoint(eager=True)  # feeds 5+ consumers
-        w = Window.partitionBy(*key_cols).orderBy(F.col(seq_col).desc())
         last_ops = (
-            ops_df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
+            _op_per_key(ops_df, key_cols, seq_col)
             .select(*key_cols, op_col, *extra)
             .localCheckpoint(eager=True)
         )
@@ -2793,10 +2624,8 @@ def topk_view_oplog_foreach_batch(
                 ).schema,
             )
         if verify_before_images:
-            w_asc = Window.partitionBy(*key_cols).orderBy(F.col(seq_col).asc())
             first_ops = (
-                ops_df.withColumn("_rn", F.row_number().over(w_asc))
-                .filter(F.col("_rn") == 1)
+                _op_per_key(ops_df, key_cols, seq_col, last=False)
                 .select(
                     *key_cols,
                     op,
@@ -2854,43 +2683,10 @@ def topk_view_oplog_foreach_batch(
         # post-batch rows of the touched buckets — the image rewrite
         # AND the rank recompute both read this
         new_touched = survivors.unionByName(upserts).localCheckpoint(eager=True)
-        rank_w = Window.partitionBy(*group_cols).orderBy(
-            F.desc_nulls_last(value_col), *[F.col(c) for c in key_cols]
-        )
-        recomputed = (
-            new_touched.alias("nt")
-            .join(F.broadcast(tg.alias("tg")), _ns_cond("nt", "tg", group_cols), "left_semi")
-            .select(
-                *group_cols,
-                F.row_number().over(rank_w).cast("bigint").alias("rnk"),
-                *key_cols,
-                value_col,
-                "_kb",
-            )
-            .filter(F.col("rnk") <= k)
-        )
-        m_view = read_manifest(target_dir, "view")
-        # the view is bucketed exactly like the image, so only the
-        # touched buckets rewrite: their untouched-GROUP rows pass
-        # through (anti-join), touched groups take the recompute
-        old_view_touched = read_store(
-            spark, target_dir, "view", buckets=sorted(touched), manifest=m_view
-        )
-        if old_view_touched is not None:
-            kept_in_touched = old_view_touched.alias("ov").join(
-                F.broadcast(tg.alias("tg")), _ns_cond("ov", "tg", group_cols), "left_anti"
-            )
-            new_view_touched = kept_in_touched.unionByName(recomputed)
-        else:
-            new_view_touched = recomputed
-        stage = f"{target_dir}.stage-{batch_id}"
-        write_store_delta(
-            spark, new_touched, target_dir, "image", stage,
-            batch_id=batch_id, touched=touched, manifest=m_img,
-        )
-        write_store_delta(
-            spark, new_view_touched, target_dir, "view", stage,
-            batch_id=batch_id, touched=touched, manifest=m_view,
+        _topk_state_refresh(
+            spark, target_dir, stage, batch_id, new_touched, tg,
+            sorted(touched), m_img, group_cols=group_cols,
+            key_cols=key_cols, value_col=value_col, k=k,
         )
         if verify_before_images:
             _key_index_guard_and_rewrite(
@@ -2914,19 +2710,12 @@ def topk_view_oplog_foreach_batch(
                 ),
                 tag="topk_oplog sink:",
             )
-        with open(os.path.join(stage, "_ivm_meta.json"), "w") as f:
-            json.dump(
-                {
-                    "last_batch_id": batch_id,
-                    "n_buckets": n_buckets,
-                    "applied_files": sorted(applied | batch_files),
-                    "last_seq": int(v["hi"]),
-                },
-                f,
-            )
-        _atomic_swap(stage, target_dir, batch_id)
+        return {"last_seq": int(v["hi"])}
 
-    _run_foreach_batch(oplog, _apply, checkpoint_dir, "topk_oplog", timeout_sec)
+    _exactly_once_sink(
+        oplog, target_dir, "topk_oplog", _step, n_buckets=n_buckets,
+        checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec,
+    )
     out = read_store(oplog.sparkSession, target_dir, "view")
     if out is None:
         raise RuntimeError(
@@ -2997,12 +2786,9 @@ def join_view_foreach_batch(
     ``pmod(hash(key), n_buckets)`` with per-bucket content digests, so
     each version's diff joins only digest-moved buckets and untouched
     buckets carry as manifest rows) and ``view/`` (one additive row
-    per group: ``n`` + ``sum_<c>``) — plus batch_id + source-file
-    provenance in
-    ``_ivm_meta.json``, so crash replay and fresh-checkpoint runs
-    follow the module's non-idempotent-sink discipline (replays skip,
-    new data under a fresh checkpoint raises). Contracts as the CDC
-    sink: unique non-null keys per version, text-deterministic
+    per group: ``n`` + ``sum_<c>``) — committed by
+    `_exactly_once_sink`, with the versions from `_snapshot_versions`.
+    Contracts as the CDC sink: unique non-null keys per version, text-deterministic
     business columns (money as integer cents), integer ``sum_cols``;
     zero-count groups remain as n=0 rows, finalize with ``n > 0``.
 
@@ -3020,9 +2806,6 @@ def join_view_foreach_batch(
 
     Returns the final view as a batch DataFrame.
     """
-    import json
-    import os
-
     if how not in ("inner", "left_outer"):
         raise ValueError(f"join_view sink: unsupported how={how!r}")
     if how == "left_outer" and not set(sum_cols) <= set(r_cols):
@@ -3037,19 +2820,11 @@ def join_view_foreach_batch(
         extra = [c for c in cols if c not in keys]  # a key may be business too
         return img.select(*keys, *extra, _row_digest(cols).alias("rh"))
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
+    def _step(batch_df: DataFrame, batch_id: int, meta: dict, stage: str):
         spark = batch_df.sparkSession
-        _recover_swap(target_dir)
-        _clean_stale_stages(target_dir)
-        sweep_orphans(target_dir)
-        meta = _read_sink_meta(target_dir)
-        batch_files = _batch_provenance(batch_df)
-        applied = set(meta.get("applied_files", []))
-        if _is_committed_replay(meta, batch_files, batch_id, "join_view"):
-            return
-        if batch_df.isEmpty():
-            return
-        _check_bucket_layout(meta, n_buckets, "join_view")
+        versions = _snapshot_versions(batch_df, version_col, meta)
+        if versions is None:
+            return None
         _check_image_bucketing(meta, r_join, s_join, "join_view")
         # images bucket by the JOIN column (not the primary key): a
         # delta row's potential matches live in the SAME bucket, so the
@@ -3069,25 +2844,7 @@ def join_view_foreach_batch(
             spark, target_dir, "snapimg_s", s_key, s_cols, kb_s,
             legacy_subdir="snap_s",
         )
-        view = (
-            spark.read.parquet(os.path.join(target_dir, "view"))
-            if os.path.isdir(os.path.join(target_dir, "view"))
-            else None
-        )
-        versions = sorted(
-            r["v"]
-            for r in batch_df.select(F.col(version_col).alias("v"))
-            .distinct()
-            .collect()
-        )
-        last_v = meta.get("last_version")
-        if last_v is not None and versions and min(versions) <= last_v:
-            raise RuntimeError(
-                f"sink: version {min(versions)} arrived after version "
-                f"{last_v} was applied — the landing violated the "
-                "monotonic version contract (equal/inverted file mtimes?); "
-                "refusing to apply a diff backwards"
-            )
+        view = _committed_view(spark, target_dir)
         for _vi, v in enumerate(versions):
             vdf = batch_df.filter(F.col(version_col) == v)
             img_r_src = vdf.filter(F.col(rel_col) == r_tag)
@@ -3227,22 +2984,7 @@ def join_view_foreach_batch(
                     F.lit(-1).alias("_sign"),
                 )
                 terms = terms.unionByName(t4).unionByName(t5).unionByName(t6)
-            dview = (
-                terms
-                .groupBy(*group_cols)
-                .agg(
-                    F.sum("_sign").cast("bigint").alias("n"),
-                    *[
-                        F.sum(F.col("_sign") * F.col(c))
-                        .cast("bigint")
-                        .alias(f"sum_{c}")
-                        for c in sum_cols
-                    ],
-                )
-            )
-            view = _additive_merge(
-                view, dview, list(group_cols), ["n"] + [f"sum_{c}" for c in sum_cols]
-            )
+            view = _merge_signed_sums(view, terms, group_cols, sum_cols)
             # cut the view's lineage every few versions (plan-depth
             # control for many-version batches; images do not nest)
             if _vi % 4 == 3:
@@ -3253,24 +2995,18 @@ def join_view_foreach_batch(
                 f"relations (got {r_tag}: {dpi_r.has_image()}, "
                 f"{s_tag}: {dpi_s.has_image()})"
             )
-        stage = f"{target_dir}.stage-{batch_id}"
         dpi_r.commit(stage, batch_id)
         dpi_s.commit(stage, batch_id)
         view.write.mode("overwrite").parquet(os.path.join(stage, "view"))
-        with open(os.path.join(stage, "_ivm_meta.json"), "w") as f:
-            json.dump(
-                {
-                    "last_batch_id": batch_id,
-                    "n_buckets": n_buckets,
-                    "image_bucketing": [r_join, s_join],
-                    "applied_files": sorted(applied | batch_files),
-                    "last_version": versions[-1] if versions else None,
-                },
-                f,
-            )
-        _atomic_swap(stage, target_dir, batch_id)
+        return {
+            "image_bucketing": [r_join, s_join],
+            "last_version": versions[-1],
+        }
 
-    _run_foreach_batch(snapshots, _apply, checkpoint_dir, "join_view", timeout_sec)
+    _exactly_once_sink(
+        snapshots, target_dir, "join_view", _step, n_buckets=n_buckets,
+        checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec,
+    )
     return snapshots.sparkSession.read.parquet(os.path.join(target_dir, "view"))
 
 
@@ -3349,9 +3085,9 @@ def join_view_oplog_foreach_batch(
       is dropped by the swap while verification is off (so flipping
       the flag back on re-backfills cleanly).
 
-    Exactly-once and validation follow the op-log sink's discipline
-    (batch-id + file provenance + ``last_seq`` high-water committed in
-    the swap; unknown op tags and duplicate seq raise).
+    Exactly-once (`_exactly_once_sink`) and validation as the op-log
+    sink (``last_seq`` high-water; unknown op tags and duplicate seq
+    raise).
 
     ``how="left_outer"`` maintains γ(R ⟕ S) (requires ``s_join`` to BE
     S's key — the FK-dim regime — and ``sum_cols ⊆ r_cols``): the
@@ -3377,9 +3113,6 @@ def join_view_oplog_foreach_batch(
 
     Returns the final view as a batch DataFrame.
     """
-    import json
-    import os
-
     if set(r_cols) & set(r_key) or set(s_cols) & set(s_key):
         raise ValueError(
             "join_view_oplog sink: r_cols/s_cols must not repeat key "
@@ -3417,25 +3150,16 @@ def join_view_oplog_foreach_batch(
     def _kb_of(col: str):
         return F.pmod(F.hash(F.col(col)), F.lit(n_buckets))
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
+    def _step(batch_df: DataFrame, batch_id: int, meta: dict, stage: str):
         spark = batch_df.sparkSession
-        _recover_swap(target_dir)
-        _clean_stale_stages(target_dir)
-        sweep_orphans(target_dir)
-        meta = _read_sink_meta(target_dir)
-        _check_bucket_layout(meta, n_buckets, "join_view_oplog")
         _check_image_bucketing(meta, r_join, s_join, "join_view_oplog")
-        batch_files = _batch_provenance(batch_df)
-        applied = set(meta.get("applied_files", []))
-        if _is_committed_replay(meta, batch_files, batch_id, "join_view_oplog"):
-            return
         op = F.col(op_col)
         v = _validate_oplog_batch(
             batch_df, op_col, seq_col, ("I", "U", "D"),
             meta.get("last_seq"), "join_view_oplog",
         )
         if v is None:
-            return
+            return None
 
         def _load_side(tag, keys, cols, join_col):
             """Everything one relation contributes this batch:
@@ -3448,10 +3172,10 @@ def join_view_oplog_foreach_batch(
             retract = ops_df.filter(op.isin("U", "D")).select(
                 *keys,
                 *[F.col(f"{prev_prefix}{c}").alias(c) for c in cols],
-                F.lit(-1).alias("sign"),
+                F.lit(-1).alias("_sign"),
             )
             insert = ops_df.filter(op.isin("I", "U")).select(
-                *keys, *cols, F.lit(1).alias("sign")
+                *keys, *cols, F.lit(1).alias("_sign")
             )
             delta = retract.unionByName(insert).localCheckpoint(eager=True)
             return delta, ops_df
@@ -3501,7 +3225,7 @@ def join_view_oplog_foreach_batch(
                     )
                     .select(
                         *[_pick("dr", "so", c) for c in out_cols],
-                        F.col("dr.sign").alias("sign"),
+                        F.col("dr._sign").alias("_sign"),
                     )
                 )
             if how == "left_outer":
@@ -3516,11 +3240,7 @@ def join_view_oplog_foreach_batch(
                     else dR.select(F.col(r_join).alias(s_join)).limit(0)
                 )
                 if s_ops is not None:
-                    w_s = Window.partitionBy(*s_key).orderBy(F.col(seq_col).desc())
-                    s_last = (
-                        s_ops.withColumn("_rn", F.row_number().over(w_s))
-                        .filter(F.col("_rn") == 1)
-                    )
+                    s_last = _op_per_key(s_ops, s_key, seq_col)
                     dels = s_last.filter(op == "D").select(*s_key)
                     ups = (
                         s_last.filter(op != "D")
@@ -3541,7 +3261,7 @@ def join_view_oplog_foreach_batch(
                         "left_anti",
                     ).select(
                         *[_null_pick("dr", c) for c in out_cols],
-                        F.col("dr.sign").alias("sign"),
+                        F.col("dr._sign").alias("_sign"),
                     )
                 )
         if dS is not None:
@@ -3558,7 +3278,7 @@ def join_view_oplog_foreach_batch(
                         F.col(f"ro.{r_join}") == F.col(f"ds.{s_join}"),
                     ).select(
                         *[_pick("ro", "ds", c) for c in out_cols],
-                        F.col("ds.sign").alias("sign"),
+                        F.col("ds._sign").alias("_sign"),
                     )
                 )
                 if how == "left_outer":
@@ -3568,7 +3288,7 @@ def join_view_oplog_foreach_batch(
                     # leave it). Attribute-only updates net 0 and are
                     # fully handled by the bilinear terms. The R scan is
                     # the same ΔS-bucket-pruned image as t2.
-                    net = dS.groupBy(s_join).agg(F.sum("sign").alias("_net"))
+                    net = dS.groupBy(s_join).agg(F.sum("_sign").alias("_net"))
                     # s_join IS S's key in outer mode, so a key's net
                     # presence change is −1, 0, or +1 by contract;
                     # |net| ≥ 2 (e.g. a duplicated I with the verifier
@@ -3594,7 +3314,7 @@ def join_view_oplog_foreach_batch(
                                 F.col(f"ro.{r_join}") == F.col(f"kt.{s_join}"),
                             ).select(
                                 *[_null_pick("ro", c) for c in out_cols],
-                                F.lit(sgn).alias("sign"),
+                                F.lit(sgn).alias("_sign"),
                             )
                         )
         if dR is not None and dS is not None:
@@ -3602,28 +3322,15 @@ def join_view_oplog_foreach_batch(
             terms.append(
                 dr.join(ds_, F.col(f"dr.{r_join}") == F.col(f"ds.{s_join}")).select(
                     *[_pick("dr", "ds", c) for c in out_cols],
-                    (F.col("dr.sign") * F.col("ds.sign")).alias("sign"),
+                    (F.col("dr._sign") * F.col("ds._sign")).alias("_sign"),
                 )
             )
-        view = (
-            spark.read.parquet(os.path.join(target_dir, "view"))
-            if os.path.isdir(os.path.join(target_dir, "view"))
-            else None
-        )
+        view = _committed_view(spark, target_dir)
         if terms:
             all_terms = terms[0]
             for t in terms[1:]:
                 all_terms = all_terms.unionByName(t)
-            dview = all_terms.groupBy(*group_cols).agg(
-                F.sum("sign").cast("bigint").alias("n"),
-                *[
-                    F.sum(F.col("sign") * F.col(c)).cast("bigint").alias(f"sum_{c}")
-                    for c in sum_cols
-                ],
-            )
-            view = _additive_merge(
-                view, dview, list(group_cols), ["n"] + [f"sum_{c}" for c in sum_cols]
-            )
+            view = _merge_signed_sums(view, all_terms, group_cols, sum_cols)
         if view is None:
             # first batch introduced only one relation: the view is
             # legitimately empty, but it must still commit — typed from
@@ -3641,8 +3348,6 @@ def join_view_oplog_foreach_batch(
                 ).schema,
             )
 
-        stage = f"{target_dir}.stage-{batch_id}"
-
         def _rewrite_image(sub, m_img, ops_df, keys, cols, join_col):
             """Touched-bucket rewrite of one relation's standing image
             (+ the before-image divergence guard)."""
@@ -3652,11 +3357,8 @@ def join_view_oplog_foreach_batch(
                     # one small file copy carries every bucket forward
                     carry_store(target_dir, carry, stage)
                 return
-            w = Window.partitionBy(*keys).orderBy(F.col(seq_col).desc())
-            last_ops = (
-                ops_df.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .localCheckpoint(eager=True)
+            last_ops = _op_per_key(ops_df, keys, seq_col).localCheckpoint(
+                eager=True
             )
             # a KEY join column has no prev_ twin (keys are immutable
             # within U — a key change is D+I), so it is its own
@@ -3702,10 +3404,8 @@ def join_view_oplog_foreach_batch(
                 # the earliest op per key must agree with the image:
                 # U/D carry a before-image that must exist and match;
                 # I must land on an absent key
-                w_asc = Window.partitionBy(*keys).orderBy(F.col(seq_col).asc())
                 first_ops = (
-                    ops_df.withColumn("_rn", F.row_number().over(w_asc))
-                    .filter(F.col("_rn") == 1)
+                    _op_per_key(ops_df, keys, seq_col, last=False)
                     .select(
                         *keys,
                         op,
@@ -3817,20 +3517,12 @@ def join_view_oplog_foreach_batch(
         _rewrite_image("image_r", m_r, r_ops, r_key, r_cols, r_join)
         _rewrite_image("image_s", m_s, s_ops, s_key, s_cols, s_join)
         view.write.mode("overwrite").parquet(os.path.join(stage, "view"))
-        with open(os.path.join(stage, "_ivm_meta.json"), "w") as f:
-            json.dump(
-                {
-                    "last_batch_id": batch_id,
-                    "n_buckets": n_buckets,
-                    "image_bucketing": [r_join, s_join],
-                    "applied_files": sorted(applied | batch_files),
-                    "last_seq": int(v["hi"]),
-                },
-                f,
-            )
-        _atomic_swap(stage, target_dir, batch_id)
+        return {"image_bucketing": [r_join, s_join], "last_seq": int(v["hi"])}
 
-    _run_foreach_batch(oplog, _apply, checkpoint_dir, "join_view_oplog", timeout_sec)
+    _exactly_once_sink(
+        oplog, target_dir, "join_view_oplog", _step, n_buckets=n_buckets,
+        checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec,
+    )
     return oplog.sparkSession.read.parquet(os.path.join(target_dir, "view"))
 
 
@@ -4001,9 +3693,6 @@ def _compact_index_tiers(
     overflows. Cost: each fingerprint participates in O(log n) merges
     across n appends — the bounded-compaction answer to rewriting the
     whole index every ~threshold increments."""
-    import os
-    import shutil
-
     rnd = 0
     while True:
         files = [f for f in os.listdir(index_dir) if f.endswith(".parquet")]
@@ -4084,10 +3773,6 @@ def incremental_dedup_runs(
     ``dedup_incremental_new_docs`` accounting. State is O(|index|)
     on disk, not in the stream; each increment costs one hash join
     against fingerprints, never a corpus rescan."""
-    import os
-
-    from pyspark.sql import Window
-
     landing = os.path.join(work_dir, "landing")
     index_dir = os.path.join(work_dir, "index")
     audit_dir = os.path.join(work_dir, "audit")
@@ -4095,8 +3780,7 @@ def incremental_dedup_runs(
     os.makedirs(landing, exist_ok=True)
 
     def apply(batch_df: DataFrame, batch_id: int) -> None:
-        _recover_swap(index_dir)  # a crash mid-compaction must not lose the index
-        _clean_stale_stages(index_dir)
+        _open_target(index_dir)  # a crash mid-compaction must not lose the index
         b = batch_df.select(
             "doc_id", "source", F.md5(F.col("text").cast("binary")).alias("h")
         )
@@ -4128,8 +3812,6 @@ def incremental_dedup_runs(
         # append the increment's accepted fingerprints as ONE new
         # level-0 file (controlled name so the tiered compactor can
         # read levels back from the directory listing alone)
-        import shutil as shutilmod
-
         tmp = f"{index_dir}.stage-append-{batch_id}"
         fresh.where(F.col("rn") == 1).select("h").coalesce(1).write.mode(
             "overwrite"
@@ -4150,7 +3832,7 @@ def incremental_dedup_runs(
                     os.path.join(tmp, fname),
                     os.path.join(index_dir, f"L0-{batch_id}-{token}-{i}.parquet"),
                 )
-        shutilmod.rmtree(tmp)
+        shutil.rmtree(tmp)
         _compact_index_tiers(spark, index_dir, batch_id)
 
     schema = None

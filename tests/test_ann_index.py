@@ -674,7 +674,7 @@ def test_ann_index_changes_locator_drift_witness(spark, tmp_path):
     _chg_run(spark, landing, target, str(tmp_path / "ck1"))
     # forge a locator entry for an id the store does not hold, via the
     # same manifest API the sink uses (white-box corruption)
-    from epe_data_wrangling_spark.streaming.ann_index import _atomic_swap
+    from epe_data_wrangling_spark.streaming.ops import _atomic_swap
     from epe_data_wrangling_spark.streaming.manifest import (
         read_manifest,
         read_store,

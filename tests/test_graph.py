@@ -46,3 +46,46 @@ def test_pagerank_rejects_unknown_mode(spark):
 
     with pytest.raises(ValueError, match="unknown pagerank mode"):
         pagerank(_toy_directed(spark), mode="magic")
+
+
+def test_concurrent_pins_restore_the_aqe_flag(spark):
+    """`_pin` flips the session-global AQE flag around its lazy
+    checkpoint; threads pinning at once must not interleave the
+    get/set/restore (one reading another's temporary "false" as the
+    value to restore) — afterwards the flag reads its original value.
+    More threads than cores, a short switch interval to provoke the
+    interleaving, and time-bounded joins."""
+    import sys
+    import threading
+
+    from epe_data_wrangling_spark.operators.graph import _pin
+
+    key = "spark.sql.adaptive.enabled"
+    original = spark.conf.get(key)
+    df = spark.range(8).repartition(2, "id")
+    n_threads = 6
+    errors = []
+    old_interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for _ in range(5):
+            barrier = threading.Barrier(n_threads)
+
+            def pin():
+                try:
+                    barrier.wait(timeout=60)
+                    _pin(df)
+                except Exception as e:  # surfaced below
+                    errors.append(e)
+
+            threads = [threading.Thread(target=pin) for _ in range(n_threads)]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=120)
+            assert not any(t.is_alive() for t in threads)
+            assert not errors, errors
+            assert spark.conf.get(key) == original
+    finally:
+        sys.setswitchinterval(old_interval)
+        spark.conf.set(key, original)

@@ -445,6 +445,28 @@ def test_append_mode_accumulates_without_rewriting(spark, tmp_path):
     ), {b: len(n) for b, n in m["buckets"].items()}
 
 
+def test_short_supplied_counts_raise_before_any_commit(spark, tmp_path):
+    """`write_store_delta(counts=...)` with a tally that MISSES a bucket
+    the delta carries must raise — not route that bucket's rows into a
+    file no manifest entry names (the fast path: every bucket its own
+    partition) or into a neighbor group's file (the packed path) — and
+    must leave no manifest in the stage."""
+    delta = _df(spark, [(k, k) for k in range(16)])
+    tally = delta.groupBy("_kb").agg(F.count(F.lit(1)).alias("c")).collect()
+    assert len(tally) > 2
+    # one bucket left (fast path) and all but one (packed path)
+    for i, short in enumerate((tally[:1], tally[1:])):
+        target = str(tmp_path / f"t{i}")
+        stage = f"{target}.stage-0"
+        with pytest.raises(RuntimeError, match="counts miss a bucket"):
+            write_store_delta(
+                spark, delta, target, "s", stage, batch_id=0,
+                touched=list(range(8)), manifest=None, counts=short,
+            )
+        assert not os.path.exists(os.path.join(stage, "_manifest_s.json"))
+        assert not os.listdir(pool_store_dir(target, "s"))  # tmp removed
+
+
 def test_caller_supplied_counts_match_self_counted_commit(spark, tmp_path):
     """r17: `write_store_delta(counts=...)` lets a caller that already
     tallied the delta per bucket (the support sinks' guard aggregate)

@@ -4,6 +4,7 @@ kernel (values differ only in final-ulp summation order)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from epe_data_wrangling_spark.operators import similarity as S
@@ -175,6 +176,12 @@ def test_ivf_assign_zero_norm_nan_witness(spark):
     # empty centroids: former inner join produced ZERO rows
     empty = mk([])
     assert S.ivf_assign(vecs, empty, vec_col="embedding", id_col="vec_id").count() == 0
+
+    # non-numeric cell ids cannot be negated for the tie-break: a clear
+    # TypeError at the broadcast-side build, not an analysis error later
+    cents_str = cents.withColumn("vec_id", F.col("vec_id").cast("string"))
+    with pytest.raises(TypeError, match="must be numeric"):
+        S.ivf_assign(vecs, cents_str, vec_col="embedding", id_col="vec_id")
 
     # probe selection: same ordering through sort_array desc + slice,
     # including the NaN-first and tie-by-lowest-cell paths

@@ -4,6 +4,8 @@ batch twin (one logical plan, two execution modes)."""
 
 from __future__ import annotations
 
+import pytest
+
 from epe_data_wrangling_spark.sources.tables import load_table
 from epe_data_wrangling_spark.streaming import ops
 from epe_data_wrangling_spark.streaming.sources import stream_events
@@ -542,47 +544,107 @@ def test_foreach_batch_ivm_state_invariant_to_batch_split(spark, tmp_path):
     assert results[0] == results[1] == results[2]
 
 
-def test_foreach_batch_ivm_mid_swap_crash_recovers_committed_state(spark, tmp_path):
-    """_atomic_swap is two renames; a crash between them leaves no
-    target dir but a committed `<target>.old-<id>` dir. _recover_swap
-    must restore it before the next merge — otherwise the replayed
-    batch would merge against an EMPTY base and silently lose all
-    prior state (the r7 ADVICE finding)."""
+@pytest.fixture(scope="module")
+def ivm_two_file_landing(spark, tmp_path_factory):
+    """Two order files landed ONCE for the crash matrix below — batch 0
+    bootstraps the target, batch 1 is the one each case crashes — plus
+    the no-crash expected state."""
+    from pyspark.sql import functions as F
+
+    o = load_table(spark, SF_DIR, "orders").select("o_orderpriority", "o_totalprice")
+    src = str(tmp_path_factory.mktemp("ivm_crash") / "landing")
+    o.filter(F.col("o_totalprice") < 100000).coalesce(1).write.parquet(src)
+    o.filter(F.col("o_totalprice") >= 100000).coalesce(1).write.parquet(
+        src, mode="append"
+    )
+    expect = {
+        r["o_orderpriority"]: r["n"]
+        for r in o.groupBy("o_orderpriority").agg(F.count(F.lit(1)).alias("n")).collect()
+    }
+    return o.schema, src, expect
+
+
+class _CrashOnce:
+    """Delegate to ``real`` but raise once when ``hit(*args)``."""
+
+    def __init__(self, real, hit):
+        self.real, self.hit, self.fired = real, hit, False
+
+    def __call__(self, *args, **kw):
+        if not self.fired and self.hit(*args):
+            self.fired = True
+            raise RuntimeError("injected crash")
+        return self.real(*args, **kw)
+
+
+class _ModuleProxy:
+    """A stand-in for a module imported by `streaming.ops` with one
+    function replaced — the crash stays local to the commit code."""
+
+    def __init__(self, module, name, fn):
+        self._module, self._name, self._fn = module, name, fn
+
+    def __getattr__(self, attr):
+        return self._fn if attr == self._name else getattr(self._module, attr)
+
+
+@pytest.mark.parametrize(
+    "point",
+    ["after_step", "after_meta_write", "between_renames", "before_old_rmtree"],
+)
+def test_foreach_batch_ivm_crash_at_every_commit_step_recovers(
+    spark, tmp_path, monkeypatch, ivm_two_file_landing, point
+):
+    """The exactly-once commit (`ops._exactly_once_sink`) crashed at each
+    of its steps — after the step wrote the stage, after the meta write,
+    between `_atomic_swap`'s two renames, and after promotion but
+    before the old dir's rmtree — then restarted on the SAME
+    checkpoint: the state equals the no-crash run (nothing lost,
+    nothing merged twice), no ``.stage-*``/``.old-*`` dir survives,
+    and a forced replay of the committed batch skips."""
+    import glob
     import os
+    import shutil
 
     from pyspark.sql import functions as F
 
-    from epe_data_wrangling_spark.sources.tables import load_table
-    from epe_data_wrangling_spark.streaming.ops import ivm_agg_foreach_batch
-
-    o = load_table(spark, SF_DIR, "orders").select("o_orderpriority", "o_totalprice")
-    half1 = o.filter(F.col("o_totalprice") < 100000)
-    half2 = o.filter(F.col("o_totalprice") >= 100000)
-    src = tmp_path / "landing"
-    half1.coalesce(1).write.parquet(str(src))
+    schema, src, expect = ivm_two_file_landing
     target = str(tmp_path / "state")
     ckpt = str(tmp_path / "ckpt")
+    stage1 = f"{target}.stage-1"
 
     def partial(df):
         return df.groupBy("o_orderpriority").agg(F.count(F.lit(1)).alias("n"))
 
     def run_once():
-        stream = spark.readStream.schema(o.schema).parquet(str(src))
-        return ivm_agg_foreach_batch(
+        stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
+        state = ops.ivm_agg_foreach_batch(
             stream, target, group_cols=["o_orderpriority"], partial_agg=partial,
             checkpoint_dir=ckpt,
         )
+        return {r["o_orderpriority"]: r["n"] for r in state.collect()}
 
-    run_once()
-    # simulate the mid-swap crash window: target renamed away, stage
-    # never promoted — exactly the state os.rename leaves behind
-    os.rename(target, f"{target}.old-0")
-    half2.coalesce(1).write.parquet(str(src), mode="append")
-    state = run_once()  # new file => batch 1 merges onto RECOVERED base
-    got = {r["o_orderpriority"]: r["n"] for r in state.collect()}
-    expect = {r["o_orderpriority"]: r["n"] for r in partial(o).collect()}
-    assert got == expect
-    assert not os.path.isdir(f"{target}.old-0")  # recovery also cleans up
+    if point == "after_step":
+        monkeypatch.setattr(ops, "_commit_target", _CrashOnce(
+            ops._commit_target, lambda stage, *a: stage == stage1))
+    elif point == "after_meta_write":
+        monkeypatch.setattr(ops, "_atomic_swap", _CrashOnce(
+            ops._atomic_swap, lambda stage, *a: stage == stage1))
+    elif point == "between_renames":
+        monkeypatch.setattr(ops, "os", _ModuleProxy(os, "rename", _CrashOnce(
+            os.rename, lambda src_, dst: src_ == stage1)))
+    else:
+        monkeypatch.setattr(ops, "shutil", _ModuleProxy(shutil, "rmtree", _CrashOnce(
+            shutil.rmtree, lambda p, *a: p == f"{target}.old-1")))
+    with pytest.raises(Exception, match="injected crash"):
+        run_once()  # batch 0 commits, batch 1 crashes at `point`
+    monkeypatch.undo()
+    assert run_once() == expect  # restart: batch 1 re-applies (or skips)
+    assert not glob.glob(f"{glob.escape(target)}.stage-*")
+    assert not glob.glob(f"{glob.escape(target)}.old-*")
+    for f in ("1", ".1.crc"):  # un-commit batch 1 in the checkpoint
+        os.remove(os.path.join(ckpt, "commits", f))
+    assert run_once() == expect  # redelivered batch 1 skips as a replay
 
 
 def test_foreach_batch_ivm_fresh_checkpoint_new_data_raises(spark, tmp_path):
@@ -3813,3 +3875,34 @@ def test_carved_oplog_matches_rel_oplog(spark):
          _rel_oplog(s1, s2, "c_custkey", S_COLS, 3 * G),
          _carved_oplog(sbase, "c_custkey", S_COLS, ssp1, ssp2, 3 * G)),
     ])
+
+
+def test_land_generations_one_file_per_generation(spark, tmp_path):
+    """`catalog.streaming_q._land_generations` lands every generation
+    from one job: one file per generation (the empty one included, via
+    the single-file fallback), the same schema and rows the per-
+    generation `land_single_file` produces, and strictly increasing
+    mtimes in generation order — the discovery-order contract the
+    snapshot sinks depend on."""
+    import os
+
+    from epe_data_wrangling_spark.catalog.streaming_q import _land_generations
+    from epe_data_wrangling_spark.streaming.sources import land_single_file
+
+    def gen(rows):
+        return spark.createDataFrame(rows, "k BIGINT, v STRING")
+
+    gens = [gen([(1, "a"), (2, "b")]), gen([]), gen([(3, None), (4, "d")])]
+    landing, ref = str(tmp_path / "landing"), str(tmp_path / "ref")
+    _land_generations(landing, gens)
+    for i, g in enumerate(gens, start=1):
+        land_single_file(g, ref, f"g{i}.parquet", i)
+    names = [f"g{i}.parquet" for i in range(1, len(gens) + 1)]
+    assert sorted(f for f in os.listdir(landing) if f.endswith(".parquet")) == names
+    for n in names:
+        got = spark.read.parquet(os.path.join(landing, n))
+        want = spark.read.parquet(os.path.join(ref, n))
+        assert got.schema == want.schema
+        assert _rows(got) == _rows(want)
+    mtimes = [os.path.getmtime(os.path.join(landing, n)) for n in names]
+    assert all(a < b for a, b in zip(mtimes, mtimes[1:])), mtimes
