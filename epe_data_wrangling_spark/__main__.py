@@ -46,9 +46,9 @@ def main(argv: list[str] | None = None) -> int:
     from epe_data_wrangling_spark.sources import sinks
 
     if args.demo:
-        from epe_data_wrangling_spark.plans.epe_demo import demo_workbook
+        from epe_data_wrangling_spark.plans.epe_demo import workbook_grids
 
-        fact = run_pipeline(spark, demo_workbook(spark))
+        fact = run_pipeline(spark, workbook_grids())
     else:
         path = args.input
         if args.url:

@@ -58,11 +58,11 @@ def epe_pipeline_demo(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full EPE pipeline (ingest → normalize A/B → single-projection
     semantic map → selector key) over the demo workbook; sf_dir is unused —
     the workbook is the reference's own data shape, not star-schema."""
-    from epe_data_wrangling_spark.plans.epe_demo import demo_workbook
+    from epe_data_wrangling_spark.plans.epe_demo import workbook_grids
     from epe_data_wrangling_spark.plans.epe_pipeline import run_pipeline
 
     if spark not in _FACT_MEMO:
-        _FACT_MEMO[spark] = run_pipeline(spark, demo_workbook(spark))
+        _FACT_MEMO[spark] = run_pipeline(spark, workbook_grids())
     return _FACT_MEMO[spark]
 
 
@@ -307,7 +307,6 @@ def epe_pipeline_via_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
         grids_from_cells,
         register,
     )
-    from epe_data_wrangling_spark.sources.workbook import grid_to_df
     from epe_data_wrangling_spark.sources.xlsx import write_xlsx
 
     drop = os.path.join(tempfile.gettempdir(), "epe_wb_pipeline_demo")
@@ -317,6 +316,4 @@ def epe_pipeline_via_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     register(spark)
     cells = spark.read.format("workbook").load(path)
-    grids = grids_from_cells(cells)
-    frames = {s: grid_to_df(spark, g, s) for s, g in grids.items()}
-    return run_pipeline(spark, frames)
+    return run_pipeline(spark, grids_from_cells(cells))

@@ -23,10 +23,10 @@ def locf(
 ) -> Column:
     """Last-observation-carried-forward over an ordered window.
 
-    Partitioning is mandatory: an unpartitioned LOCF would force a
-    global sort through a single task. In the EPE pipeline the
-    partition key is ``_sheet`` (SURVEY §4.3.1), so each sheet fills
-    independently and in parallel.
+    Partitioning is mandatory: an unpartitioned LOCF would carry values
+    across groups and force a global sort. In the EPE pipeline the
+    partition key is the sheet (SURVEY §4.3.1), so each sheet fills
+    independently within the stacked Shape-A frame.
     """
     w = (
         Window.partitionBy(*partition_by)

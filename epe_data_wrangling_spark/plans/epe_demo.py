@@ -130,12 +130,6 @@ def workbook_grids() -> dict[str, list]:
     }
 
 
-def demo_workbook(spark):
-    from epe_data_wrangling_spark.sources.workbook import grid_to_df
-
-    return {s: grid_to_df(spark, g, s) for s, g in workbook_grids().items()}
-
-
 _DATA_CELL = __import__("re").compile(r"^\d+\.5$")
 
 

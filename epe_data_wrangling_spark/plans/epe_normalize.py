@@ -1,8 +1,8 @@
-"""Per-sheet normalization — the reference's ``tratamento_dados_epe``
+"""Workbook normalization — the reference's ``tratamento_dados_epe``
 (`tratamento_epe.R:80-200`) re-expressed as a lazy Spark plan builder.
 
-Input: a ``grid_to_df`` frame (string columns named read_xls-style,
-plus ``_sheet``/``_row_idx``). Output: the canonical intermediate form
+Input: the ingested ``{sheet: grid}`` dict (first grid row = header,
+named read_xls-style). Output: the canonical intermediate form
 ``atributo_1..atributo_4 string, data date, valor double``
 (SURVEY §1.1). Two raw shapes (SURVEY C1):
 
@@ -12,341 +12,209 @@ plus ``_sheet``/``_row_idx``). Output: the canonical intermediate form
   the sheet (W1/W2).
 - **Shape B** (`R:158-196`): one wide table; the first post-junk row
   carries the years, each spanning 12 month columns (P9 — the
-  data-dependent-schema point: one driver-side row collect, then a
-  fully lazy plan).
+  data-dependent-schema point, read on the driver from the grid).
 
-Everything except Shape B's single header-row collect is a narrow,
-lazy DataFrame op; the only shuffle is the per-sheet LOCF window sort
-(partitioned by ``_sheet``, so sheets fill independently and in
-parallel — SURVEY §4.3.1).
+The reference maps one function over the sheets and binds the results
+(`R:71-72,202`). Here each SHAPE is normalized once: the driver stacks
+every sheet of a shape into one frame, cut to the shape's positional
+layout, with the per-sheet facts as per-row columns — sheet name →
+``atributo_1``, title cell → ``atributo_2``, Shape-B year header →
+``_years``. The plan therefore has one Shape-A and one Shape-B branch
+whatever the sheet count. Every step is a narrow lazy op except the
+Shape-A LOCF windows, which partition by sheet over the
+single-partition Shape-A frame and so sort without a shuffle.
 """
 
 from __future__ import annotations
 
 import re
 
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from epe_data_wrangling_spark.functions.cleaning import (
-    as_numeric,
     make_month_date,
     regexp_extract_na,
     str_to_title,
     typed_null,
 )
-from epe_data_wrangling_spark.operators.reshape import unpivot_regex
 from epe_data_wrangling_spark.operators.windows import locf
-from epe_data_wrangling_spark.sources.workbook import plan_time_rows, qcol
-
-#: Output schema of every normalized sheet (fixed, SURVEY §1.1).
-NORMALIZED_COLS = ("atributo_1", "atributo_2", "atributo_3", "atributo_4", "data", "valor")
-
-#: Column-expression memo. Building a Column is 1-10 py4j round-trips
-#: and the normalize plan builds ~18k of them per workbook (measured
-#: ~3 s of pure socket latency per EPE monthly cycle) — while the
-#: expressions themselves are context-free unresolved trees that the
-#: same sheet shapes reconstruct IDENTICALLY per sheet and per drop.
-#: Keyed by the live SparkContext so a restarted JVM can never serve
-#: stale gateway references. Size-capped: some keys carry per-workbook
-#: VALUES (title cells, per-sheet column names), so a long-running
-#: monthly-cycle driver would otherwise accumulate Column objects
-#: (each holding a py4j/JVM expression-tree reference) without bound —
-#: at ~18k entries per workbook the cap below holds a few workbooks'
-#: worth, and overflow clears the map wholesale (costs one rebuild of
-#: memoized expressions, never correctness).
-_EXPR_CACHE: dict = {"ctx": None, "m": {}}
-_EXPR_CACHE_MAX = 100_000
-
-
-def _cached_expr(key, build):
-    from pyspark import SparkContext
-
-    ctx = SparkContext._active_spark_context
-    if _EXPR_CACHE["ctx"] is not ctx:
-        _EXPR_CACHE["ctx"] = ctx
-        _EXPR_CACHE["m"] = {}
-    m = _EXPR_CACHE["m"]
-    if key not in m:
-        if len(m) >= _EXPR_CACHE_MAX:
-            m.clear()
-        m[key] = build()
-    return m[key]
+from epe_data_wrangling_spark.sources import workbook
+from epe_data_wrangling_spark.sources.workbook import Grid, readxl_names
 
 PLACEHOLDER_RE = re.compile(r"^\.\.\.[0-9]+$")
 SECTION_PATTERN = "REGIÃO GEOGRÁFICA|SUBSISTEMA ELÉTRICO|SUBSISTEMA"
 YEAR_PATTERN = r"^[0-9]{4}(|\*)$"
+MONTHS = [str(m) for m in range(1, 13)]
+
+_STR = pa.string()
+_TAGS = [pa.field("atributo_1", _STR), pa.field("atributo_2", _STR)]
 
 
-def _tag_and_slice(df: DataFrame, sheet: str, data_cols: list[str]) -> DataFrame:
-    """P1 (sheet-name tag), P2 (title broadcast from the first data
-    row's first cell, `R:88`), F1 (drop junk rows 1-3, `R:89`).
-
-    When the ingester left the raw rows on the driver
-    (``plan_time_rows``), the title is inlined as a literal — zero
-    extra plan nodes. Otherwise it is realized distributively as a
-    broadcast cross join of a 1-row projection (no collect)."""
-    rows = plan_time_rows(df)
-    sliced = df.filter(F.col("_row_idx") >= 3)
-    if rows is not None:
-        cell0 = next((r[2] for r in rows if r[1] == 0), None)
-        # one projection for both tag columns: every DataFrame method
-        # is a full analyzer pass over the accumulated plan, and the
-        # per-drop plan-build time is the EPE monthly sink's floor —
-        # fused projections here and below cut those passes ~half
-        # (same analyzed plan CollapseProject would produce)
-        return sliced.select(
-            "*",
-            _cached_expr(
-                ("title", cell0),
-                lambda: F.lit(cell0).cast("string").alias("atributo_2"),
-            ),
-            _cached_expr(
-                ("tag", sheet), lambda: F.lit(sheet).alias("atributo_1")
-            ),
-        )
-    title_df = df.filter(F.col("_row_idx") == 0).select(
-        qcol(data_cols[0]).alias("atributo_2")
-    )
-    return sliced.crossJoin(F.broadcast(title_df)).withColumn(
-        "atributo_1", F.lit(sheet)
-    )
+def _data_rows(grid: Grid) -> tuple[list[list], str | None]:
+    """The grid's data rows as strings, padded or cut to the header
+    width (the header row is consumed as column names), and the title:
+    the first data row's first cell (P2, `R:88`)."""
+    width = len(grid[0])
+    rows = [
+        [None if c is None else str(c) for c in (list(r) + [None] * width)[:width]]
+        for r in grid[1:]
+    ]
+    return rows, (rows[0][0] if rows else None)
 
 
-def normalize_sheet_a(df: DataFrame, sheet: str) -> DataFrame:
-    """Shape A (`tratamento_epe.R:96-156`). See module docstring."""
-    data_cols = [c for c in df.columns if c not in ("_sheet", "_row_idx")]
-    t = _tag_and_slice(df, sheet, data_cols)
+def _melt(ids: list[str], cols: list[str], var: str) -> list[str]:
+    """R5 cast + R1/R2 unpivot as ``selectExpr`` items: the id columns
+    plus ONE ``stack`` of (column number, ``as_numeric``(cell)) pairs.
+    SQL text reaches the JVM in one call, where a Column built per cell
+    column costs ~35 py4j round-trips on PySpark 4.1 (~1.7k for a
+    3-year workbook). A blank cell stays a NULL-valor row."""
+    pairs = ", ".join(f"{c}, try_cast(`{c}` AS DOUBLE)" for c in cols)
+    return [*ids, f"stack({len(cols)}, {pairs}) AS ({var}, valor)"]
 
-    # Year from column 2 (`R:98`): 4-digit (optionally starred) cell,
-    # digits only, NA on miss (str_extract semantics), then LOCF down
-    # the sheet (W1, `R:100`); section marker from column 1 +
-    # canonicalization (`R:102-104`); P3/C2 (`R:106-129`): rename the
-    # unnamed `...k` columns to month names 1..12 (+ a pre-aggregated
-    # Total_Ano when 13 — dropped, P5 `R:133`; the engine re-derives
-    # totals via rollup/cube, SURVEY §2.5); P4: first column →
-    # atributo_4 (`R:131`). Plan-time Python renames, exactly like the
-    # reference's plan-shaping lambdas (SURVEY §2.12-2.13) — all in
-    # ONE projection (one analyzer pass; a withColumn/rename loop
-    # would pay one pass per column over the deepening plan).
-    placeholders = [c for c in data_cols if PLACEHOLDER_RE.match(c)]
-    month_names = [str(m) for m in range(1, 13)] + (
-        ["Total_Ano"] if len(placeholders) == 13 else []
-    )
-    if len(placeholders) != len(month_names):
-        raise ValueError(
-            f"sheet {sheet!r}: {len(placeholders)} unnamed columns, expected 12 or 13"
-        )
-    ren = dict(zip(placeholders, month_names))
-    ren[data_cols[0]] = "atributo_4"
 
-    def _year_locf():
-        year_raw = regexp_extract_na(
-            regexp_extract_na(qcol(data_cols[1]), YEAR_PATTERN), "[0-9]+"
-        )
-        return locf(
-            year_raw, partition_by=["_sheet"], order_by=["_row_idx"]
-        ).alias("ano")
-
-    def _sec():
-        sec = regexp_extract_na(qcol(data_cols[0]), SECTION_PATTERN)
-        return (
-            F.when(sec.rlike("SUBSISTEMA"), F.lit("SUBSISTEMA ELÉTRICO"))
-            .otherwise(sec)
-            .alias("atributo_3")
-        )
-
-    t = t.select(
-        *[
-            _cached_expr(
-                ("ren", c, ren.get(c, c)),
-                lambda c=c: qcol(c).alias(ren.get(c, c)),
+def normalize_shape_a(spark: SparkSession, sheets: dict[str, Grid]) -> DataFrame:
+    """Shape A (`tratamento_epe.R:96-156`) over every Shape-A sheet at
+    once. See module docstring."""
+    stacked = []
+    for sheet, grid in sheets.items():
+        # P3/C2 (`R:106-129`): the unnamed `...k` columns are the months
+        # 1..12, plus a pre-aggregated Total_Ano when 13 — dropped here,
+        # before stacking (P5 `R:133`; the engine re-derives totals via
+        # rollup/cube, SURVEY §2.5). P4: the first column becomes
+        # atributo_4 (`R:131`); the year sits in column 2 (`R:98`).
+        months = [i for i, n in enumerate(readxl_names(grid[0])) if PLACEHOLDER_RE.match(n)]
+        if len(months) not in (12, 13):
+            raise ValueError(
+                f"sheet {sheet!r}: {len(months)} unnamed columns, expected 12 or 13"
             )
-            for c in t.columns
-            if ren.get(c, c) != "Total_Ano"
-        ],
-        _cached_expr(("year_locf", data_cols[1]), _year_locf),
-        _cached_expr(("sec", data_cols[0]), _sec),
+        keep = [0, 1, *months[:12]]
+        rows, title = _data_rows(grid)
+        # F1 (`R:89`): data rows 0-2 are junk; _row_idx keeps the
+        # sheet's physical row order for the LOCF windows
+        stacked += [(sheet, title, i, *[r[k] for k in keep]) for i, r in enumerate(rows) if i >= 3]
+    schema = pa.schema(
+        _TAGS
+        + [pa.field("_row_idx", pa.int64()), pa.field("atributo_4", _STR), pa.field("ano", _STR)]
+        + [pa.field(m, _STR) for m in MONTHS]
     )
+    t = workbook.grid_to_df(spark, stacked, schema)
+    by_sheet = dict(partition_by=["atributo_1"], order_by=["_row_idx"])
 
-    # F3+F4 (`R:136-138`): strip TOTAL/NC aggregate rows. R's
-    # !grepl(NA) keeps nulls at F3; F4 then drops them — same net
-    # effect as the null-safe conjunction here, in one filter pass.
-    def _f34():
-        a4 = F.col("atributo_4")
-        return (
-            (a4.isNull() | ~a4.rlike("^TOTAL|^NC "))
-            & (a4 != "TOTAL BRASIL")
-            & a4.isNotNull()
-        )
-
-    t = t.filter(_cached_expr(("a_f34",), _f34))
-
+    # W1 (`R:98-100`): 4-digit (optionally starred) year cell, digits
+    # only, NA on miss (str_extract semantics), filled down the sheet;
+    # section marker from column 1 + canonicalization (`R:102-104`).
+    year = regexp_extract_na(regexp_extract_na("ano", YEAR_PATTERN), "[0-9]+")
+    sec = regexp_extract_na("atributo_4", SECTION_PATTERN)
+    t = t.select(
+        "atributo_1", "atributo_2", "_row_idx", "atributo_4", *MONTHS,
+        locf(year, **by_sheet).alias("ano"),
+        F.when(sec.rlike("SUBSISTEMA"), "SUBSISTEMA ELÉTRICO").otherwise(sec).alias("atributo_3"),
+    )
+    # F3+F4 (`R:136-138`): strip TOTAL/NC aggregate rows (TOTAL BRASIL
+    # included) and unlabeled rows — a NULL label fails the predicate.
+    t = t.filter(~F.col("atributo_4").rlike("^TOTAL|^NC "))
     # W2 (`R:140`): fill section markers down; F5 (`R:142`): a row is
     # data iff January is present.
-    t = t.withColumn(
-        "atributo_3",
-        _cached_expr(
-            ("a_w2",),
-            lambda: locf(
-                "atributo_3", partition_by=["_sheet"], order_by=["_row_idx"]
-            ),
-        ),
-    )
-    t = t.filter(_cached_expr(("a_f5",), lambda: F.col("1").isNotNull()))
+    t = t.withColumn("atributo_3", locf("atributo_3", **by_sheet))
+    t = t.filter(F.col("1").isNotNull())
 
-    # R5 cast (`R:144`) + R1 unpivot (`R:148`) + X10 date (`R:150`).
-    t = t.select(
-        *[
-            _cached_expr(("cast", c), lambda c=c: as_numeric(qcol(c)).alias(c))
-            if re.match(r"^[0-9]+$", c)
-            else _cached_expr(("ren", c, c), lambda c=c: qcol(c).alias(c))
-            for c in t.columns
-        ]
-    )
-    t = unpivot_regex(
-        t,
-        id_cols=["atributo_1", "atributo_2", "atributo_3", "atributo_4", "ano"],
-        name_pattern=r"^[0-9]+$",
-        var_name="mes",
-        value_name="valor",
-    )
+    # R5 cast (`R:144`) + R1 unpivot (`R:148`).
+    ids = ["atributo_1", "atributo_2", "atributo_3", "atributo_4", "ano"]
+    t = t.selectExpr(*_melt(ids, MONTHS, "mes"))
     # X10 date (`R:150`) + P6 + X5/X7 string fixups (`R:152-156`) in
     # one tail projection; atributo_3's reroute reads the FIXED
     # atributo_4 (post-title-case), so the fixup expression appears in
     # both outputs — Catalyst CSE evaluates it once.
-    def _a_tail():
-        a4_fix = F.when(
-            F.col("atributo_4") == "C.OESTE", "Centro-Oeste"
-        ).otherwise(str_to_title("atributo_4"))
-        return [
-            F.when(a4_fix.rlike("Resid|Comer|Indus|Outros"), "CLASSE")
-            .otherwise(F.col("atributo_3"))
-            .alias("atributo_3"),
-            a4_fix.alias("atributo_4"),
-            make_month_date("ano", "mes").alias("data"),
-        ]
-
-    a3x, a4x, datax = _cached_expr(("a_tail",), _a_tail)
-    return t.select("atributo_1", "atributo_2", a3x, a4x, datax, "valor")
-
-
-def normalize_sheet_b(df: DataFrame, sheet: str) -> DataFrame:
-    """Shape B (`tratamento_epe.R:158-196`). The header harvest (P9,
-    `R:162-171`) is the pipeline's one data-dependent planning point:
-    collect exactly one row on the driver, derive the year_month
-    column names, then build the rest of the plan lazily."""
-    data_cols = [c for c in df.columns if c not in ("_sheet", "_row_idx")]
-    t = _tag_and_slice(df, sheet, data_cols)
-
-    # P9: harvest the year header (first post-junk row, `R:163`) —
-    # from the ingester's driver-side rows when available, else one
-    # distributed row collect (the forced inspect-then-plan point).
-    rows = plan_time_rows(df)
-    if rows is not None:
-        hdr = next((r[2:] for r in rows if r[1] == 3), None)
-    else:
-        hdr = df.filter(F.col("_row_idx") == 3).select(*[qcol(c) for c in data_cols]).first()
-    if hdr is None:
-        raise ValueError(f"sheet {sheet!r}: no header row at _row_idx 3")
-    years = []
-    for cell in hdr[1:]:
-        m = re.fullmatch(r"[0-9]{4}(\*|)", str(cell or ""))
-        if m:
-            years.append(re.sub(r"[^0-9]", "", m.group(0)))
-    if 12 * len(years) != len(data_cols) - 1:
-        raise ValueError(
-            f"sheet {sheet!r}: {len(years)} years × 12 ≠ {len(data_cols) - 1} data columns"
-        )
-    new_names = [f"{y}_{m}" for y in years for m in range(1, 13)]
-    # single-select rename (one analyzer pass; the per-column
-    # withColumnRenamed loop re-analyzed the deep plan once per
-    # year_month column — ~100 passes on a multi-year sheet)
-    ren = {data_cols[0]: "atributo_3"}
-    ren.update(zip(data_cols[1:], new_names))
-    t = t.select(
-        *[
-            _cached_expr(
-                ("ren", c, ren.get(c, c)),
-                lambda c=c: qcol(c).alias(ren.get(c, c)),
-            )
-            for c in t.columns
-        ]
+    a4_fix = F.when(F.col("atributo_4") == "C.OESTE", "Centro-Oeste").otherwise(
+        str_to_title("atributo_4")
     )
+    return t.select(
+        "atributo_1",
+        "atributo_2",
+        F.when(a4_fix.rlike("Resid|Comer|Indus|Outros"), "CLASSE")
+        .otherwise(F.col("atributo_3"))
+        .alias("atributo_3"),
+        a4_fix.alias("atributo_4"),
+        make_month_date("ano", "mes").alias("data"),
+        "valor",
+    )
+
+
+def normalize_shape_b(spark: SparkSession, sheets: dict[str, Grid]) -> DataFrame:
+    """Shape B (`tratamento_epe.R:158-196`) over every Shape-B sheet at
+    once. The header harvest (P9, `R:162-171`) is the pipeline's one
+    data-dependent planning point: each sheet's year header is read on
+    the driver from its grid, and data column ``p`` (1-based) holds
+    year ``_years[(p-1) div 12]``, month ``(p-1) mod 12 + 1``."""
+    parsed = []
+    for sheet, grid in sheets.items():
+        rows, title = _data_rows(grid)
+        # the year header is the first post-junk row (`R:163`)
+        if len(rows) < 4:
+            raise ValueError(f"sheet {sheet!r}: no header row at _row_idx 3")
+        years = [
+            re.sub(r"[^0-9]", "", c) for c in rows[3][1:] if re.fullmatch(r"[0-9]{4}\*?", c or "")
+        ]
+        if 12 * len(years) != len(grid[0]) - 1:
+            raise ValueError(
+                f"sheet {sheet!r}: {len(years)} years × 12 ≠ {len(grid[0]) - 1} data columns"
+            )
+        parsed.append((sheet, title, years, rows[3:]))
+    # The stacked sheets share the widest sheet's data columns; a
+    # narrower sheet's extra slots are NULL padding, cut after the
+    # unpivot.
+    slots = [str(p) for p in range(1, 1 + max(12 * len(y) for _, _, y, _ in parsed))]
+    schema = pa.schema(
+        _TAGS
+        + [pa.field("_years", pa.list_(_STR)), pa.field("atributo_3", _STR)]
+        + [pa.field(s, _STR) for s in slots]
+    )
+    stacked = [
+        (sheet, title, years, *r, *[None] * (len(slots) + 1 - len(r)))
+        for sheet, title, years, rows in parsed
+        for r in rows
+    ]
+    t = workbook.grid_to_df(spark, stacked, schema)
 
     # F6/F7/F8 (`R:175-179`): keep real data rows (3rd column non-null
     # — this also removes the year-header row itself), labeled, and
-    # not TOTAL aggregates — one filter pass (null-safe conjunction:
-    # each conjunct's null-drop matches its original filter).
-    def _f678():
-        return (
-            F.col(new_names[1]).isNotNull()
-            & F.col("atributo_3").isNotNull()
-            & ~F.col("atributo_3").rlike("^TOTAL")
-        )
+    # not TOTAL aggregates — a NULL label fails the rlike.
+    t = t.filter(F.col("2").isNotNull() & ~F.col("atributo_3").rlike("^TOTAL"))
 
-    t = t.filter(_cached_expr(("b_f678", new_names[1]), _f678))
+    # R5 cast (`R:182`) + R2 unpivot (`R:185`) + R3 split (`R:187`) by
+    # position; slots past the sheet's 12·|years| are padding and never
+    # become rows, while a blank month inside the sheet's width stays a
+    # NULL-valor row.
+    ids = ["atributo_1", "atributo_2", "atributo_3", "_years"]
+    t = t.selectExpr(*_melt(ids, slots, "_slot"))
+    t = t.filter(F.col("_slot") <= 12 * F.size("_years"))
+    p = F.col("_slot") - 1
 
-    # R5 cast (`R:182`) + R2 unpivot (`R:185`) + R3 split (`R:187`) +
     # X10 date (`R:189`) + X11 null pad (`R:192`) + P6 (`R:194`).
-    t = t.select(
-        *[
-            _cached_expr(("cast", c), lambda c=c: as_numeric(qcol(c)).alias(c))
-            if re.match(r"^[0-9]{4}_[0-9]+$", c)
-            else _cached_expr(("ren", c, c), lambda c=c: qcol(c).alias(c))
-            for c in t.columns
-        ]
-    )
-    t = unpivot_regex(
-        t,
-        id_cols=["atributo_1", "atributo_2", "atributo_3"],
-        name_pattern=r"^[0-9]{4}_[0-9]+$",
-        var_name="ano_mes",
-        value_name="valor",
-    )
-    # split ONCE into its own projection (R3, `R:188` separate):
-    # repeating split(ano_mes)[i] inside the date expression makes
-    # Catalyst's subexpression elimination emit a helper function
-    # whose parameter is the Expand operator's mutable-state slot —
-    # invalid Java ("UTF8String x[0]" as a parameter), so the whole
-    # fused stage fell back to interpreted execution (Janino
-    # CompileException; Spark codegen bug, Expand + CSE). A non-cheap
-    # alias in a separate projection survives CollapseProject, the
-    # downstream getItem accesses are plain attribute reads, and the
-    # stage compiles.
-    t = t.withColumn(
-        "_ano_mes_parts",
-        _cached_expr(("b_split",), lambda: F.split("ano_mes", "_")),
-    )
-
-    # one tail projection: X10 date from the split parts, X11 null
-    # pad, P6 final column set
-    def _b_tail():
-        data = make_month_date(
-            F.col("_ano_mes_parts").getItem(0),
-            F.col("_ano_mes_parts").getItem(1),
-        )
-        return [typed_null("string").alias("atributo_4"), data.alias("data")]
-
-    a4x, datax = _cached_expr(("b_tail",), _b_tail)
+    data = make_month_date(F.element_at("_years", (p / 12).cast("int") + 1), p % 12 + 1)
     return t.select(
-        "atributo_1", "atributo_2", "atributo_3", a4x, datax, "valor"
+        "atributo_1",
+        "atributo_2",
+        "atributo_3",
+        typed_null("string").alias("atributo_4"),
+        data.alias("data"),
+        "valor",
     )
 
 
-def normalize_workbook(sheets: dict[str, DataFrame], split_sheet: str = "CONSUMIDORES TOTAIS") -> DataFrame:
-    """U1 (`R:202`): normalize every sheet and union by name. Sheets up
-    to and including ``split_sheet`` (workbook order) are Shape A, the
-    rest Shape B (C1, `R:94`)."""
+def normalize_workbook(
+    spark: SparkSession, sheets: dict[str, Grid], split_sheet: str = "CONSUMIDORES TOTAIS"
+) -> DataFrame:
+    """U1 (`R:202`): normalize the workbook as one Shape-A and one
+    Shape-B branch. Sheets up to and including ``split_sheet``
+    (workbook order) are Shape A, the rest Shape B (C1, `R:94`)."""
     names = list(sheets)
     if split_sheet not in names:
         raise ValueError(f"split sheet {split_sheet!r} not in workbook {names}")
-    split_at = names.index(split_sheet)
-    frames = [
-        normalize_sheet_a(df, s) if i <= split_at else normalize_sheet_b(df, s)
-        for i, (s, df) in enumerate(sheets.items())
-    ]
-    out = frames[0]
-    for f in frames[1:]:
-        out = out.unionByName(f)
+    cut = names.index(split_sheet) + 1
+    out = normalize_shape_a(spark, {s: sheets[s] for s in names[:cut]})
+    if cut < len(names):
+        out = out.unionByName(normalize_shape_b(spark, {s: sheets[s] for s in names[cut:]}))
     return out

@@ -1,15 +1,16 @@
 """End-to-end EPE pipeline — the reference's entry point 1
-(SURVEY §3): ingest → per-sheet normalize → union → semantic map →
-partitioned parquet sink.
+(SURVEY §3): ingest → normalize (one branch per sheet shape) → semantic
+map → partitioned parquet sink.
 
 Ingest is driver-side (sheets are small, §4.3.1) and hands Spark each
-sheet as an Arrow-built frame, so no Python worker runs. Every
+sheet shape as one Arrow-built frame, so no Python worker runs. Every
 transformation is lazy and the semantic map is one filter plus one
 projection, so ``run_pipeline`` submits zero Spark jobs: the first job
-is the sink's. The only wide operations are the per-sheet LOCF window
-and the sink's rebalance exchange on the month. The sink partitions by
-month (`data`), the natural pruning key for the monthly-refresh
-consumption data (SURVEY §4.4).
+is the sink's. The only wide operations are the Shape-A LOCF window
+(shuffle-free over its single partition) and the sink's rebalance
+exchange on the month. The sink partitions by month (`data`), the
+natural pruning key for the monthly-refresh consumption data
+(SURVEY §4.4).
 """
 
 from __future__ import annotations
@@ -18,26 +19,26 @@ from pyspark.sql import DataFrame, SparkSession
 
 from epe_data_wrangling_spark.plans.epe_normalize import normalize_workbook
 from epe_data_wrangling_spark.plans.epe_semantic import semantic_map
+from epe_data_wrangling_spark.sources.workbook import Grid
 
 
 def run_pipeline(
     spark: SparkSession,
-    source: str | dict[str, DataFrame],
+    source: str | dict[str, Grid],
     *,
     split_sheet: str = "CONSUMIDORES TOTAIS",
 ) -> DataFrame:
     """Full pipeline. ``source`` is a workbook path or an
-    already-ingested ``{sheet: grid DataFrame}`` dict (ordered).
+    already-ingested ``{sheet: grid}`` dict (ordered), as
+    ``read_workbook_grids`` and ``grids_from_cells`` return it.
 
     Returns a lazy plan: the normalized union feeds the single-pass
     semantic map directly, with no checkpoint or cache in between."""
     if isinstance(source, str):
-        from epe_data_wrangling_spark.sources.workbook import read_workbook
+        from epe_data_wrangling_spark.sources import workbook
 
-        sheets = read_workbook(spark, source)
-    else:
-        sheets = source
-    return semantic_map(normalize_workbook(sheets, split_sheet=split_sheet))
+        source = workbook.read_workbook_grids(source)
+    return semantic_map(normalize_workbook(spark, source, split_sheet=split_sheet))
 
 
 def write_fact(df: DataFrame, path: str, *, mode: str = "overwrite") -> None:

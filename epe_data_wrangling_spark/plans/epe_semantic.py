@@ -5,9 +5,11 @@ Input: the normalized union (atributo_1..4, data, valor). The
 reference's five semantic branches (C3) filter on mutually exclusive
 predicates over ``atributo_1``, so their union is one filter and their
 derivations one projection: each output column is a ``when`` chain
-over the five predicates. ``atributo_1`` is a literal per sheet, so
-Catalyst folds the chains per sheet and prunes the excluded sheets
-from the plan. The projection also adds the ``chave_seletora``
+over the five predicates, evaluated per row on the sheet name in
+``atributo_1``. The filter reads only ``atributo_1``, the LOCF
+windows' partition key, so Catalyst pushes it down to the stacked
+sheet frames and the excluded sheets drop out before normalization
+work. The projection also adds the ``chave_seletora``
 selector key (X9, `R:274`), which exists precisely so downstream
 consumers can *filter* instead of join (`tratamento_epe.rmd:275`).
 

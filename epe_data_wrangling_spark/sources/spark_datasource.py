@@ -307,6 +307,9 @@ class WorkbookStreamReader(DataSourceStreamReader):
         pass  # offsets are pure metadata; nothing external to ack
 
 
+_GRID_FIELDS = ("sheet", "sheet_idx", "row_idx", "col_idx", "value", "sheet_rows", "sheet_cols")
+
+
 def grids_from_cells(cells_df) -> dict[str, list]:
     """Reassemble the grid contract from the CELL relation — the
     bridge from the distributed source back into the EPE pipeline
@@ -316,10 +319,19 @@ def grids_from_cells(cells_df) -> dict[str, list]:
     ordered {sheet: grid} dict exactly as the driver-side readers
     produce it — empty sheets and trailing all-blank rows/columns
     included, via the geometry marker rows the source emits."""
-    rows = cells_df.select(
-        "sheet", "sheet_idx", "row_idx", "col_idx", "value",
-        "sheet_rows", "sheet_cols",
-    ).collect()
+    return _assemble_grids(cells_df.select(*_GRID_FIELDS).collect())
+
+
+def grids_by_file(cells_df) -> dict[str, dict[str, list]]:
+    """``grids_from_cells`` for a relation holding several workbooks:
+    ONE collect, then ``{file: {sheet: grid}}`` in file-name order."""
+    by_file: dict[str, list] = {}
+    for r in cells_df.select("file", *_GRID_FIELDS).collect():
+        by_file.setdefault(r.file, []).append(r)
+    return {f: _assemble_grids(by_file[f]) for f in sorted(by_file)}
+
+
+def _assemble_grids(rows) -> dict[str, list]:
     sheets: dict[int, str] = {}
     dims: dict[str, tuple[int, int]] = {}
     cells: dict[str, dict[tuple[int, int], str]] = {}

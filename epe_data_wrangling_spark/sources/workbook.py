@@ -10,18 +10,20 @@ Spark contract implemented here:
 
 - Sheets are read **on the driver** (they are small — thousands of
   rows; the 100 TB posture applies to the fact table *after*
-  normalization, not the workbook) and stamped with ``_sheet`` and a
-  0-based ``_row_idx`` **before** ``createDataFrame``, because Spark
-  provides no row-order guarantee and ``monotonically_increasing_id``
-  is not stable across re-planning.
-- Each sheet reaches Spark as a ``pyarrow.Table``: the JVM decodes the
-  Arrow batches itself, so building a frame submits no job and no
-  Python worker ever serves sheet rows.
+  normalization, not the workbook) into an ordered ``{sheet: grid}``
+  dict, the pipeline's ingested form. The normalizer stamps each row
+  with its sheet and a 0-based ``_row_idx`` **before**
+  ``createDataFrame``, because Spark provides no row-order guarantee
+  and ``monotonically_increasing_id`` is not stable across re-planning.
+- The sheets of one shape reach Spark together as ONE ``pyarrow.Table``
+  (``grid_to_df``): the JVM decodes the Arrow batches itself, so
+  building a frame submits no job and no Python worker ever serves
+  sheet rows.
 - All data cells are strings (read_xls parity); typed casts happen in
   the normalize stage with ``try_cast`` (R's as.numeric-to-NA).
-- At cluster scale the same grid contract can be produced by a
-  distributed Excel datasource; everything downstream only sees a
-  DataFrame with (_sheet, _row_idx, named string columns).
+- At cluster scale the same grids can be produced by a distributed
+  Excel datasource (``sources.spark_datasource.grids_from_cells``);
+  everything downstream only sees the ``{sheet: grid}`` dict.
 """
 
 from __future__ import annotations
@@ -29,19 +31,11 @@ from __future__ import annotations
 import urllib.request
 from collections.abc import Sequence
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 Cell = str | None
 Grid = Sequence[Sequence[Cell]]
-
-
-def qcol(name: str):
-    """Column reference for grid-derived names (``...2`` etc.):
-    backtick-quoted so dots are not parsed as struct access."""
-    from pyspark.sql import functions as F
-
-    return F.col(f"`{name.replace('`', '``')}`")
 
 
 def fetch(url: str, dest: str) -> str:
@@ -62,54 +56,28 @@ def readxl_names(header: Sequence[Cell]) -> list[str]:
     return names
 
 
-def grid_to_df(spark: SparkSession, grid: Grid, sheet: str) -> DataFrame:
-    """One raw sheet grid (first row = header) → string DataFrame with
-    ``_sheet`` and 0-based ``_row_idx`` over the data rows (S3).
+def grid_to_df(spark: SparkSession, rows: Sequence[Sequence], schema: pa.Schema) -> DataFrame:
+    """Driver-held rows → one DataFrame in ONE partition (S3).
 
-    The frame is built from a ``pyarrow.Table``: Spark parses the Arrow
-    batches in the JVM (a local relation at workbook size), so the
-    sheet never passes through a ``PythonRDD`` or a Python worker."""
-    import pyarrow as pa
-
-    header, *rows = grid
-    names = readxl_names(header)
-    width = len(names)
-    schema = StructType(
-        [StructField("_sheet", StringType()), StructField("_row_idx", LongType())]
-        + [StructField(n, StringType()) for n in names]
-    )
-    data = [
-        (sheet, i, *[(None if c is None else str(c)) for c in (list(r) + [None] * width)[:width]])
-        for i, r in enumerate(rows)
-    ]
-    columns = list(zip(*data)) if data else [()] * (width + 2)
-    types = [pa.string(), pa.int64()] + [pa.string()] * width
+    ``rows`` are tuples matching ``schema``; the normalizer passes every
+    sheet of one shape as one row set. The frame is built from a
+    ``pyarrow.Table``: Spark parses the Arrow batches in the JVM (a
+    local relation at workbook size), so the rows never pass through a
+    ``PythonRDD`` or a Python worker. One partition: sheets are small
+    by contract (§4.3.1), and one partition keeps the LOCF window sort
+    over the stacked sheets shuffle-free."""
+    columns = list(zip(*rows)) if rows else [()] * len(schema)
     table = pa.Table.from_arrays(
-        [pa.array(c, t) for c, t in zip(columns, types)], names=schema.names
+        [pa.array(c, f.type) for c, f in zip(columns, schema)], schema=schema
     )
-    # One partition per sheet: sheets are small by contract (§4.3.1),
-    # and a single partition keeps the per-sheet LOCF window sort
-    # shuffle-free while sheets still parallelize across each other.
-    df = spark.createDataFrame(table, schema).coalesce(1)
-    # Driver-side ingest already holds the rows, so expose them for
-    # plan-time inspection (title cell, Shape-B year header — SURVEY
-    # §4.3.2's inspect-then-plan points). Saves one Spark job per
-    # lookup; normalize falls back to a distributed collect when the
-    # frame didn't come through this ingester.
-    df._epe_rows = data
-    return df
-
-
-def plan_time_rows(df: DataFrame) -> list[tuple] | None:
-    """Raw (sheet, row_idx, *cells) tuples if ``df`` was built by
-    ``grid_to_df`` on this driver, else None."""
-    return getattr(df, "_epe_rows", None)
+    return spark.createDataFrame(table).coalesce(1)
 
 
 def read_workbook_grids(path: str) -> dict[str, Grid]:
-    """S2+S3 — sheet discovery + per-sheet raw grids (all cells as
-    text, no header interpretation; ``grid_to_df`` applies the
-    read_xls naming).
+    """S2-S4 — sheet discovery + per-sheet raw grids (all cells as
+    text, no header interpretation; the normalizer applies the
+    read_xls naming). Dict order = workbook sheet order, which drives
+    the Shape-A/Shape-B dispatch (SURVEY C1).
 
     Engines, in order: pandas' ExcelFile if an Excel engine (openpyxl
     / xlrd / calamine) is installed; else the stdlib readers — OOXML
@@ -139,10 +107,3 @@ def read_workbook_grids(path: str) -> dict[str, Grid]:
             [None if pd.isna(v) else str(v) for v in row] for row in pdf.itertuples(index=False)
         ]
     return grids
-
-
-def read_workbook(spark: SparkSession, path: str) -> dict[str, DataFrame]:
-    """S4 — multi-sheet fan-out: named dict of lazy per-sheet frames
-    (`tratamento_epe.R:71-72`). Dict order = workbook sheet order,
-    which drives the Shape-A/Shape-B dispatch (SURVEY C1)."""
-    return {s: grid_to_df(spark, g, s) for s, g in read_workbook_grids(path).items()}

@@ -91,10 +91,9 @@ def epe_monthly_refresh(
     the new drops."""
     from epe_data_wrangling_spark.plans.epe_pipeline import run_pipeline
     from epe_data_wrangling_spark.sources.spark_datasource import (
-        grids_from_cells,
+        grids_by_file,
         register,
     )
-    from epe_data_wrangling_spark.sources.workbook import grid_to_df
 
     register(spark)
     reader = spark.readStream.format("workbook")
@@ -107,19 +106,18 @@ def epe_monthly_refresh(
         )
     stream = reader.load(drops_dir)
 
-    drops: list[str] = []  # this batch's drop files, for the step
+    # this batch's {drop file: {sheet: grid}}: the provenance collect
+    # parses each drop once and hands the grids to the step
+    drops: dict[str, dict] = {}
 
     def _drop_files(batch_df: DataFrame) -> set[str]:
-        drops[:] = sorted(
-            r["f"]
-            for r in batch_df.select(F.col("file").alias("f")).distinct().collect()
-        )
+        drops.clear()
+        drops.update(grids_by_file(batch_df))
         return set(drops)
 
     def _step(batch_df: DataFrame, batch_id: int, meta: dict, stage: str):
         if not drops:
             return None
-        cells = batch_df.localCheckpoint(eager=True)  # feeds one pass per drop
         have = os.path.isdir(target_dir)
         snap = (
             spark.read.parquet(os.path.join(target_dir, "snapshot"))
@@ -132,10 +130,8 @@ def epe_monthly_refresh(
         # a batch may carry several drops (files); landed order is
         # name order by the drop_NNN landing convention, and each drop
         # is a full snapshot so they must apply in sequence
-        for f in drops:
-            grids = grids_from_cells(cells.filter(F.col("file") == f))
-            frames = {s: grid_to_df(spark, g, s) for s, g in grids.items()}
-            fact = run_pipeline(spark, frames)
+        for grids in drops.values():
+            fact = run_pipeline(spark, grids)
             img = fact.select(
                 _row_digest(FACT_DIMS).alias("k"),
                 *FACT_DIMS,

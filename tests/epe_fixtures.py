@@ -1,5 +1,4 @@
 from epe_data_wrangling_spark.plans.epe_demo import (  # noqa: F401
-    demo_workbook as workbook,
     shape_a_sheet,
     shape_b_sheet,
     workbook_grids,

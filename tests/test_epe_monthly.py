@@ -50,7 +50,6 @@ def test_versions_carve_backward_from_golden():
 
 
 def test_monthly_refresh_converges_on_recompute(spark, tmp_path):
-    from epe_data_wrangling_spark.plans.epe_demo import demo_workbook
     from epe_data_wrangling_spark.plans.epe_pipeline import run_pipeline
 
     drops = str(tmp_path / "drops")
@@ -78,7 +77,7 @@ def test_monthly_refresh_converges_on_recompute(spark, tmp_path):
 
     # convergence: standing fact == from-scratch recompute of drop 3
     # (the golden demo workbook)
-    expected = _fact_set(run_pipeline(spark, demo_workbook(spark)))
+    expected = _fact_set(run_pipeline(spark, workbook_grids()))
     assert f3 == expected
 
     # and the incrementally-maintained annual view == recompute
@@ -88,7 +87,7 @@ def test_monthly_refresh_converges_on_recompute(spark, tmp_path):
     }
     exp_annual = {
         (r["chave_seletora"], r["ano"]): (float(r["s"]), r["n"])
-        for r in run_pipeline(spark, demo_workbook(spark))
+        for r in run_pipeline(spark, workbook_grids())
         .groupBy("chave_seletora", F.year("data").cast("int").alias("ano"))
         .agg(
             F.sum(F.col("valor").cast("decimal(18,6)")).cast("double").alias("s"),

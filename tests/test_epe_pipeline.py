@@ -10,19 +10,19 @@ from pyspark.sql import functions as F
 
 from epe_data_wrangling_spark.plans.epe_normalize import normalize_workbook
 from epe_data_wrangling_spark.plans.epe_pipeline import run_pipeline
-from tests.epe_fixtures import workbook
+from tests.epe_fixtures import workbook_grids
 
 
 @pytest.fixture(scope="module")
 def normalized(spark):
-    df = normalize_workbook(workbook(spark)).cache()
+    df = normalize_workbook(spark, workbook_grids()).cache()
     yield df
     df.unpersist()
 
 
 @pytest.fixture(scope="module")
 def final(spark):
-    df = run_pipeline(spark, workbook(spark)).cache()
+    df = run_pipeline(spark, workbook_grids()).cache()
     yield df
     df.unpersist()
 
@@ -278,24 +278,83 @@ class TestGoldenProvenance:
 def test_grid_to_df_lineage_has_no_python_rdd(spark):
     """Sheet frames are built from Arrow in the JVM: no PythonRDD, so
     no Python worker serves the sheet rows."""
-    from epe_data_wrangling_spark.plans.epe_demo import demo_workbook
-
-    for sheet, df in demo_workbook(spark).items():
-        lineage = df._jdf.queryExecution().toRdd().toDebugString()
-        assert "PythonRDD" not in lineage, (sheet, lineage)
+    fact = run_pipeline(spark, workbook_grids())
+    lineage = fact._jdf.queryExecution().toRdd().toDebugString()
+    assert "PythonRDD" not in lineage, lineage
 
 
 def test_run_pipeline_submits_no_jobs(spark):
     """Ingest, normalize and the single-projection semantic map are all
     plan building: the first Spark job is the consumer's."""
-    from epe_data_wrangling_spark.plans.epe_demo import demo_workbook
-
     sc = spark.sparkContext
     group = "test_run_pipeline_submits_no_jobs"
     sc.setJobGroup(group, "run_pipeline job count")
     try:
-        fact = run_pipeline(spark, demo_workbook(spark))
+        fact = run_pipeline(spark, workbook_grids())
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert fact.count() == 288
+
+
+def _leaves(df) -> list[str]:
+    """Leaf node names of the optimized plan. The optimizer runs on the
+    analyzed plan directly, so a cached copy of the same pipeline (the
+    module's fixtures cache one) cannot replace the leaves."""
+    session = df.sparkSession._jsparkSession
+    plan = session.sessionState().optimizer().execute(df._jdf.queryExecution().analyzed())
+    leaves = plan.collectLeaves()
+    return [leaves.apply(i).nodeName() for i in range(leaves.size())]
+
+
+def test_plan_has_one_local_relation_per_sheet_shape(spark):
+    """Each sheet shape is stacked into one Arrow-built frame, so the
+    optimized plan has two leaves whatever the sheet count: the demo
+    workbook's 9 sheets (12- and 13-month Shape-A sheets, Shape-B
+    headers 2004/2005*, 2004/2005 and 2004), and the same workbook
+    with every sheet repeated under a second name (Shape-A copies
+    before the split sheet, Shape-B copies after it)."""
+    grids = workbook_grids()
+    names = list(grids)
+    cut = names.index("CONSUMIDORES TOTAIS") + 1
+    doubled = (
+        {f"{s} 2": grids[s] for s in names[:cut]}
+        | grids
+        | {f"{s} 2": grids[s] for s in names[cut:]}
+    )
+    assert len(doubled) == 2 * len(grids)
+    for wb in (grids, doubled):
+        assert _leaves(run_pipeline(spark, wb)) == ["LocalRelation"] * 2
+    # the copies normalize exactly like their originals
+    norm = normalize_workbook(spark, doubled)
+    assert norm.count() == 2 * normalize_workbook(spark, grids).count()
+
+
+def _new_job_ids(spark, after: int) -> list[int]:
+    jobs = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
+    ids = [jobs.apply(i).jobId() for i in range(jobs.size())]
+    return sorted(j for j in ids if j > after)
+
+
+def test_monthly_refresh_parses_each_drop_once(spark, tmp_path):
+    """One drop through ``epe_monthly_refresh`` runs a fixed number of
+    Spark jobs, counted from the status store: the provenance collect
+    parses the drop once and hands its grids to the step, so no other
+    job reads the drop's cells."""
+    import os
+
+    from epe_data_wrangling_spark.sources.xlsx import write_xlsx
+    from epe_data_wrangling_spark.streaming.epe_monthly import epe_monthly_refresh
+
+    drops = str(tmp_path / "drops")
+    os.makedirs(drops)
+    write_xlsx(os.path.join(drops, "drop_001.xlsx"), workbook_grids())
+    before = max(_new_job_ids(spark, -1), default=-1)
+    fact, _ = epe_monthly_refresh(
+        spark, drops, str(tmp_path / "state"), checkpoint_dir=str(tmp_path / "ckpt")
+    )
+    jobs = _new_job_ids(spark, before)
+    # a distinct-file collect (2 jobs), a cell checkpoint or a second
+    # cell collect would each raise this
+    assert len(jobs) == 8, jobs
     assert fact.count() == 288

@@ -12,7 +12,9 @@ tests/test_epe_pipeline.py to shapes beyond the primary fixture:
 - a sheet whose data rows are ALL junk (TOTAL/NC) → contributes zero
   rows but must still union cleanly;
 - Shape B with THREE years (36 month columns) and a starred final
-  year.
+  year, stacked with a ONE-year Shape-B sheet (12 month columns) that
+  has a blank month: the narrower sheet's padded slots must yield no
+  row, its blank month exactly one NULL-valor row.
 """
 
 from __future__ import annotations
@@ -23,8 +25,17 @@ import pytest
 from pyspark.sql import functions as F
 
 from epe_data_wrangling_spark.plans.epe_demo import shape_a_sheet, shape_b_sheet
-from epe_data_wrangling_spark.plans.epe_normalize import normalize_workbook
-from epe_data_wrangling_spark.sources.workbook import grid_to_df
+from epe_data_wrangling_spark.plans.epe_normalize import normalize_shape_b, normalize_workbook
+
+
+def _one_year_uf_sheet() -> list:
+    grid = shape_b_sheet(
+        "CONSUMO CATIVO POR UF", "Consumo cativo por UF (GWh)",
+        ["2004"],
+        [("Bahia", 300.0), ("Ceará", 320.0)],
+    )
+    grid[-1][5] = None  # Ceará, May 2004: a blank month inside the width
+    return grid
 
 
 def variant_grids() -> dict[str, list]:
@@ -59,13 +70,14 @@ def variant_grids() -> dict[str, list]:
             ["2004", "2005", "2006*"],
             [("METALURGIA", 200.0)],
         ),
+        # Shape B, one year: 24 padded slots in the stacked frame
+        "CONSUMO CATIVO POR UF": _one_year_uf_sheet(),
     }
 
 
 @pytest.fixture(scope="module")
 def norm(spark):
-    wb = {s: grid_to_df(spark, g, s) for s, g in variant_grids().items()}
-    df = normalize_workbook(wb).cache()
+    df = normalize_workbook(spark, variant_grids()).cache()
     yield df
     df.unpersist()
 
@@ -135,3 +147,57 @@ class TestShapeBThreeYears:
 
     def test_dates_all_first_of_month(self, norm):
         assert norm.filter(F.dayofmonth("data") != 1).count() == 0
+
+
+class TestHeterogeneousShapeB:
+    SHEETS = ("INDUSTRIAL GENERO", "CONSUMO CATIVO POR UF")
+
+    def test_rows_are_the_sum_of_the_sheets(self, spark, norm):
+        """Stacked, the two Shape-B sheets give exactly the rows each
+        gives alone: 1 row × 36 months + 2 rows × 12 months."""
+        grids = variant_grids()
+        alone = [normalize_shape_b(spark, {s: grids[s]}).count() for s in self.SHEETS]
+        assert alone == [36, 24]
+        assert norm.filter(F.col("atributo_1").isin(*self.SHEETS)).count() == sum(alone)
+
+    def test_padding_yields_no_row_and_blank_month_one_null(self, norm):
+        uf = rows(norm, atributo_1="CONSUMO CATIVO POR UF")
+        assert {(x.atributo_3, x.data.year) for x in uf} == {("Bahia", 2004), ("Ceará", 2004)}
+        assert len({(x.atributo_3, x.data) for x in uf}) == len(uf) == 24
+        assert [(x.atributo_3, x.data) for x in uf if x.valor is None] == [
+            ("Ceará", dt.date(2004, 5, 1))
+        ]
+        # the row's other months keep the grid formula (base + m + .5)
+        apr = [x for x in uf if (x.atributo_3, x.data) == ("Ceará", dt.date(2004, 4, 1))]
+        assert [x.valor for x in apr] == [323.5]
+
+
+
+def _named_month(g):
+    g[0][5] = "Jan"  # the header names a month column: 11 unnamed
+
+
+def _lost_years(g):
+    g[4][13:] = [None] * (len(g[4]) - 13)  # 2005 and 2006* headers blank
+
+
+def _no_header(g):
+    del g[4:]  # nothing after the junk rows
+
+
+@pytest.mark.parametrize(
+    "sheet, edit, message",
+    [
+        ("CONSUMIDORES TOTAIS", _named_month, "11 unnamed columns"),
+        ("INDUSTRIAL GENERO", _lost_years, "1 years × 12 ≠ 36"),
+        ("CONSUMO CATIVO POR UF", _no_header, "no header row"),
+    ],
+)
+def test_malformed_sheet_raises_with_its_name(spark, sheet, edit, message):
+    """The per-sheet layout checks still run on the driver, before any
+    frame is built, and name the offending sheet."""
+    grids = variant_grids()
+    edit(grids[sheet])
+    with pytest.raises(ValueError, match=message) as err:
+        normalize_workbook(spark, grids)
+    assert repr(sheet) in str(err.value)

@@ -92,10 +92,10 @@ def test_union_by_name_aligns_columns(spark, a, b):
 def test_chave_seletora_functional_dependency(spark):
     """chave_seletora is a pure function of (dado, mercado, classe,
     abertura): one key per distinct tuple and vice versa (`R:274`)."""
-    from epe_data_wrangling_spark.plans.epe_demo import demo_workbook
+    from epe_data_wrangling_spark.plans.epe_demo import workbook_grids
     from epe_data_wrangling_spark.plans.epe_pipeline import run_pipeline
 
-    out = run_pipeline(spark, demo_workbook(spark))
+    out = run_pipeline(spark, workbook_grids())
     n_keys = out.select("chave_seletora").distinct().count()
     n_tuples = out.select("dado", "mercado", "classe", "abertura").distinct().count()
     n_both = out.select("chave_seletora", "dado", "mercado", "classe", "abertura").distinct().count()

@@ -54,11 +54,11 @@ def test_json_roundtrip(spark, tmp_path):
 def test_epe_fact_month_partitioned_write(spark, tmp_path):
     """S5 for the EPE pipeline itself: month-partitioned fact sink,
     read back one month with partition pruning (SURVEY §4.4)."""
-    from epe_data_wrangling_spark.plans.epe_demo import demo_workbook
+    from epe_data_wrangling_spark.plans.epe_demo import workbook_grids
     from epe_data_wrangling_spark.plans.epe_pipeline import run_pipeline, write_fact
 
     out = str(tmp_path / "epe_fact")
-    fact = run_pipeline(spark, demo_workbook(spark))
+    fact = run_pipeline(spark, workbook_grids())
     write_fact(fact, out)
 
     # the rebalance exchange before the sink leaves one file per month
@@ -182,9 +182,9 @@ def test_rds_of_epe_fact_table(spark, tmp_path):
     exact file the reference produced."""
     from epe_data_wrangling_spark.plans.epe_pipeline import run_pipeline
     from epe_data_wrangling_spark.sources.rds import read_rds_frame, write_rds_small
-    from tests.epe_fixtures import workbook
+    from tests.epe_fixtures import workbook_grids
 
-    fact = run_pipeline(spark, workbook(spark))
+    fact = run_pipeline(spark, workbook_grids())
     path = str(tmp_path / "dados_epe_tratados.RDS")
     write_rds_small(fact, path)
     back = read_rds_frame(path)

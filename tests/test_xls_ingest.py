@@ -3,7 +3,7 @@
 The reference's REAL source artifact is a binary ``.xls``
 (`tratamento_epe.R:39-47` downloads it; `R:63` read_xls). These tests
 write the demo workbook to an actual BIFF8-in-CFB file
-(sources.xls_biff.write_xls), read it back through ``read_workbook``
+(sources.xls_biff.write_xls), read it back through ``read_workbook_grids``
 (magic-byte sniffing routes CFB files to the BIFF8 reader), and run
 the full pipeline to the same frozen golden rows the driver oracle
 checks — proving a user can point the engine at the reference's true
@@ -18,7 +18,7 @@ import struct
 from epe_data_wrangling_spark.catalog.epe_expected import EXPECTED_ROWS
 from epe_data_wrangling_spark.plans.epe_demo import workbook_grids
 from epe_data_wrangling_spark.plans.epe_pipeline import run_pipeline
-from epe_data_wrangling_spark.sources.workbook import read_workbook, read_workbook_grids
+from epe_data_wrangling_spark.sources.workbook import read_workbook_grids
 from epe_data_wrangling_spark.sources.xls_biff import (
     CFB_MAGIC,
     _sst_records,
@@ -75,11 +75,11 @@ def test_read_workbook_grids_sniffs_biff8(tmp_path):
 
 
 def test_pipeline_from_real_xls_matches_golden(spark, tmp_path):
-    """BIFF8 file → read_workbook → run_pipeline == frozen goldens —
+    """BIFF8 file → run_pipeline(path) == frozen goldens —
     the same end-to-end gate the .xlsx path has."""
     path = str(tmp_path / "epe_demo.xls")
     write_xls(path, workbook_grids())
-    fact = run_pipeline(spark, read_workbook(spark, path))
+    fact = run_pipeline(spark, path)
     got = sorted(
         (
             r.chave_seletora,

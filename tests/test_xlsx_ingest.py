@@ -4,7 +4,7 @@ The reference consumes an actual workbook from disk
 (`tratamento_epe.R:39-47,57,63`); round 1 only exercised ingest via
 in-memory grids. Here the demo workbook is written to a REAL ``.xlsx``
 file (sources.xlsx.write_xlsx — minimal valid OOXML), read back
-through ``read_workbook`` (which, with no Excel engine installed,
+through ``read_workbook_grids`` (which, with no Excel engine installed,
 takes the stdlib OOXML reader path), and run through the full
 pipeline to the same frozen golden rows the oracle checks.
 """
@@ -14,7 +14,7 @@ from __future__ import annotations
 from epe_data_wrangling_spark.catalog.epe_expected import EXPECTED_ROWS
 from epe_data_wrangling_spark.plans.epe_demo import workbook_grids
 from epe_data_wrangling_spark.plans.epe_pipeline import run_pipeline
-from epe_data_wrangling_spark.sources.workbook import read_workbook, read_workbook_grids
+from epe_data_wrangling_spark.sources.workbook import read_workbook_grids
 from epe_data_wrangling_spark.sources.xlsx import read_xlsx_grids, write_xlsx
 
 
@@ -52,10 +52,10 @@ def test_read_workbook_grids_engine_fallback(tmp_path):
 
 
 def test_pipeline_from_real_xlsx_matches_golden(spark, tmp_path):
-    """File → read_workbook → run_pipeline == frozen golden rows."""
+    """File → run_pipeline(path) == frozen golden rows."""
     path = str(tmp_path / "epe_demo.xlsx")
     write_xlsx(path, workbook_grids())
-    fact = run_pipeline(spark, read_workbook(spark, path))
+    fact = run_pipeline(spark, path)
     got = sorted(
         (
             r.chave_seletora,

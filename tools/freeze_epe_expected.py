@@ -12,7 +12,7 @@ import sys
 
 sys.path.insert(0, "/root/repo")
 
-from epe_data_wrangling_spark.plans.epe_demo import demo_workbook  # noqa: E402
+from epe_data_wrangling_spark.plans.epe_demo import workbook_grids  # noqa: E402
 from epe_data_wrangling_spark.plans.epe_pipeline import run_pipeline  # noqa: E402
 from epe_data_wrangling_spark.session import get_spark  # noqa: E402
 
@@ -30,7 +30,7 @@ EXPECTED_ROWS = [
 
 def main() -> None:
     spark = get_spark(app_name="freeze", master="local[4]", shuffle_partitions=4)
-    rows = sorted(tuple(r) for r in run_pipeline(spark, demo_workbook(spark)).collect())
+    rows = sorted(tuple(r) for r in run_pipeline(spark, workbook_grids()).collect())
     with open("epe_data_wrangling_spark/catalog/epe_expected.py", "w") as f:
         f.write(HEADER)
         for c, m, d, cl, ab, at, dt, v in rows:
