@@ -2788,7 +2788,7 @@ def _epe_monthly_run(spark: SparkSession) -> tuple[DataFrame, DataFrame]:
         for i, grids in enumerate(monthly_workbook_versions(), start=1):
             # one drop lands, one availableNow run applies it — the
             # monthly cycle, three times, over ONE checkpoint (the
-            # stream reader's seen-file offset carries across runs)
+            # file source's seen-file log carries across runs)
             write_xlsx(os.path.join(drops, f"drop_{i:03d}.xlsx"), grids)
             fact, annual = epe_monthly_refresh(
                 spark, drops, target, checkpoint_dir=ckpt
@@ -2831,7 +2831,7 @@ def streaming_epe_monthly_fact(spark: SparkSession, sf_dir: str) -> DataFrame:
     composed end-to-end and INCREMENTAL: three cumulative workbook
     drops land in a watched dir (months missing in drop 1, published
     in drop 2, and one prior-month figure REVISED by drop 3), the
-    workbook stream reader delivers each drop's cells, and
+    file stream source delivers each new drop, and
     `streaming.epe_monthly.epe_monthly_refresh` maintains the
     standing 8-column fact table by keyed snapshot diff — never
     recomputing prior drops. The final fact must hash-match the SAME

@@ -164,11 +164,18 @@ from pyspark.sql.datasource import DataSourceStreamReader
 
 
 class WorkbookStreamReader(DataSourceStreamReader):
-    """Streaming counterpart of :class:`WorkbookCellReader` — the
-    monthly-drop shape the reference actually lives in (a workbook
-    republished to the same site every cycle, `tratamento_epe.R:39`):
-    each micro-batch picks up workbook files not seen by any earlier
-    batch and emits their cells.
+    """Streaming counterpart of :class:`WorkbookCellReader` — a
+    landing zone of workbook drops: each micro-batch picks up workbook
+    files not seen by any earlier batch and emits their cells (the
+    ``streaming_workbook_landing`` / ``_burst`` catalog queries read
+    through it).
+
+    It is not the EPE monthly cycle's reader: ``streaming.epe_monthly``
+    reads its landing zone with Spark's built-in ``binaryFile`` stream
+    source and parses each drop's bytes on the driver, because this
+    source's fixed cost (a Python streaming-source runner per
+    ``start()``, then an executor Python worker per parse) was most of
+    a one-drop refresh.
 
     Offsets are {"seen": sorted file list} — pure metadata, JSON-
     serializable, and replayable: ``partitions(start, end)`` plans ONE
@@ -181,8 +188,7 @@ class WorkbookStreamReader(DataSourceStreamReader):
     the landing dir (metadata); the BIFF/OOXML parse runs in the
     executor task of each file's partition — a fleet of drops landing
     in one batch parses in parallel across the cluster instead of
-    serially on the driver, which profiling showed was the EPE
-    monthly cycle's floor."""
+    serially on the driver."""
 
     def __init__(self, options: dict):
         path = options.get("path")
@@ -320,15 +326,6 @@ def grids_from_cells(cells_df) -> dict[str, list]:
     produce it — empty sheets and trailing all-blank rows/columns
     included, via the geometry marker rows the source emits."""
     return _assemble_grids(cells_df.select(*_GRID_FIELDS).collect())
-
-
-def grids_by_file(cells_df) -> dict[str, dict[str, list]]:
-    """``grids_from_cells`` for a relation holding several workbooks:
-    ONE collect, then ``{file: {sheet: grid}}`` in file-name order."""
-    by_file: dict[str, list] = {}
-    for r in cells_df.select("file", *_GRID_FIELDS).collect():
-        by_file.setdefault(r.file, []).append(r)
-    return {f: _assemble_grids(by_file[f]) for f in sorted(by_file)}
 
 
 def _assemble_grids(rows) -> dict[str, list]:

@@ -28,6 +28,7 @@ Spark contract implemented here:
 
 from __future__ import annotations
 
+import io
 import urllib.request
 from collections.abc import Sequence
 
@@ -73,11 +74,16 @@ def grid_to_df(spark: SparkSession, rows: Sequence[Sequence], schema: pa.Schema)
     return spark.createDataFrame(table).coalesce(1)
 
 
-def read_workbook_grids(path: str) -> dict[str, Grid]:
+def read_workbook_grids(path: str | bytes) -> dict[str, Grid]:
     """S2-S4 — sheet discovery + per-sheet raw grids (all cells as
     text, no header interpretation; the normalizer applies the
     read_xls naming). Dict order = workbook sheet order, which drives
     the Shape-A/Shape-B dispatch (SURVEY C1).
+
+    ``path`` is a file path or the file's bytes; bytes are how the
+    monthly refresh hands over a drop that Spark's ``binaryFile``
+    stream source already read (``streaming.epe_monthly``), and they
+    parse to the same grids as the file they came from.
 
     Engines, in order: pandas' ExcelFile if an Excel engine (openpyxl
     / xlrd / calamine) is installed; else the stdlib readers — OOXML
@@ -90,13 +96,16 @@ def read_workbook_grids(path: str) -> dict[str, Grid]:
     import pandas as pd  # local import: optional dependency surface
 
     try:
-        xl = pd.ExcelFile(path)
+        xl = pd.ExcelFile(path if isinstance(path, str) else io.BytesIO(path))
     except ImportError:
         from epe_data_wrangling_spark.sources.xls_biff import CFB_MAGIC, read_xls_grids
         from epe_data_wrangling_spark.sources.xlsx import read_xlsx_grids
 
-        with open(path, "rb") as f:
-            magic = f.read(8)
+        if isinstance(path, str):
+            with open(path, "rb") as f:
+                magic = f.read(8)
+        else:
+            magic = path[:8]
         if magic == CFB_MAGIC:
             return read_xls_grids(path)
         return read_xlsx_grids(path)

@@ -270,12 +270,16 @@ def _rk_value(v: int) -> float:
     return x / 100.0 if cents else x
 
 
-def read_xls_grids(path: str) -> dict[str, Grid]:
-    """Workbook → ordered {sheet_name: grid of text cells} — the same
-    contract as ``read_xlsx_grids`` (sheet order = BOUNDSHEET order,
-    blank cells None, all values text)."""
-    with open(path, "rb") as f:
-        wb = _cfb_workbook_stream(f.read())
+def read_xls_grids(path: str | bytes) -> dict[str, Grid]:
+    """Workbook (a file path, or the file's bytes) → ordered
+    {sheet_name: grid of text cells} — the same contract as
+    ``read_xlsx_grids`` (sheet order = BOUNDSHEET order, blank cells
+    None, all values text)."""
+    if isinstance(path, str):
+        with open(path, "rb") as f:
+            wb = _cfb_workbook_stream(f.read())
+    else:
+        wb = _cfb_workbook_stream(path)
 
     # --- globals substream: sheet directory + shared strings
     sheets: list[tuple[str, int]] = []  # (name, substream offset)

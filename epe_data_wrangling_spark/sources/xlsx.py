@@ -22,6 +22,7 @@ normalize into.
 
 from __future__ import annotations
 
+import io
 import re
 import zipfile
 from collections.abc import Sequence
@@ -66,11 +67,12 @@ def _cell_text(c: ET.Element, shared: list[str]) -> Cell:
     return v.text
 
 
-def read_xlsx_grids(path: str) -> dict[str, Grid]:
-    """Workbook → ordered {sheet_name: grid of text cells}. Rows and
-    columns are placed by their A1-style refs, so blank cells/rows
-    appear as None exactly like a read_xls text read."""
-    with zipfile.ZipFile(path) as z:
+def read_xlsx_grids(path: str | bytes) -> dict[str, Grid]:
+    """Workbook (a file path, or the file's bytes) → ordered
+    {sheet_name: grid of text cells}. Rows and columns are placed by
+    their A1-style refs, so blank cells/rows appear as None exactly
+    like a read_xls text read."""
+    with zipfile.ZipFile(path if isinstance(path, str) else io.BytesIO(path)) as z:
         wb = ET.fromstring(z.read("xl/workbook.xml"))
         rels = ET.fromstring(z.read("xl/_rels/workbook.xml.rels"))
         rel_target = {

@@ -5,11 +5,12 @@ composed end-to-end.
 "atualizados mensalmente"; the reference's answer is a full re-run
 per month (`tratamento_epe.R:39` re-downloads, `R:290` re-exports).
 This module is the streaming-native composition the engine already
-had all the parts for: the workbook landing zone
-(`sources.spark_datasource.WorkbookStreamReader` — each drop's cells
-arrive as a micro-batch) feeds the CDC-retraction discipline
-(`streaming.ops`), maintaining TWO standing tables per drop instead
-of recomputing the world:
+had all the parts for: the workbook landing zone, read by Spark's
+built-in file stream source (``binaryFile``: each new drop arrives as
+one ``(path, modificationTime, length, content)`` row of a
+micro-batch, and the seen-file log lives in the query checkpoint),
+feeds the CDC-retraction discipline (`streaming.ops`), maintaining
+TWO standing tables per drop instead of recomputing the world:
 
 - ``snapshot/`` — the 8-column EPE fact table's hashed image. Each
   drop is a full cumulative publication, so its normalized rows are
@@ -29,9 +30,12 @@ of recomputing the world:
   one regime this sink exists for.
 
 Both tables commit in ONE atomic swap through
-`streaming.ops._exactly_once_sink`; the provenance it records comes
-from the workbook source's own ``file`` column —
-``input_file_name()`` is empty on Python-datasource streams. A drop
+`streaming.ops._exactly_once_sink`; the provenance it records is the
+``path`` column, the ``file:`` URI the file source reports for each
+drop. The same collect brings each drop's bytes to the driver, which
+parses them there (``read_workbook_grids``) in path order and hands
+the grids to the step, so no job reads a drop twice and no
+``input_file_name()`` distinct is needed. A drop
 that REVISES a prior month retracts the old row's contribution and
 inserts the new one; months that appear for the first time are pure
 inserts — so after any number of drops the standing fact and annual
@@ -39,10 +43,18 @@ view hash-match a from-scratch recompute of the latest workbook,
 which is exactly what the catalog queries certify against the frozen
 golden.
 
-Scale: per drop — one workbook parse + normalize (the producer
-artifact's own size), one keyed hash-diff shuffle against the
-standing image, a delta-sized signed aggregate, and a |groups|-row
-view merge. The EPE fact is dimension-table-sized so the plain
+Scale: per drop — one driver-side workbook parse + normalize (the
+producer artifact's own size: the workbook-small contract of SURVEY
+§4.3.1, and the drop's bytes are smaller than the cell rows an
+executor-side parse would collect), one keyed hash-diff shuffle
+against the standing image, a delta-sized signed aggregate, and a
+|groups|-row view merge. The file source starts no Python process
+(the Python ``workbook`` stream source,
+`sources.spark_datasource.WorkbookStreamReader`, costs a
+streaming-source runner per run and an executor Python worker per
+parse, most of a one-drop refresh). Drops landing together parse
+serially on the driver; a fleet of them is the shape that source's
+executor-side parse serves. The EPE fact is dimension-table-sized so the plain
 snapshot rewrite is the right plan here; a fact too large to rewrite
 per cycle would instead land the SAME signed rows in the bucketed
 op-log sinks (`cdc_oplog_foreach_batch` et al.), which this module's
@@ -73,6 +85,19 @@ FACT_DIMS = [
 #: exact BIGINT algebra (the reference's values carry ≤6 decimals).
 MICRO = 1_000_000
 
+#: the fixed schema of Spark's ``binaryFile`` source (a streaming file
+#: source must be given its schema)
+_BINARY_FILE_SCHEMA = "path string, modificationTime timestamp, length long, content binary"
+
+#: a drop's name ends in .xls or .xlsx, in any letter case
+_DROP_GLOB = "*.{[xX][lL][sS],[xX][lL][sS][xX]}"
+
+#: The file source forgets, and then never reads, a file whose mtime is
+#: older than the newest seen file's mtime minus ``maxFileAge`` (default
+#: 7 days). A drop's mtime says nothing about its month — a republished
+#: or restored workbook may carry any mtime — so no age may skip one.
+_MAX_FILE_AGE = "36500d"
+
 
 def epe_monthly_refresh(
     spark,
@@ -87,32 +112,35 @@ def epe_monthly_refresh(
     8-column fact table and the incrementally-maintained annual view
     (chave_seletora, ano, valor_ano DOUBLE, n_meses). Call again
     after landing further drops with the SAME checkpoint dir — the
-    stream reader's seen-file offset makes each run process exactly
-    the new drops."""
+    file source's seen-file log in the checkpoint makes each run
+    process exactly the new drops.
+
+    A drop is a top-level file of ``drops_dir`` whose name ends in
+    ``.xls`` or ``.xlsx`` in any letter case. Files in subdirectories
+    and files whose name starts with ``.`` or ``_`` are never drops:
+    Spark's file source reads no subdirectory of the landing zone and
+    skips the prefixed names as hidden (unlike the ``workbook``
+    source's ``_expand_paths``, which admits the prefixed names)."""
     from epe_data_wrangling_spark.plans.epe_pipeline import run_pipeline
-    from epe_data_wrangling_spark.sources.spark_datasource import (
-        grids_by_file,
-        register,
+    from epe_data_wrangling_spark.sources import workbook
+
+    stream = (
+        spark.readStream.format("binaryFile")
+        .schema(_BINARY_FILE_SCHEMA)
+        .option("pathGlobFilter", _DROP_GLOB)
+        .option("maxFileAge", _MAX_FILE_AGE)
+        .load(drops_dir)
     )
 
-    register(spark)
-    reader = spark.readStream.format("workbook")
-    if checkpoint_dir:
-        # durable seen-file state beside the checkpoint: closes the
-        # restart-ordering window where a retention-removed drop could
-        # regress the reader's offset (see WorkbookStreamReader)
-        reader = reader.option(
-            "offsets_dir", os.path.join(checkpoint_dir, "wb_seen")
-        )
-    stream = reader.load(drops_dir)
-
-    # this batch's {drop file: {sheet: grid}}: the provenance collect
-    # parses each drop once and hands the grids to the step
+    # this batch's {drop file: {sheet: grid}}, filled by the provenance
+    # collect so the step parses no drop a second time
     drops: dict[str, dict] = {}
 
     def _drop_files(batch_df: DataFrame) -> set[str]:
         drops.clear()
-        drops.update(grids_by_file(batch_df))
+        rows = batch_df.select("path", "content").collect()
+        for r in sorted(rows, key=lambda r: r.path):
+            drops[r.path] = workbook.read_workbook_grids(bytes(r.content))
         return set(drops)
 
     def _step(batch_df: DataFrame, batch_id: int, meta: dict, stage: str):
@@ -127,9 +155,9 @@ def epe_monthly_refresh(
         view = (
             spark.read.parquet(os.path.join(target_dir, "view")) if have else None
         )
-        # a batch may carry several drops (files); landed order is
-        # name order by the drop_NNN landing convention, and each drop
-        # is a full snapshot so they must apply in sequence
+        # a batch may carry several drops (files); they apply in path
+        # order (name order under the drop_NNN landing convention), and
+        # each drop is a full snapshot so they must apply in sequence
         for grids in drops.values():
             fact = run_pipeline(spark, grids)
             img = fact.select(

@@ -74,6 +74,17 @@ def test_read_workbook_grids_sniffs_biff8(tmp_path):
     assert set(grids) == set(workbook_grids())
 
 
+def test_read_workbook_grids_from_bytes_matches_path(tmp_path):
+    """A drop's bytes (as Spark's ``binaryFile`` source delivers them
+    to the monthly refresh) parse to the same grids as its path."""
+    path = str(tmp_path / "epe_demo.xls")
+    write_xls(path, workbook_grids())
+    with open(path, "rb") as f:
+        data = f.read()
+    assert read_workbook_grids(data) == read_workbook_grids(path)
+    assert read_xls_grids(data) == read_xls_grids(path)
+
+
 def test_pipeline_from_real_xls_matches_golden(spark, tmp_path):
     """BIFF8 file → run_pipeline(path) == frozen goldens —
     the same end-to-end gate the .xlsx path has."""

@@ -51,6 +51,17 @@ def test_read_workbook_grids_engine_fallback(tmp_path):
     assert set(grids) == set(workbook_grids())
 
 
+def test_read_workbook_grids_from_bytes_matches_path(tmp_path):
+    """A drop's bytes (as Spark's ``binaryFile`` source delivers them
+    to the monthly refresh) parse to the same grids as its path."""
+    path = str(tmp_path / "epe_demo.xlsx")
+    write_xlsx(path, workbook_grids())
+    with open(path, "rb") as f:
+        data = f.read()
+    assert read_workbook_grids(data) == read_workbook_grids(path)
+    assert read_xlsx_grids(data) == read_xlsx_grids(path)
+
+
 def test_pipeline_from_real_xlsx_matches_golden(spark, tmp_path):
     """File → run_pipeline(path) == frozen golden rows."""
     path = str(tmp_path / "epe_demo.xlsx")

@@ -13,12 +13,10 @@ under test: the incremental sink's work is one workbook parse +
 normalize + a delta-sized diff/merge, independent of how many months
 of history the standing fact already holds.
 
-``--burst N`` (r13, the distributed-parse payoff): after the cycles,
-land N further one-cell-revision drops AT ONCE and run ONE refresh —
-the full `DataSourceStreamReader` plans one partition per drop, so
-the N workbook parses run in PARALLEL executor tasks within the
-batch (through r12 the Simple stream reader parsed them serially on
-the driver). Compare `burst_sec` against N× the single-cycle band.
+``--burst N``: after the cycles, land N further one-cell-revision
+drops AT ONCE and run ONE refresh — one micro-batch of N drops, whose
+workbooks the refresh parses serially on the driver, in path order.
+Compare `burst_sec` against N× the single-cycle band.
 
 Usage: python tools/supp/epe_monthly_cycles.py [--cycles 12] [--burst N]
 Prints one JSON line {"cycles": [sec, ...], "burst_drops": N,
