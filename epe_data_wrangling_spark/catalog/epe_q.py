@@ -244,22 +244,25 @@ def _wb_source_values_sql() -> str:
 @query("workbook_source_cells", oracle=_wb_source_values_sql())
 def workbook_source_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The DISTRIBUTED workbook ingest path (S2-S4 at fleet scale):
-    the Python Data Source API source ``spark.read.format("workbook")``
-    (sources.spark_datasource, Spark 4 / SPARK-44076) over a landing
-    directory holding the demo workbook in BOTH container formats
-    (OOXML ``.xlsx`` + BIFF8 ``.xls``) — planning lists the directory
-    only; all parsing runs executor-side, one partition per file,
-    magic-byte format dispatch. Aggregated to per-(format, sheet)
-    stats and checked against a Python-computed golden, so the two
-    binary readers AND the datasource plumbing must agree cell-for-
-    cell with the in-memory grid truth."""
+    Spark's ``binaryFile`` source (``sources.spark_datasource.
+    workbook_files``) over a landing directory holding the demo
+    workbook in BOTH container formats (OOXML ``.xlsx`` + BIFF8
+    ``.xls``), parsed by ``workbook_cells``' Arrow map-in-batch —
+    planning lists the directory only; all parsing runs executor-side,
+    a whole file per task, magic-byte format dispatch. Aggregated to
+    per-(format, sheet) stats and checked against a Python-computed
+    golden, so the two binary readers AND the read path must agree
+    cell-for-cell with the in-memory grid truth."""
     import os
     import tempfile
 
     from pyspark.sql import functions as F
 
     from epe_data_wrangling_spark.plans.epe_demo import workbook_grids
-    from epe_data_wrangling_spark.sources.spark_datasource import register
+    from epe_data_wrangling_spark.sources.spark_datasource import (
+        workbook_cells,
+        workbook_files,
+    )
     from epe_data_wrangling_spark.sources.xls_biff import write_xls
     from epe_data_wrangling_spark.sources.xlsx import write_xlsx
 
@@ -271,8 +274,7 @@ def workbook_source_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     write_xlsx(os.path.join(drop, "demo.xlsx"), grids)
     write_xls(os.path.join(drop, "demo.xls"), grids)
 
-    register(spark)
-    cells = spark.read.format("workbook").load(drop).where(
+    cells = workbook_cells(workbook_files(spark.read, drop)).where(
         F.col("row_idx") >= 0  # drop the geometry marker rows
     )
     return (
@@ -291,13 +293,13 @@ def workbook_source_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("epe_pipeline_via_datasource", oracle=_expected_values_sql())
 def epe_pipeline_via_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The FULL reference pipeline fed from the DISTRIBUTED ingest
-    path: demo workbook → .xlsx file → ``spark.read.format(
-    "workbook")`` cell relation (executor-side parse) →
-    ``grids_from_cells`` bridge → the same normalize/semantic plans —
-    checked against the SAME frozen golden as ``epe_pipeline_demo``.
-    Certifies end-to-end that the Python Data Source's cell relation
-    is a lossless carrier for the real workload, not just for cell
-    counts."""
+    path: demo workbook → .xlsx file → ``workbook_cells(
+    workbook_files(spark.read, path))`` cell relation (``binaryFile``
+    plus an executor-side Arrow parse) → ``grids_from_cells`` bridge →
+    the same normalize/semantic plans — checked against the SAME
+    frozen golden as ``epe_pipeline_demo``. Certifies end-to-end that
+    the cell relation is a lossless carrier for the real workload, not
+    just for cell counts."""
     import os
     import tempfile
 
@@ -305,7 +307,8 @@ def epe_pipeline_via_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     from epe_data_wrangling_spark.plans.epe_pipeline import run_pipeline
     from epe_data_wrangling_spark.sources.spark_datasource import (
         grids_from_cells,
-        register,
+        workbook_cells,
+        workbook_files,
     )
     from epe_data_wrangling_spark.sources.xlsx import write_xlsx
 
@@ -314,6 +317,5 @@ def epe_pipeline_via_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = os.path.join(drop, "demo.xlsx")
     write_xlsx(path, workbook_grids())
 
-    register(spark)
-    cells = spark.read.format("workbook").load(path)
+    cells = workbook_cells(workbook_files(spark.read, path))
     return run_pipeline(spark, grids_from_cells(cells))

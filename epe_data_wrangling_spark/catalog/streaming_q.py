@@ -495,16 +495,15 @@ def streaming_workbook_landing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's real operating mode, streaming-native: a
     landing zone where a workbook drop appears each cycle
     (`tratamento_epe.R:39` re-downloads the same monthly-republished
-    .xls), watched by the workbook Python Data Source's full
-    DataSourceStreamReader (sources.spark_datasource.
-    WorkbookStreamReader — offset = seen-file set, one partition per
-    new drop, BIFF/OOXML parse on the EXECUTORS, replayable
-    partitions(start, end)). TWO availableNow runs over ONE checkpoint
-    with a drop landing between them (second drop in the OTHER
-    container format): the parquet sink must hold each file's cells
-    exactly once — certifying offset commit/restart and the
-    streaming half of the datasource against the Python-computed
-    grid truth."""
+    .xls), watched by Spark's ``binaryFile`` file stream source
+    (``sources.spark_datasource.workbook_files(spark.readStream, …)``
+    — the seen-file log lives in the checkpoint) and parsed by
+    ``workbook_cells``' Arrow map-in-batch on the EXECUTORS. TWO
+    availableNow runs over ONE checkpoint with a drop landing between
+    them (second drop in the OTHER container format): the parquet sink
+    must hold each file's cells exactly once — certifying the
+    checkpointed seen-file log across a restart and the streaming
+    read path against the Python-computed grid truth."""
     import os
     import shutil
     import tempfile
@@ -512,11 +511,13 @@ def streaming_workbook_landing(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from epe_data_wrangling_spark.plans.epe_demo import workbook_grids
-    from epe_data_wrangling_spark.sources.spark_datasource import register
+    from epe_data_wrangling_spark.sources.spark_datasource import (
+        workbook_cells,
+        workbook_files,
+    )
     from epe_data_wrangling_spark.sources.xls_biff import write_xls
     from epe_data_wrangling_spark.sources.xlsx import write_xlsx
 
-    register(spark)
     work = tempfile.mkdtemp(prefix="wb_landing_")
     land = os.path.join(work, "land")
     os.makedirs(land)
@@ -524,7 +525,7 @@ def streaming_workbook_landing(spark: SparkSession, sf_dir: str) -> DataFrame:
     ckpt = os.path.join(work, "ckpt")
     grids = workbook_grids()
     try:
-        stream = spark.readStream.format("workbook").load(land)
+        stream = workbook_cells(workbook_files(spark.readStream, land))
 
         def run_pass() -> None:
             q = (
@@ -580,24 +581,22 @@ def _wb_burst_expected_sql() -> str:
 @query(
     "streaming_workbook_burst",
     oracle=_wb_burst_expected_sql,
-    headline=True,  # r14: guards the stream reader's one-partition-per-
-    # drop parallel parse round-over-round (the r13 executor-side parse
-    # payoff lived only in SCALE.md — a partition-planning regression
-    # was invisible to BENCH_r*)
+    headline=True,  # guards the burst's parallel parse round-over-round:
+    # the file source packs the 8 drops into ≥ 2 parse tasks (asserted
+    # through the status store in tests/test_spark_datasource.py); a
+    # burst collapsing to one serial parse task shows up in BENCH_r*
 )
 def streaming_workbook_burst(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The fleet-of-drops burst the full `DataSourceStreamReader`
-    exists for: {WB_BURST_DROPS} workbook drops (alternating OOXML /
-    BIFF8 container formats) land BEFORE the stream runs, and ONE
-    availableNow pass must plan one partition per drop and parse all
-    of them executor-side in parallel (`sources.spark_datasource.
-    WorkbookStreamReader.partitions` — the r13 measurement: 7.3 s/drop
-    at burst 8 vs 9.7-10.7 single-drop, SCALE.md). Output is the
-    per-(file, sheet) cell count against the Python-computed grid
-    truth; as a HEADLINE query its timing lands in every BENCH_r*, so
-    a regression in partition planning (e.g. the burst collapsing to
-    one serial parse task) shows up as a step change round-over-round
-    rather than silently reverting the monthly cycle's floor."""
+    """The fleet-of-drops burst: {WB_BURST_DROPS} workbook drops
+    (alternating OOXML / BIFF8 container formats) land BEFORE the
+    stream runs, and ONE availableNow pass parses all of them
+    executor-side in parallel: ``workbook_files`` lists them in one
+    micro-batch, Spark packs the small files into several scan tasks
+    (a whole file per task), and ``workbook_cells`` parses each task's
+    files in its own Python worker. Output is the per-(file, sheet)
+    cell count against the Python-computed grid truth; as a HEADLINE
+    query its timing lands in every BENCH_r*, so a burst collapsing to
+    one serial parse task shows up as a step change round-over-round."""
     import os
     import shutil
     import tempfile
@@ -605,11 +604,13 @@ def streaming_workbook_burst(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from epe_data_wrangling_spark.plans.epe_demo import workbook_grids
-    from epe_data_wrangling_spark.sources.spark_datasource import register
+    from epe_data_wrangling_spark.sources.spark_datasource import (
+        workbook_cells,
+        workbook_files,
+    )
     from epe_data_wrangling_spark.sources.xls_biff import write_xls
     from epe_data_wrangling_spark.sources.xlsx import write_xlsx
 
-    register(spark)
     work = tempfile.mkdtemp(prefix="wb_burst_")
     land = os.path.join(work, "land")
     os.makedirs(land)
@@ -623,8 +624,7 @@ def streaming_workbook_burst(spark: SparkSession, sf_dir: str) -> DataFrame:
             else:
                 write_xlsx(os.path.join(land, f"drop_{i}.xlsx"), grids)
         q = (
-            spark.readStream.format("workbook")
-            .load(land)
+            workbook_cells(workbook_files(spark.readStream, land))
             .writeStream.format("parquet")
             .option("path", out)
             .option("checkpointLocation", ckpt)

@@ -1,5 +1,6 @@
-"""Workbook ingest as a first-class Spark data source (Python Data
-Source API, Spark 4 / SPARK-44076): ``spark.read.format("workbook")``.
+"""Workbook landing zones read by Spark's own ``binaryFile`` file
+source, plus the sharded ``.xlsx`` writer registered as the Python
+Data Source ``workbook`` (Spark 4 / SPARK-44076).
 
 The driver-side ingest in ``sources.workbook`` is the right tool for
 ONE small messy workbook (the reference's actual artifact,
@@ -7,62 +8,137 @@ ONE small messy workbook (the reference's actual artifact,
 plan-time access to specific cells. This module is the DISTRIBUTED
 counterpart for the fleet-of-workbooks shape — a landing zone with
 thousands of spreadsheet drops — where parsing must happen on
-executors, not the driver:
+executors, not the driver. One reading path serves batch, stream and
+the monthly refresh:
 
-- **Planning touches no file contents.** ``partitions()`` only lists
-  the directory; every byte of workbook parsing happens inside
-  ``read()`` on an executor. One :class:`InputPartition` per FILE —
-  the natural split unit for container formats, since both OOXML
-  (shared-strings part, ZIP central directory) and BIFF8 (CFB FAT,
-  workbook-global SST) hold workbook-global state that a sheet-level
-  split would force every task to re-read.
+- ``workbook_files(reader, path)`` — ``spark.read`` or
+  ``spark.readStream`` → ``binaryFile`` rows ``(path,
+  modificationTime, length, content)``, one per workbook file. This
+  module alone decides what counts as a workbook drop (see
+  :func:`workbook_files`). Planning lists files only; a stream's
+  seen-file log lives in the query checkpoint, so each drop is
+  emitted once across restarts.
+- ``workbook_cells(files)`` — one Arrow map-in-batch parse
+  (``mapInArrow``): every file's bytes go through
+  ``read_workbook_grids`` in an executor task. Spark packs small files
+  into several tasks, and a whole file always stays in one task, which
+  suits container formats: both OOXML (shared-strings part, ZIP
+  central directory) and BIFF8 (CFB FAT, workbook-global SST) hold
+  workbook-global state that a sheet-level split would force every
+  task to re-read.
 - **Output is the raw CELL relation** ``(file, sheet, sheet_idx,
   row_idx, col_idx, value)`` — no header interpretation, every value
   text (read_xls parity). Header naming, junk slicing and typing are
   downstream relational work (``plans.epe_normalize``), keeping this
-  source schema-stable no matter how ragged the sheets are; ragged /
+  relation schema-stable no matter how ragged the sheets are; ragged /
   blank cells simply produce no row (sparse representation).
 - Format detection is per-file by MAGIC BYTES (CFB → BIFF8 reader,
-  else OOXML), so one load() can mix ``.xls`` and ``.xlsx`` drops.
+  else OOXML), so one load can mix ``.xls`` and ``.xlsx`` drops.
 
-Registration is per-session and idempotent: ``register(spark)``.
+The ``workbook`` Python Data Source is write-only
+(``df.write.format("workbook")``); ``register(spark)`` registers it.
 """
 
 from __future__ import annotations
 
-import glob as _glob
 import os
+from dataclasses import dataclass
 
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
+import pyarrow as pa
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame
+from pyspark.sql.datasource import DataSource, DataSourceWriter, WriterCommitMessage
+from pyspark.sql.pandas.types import from_arrow_schema
 
-#: The cell relation. row_idx/col_idx are 0-based positions in the raw
+#: The cell relation. ``file`` is the ``file:`` URI Spark's file source
+#: reports for the workbook (``file:/abs/path``, percent-encoded where
+#: the path needs it), the same string the monthly refresh records as
+#: its provenance. row_idx/col_idx are 0-based positions in the raw
 #: grid (row 0 is the sheet's header row under read_xls semantics);
 #: sheet_idx preserves workbook sheet ORDER, which is semantic for the
 #: reference (Shape-A/Shape-B dispatch happens by sheet, SURVEY C1).
-CELLS_SCHEMA = (
-    "file string, sheet string, sheet_idx int, row_idx long, col_idx int, "
-    "value string, sheet_rows int, sheet_cols int"
-)
+#: An Arrow schema: the parse builds its output batches against it.
+CELLS_SCHEMA = pa.schema([
+    ("file", pa.string()), ("sheet", pa.string()), ("sheet_idx", pa.int32()),
+    ("row_idx", pa.int64()), ("col_idx", pa.int32()), ("value", pa.string()),
+    ("sheet_rows", pa.int32()), ("sheet_cols", pa.int32()),
+])
 
-_EXTS = (".xls", ".xlsx")
+#: the fixed schema of Spark's ``binaryFile`` source (a streaming file
+#: source must be given its schema)
+_BINARY_FILE_SCHEMA = "path string, modificationTime timestamp, length long, content binary"
+
+#: a workbook's name ends in .xls or .xlsx, in any letter case
+_WORKBOOK_GLOB = "*.{[xX][lL][sS],[xX][lL][sS][xX]}"
+
+#: The file stream source forgets, and then never reads, a file whose
+#: mtime is older than the newest seen file's mtime minus
+#: ``maxFileAge`` (default 7 days). A drop's mtime says nothing about
+#: its month — a republished or restored workbook may carry any mtime —
+#: so no age may skip one. Batch reads ignore the option.
+_MAX_FILE_AGE = "36500d"
 
 
-def _expand_paths(path: str) -> list[str]:
-    """path → sorted concrete file list. Accepts one file, a glob, or
-    a directory (non-recursive; workbook extensions only)."""
-    if os.path.isdir(path):
-        files = [
-            os.path.join(path, f)
-            for f in os.listdir(path)
-            if f.lower().endswith(_EXTS)
-        ]
-    elif any(ch in path for ch in "*?["):
-        files = [f for f in _glob.glob(path) if f.lower().endswith(_EXTS)]
-    else:
-        files = [path] if os.path.exists(path) else []
-    if not files:
+def workbook_files(reader, path: str) -> DataFrame:
+    """The workbook files at ``path`` (a file, a glob or a directory)
+    as ``binaryFile`` rows, read by ``reader`` — ``spark.read`` for a
+    batch frame, ``spark.readStream`` for a landing-zone stream.
+
+    A workbook is a top-level file whose name ends in ``.xls`` or
+    ``.xlsx`` in any letter case. Files in subdirectories and files
+    whose name starts with ``.`` or ``_`` are never read: Spark's file
+    listing reads no subdirectory and skips the prefixed names as
+    hidden. A missing path raises ``FileNotFoundError``, and so does a
+    batch load that finds no workbook; an empty landing zone is a
+    normal stream state. A file listed but gone before its task reads
+    it fails the query (Spark's ``ignoreMissingFiles`` is off by
+    default)."""
+    try:
+        files = (
+            reader.format("binaryFile")
+            .schema(_BINARY_FILE_SCHEMA)
+            .option("pathGlobFilter", _WORKBOOK_GLOB)
+            .option("maxFileAge", _MAX_FILE_AGE)
+            .load(path)
+        )
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
+        files = None
+    # inputFiles() is the driver-side listing: it runs no job
+    if files is None or (not files.isStreaming and not files.inputFiles()):
         raise FileNotFoundError(f"workbook source: no workbook files at {path!r}")
-    return sorted(files)
+    return files
+
+
+def workbook_cells(files: DataFrame) -> DataFrame:
+    """``binaryFile`` rows (batch or stream, as :func:`workbook_files`
+    returns them) → the cell relation ``CELLS_SCHEMA``, parsed in
+    executor tasks, one Arrow batch per workbook."""
+    return files.select("path", "content").mapInArrow(
+        _parse_workbooks, from_arrow_schema(CELLS_SCHEMA)
+    )
+
+
+def _parse_workbooks(batches):
+    from epe_data_wrangling_spark.sources.workbook import read_workbook_grids
+
+    for batch in batches:
+        for file, content in zip(
+            batch.column("path").to_pylist(), batch.column("content").to_pylist()
+        ):
+            rows = [
+                cell
+                for sheet_idx, (sheet, grid) in enumerate(
+                    read_workbook_grids(content).items()
+                )
+                for cell in _emit_sheet_cells(file, sheet_idx, sheet, grid)
+            ]
+            if rows:
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(col, f.type) for col, f in zip(zip(*rows), CELLS_SCHEMA)],
+                    schema=CELLS_SCHEMA,
+                )
 
 
 def _emit_sheet_cells(file: str, sheet_idx: int, sheet: str, grid) -> "list":
@@ -103,214 +179,23 @@ def _emit_sheet_cells(file: str, sheet_idx: int, sheet: str, grid) -> "list":
     return out
 
 
-class _FilePartition(InputPartition):
-    def __init__(self, file: str):
-        self.file = file
-
-
-class WorkbookCellReader(DataSourceReader):
-    def __init__(self, options: dict):
-        path = options.get("path")
-        if not path:
-            raise ValueError("workbook source requires a path: .load('<file|dir|glob>')")
-        self.path = path
-
-    def partitions(self) -> list[InputPartition]:
-        # Metadata-only planning: a directory listing, zero file opens.
-        return [_FilePartition(f) for f in _expand_paths(self.path)]
-
-    def read(self, partition: _FilePartition):
-        # Executor-side: magic-byte dispatch to the stdlib readers
-        # (pandas-engine fallback inside read_workbook_grids applies
-        # if an Excel engine is installed on the executors).
-        from epe_data_wrangling_spark.sources.workbook import read_workbook_grids
-
-        file = partition.file
-        for sheet_idx, (sheet, grid) in enumerate(read_workbook_grids(file).items()):
-            yield from _emit_sheet_cells(file, sheet_idx, sheet, grid)
-
-
 class WorkbookDataSource(DataSource):
-    """``spark.read.format("workbook").load(path)`` → cell relation;
-    ``df.write.format("workbook").save(path)`` → sharded .xlsx export
-    (one workbook per non-empty partition, two-phase commit)."""
+    """``df.write.format("workbook").save(path)`` → sharded .xlsx export
+    (one workbook per non-empty partition, two-phase commit). Reading
+    is :func:`workbook_cells` over :func:`workbook_files`."""
 
     @classmethod
     def name(cls) -> str:
         return "workbook"
-
-    def schema(self) -> str:
-        return CELLS_SCHEMA
-
-    def reader(self, schema) -> DataSourceReader:
-        return WorkbookCellReader(self.options)
-
-    def streamReader(self, schema) -> "WorkbookStreamReader":
-        return WorkbookStreamReader(self.options)
 
     def writer(self, schema, overwrite: bool) -> "WorkbookShardWriter":
         return WorkbookShardWriter(self.options, schema, overwrite)
 
 
 def register(spark) -> None:
-    """Idempotently register the source on this session (re-register
+    """Idempotently register the writer on this session (re-register
     simply overwrites the prior registration)."""
     spark.dataSource.register(WorkbookDataSource)
-
-
-# ---- streaming: the landing-zone drop watcher ------------------------
-
-from pyspark.sql.datasource import DataSourceStreamReader
-
-
-class WorkbookStreamReader(DataSourceStreamReader):
-    """Streaming counterpart of :class:`WorkbookCellReader` — a
-    landing zone of workbook drops: each micro-batch picks up workbook
-    files not seen by any earlier batch and emits their cells (the
-    ``streaming_workbook_landing`` / ``_burst`` catalog queries read
-    through it).
-
-    It is not the EPE monthly cycle's reader: ``streaming.epe_monthly``
-    reads its landing zone with Spark's built-in ``binaryFile`` stream
-    source and parses each drop's bytes on the driver, because this
-    source's fixed cost (a Python streaming-source runner per
-    ``start()``, then an executor Python worker per parse) was most of
-    a one-drop refresh.
-
-    Offsets are {"seen": sorted file list} — pure metadata, JSON-
-    serializable, and replayable: ``partitions(start, end)`` plans ONE
-    partition per file that joined between the offsets, so recovery
-    after failure re-parses exactly the same drops (files are
-    immutable once landed, the standard landing-zone contract).
-
-    Full ``DataSourceStreamReader`` (not the Simple driver-side
-    variant, which this class was through r12): the driver only LISTS
-    the landing dir (metadata); the BIFF/OOXML parse runs in the
-    executor task of each file's partition — a fleet of drops landing
-    in one batch parses in parallel across the cluster instead of
-    serially on the driver."""
-
-    def __init__(self, options: dict):
-        path = options.get("path")
-        if not path:
-            raise ValueError("workbook source requires a path: .load('<dir>')")
-        self.path = path
-        #: Monotone seen-file accumulator. A bare directory listing is
-        #: NOT monotone — retention cleanup (or a transient listing
-        #: blip on an object store) removes a previously-seen file, a
-        #: listing-only latestOffset would REGRESS the committed
-        #: offset, and a file re-landed under the same name would then
-        #: re-emit its cells (duplicates downstream). Offsets must
-        #: only grow: union every listing into this set, and seed it
-        #: from the committed offsets Spark hands to partitions().
-        #:
-        #: Restart ordering caveat: Spark's first call on a FRESH
-        #: reader instance may be latestOffset() — BEFORE partitions()
-        #: has seeded the accumulator from the committed offsets — so
-        #: in-memory tracking alone cannot close the window where a
-        #: restart coincides with a retention removal. The
-        #: ``offsets_dir`` option closes it: the accumulator persists
-        #: there (atomic tmp+rename JSON, the metadata log Spark's own
-        #: FileStreamSource keeps in its checkpoint — an API surface
-        #: the Python DataSource does not expose, hence the explicit
-        #: option) and re-seeds on construction. Callers that own a
-        #: checkpoint dir should point offsets_dir inside it.
-        self._seen: set[str] = set()
-        self._offsets_dir = options.get("offsets_dir")
-        if self._offsets_dir:
-            import json as _json
-
-            p = os.path.join(self._offsets_dir, "seen.json")
-            if os.path.isfile(p):
-                with open(p) as f:
-                    self._seen.update(_json.load(f))
-        #: size of the set at last persist (grow-only ⇒ a size match
-        #: means no change); the monotone set never shrinks
-        self._persisted_n = len(self._seen) if self._offsets_dir else -1
-
-    def _persist_seen(self) -> None:
-        # only when the set grew: a quiet landing zone must not pay an
-        # O(all-files-ever-seen) JSON rewrite twice per empty trigger
-        if not self._offsets_dir or len(self._seen) == self._persisted_n:
-            return
-        import json as _json
-
-        os.makedirs(self._offsets_dir, exist_ok=True)
-        p = os.path.join(self._offsets_dir, "seen.json")
-        tmp = f"{p}.tmp"
-        with open(tmp, "w") as f:
-            _json.dump(sorted(self._seen), f)
-        os.replace(tmp, p)
-        self._persisted_n = len(self._seen)
-
-    def _files(self) -> list[str]:
-        try:
-            return _expand_paths(self.path)
-        except FileNotFoundError:
-            return []  # an empty landing zone is a normal streaming state
-
-    def initialOffset(self) -> dict:
-        return {"seen": []}
-
-    def latestOffset(self) -> dict:
-        # Growth bound (deliberate): the offset IS the monotone
-        # seen-file set, so each checkpoint offset entry and each
-        # seen.json rewrite is O(all files ever landed) — ~100 bytes
-        # per path, i.e. ~10 MB at 100k lifetime drops, rewritten only
-        # when the set GROWS (_persist_seen is grow-gated). Workbook
-        # landing zones are low-churn by nature (human/monthly-cycle
-        # drops, not a firehose), so the bound is fine for this
-        # source's deployment shape; a long-lived HIGH-churn landing
-        # zone should instead move emitted files to an archive prefix
-        # (the standard FileStreamSource "sourceArchiveDir" practice),
-        # which keeps the listing — and therefore this set — bounded
-        # by the retention horizon. Compacting the set itself (e.g.
-        # retiring old entries into a count/high-water marker) is NOT
-        # safe here: file names carry no order, so any forgotten name
-        # that re-lands would be re-emitted as a duplicate.
-        self._seen.update(self._files())
-        self._persist_seen()
-        return {"seen": sorted(self._seen)}
-
-    def partitions(self, start: dict, end: dict) -> list[InputPartition]:
-        # restart path: the committed offsets are authoritative prior
-        # knowledge — fold them into the accumulator so the next
-        # latestOffset cannot regress below what was already emitted
-        self._seen.update(start.get("seen", []))
-        self._seen.update(end.get("seen", []))
-        self._persist_seen()
-        new = sorted(set(end.get("seen", [])) - set(start.get("seen", [])))
-        gone = [f for f in new if not os.path.isfile(f)]
-        if gone:
-            # a file due for first emission has vanished between
-            # listing and planning (retention raced the stream, or an
-            # offset regressed through the restart window above
-            # without offsets_dir): raising here is a witness with
-            # the cause attached — the alternative is an executor
-            # FileNotFoundError, or silent duplicates if the name
-            # re-lands
-            raise RuntimeError(
-                f"workbook stream: {len(gone)} file(s) planned for this "
-                f"batch no longer exist (e.g. {gone[0]!r}) — landed files "
-                "must be immutable until emitted; if retention can touch "
-                "the landing dir, set the offsets_dir option so seen-file "
-                "state survives restart"
-            )
-        return [_FilePartition(f) for f in new]
-
-    def read(self, partition: _FilePartition):
-        # Executor-side (the whole point): same magic-byte dispatch as
-        # the batch reader.
-        from epe_data_wrangling_spark.sources.workbook import read_workbook_grids
-
-        file = partition.file
-        for sheet_idx, (sheet, grid) in enumerate(
-            read_workbook_grids(file).items()
-        ):
-            yield from _emit_sheet_cells(file, sheet_idx, sheet, grid)
-
-    def commit(self, end: dict) -> None:
-        pass  # offsets are pure metadata; nothing external to ack
 
 
 _GRID_FIELDS = ("sheet", "sheet_idx", "row_idx", "col_idx", "value", "sheet_rows", "sheet_cols")
@@ -318,21 +203,17 @@ _GRID_FIELDS = ("sheet", "sheet_idx", "row_idx", "col_idx", "value", "sheet_rows
 
 def grids_from_cells(cells_df) -> dict[str, list]:
     """Reassemble the grid contract from the CELL relation — the
-    bridge from the distributed source back into the EPE pipeline
+    bridge from the distributed read path back into the EPE pipeline
     (whose normalize stage is entitled to plan-time cell access by
     the workbook-small contract, SURVEY §4.3.1): collects the cells
     of ONE workbook (small by that same contract) and rebuilds the
     ordered {sheet: grid} dict exactly as the driver-side readers
     produce it — empty sheets and trailing all-blank rows/columns
-    included, via the geometry marker rows the source emits."""
-    return _assemble_grids(cells_df.select(*_GRID_FIELDS).collect())
-
-
-def _assemble_grids(rows) -> dict[str, list]:
+    included, via the geometry marker rows the parse emits."""
     sheets: dict[int, str] = {}
     dims: dict[str, tuple[int, int]] = {}
     cells: dict[str, dict[tuple[int, int], str]] = {}
-    for r in rows:
+    for r in cells_df.select(*_GRID_FIELDS).collect():
         sheets[r.sheet_idx] = r.sheet
         dims[r.sheet] = (r.sheet_rows, r.sheet_cols)
         if r.row_idx >= 0:
@@ -350,10 +231,6 @@ def _assemble_grids(rows) -> dict[str, list]:
 
 # ---- batch write: sharded .xlsx export (two-phase commit) ------------
 
-from dataclasses import dataclass
-
-from pyspark.sql.datasource import DataSourceWriter, WriterCommitMessage
-
 
 @dataclass
 class _ShardCommit(WriterCommitMessage):
@@ -363,7 +240,7 @@ class _ShardCommit(WriterCommitMessage):
 
 class WorkbookShardWriter(DataSourceWriter):
     """``df.write.format("workbook").save(dir)`` — the WRITE twin of
-    the cell-relation reader (Python Data Source API): every
+    the cell-relation read path (Python Data Source API): every
     non-empty partition serializes its rows to ONE real .xlsx shard
     (header row = schema field names, cells as text; NULLs pass
     through as blank cells — the reader's None, not "" — so cell

@@ -21,8 +21,9 @@ Spark contract implemented here:
   sheet rows.
 - All data cells are strings (read_xls parity); typed casts happen in
   the normalize stage with ``try_cast`` (R's as.numeric-to-NA).
-- At cluster scale the same grids can be produced by a distributed
-  Excel datasource (``sources.spark_datasource.grids_from_cells``);
+- At cluster scale the same grids can be produced from the
+  executor-side cell relation (``sources.spark_datasource.
+  workbook_cells`` → ``grids_from_cells``);
   everything downstream only sees the ``{sheet: grid}`` dict.
 """
 

@@ -6,7 +6,8 @@ composed end-to-end.
 per month (`tratamento_epe.R:39` re-downloads, `R:290` re-exports).
 This module is the streaming-native composition the engine already
 had all the parts for: the workbook landing zone, read by Spark's
-built-in file stream source (``binaryFile``: each new drop arrives as
+built-in file stream source (``binaryFile`` through
+``sources.spark_datasource.workbook_files``: each new drop arrives as
 one ``(path, modificationTime, length, content)`` row of a
 micro-batch, and the seen-file log lives in the query checkpoint),
 feeds the CDC-retraction discipline (`streaming.ops`), maintaining
@@ -48,13 +49,12 @@ producer artifact's own size: the workbook-small contract of SURVEY
 §4.3.1, and the drop's bytes are smaller than the cell rows an
 executor-side parse would collect), one keyed hash-diff shuffle
 against the standing image, a delta-sized signed aggregate, and a
-|groups|-row view merge. The file source starts no Python process
-(the Python ``workbook`` stream source,
-`sources.spark_datasource.WorkbookStreamReader`, costs a
-streaming-source runner per run and an executor Python worker per
-parse, most of a one-drop refresh). Drops landing together parse
-serially on the driver; a fleet of them is the shape that source's
-executor-side parse serves. The EPE fact is dimension-table-sized so the plain
+|groups|-row view merge. The file source starts no Python process,
+and the driver-side parse starts no executor Python worker: for a
+one-drop refresh either would cost more than the parse. Drops landing
+together parse serially on the driver; a fleet of them is the shape
+``sources.spark_datasource.workbook_cells`` serves, which parses in
+executor tasks. The EPE fact is dimension-table-sized so the plain
 snapshot rewrite is the right plan here; a fact too large to rewrite
 per cycle would instead land the SAME signed rows in the bucketed
 op-log sinks (`cdc_oplog_foreach_batch` et al.), which this module's
@@ -85,20 +85,6 @@ FACT_DIMS = [
 #: exact BIGINT algebra (the reference's values carry ≤6 decimals).
 MICRO = 1_000_000
 
-#: the fixed schema of Spark's ``binaryFile`` source (a streaming file
-#: source must be given its schema)
-_BINARY_FILE_SCHEMA = "path string, modificationTime timestamp, length long, content binary"
-
-#: a drop's name ends in .xls or .xlsx, in any letter case
-_DROP_GLOB = "*.{[xX][lL][sS],[xX][lL][sS][xX]}"
-
-#: The file source forgets, and then never reads, a file whose mtime is
-#: older than the newest seen file's mtime minus ``maxFileAge`` (default
-#: 7 days). A drop's mtime says nothing about its month — a republished
-#: or restored workbook may carry any mtime — so no age may skip one.
-_MAX_FILE_AGE = "36500d"
-
-
 def epe_monthly_refresh(
     spark,
     drops_dir: str,
@@ -115,22 +101,15 @@ def epe_monthly_refresh(
     file source's seen-file log in the checkpoint makes each run
     process exactly the new drops.
 
-    A drop is a top-level file of ``drops_dir`` whose name ends in
-    ``.xls`` or ``.xlsx`` in any letter case. Files in subdirectories
-    and files whose name starts with ``.`` or ``_`` are never drops:
-    Spark's file source reads no subdirectory of the landing zone and
-    skips the prefixed names as hidden (unlike the ``workbook``
-    source's ``_expand_paths``, which admits the prefixed names)."""
+    A drop is what ``sources.spark_datasource.workbook_files`` counts
+    as a workbook: a top-level file of ``drops_dir`` whose name ends in
+    ``.xls`` or ``.xlsx`` in any letter case and does not start with
+    ``.`` or ``_``."""
     from epe_data_wrangling_spark.plans.epe_pipeline import run_pipeline
     from epe_data_wrangling_spark.sources import workbook
+    from epe_data_wrangling_spark.sources.spark_datasource import workbook_files
 
-    stream = (
-        spark.readStream.format("binaryFile")
-        .schema(_BINARY_FILE_SCHEMA)
-        .option("pathGlobFilter", _DROP_GLOB)
-        .option("maxFileAge", _MAX_FILE_AGE)
-        .load(drops_dir)
-    )
+    stream = workbook_files(spark.readStream, drops_dir)
 
     # this batch's {drop file: {sheet: grid}}, filled by the provenance
     # collect so the step parses no drop a second time

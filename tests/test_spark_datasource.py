@@ -1,17 +1,34 @@
-"""Python Data Source API integration (sources.spark_datasource).
+"""The workbook reading path (sources.spark_datasource): Spark's
+``binaryFile`` source (``workbook_files``) plus one Arrow parse
+(``workbook_cells``), and the ``workbook`` sharded .xlsx writer.
 
 Truth source: the in-memory grids the fixture workbooks are written
 from. The Spark read path (executor-side parse → cell relation) must
 reproduce every non-blank cell of every sheet, for both container
-formats, for directory/glob multi-file loads.
+formats, for directory/glob multi-file loads and for landing-zone
+streams.
 """
 
+import os
+import time
+
 import pytest
+from pyspark.sql.streaming import StreamingQueryListener
 
 from epe_data_wrangling_spark.plans.epe_demo import workbook_grids
-from epe_data_wrangling_spark.sources.spark_datasource import register
+from epe_data_wrangling_spark.sources.spark_datasource import (
+    register,
+    workbook_cells,
+    workbook_files,
+)
 from epe_data_wrangling_spark.sources.xls_biff import write_xls
 from epe_data_wrangling_spark.sources.xlsx import write_xlsx
+
+
+def _uri(path) -> str:
+    """A workbook's ``file`` value: the ``file:`` URI Spark's file
+    source reports for it."""
+    return "file:" + str(path)
 
 
 def _expected_cells(file: str, grids=None) -> set:
@@ -21,14 +38,15 @@ def _expected_cells(file: str, grids=None) -> set:
     from epe_data_wrangling_spark.sources.workbook import read_workbook_grids
 
     out = set()
+    uri = _uri(file)
     for sheet_idx, (sheet, grid) in enumerate(read_workbook_grids(file).items()):
         n_rows = len(grid)
         n_cols = max((len(r) for r in grid), default=0)
-        out.add((file, sheet, sheet_idx, -1, -1, None, n_rows, n_cols))
+        out.add((uri, sheet, sheet_idx, -1, -1, None, n_rows, n_cols))
         for r, row in enumerate(grid):
             for c, v in enumerate(row):
                 if v is not None:
-                    out.add((file, sheet, sheet_idx, r, c, str(v), n_rows, n_cols))
+                    out.add((uri, sheet, sheet_idx, r, c, str(v), n_rows, n_cols))
     return out
 
 
@@ -42,8 +60,24 @@ def workbook_dir(tmp_path_factory):
 
 
 def _read(spark, path):
-    register(spark)
-    return spark.read.format("workbook").load(str(path))
+    return workbook_cells(workbook_files(spark.read, str(path)))
+
+
+def _stream_to(spark, land, out, ckpt, cells=True):
+    """One availableNow run of the landing zone ``land`` into the
+    parquet sink ``out``: its cells, or (``cells=False``) only the
+    listed file paths. Returns everything the sink holds."""
+    files = workbook_files(spark.readStream, str(land))
+    df = workbook_cells(files) if cells else files.select("path")
+    q = (
+        df.writeStream.format("parquet")
+        .option("path", str(out))
+        .option("checkpointLocation", str(ckpt))
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(180), "availableNow run did not finish"
+    return spark.read.parquet(str(out))
 
 
 def test_single_xlsx_cells_match_grid_truth(spark, workbook_dir):
@@ -60,10 +94,9 @@ def test_single_xls_cells_match_grid_truth(spark, workbook_dir):
     assert got == _expected_cells(path, grids)
 
 
-def test_directory_load_mixes_formats_one_partition_per_file(spark, workbook_dir):
+def test_directory_load_mixes_formats(spark, workbook_dir):
     d, grids = workbook_dir
     df = _read(spark, d)
-    assert df.rdd.getNumPartitions() == 2  # one InputPartition per file
     got = {tuple(r) for r in df.collect()}
     want = _expected_cells(str(d / "drop_a.xlsx"), grids) | _expected_cells(
         str(d / "drop_b.xls"), grids
@@ -103,40 +136,128 @@ def test_header_row_reconstructs_readxl_names(spark, workbook_dir):
         assert readxl_names(rebuilt) == readxl_names(grid[0])
 
 
+@pytest.mark.parametrize("mode", ["read", "readStream"])
+def test_workbook_files_admits_only_top_level_workbooks(spark, tmp_path, mode):
+    """Batch and stream count the same files as workbooks: top-level
+    names ending in .xls/.xlsx in any letter case. Other extensions,
+    files in subdirectories and ``_``/``.``-prefixed names (hidden to
+    Spark's file listing) are skipped."""
+    land = tmp_path / "land"
+    (land / "sub").mkdir(parents=True)
+    admitted = ("UP.XLSX", "drop_1.xlsx", "drop_2.xls")
+    for name in admitted + ("notes.csv", "sub/x.xls", "_hidden.xls", ".hidden.xlsx"):
+        (land / name).write_bytes(b"x")  # listed, never parsed
+    if mode == "read":
+        paths = [r.path for r in workbook_files(spark.read, str(land)).collect()]
+    else:
+        sink = _stream_to(spark, land, tmp_path / "out", tmp_path / "ckpt", cells=False)
+        paths = [r.path for r in sink.collect()]
+    assert sorted(paths) == sorted(_uri(land / n) for n in admitted)
+
+
 def test_streaming_landing_zone_exactly_once(spark, tmp_path):
     """Drops land between two availableNow runs over ONE checkpoint:
-    each file's cells are emitted exactly once (offset = seen-file
-    set), so the cumulative sink holds both drops without dups."""
+    each file's cells are emitted exactly once (the file source's
+    seen-file log), so the cumulative sink holds both drops without
+    dups. The second drop carries an mtime 20 years older than the
+    first and is still read: the file source's default ``maxFileAge``
+    (7 days before the newest seen file) would skip it."""
     land = tmp_path / "land"
     land.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-    out = str(tmp_path / "out")
+    ckpt = tmp_path / "ckpt"
+    out = tmp_path / "out"
     grids = workbook_grids()
     write_xlsx(str(land / "drop1.xlsx"), grids)
-
-    register(spark)
-    df = spark.readStream.format("workbook").load(str(land))
     n_cells = len(_expected_cells(str(land / "drop1.xlsx")))  # incl. markers
-
-    def run() -> int:
-        q = (
-            df.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(180)
-        return spark.read.parquet(out).count()
-
-    assert run() == n_cells
-    write_xls(str(land / "drop2.xls"), grids)  # second drop, other format
-    assert run() == 2 * n_cells
+    assert _stream_to(spark, land, out, ckpt).count() == n_cells
+    drop2 = str(land / "drop2.xls")
+    write_xls(drop2, grids)  # second drop, other format
+    old = os.stat(land / "drop1.xlsx").st_mtime - 20 * 365 * 86400
+    os.utime(drop2, (old, old))
+    sink = _stream_to(spark, land, out, ckpt)
+    assert sink.count() == 2 * n_cells
     files = {
-        r.file.rsplit("/", 1)[-1]
-        for r in spark.read.parquet(out).select("file").distinct().collect()
+        r.file.rsplit("/", 1)[-1] for r in sink.select("file").distinct().collect()
     }
     assert files == {"drop1.xlsx", "drop2.xls"}
+
+
+def test_stream_relanded_drop_is_not_reemitted(spark, tmp_path):
+    """A drop removed after it was emitted (retention cleanup), then
+    re-landed under the same name with a newer mtime, is not emitted
+    again. Every run is a fresh query over the same checkpoint, so the
+    seen-file log survives restarts: it is the file source's own, kept
+    in the checkpoint."""
+    land = tmp_path / "land"
+    land.mkdir()
+    ckpt = tmp_path / "ckpt"
+    out = tmp_path / "out"
+    drop = str(land / "drop1.xlsx")
+    grids = {"S1": [["h1", "h2"], ["a", "b"]]}
+    write_xlsx(drop, grids)
+    assert _stream_to(spark, land, out, ckpt).count() == 5  # marker + 4 cells
+    os.remove(drop)
+    assert _stream_to(spark, land, out, ckpt).count() == 5
+    write_xlsx(drop, grids)
+    later = time.time() + 3600
+    os.utime(drop, (later, later))
+    assert _stream_to(spark, land, out, ckpt).count() == 5
+
+
+def test_listed_file_gone_before_its_read_raises(spark, tmp_path):
+    """A workbook listed at load but removed before its task reads it
+    fails the read with Spark's own missing-file error
+    (``ignoreMissingFiles`` is off), instead of silently dropping it."""
+    land = tmp_path / "land"
+    land.mkdir()
+    for name in ("a.xlsx", "b.xlsx"):
+        write_xlsx(str(land / name), {"S1": [["h"], ["v"]]})
+    cells = _read(spark, land)
+    os.remove(land / "b.xlsx")
+    with pytest.raises(Exception, match="FILE_NOT_EXIST"):
+        cells.collect()
+
+
+def test_burst_parses_in_several_tasks(spark):
+    """``streaming_workbook_burst`` lands its 8 drops before one
+    availableNow run, and the file source packs them into at least two
+    scan tasks, so they parse in parallel. Read from the status store:
+    a stream's jobs run in a job group named by the query's run id."""
+    from epe_data_wrangling_spark.catalog.streaming_q import (
+        WB_BURST_DROPS,
+        streaming_workbook_burst,
+    )
+
+    run_ids: list[str] = []
+
+    class _Runs(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            run_ids.append(str(event.runId))
+
+        def onQueryProgress(self, event):
+            pass
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    listener = _Runs()
+    spark.streams.addListener(listener)
+    try:
+        rows = streaming_workbook_burst(spark, "").collect()
+    finally:
+        spark.streams.removeListener(listener)
+    assert len(rows) == WB_BURST_DROPS * len(workbook_grids())
+    [run_id] = run_ids
+    tracker = spark.sparkContext.statusTracker()
+    tasks = [
+        tracker.getStageInfo(stage).numTasks
+        for job in tracker.getJobIdsForGroup(run_id)
+        for stage in tracker.getJobInfo(job).stageIds
+    ]
+    assert max(tasks) >= 2, tasks
 
 
 def test_geometry_survives_sparse_encoding(spark, tmp_path):
@@ -153,9 +274,7 @@ def test_geometry_survives_sparse_encoding(spark, tmp_path):
     }
     path = str(tmp_path / "geo.xlsx")
     write_xlsx(path, grids)
-    register(spark)
-    cells = spark.read.format("workbook").load(path)
-    rebuilt = grids_from_cells(cells)
+    rebuilt = grids_from_cells(_read(spark, path))
     # xlsx write/read round-trip itself trims nothing: compare to the
     # driver-side reader's view of the same file
     from epe_data_wrangling_spark.sources.workbook import read_workbook_grids
@@ -185,10 +304,9 @@ def test_workbook_writer_round_trip_and_commit_protocol(spark, tmp_path):
     """The write twin: df.write.format('workbook') must (1) publish
     one real .xlsx shard per non-empty partition with a _SUCCESS
     manifest and no _temporary leftovers (two-phase commit), and
-    (2) round-trip content through the workbook READER under the
+    (2) round-trip content through the workbook READ path under the
     all-text contract."""
     import json
-    import os
 
     from pyspark.sql import functions as F
 
@@ -218,8 +336,7 @@ def test_workbook_writer_round_trip_and_commit_protocol(spark, tmp_path):
     # 'data' sheet by design
     rows = []
     for shard in shards:
-        cells = spark.read.format("workbook").load(os.path.join(out, shard))
-        [grid] = grids_from_cells(cells).values()
+        [grid] = grids_from_cells(_read(spark, os.path.join(out, shard))).values()
         assert grid[0] == ["k", "s"]  # header row = schema names
         rows += grid[1:]
     assert sorted(rows) == sorted([[str(i), f"v{i}"] for i in range(20)])
@@ -245,8 +362,6 @@ def test_workbook_writer_null_cells_round_trip(spark, tmp_path):
     """NULLs must come back as the reader's None (blank cell), not ''
     — and the header row pins the grid width even when an entire
     column is null."""
-    import os
-
     from epe_data_wrangling_spark.sources.spark_datasource import grids_from_cells
 
     register(spark)
@@ -257,8 +372,7 @@ def test_workbook_writer_null_cells_round_trip(spark, tmp_path):
     ).coalesce(1)
     df.write.format("workbook").mode("overwrite").save(out)
     [shard] = [f for f in os.listdir(out) if f.endswith(".xlsx")]
-    cells = spark.read.format("workbook").load(os.path.join(out, shard))
-    [grid] = grids_from_cells(cells).values()
+    [grid] = grids_from_cells(_read(spark, os.path.join(out, shard))).values()
     assert grid[0] == ["x", "y", "all_null"]
     key = lambda r: [("" if v is None else "\x01" + v) for v in r]  # noqa: E731
     assert sorted(grid[1:], key=key) == [
@@ -266,117 +380,3 @@ def test_workbook_writer_null_cells_round_trip(spark, tmp_path):
         ["a", None, None],
         ["c", "d", None],
     ]
-
-
-def test_stream_reader_plans_one_partition_per_new_drop(tmp_path):
-    """The distributed-parse contract (r13): `WorkbookStreamReader`
-    is a FULL DataSourceStreamReader whose `partitions(start, end)`
-    plans ONE partition per file that joined between the offsets —
-    the unit of executor-side parse parallelism for a fleet of
-    concurrent drops. Unknown/already-seen files must not be
-    re-planned."""
-    import os
-
-    from epe_data_wrangling_spark.sources.spark_datasource import (
-        WorkbookStreamReader,
-    )
-
-    d = str(tmp_path / "landing")
-    os.makedirs(d)
-    files = []
-    for i in range(3):
-        p = os.path.join(d, f"drop_{i}.xlsx")
-        open(p, "wb").close()  # listing-only: partitions never opens files
-        files.append(p)
-    r = WorkbookStreamReader({"path": d})
-    assert r.initialOffset() == {"seen": []}
-    assert r.latestOffset() == {"seen": sorted(files)}
-    parts = r.partitions({"seen": []}, {"seen": sorted(files)})
-    assert sorted(p.file for p in parts) == sorted(files)
-    # incremental: only the unseen file is planned
-    parts2 = r.partitions(
-        {"seen": sorted(files[:2])}, {"seen": sorted(files)}
-    )
-    assert [p.file for p in parts2] == [files[2]]
-    # no new files -> no partitions (an empty poll plans nothing)
-    assert r.partitions({"seen": sorted(files)}, {"seen": sorted(files)}) == []
-
-
-def test_stream_reader_offsets_are_monotone(tmp_path):
-    """latestOffset must never REGRESS below what was already seen:
-    a bare directory listing is not monotone — retention cleanup (or
-    a transient listing blip on an object store) removes a landed
-    file, and a listing-only offset would shrink, so a file re-landed
-    under the same name would be re-planned and its cells duplicated
-    downstream. Seen-file sets only grow; the committed offsets seed
-    the accumulator across reader re-creation (restart)."""
-    import os
-
-    from epe_data_wrangling_spark.sources.spark_datasource import (
-        WorkbookStreamReader,
-    )
-
-    d = str(tmp_path / "landing")
-    os.makedirs(d)
-    f1 = os.path.join(d, "drop_1.xlsx")
-    open(f1, "wb").close()
-    r = WorkbookStreamReader({"path": d})
-    off1 = r.latestOffset()
-    assert off1 == {"seen": [f1]}
-    # retention cleanup removes the landed file -> offset must NOT shrink
-    os.remove(f1)
-    assert r.latestOffset() == {"seen": [f1]}
-    # the file re-lands under the same name: still seen, never re-planned
-    open(f1, "wb").close()
-    off2 = r.latestOffset()
-    assert off2 == {"seen": [f1]}
-    assert r.partitions(off1, off2) == []
-    # restart path: a FRESH reader (empty accumulator) is seeded by the
-    # committed offsets Spark hands to partitions(); a later listing
-    # that misses the file cannot regress below them
-    r2 = WorkbookStreamReader({"path": d})
-    assert r2.partitions({"seen": [f1]}, {"seen": [f1]}) == []
-    os.remove(f1)
-    assert r2.latestOffset() == {"seen": [f1]}
-
-
-def test_stream_reader_offsets_dir_survives_restart_ordering(tmp_path):
-    """The restart-ordering window the in-memory accumulator cannot
-    close: Spark may call latestOffset() on a FRESH reader instance
-    BEFORE partitions() seeds it from the committed offsets. With the
-    ``offsets_dir`` option the seen-file set persists (atomic JSON)
-    and re-seeds on construction, so a retention-removed file cannot
-    regress the very first offset after restart. Also pins the
-    planned-but-missing witness: a file due for first emission that
-    vanished between listing and planning raises with the cause,
-    instead of an executor FileNotFoundError or silent duplicates."""
-    import os
-
-    from epe_data_wrangling_spark.sources.spark_datasource import (
-        WorkbookStreamReader,
-    )
-
-    d = str(tmp_path / "landing")
-    state = str(tmp_path / "state")
-    os.makedirs(d)
-    f1 = os.path.join(d, "drop_1.xlsx")
-    open(f1, "wb").close()
-    r = WorkbookStreamReader({"path": d, "offsets_dir": state})
-    off = r.latestOffset()
-    assert off == {"seen": [f1]}
-    # retention removes the file; a FRESH reader (restart) calls
-    # latestOffset FIRST — the persisted state must hold the line
-    os.remove(f1)
-    r2 = WorkbookStreamReader({"path": d, "offsets_dir": state})
-    assert r2.latestOffset() == {"seen": [f1]}
-    assert r2.partitions(off, {"seen": [f1]}) == []
-    # planned-but-missing witness: a NEW file vanishing between
-    # listing and planning is a raised corruption report
-    f2 = os.path.join(d, "drop_2.xlsx")
-    open(f2, "wb").close()
-    off2 = r2.latestOffset()
-    os.remove(f2)
-    import pytest as _pytest
-
-    with _pytest.raises(RuntimeError, match="no longer exist"):
-        r2.partitions(off, off2)
