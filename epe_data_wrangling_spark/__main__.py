@@ -7,8 +7,8 @@ sheets → normalize → semantic map → export).
         --out out/ --format csv
     python -m epe_data_wrangling_spark --demo --out out/   # built-in demo workbook
 
-Reads the workbook (pandas Excel engine if installed, else the
-stdlib OOXML reader for .xlsx), runs the full normalize + semantic
+Reads the workbook (the stdlib OOXML/BIFF8 readers, chosen by the
+file's magic bytes), runs the full normalize + semantic
 pipeline, and writes the tidy fact table month-partitioned (parquet)
 or flat (csv/json). Exit code 0 and a one-line row-count summary on
 success.

@@ -39,14 +39,14 @@ def _await_or_stop(q, tag: str, timeout_sec: int = STREAM_TIMEOUT_SEC) -> None:
         q.stop()
 
 
-def _land_generations(landing: str, gens, prefix: str = "g") -> None:
+def _land_generations(landing: str, gens, prefix: str = "g"):
     """Write each generation DataFrame as ONE parquet file into the
     landing dir with strictly increasing mtimes, so file-source
     discovery order equals generation order — the ordering contract
-    the snapshot sinks enforce.
+    the snapshot sinks enforce. Returns the landed files' schema.
 
     All generations land from ONE Spark job (r17): the tagged union
-    writes ``partitionBy("_gen")`` with each generation hash-pinned
+    writes ``partitionBy("_gen")`` with each generation range-pinned
     to a single task (so exactly one file per generation), and the
     files rename into the landing exactly as the per-generation
     loop produced them — same schema (the partition column never
@@ -54,7 +54,9 @@ def _land_generations(landing: str, gens, prefix: str = "g") -> None:
     former loop paid one job + single-task write + commit per
     generation (measured r17: 4.6 s of the distinct-oplog headline's
     landing was 3 serialized jobs). An empty generation (no
-    ``_gen=i`` dir) falls back to the shared single-file lander."""
+    ``_gen=i`` dir) falls back to the shared single-file lander.
+    Both writes switch ``maxRecordsPerFile`` off, so a session-wide
+    cap cannot split a generation into several files."""
     import glob as globmod
     import os
     import shutil
@@ -67,10 +69,10 @@ def _land_generations(landing: str, gens, prefix: str = "g") -> None:
     gens = list(gens)
     os.makedirs(landing, exist_ok=True)
     if not gens:
-        return
+        return None
     if len(gens) == 1:
         land_single_file(gens[0], landing, f"{prefix}1.parquet", 1)
-        return
+        return gens[0].schema
     cols = gens[0].columns
     u = None
     for i, g in enumerate(gens, start=1):
@@ -81,29 +83,32 @@ def _land_generations(landing: str, gens, prefix: str = "g") -> None:
     tmp = tempfile.mkdtemp(
         prefix="_land-", dir=os.path.dirname(os.path.abspath(landing))
     )
-    (
-        # range partitioning: each _gen VALUE gets its own partition
-        # (hash could collide all generations into one task and
-        # serialize the whole write again)
-        u.repartitionByRange(len(gens), "_gen")
-        .write.mode("overwrite")
-        .partitionBy("_gen")
-        .parquet(tmp)
-    )
-    for i, g in enumerate(gens, start=1):
-        gdir = os.path.join(tmp, f"_gen={i}")
-        files = (
-            sorted(globmod.glob(os.path.join(gdir, "*.parquet")))
-            if os.path.isdir(gdir)
-            else []
+    try:
+        (
+            # range partitioning: each _gen VALUE gets its own partition
+            # (hash could collide all generations into one task and
+            # serialize the whole write again)
+            u.repartitionByRange(len(gens), "_gen")
+            .write.mode("overwrite")
+            .option("maxRecordsPerFile", 0)
+            .partitionBy("_gen")
+            .parquet(tmp)
         )
-        dest = os.path.join(landing, f"{prefix}{i}.parquet")
-        if len(files) == 1:
-            os.rename(files[0], dest)
-        else:
-            # empty generation, or a write that split unexpectedly
-            land_single_file(g, landing, f"{prefix}{i}.parquet", i)
-    shutil.rmtree(tmp, ignore_errors=True)
+        for i, g in enumerate(gens, start=1):
+            gdir = os.path.join(tmp, f"_gen={i}")
+            files = (
+                sorted(globmod.glob(os.path.join(gdir, "*.parquet")))
+                if os.path.isdir(gdir)
+                else []
+            )
+            dest = os.path.join(landing, f"{prefix}{i}.parquet")
+            if len(files) == 1:
+                os.rename(files[0], dest)
+            else:
+                # empty generation, or a write that split unexpectedly
+                land_single_file(g, landing, f"{prefix}{i}.parquet", i)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
     # one normalization pass AFTER every file exists: mtimes strictly
     # increase in generation order regardless of which path landed a
     # file (the discovery-order contract land_single_file states)
@@ -114,7 +119,45 @@ def _land_generations(landing: str, gens, prefix: str = "g") -> None:
     for i in range(1, len(gens) + 1):
         p = os.path.join(landing, f"{prefix}{i}.parquet")
         os.utime(p, (base + i, base + i))
+    return u.drop("_gen").schema
 
+
+def _landed_stream_run(spark: SparkSession, gens, run) -> DataFrame:
+    """The harness every landed-generation standing-sink query runs
+    on: land ``gens`` in a fresh work dir (`_land_generations`, one
+    file per generation), open a file stream over them with the landed
+    schema and ONE file per micro-batch (one generation per batch, in
+    generation order), hand it to ``run(stream, target, checkpoint)``
+    — which drives the sink into ``target`` and returns the result
+    frame — and materialize that frame on the driver before the work
+    dir is removed."""
+    import os
+    import shutil
+    import tempfile
+
+    work = tempfile.mkdtemp(prefix="landed_stream_")
+    try:
+        landing = os.path.join(work, "landing")
+        stream = (
+            spark.readStream.schema(_land_generations(landing, gens))
+            .option("maxFilesPerTrigger", 1)
+            .parquet(landing)
+        )
+        out = run(stream, os.path.join(work, "state"), os.path.join(work, "ckpt"))
+        return spark.createDataFrame(out.collect(), out.schema)
+    finally:
+        shutil.rmtree(work, ignore_errors=True)
+
+
+def _live(view: DataFrame, *keep: str, **renames: str) -> DataFrame:
+    """A maintained view's live groups (``n > 0``: a group whose count
+    fell to zero is retracted, not reported), projected to ``keep``
+    and then each ``new=old`` rename."""
+    from pyspark.sql import functions as F
+
+    return view.filter(F.col("n") > 0).select(
+        *keep, *[F.col(old).alias(new) for new, old in renames.items()]
+    )
 
 
 @query(
@@ -822,10 +865,6 @@ def streaming_cdc_retraction_pipeline(spark: SparkSession, sf_dir: str) -> DataF
     order. Scale: per version one narrow keyed diff join (unchanged
     keys die in the join) + a |groups|-row merge; the view is never
     recomputed from scratch."""
-    import os
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from epe_data_wrangling_spark.catalog.evolve_q import (
@@ -836,30 +875,8 @@ def streaming_cdc_retraction_pipeline(spark: SparkSession, sf_dir: str) -> DataF
 
     v1, v2 = _snapshot_versions(load_table(spark, sf_dir, "orders"))
     v3 = _snapshot_version3(v2)
-    work = tempfile.mkdtemp(prefix="cdc_retraction_")
-    landing = os.path.join(work, "landing")
-    target = os.path.join(work, "state")
-    os.makedirs(landing)
-    try:
-        _land_generations(
-            landing,
-            [
-                vdf.select("o_orderkey", "o_orderstatus", "cents").withColumn(
-                    "snapshot_version", F.lit(i)
-                )
-                for i, vdf in ((1, v1), (2, v2), (3, v3))
-            ],
-            prefix="v",
-        )
-        schema = (
-            "o_orderkey BIGINT, o_orderstatus STRING, cents BIGINT, "
-            "snapshot_version INT"
-        )
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(landing)
-        )
+
+    def run(stream, target, ckpt):
         view = ops.cdc_retraction_foreach_batch(
             stream,
             target,
@@ -867,18 +884,20 @@ def streaming_cdc_retraction_pipeline(spark: SparkSession, sf_dir: str) -> DataF
             version_col="snapshot_version",
             group_cols=["o_orderstatus"],
             sum_cols=["cents"],
+            checkpoint_dir=ckpt,
         )
-        out = view.filter(F.col("n") > 0).select(
-            "o_orderstatus",
-            F.col("n").alias("n_orders"),
-            F.col("sum_cents").alias("total_cents"),
-        )
-        rows = out.collect()
-        return spark.createDataFrame(
-            rows, "o_orderstatus STRING, n_orders BIGINT, total_cents BIGINT"
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        return _live(view, "o_orderstatus", n_orders="n", total_cents="sum_cents")
+
+    return _landed_stream_run(
+        spark,
+        [
+            vdf.select("o_orderkey", "o_orderstatus", "cents").withColumn(
+                "snapshot_version", F.lit(i)
+            )
+            for i, vdf in ((1, v1), (2, v2), (3, v3))
+        ],
+        run,
+    )
 
 
 @query(
@@ -930,10 +949,6 @@ def streaming_distinct_count_view_maintenance(
     pytest-pinned. Scale: per version one keyed diff + a delta-sized
     support-delta agg + a touched-support join + |groups|-row merges;
     the corpus is never re-aggregated."""
-    import os
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as F
 
     from epe_data_wrangling_spark.catalog.evolve_q import _snapshot_versions
@@ -949,30 +964,8 @@ def streaming_distinct_count_view_maintenance(
             F.col("o_orderstatus")
         ),
     ).filter(F.col("o_orderkey") % 17 != 1)
-    work = tempfile.mkdtemp(prefix="distinct_view_")
-    landing = os.path.join(work, "landing")
-    target = os.path.join(work, "state")
-    os.makedirs(landing)
-    try:
-        _land_generations(
-            landing,
-            [
-                vdf.select("o_orderkey", "o_custkey", "o_orderstatus").withColumn(
-                    "snapshot_version", F.lit(i)
-                )
-                for i, vdf in ((1, v1), (2, v2), (3, v3))
-            ],
-            prefix="v",
-        )
-        schema = (
-            "o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, "
-            "snapshot_version INT"
-        )
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(landing)
-        )
+
+    def run(stream, target, ckpt):
         view = ops.distinct_count_view_foreach_batch(
             stream,
             target,
@@ -980,22 +973,20 @@ def streaming_distinct_count_view_maintenance(
             version_col="snapshot_version",
             group_col="o_orderstatus",
             value_col="o_custkey",
+            checkpoint_dir=ckpt,
         )
-        rows = (
-            view.filter(F.col("n") > 0)
-            .select(
-                "o_orderstatus",
-                F.col("n").alias("n_orders"),
-                F.col("d").alias("n_distinct_cust"),
+        return _live(view, "o_orderstatus", n_orders="n", n_distinct_cust="d")
+
+    return _landed_stream_run(
+        spark,
+        [
+            vdf.select("o_orderkey", "o_custkey", "o_orderstatus").withColumn(
+                "snapshot_version", F.lit(i)
             )
-            .collect()
-        )
-        return spark.createDataFrame(
-            rows,
-            "o_orderstatus STRING, n_orders BIGINT, n_distinct_cust BIGINT",
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+            for i, vdf in ((1, v1), (2, v2), (3, v3))
+        ],
+        run,
+    )
 
 
 def _orders_specs(cols: list[str]):
@@ -1116,6 +1107,18 @@ def _oplog_from_versions(old, new, seq_base: int):
     return _rel_oplog(old, new, "o_orderkey", ["o_orderstatus", "cents"], seq_base)
 
 
+def _orders_log_gens(spark: SparkSession, sf_dir: str, cols: list[str], emit):
+    """The three changelog generations of the shared orders carving
+    (`_orders_carved_base`): the v1 bootstrap, v1→v2 and v2→v3, each
+    emitted by ``emit`` (`_carved_oplog` or `_carved_tombstone_log`)
+    with seq base ``i·10¹⁰`` for generation ``i``."""
+    base, specs = _orders_carved_base(spark, sf_dir, cols)
+    return [
+        emit(base, "o_orderkey", cols, old, new, i * 10**10)
+        for i, (old, new) in enumerate(zip([None, *specs], specs), start=1)
+    ]
+
+
 @query(
     "streaming_distinct_count_oplog_pipeline",
     headline=True,  # r12: guards the manifest commit/read path round-over-round
@@ -1169,12 +1172,6 @@ def streaming_distinct_count_oplog_pipeline(
     and cross-group customer migrations load-bearing. Batch-split
     invariance, the 1→0→1 round trip, and the negative-support
     divergence guard are pytest-pinned."""
-    import os
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
     # The three generations are `_snapshot_versions`/v3 carvings of
     # ONE keyed base, so the changelogs are emitted row-wise by
     # `_carved_oplog` (identical row sets to the former
@@ -1185,32 +1182,8 @@ def streaming_distinct_count_oplog_pipeline(
     # differential test imports too, mirroring this query's oracle
     # verbatim.
     cols = ["o_custkey", "o_orderstatus"]
-    base, (spec1, spec2, spec3) = _orders_carved_base(spark, sf_dir, cols)
-    work = tempfile.mkdtemp(prefix="distinct_oplog_")
-    landing = os.path.join(work, "landing")
-    target = os.path.join(work, "state")
-    os.makedirs(landing)
-    try:
-        G = 10**10
-        _land_generations(
-            landing,
-            [
-                _carved_oplog(base, "o_orderkey", cols, None, spec1, 1 * G),
-                _carved_oplog(base, "o_orderkey", cols, spec1, spec2, 2 * G),
-                _carved_oplog(base, "o_orderkey", cols, spec2, spec3, 3 * G),
-            ],
-            prefix="log",
-        )
-        schema = (
-            "o_orderkey BIGINT, seq BIGINT, op STRING, "
-            "o_custkey BIGINT, o_orderstatus STRING, "
-            "prev_o_custkey BIGINT, prev_o_orderstatus STRING"
-        )
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(landing)
-        )
+
+    def run(stream, target, ckpt):
         view = ops.distinct_count_oplog_foreach_batch(
             stream,
             target,
@@ -1218,22 +1191,13 @@ def streaming_distinct_count_oplog_pipeline(
             seq_col="seq",
             group_col="o_orderstatus",
             value_col="o_custkey",
+            checkpoint_dir=ckpt,
         )
-        rows = (
-            view.filter(F.col("n") > 0)
-            .select(
-                "o_orderstatus",
-                F.col("n").alias("n_orders"),
-                F.col("d").alias("n_distinct_cust"),
-            )
-            .collect()
-        )
-        return spark.createDataFrame(
-            rows,
-            "o_orderstatus STRING, n_orders BIGINT, n_distinct_cust BIGINT",
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        return _live(view, "o_orderstatus", n_orders="n", n_distinct_cust="d")
+
+    return _landed_stream_run(
+        spark, _orders_log_gens(spark, sf_dir, cols, _carved_oplog), run
+    )
 
 
 @query(
@@ -1288,43 +1252,14 @@ def streaming_cdc_oplog_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial agg + a |groups|-row merge and view rewrite — nothing is
     ever snapshot-sized (SCALE.md carries the 10× row vs the snapshot
     pipeline's honest 2.3× floor)."""
-    import os
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
     # carved landing (r17): the generations are `_orders_specs`
     # carvings of one keyed base — row-wise `_carved_oplog`
     # projections (row sets pytest-pinned identical to the former
     # `_oplog_from_versions` full-outer diffs) instead of 2 exchanges
     # + 2 sorts per generation
     cols = ["o_orderstatus", "cents"]
-    base, (sp1, sp2, sp3) = _orders_carved_base(spark, sf_dir, cols)
-    work = tempfile.mkdtemp(prefix="cdc_oplog_")
-    landing = os.path.join(work, "landing")
-    target = os.path.join(work, "state")
-    os.makedirs(landing)
-    try:
-        _land_generations(
-            landing,
-            [
-                _carved_oplog(base, "o_orderkey", cols, None, sp1, 1_0000000000),
-                _carved_oplog(base, "o_orderkey", cols, sp1, sp2, 2_0000000000),
-                _carved_oplog(base, "o_orderkey", cols, sp2, sp3, 3_0000000000),
-            ],
-            prefix="log",
-        )
-        schema = (
-            "o_orderkey BIGINT, seq BIGINT, op STRING, "
-            "o_orderstatus STRING, cents BIGINT, "
-            "prev_o_orderstatus STRING, prev_cents BIGINT"
-        )
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(landing)
-        )
+
+    def run(stream, target, ckpt):
         view = ops.cdc_oplog_foreach_batch(
             stream,
             target,
@@ -1332,21 +1267,13 @@ def streaming_cdc_oplog_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             seq_col="seq",
             group_cols=["o_orderstatus"],
             sum_cols=["cents"],
+            checkpoint_dir=ckpt,
         )
-        rows = (
-            view.filter(F.col("n") > 0)
-            .select(
-                "o_orderstatus",
-                F.col("n").alias("n_orders"),
-                F.col("sum_cents").alias("total_cents"),
-            )
-            .collect()
-        )
-        return spark.createDataFrame(
-            rows, "o_orderstatus STRING, n_orders BIGINT, total_cents BIGINT"
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        return _live(view, "o_orderstatus", n_orders="n", total_cents="sum_cents")
+
+    return _landed_stream_run(
+        spark, _orders_log_gens(spark, sf_dir, cols, _carved_oplog), run
+    )
 
 
 @query(
@@ -1402,39 +1329,10 @@ def streaming_minmax_view_maintenance(spark: SparkSession, sf_dir: str) -> DataF
     touched-group-bucket support I/O + a |groups|-row view merge —
     the corpus is never re-aggregated and untouched groups' extrema
     are never even read."""
-    import os
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
     # carved landing (r17) — see streaming_cdc_oplog_pipeline
     cols = ["o_orderstatus", "cents"]
-    base, (sp1, sp2, sp3) = _orders_carved_base(spark, sf_dir, cols)
-    work = tempfile.mkdtemp(prefix="minmax_oplog_")
-    landing = os.path.join(work, "landing")
-    target = os.path.join(work, "state")
-    os.makedirs(landing)
-    try:
-        _land_generations(
-            landing,
-            [
-                _carved_oplog(base, "o_orderkey", cols, None, sp1, 1_0000000000),
-                _carved_oplog(base, "o_orderkey", cols, sp1, sp2, 2_0000000000),
-                _carved_oplog(base, "o_orderkey", cols, sp2, sp3, 3_0000000000),
-            ],
-            prefix="log",
-        )
-        schema = (
-            "o_orderkey BIGINT, seq BIGINT, op STRING, "
-            "o_orderstatus STRING, cents BIGINT, "
-            "prev_o_orderstatus STRING, prev_cents BIGINT"
-        )
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(landing)
-        )
+
+    def run(stream, target, ckpt):
         view = ops.minmax_view_oplog_foreach_batch(
             stream,
             target,
@@ -1442,24 +1340,15 @@ def streaming_minmax_view_maintenance(spark: SparkSession, sf_dir: str) -> DataF
             seq_col="seq",
             group_cols=["o_orderstatus"],
             value_col="cents",
+            checkpoint_dir=ckpt,
         )
-        rows = (
-            view.filter(F.col("n") > 0)
-            .select(
-                "o_orderstatus",
-                F.col("n").alias("n_orders"),
-                F.col("mn").alias("min_cents"),
-                F.col("mx").alias("max_cents"),
-            )
-            .collect()
+        return _live(
+            view, "o_orderstatus", n_orders="n", min_cents="mn", max_cents="mx"
         )
-        return spark.createDataFrame(
-            rows,
-            "o_orderstatus STRING, n_orders BIGINT, min_cents BIGINT, "
-            "max_cents BIGINT",
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+    return _landed_stream_run(
+        spark, _orders_log_gens(spark, sf_dir, cols, _carved_oplog), run
+    )
 
 
 @query(
@@ -1516,40 +1405,10 @@ def streaming_topk_view_maintenance(spark: SparkSession, sf_dir: str) -> DataFra
     touched-group-bucket I/O on image and view, a rank window over
     |touched groups| × |group size|, ONE manifest write per store;
     nothing is ever corpus-sized."""
-    import os
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
     # carved landing (r17) — see streaming_cdc_oplog_pipeline
     cols = ["o_custkey", "cents"]
-    base, (sp1, sp2, sp3) = _orders_carved_base(spark, sf_dir, cols)
-    work = tempfile.mkdtemp(prefix="topk_oplog_")
-    landing = os.path.join(work, "landing")
-    target = os.path.join(work, "state")
-    os.makedirs(landing)
-    try:
-        G = 10**10
-        _land_generations(
-            landing,
-            [
-                _carved_oplog(base, "o_orderkey", cols, None, sp1, 1 * G),
-                _carved_oplog(base, "o_orderkey", cols, sp1, sp2, 2 * G),
-                _carved_oplog(base, "o_orderkey", cols, sp2, sp3, 3 * G),
-            ],
-            prefix="log",
-        )
-        schema = (
-            "o_orderkey BIGINT, seq BIGINT, op STRING, "
-            "o_custkey BIGINT, cents BIGINT, "
-            "prev_o_custkey BIGINT, prev_cents BIGINT"
-        )
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(landing)
-        )
+
+    def run(stream, target, ckpt):
         view = ops.topk_view_oplog_foreach_batch(
             stream,
             target,
@@ -1559,14 +1418,13 @@ def streaming_topk_view_maintenance(spark: SparkSession, sf_dir: str) -> DataFra
             group_cols=["o_custkey"],
             value_col="cents",
             k=3,
+            checkpoint_dir=ckpt,
         )
-        rows = view.select("o_custkey", "rnk", "o_orderkey", "cents").collect()
-        return spark.createDataFrame(
-            rows,
-            "o_custkey BIGINT, rnk BIGINT, o_orderkey BIGINT, cents BIGINT",
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        return view.select("o_custkey", "rnk", "o_orderkey", "cents")
+
+    return _landed_stream_run(
+        spark, _orders_log_gens(spark, sf_dir, cols, _carved_oplog), run
+    )
 
 
 def _tombstone_rel_log(old, new, key: str, cols: list[str], seq_base: int):
@@ -1658,41 +1516,12 @@ def streaming_distinct_count_tombstone_pipeline(
     Scale: per batch — delta-sized dedup/validation + touched
     key-bucket image I/O + touched support-bucket I/O + a
     |groups|-row merge; no snapshot ever lands."""
-    import os
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
     # carved landing (r17): same shared `_orders_specs` carving, the
     # compacted-topic emitter `_carved_tombstone_log` (row sets
     # pytest-pinned identical to `_tombstone_rel_log` diffs)
     cols = ["o_custkey", "o_orderstatus"]
-    base, (sp1, sp2, sp3) = _orders_carved_base(spark, sf_dir, cols)
-    work = tempfile.mkdtemp(prefix="distinct_tomb_")
-    landing = os.path.join(work, "landing")
-    target = os.path.join(work, "state")
-    os.makedirs(landing)
-    try:
-        G = 10**10
-        _land_generations(
-            landing,
-            [
-                _carved_tombstone_log(base, "o_orderkey", cols, None, sp1, 1 * G),
-                _carved_tombstone_log(base, "o_orderkey", cols, sp1, sp2, 2 * G),
-                _carved_tombstone_log(base, "o_orderkey", cols, sp2, sp3, 3 * G),
-            ],
-            prefix="log",
-        )
-        schema = (
-            "o_orderkey BIGINT, seq BIGINT, op STRING, "
-            "o_custkey BIGINT, o_orderstatus STRING"
-        )
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(landing)
-        )
+
+    def run(stream, target, ckpt):
         view = ops.distinct_count_tombstone_foreach_batch(
             stream,
             target,
@@ -1701,22 +1530,13 @@ def streaming_distinct_count_tombstone_pipeline(
             seq_col="seq",
             group_col="o_orderstatus",
             value_col="o_custkey",
+            checkpoint_dir=ckpt,
         )
-        rows = (
-            view.filter(F.col("n") > 0)
-            .select(
-                "o_orderstatus",
-                F.col("n").alias("n_orders"),
-                F.col("d").alias("n_distinct_cust"),
-            )
-            .collect()
-        )
-        return spark.createDataFrame(
-            rows,
-            "o_orderstatus STRING, n_orders BIGINT, n_distinct_cust BIGINT",
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        return _live(view, "o_orderstatus", n_orders="n", n_distinct_cust="d")
+
+    return _landed_stream_run(
+        spark, _orders_log_gens(spark, sf_dir, cols, _carved_tombstone_log), run
+    )
 
 
 @query(
@@ -1770,39 +1590,10 @@ def streaming_minmax_tombstone_pipeline(
     dedup/validation + touched key-bucket image I/O + touched
     group-bucket support I/O + a |groups|-row merge; no snapshot ever
     lands and the corpus is never re-aggregated."""
-    import os
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
     # carved landing (r17) — see streaming_distinct_count_tombstone_pipeline
     cols = ["o_orderstatus", "cents"]
-    base, (sp1, sp2, sp3) = _orders_carved_base(spark, sf_dir, cols)
-    work = tempfile.mkdtemp(prefix="minmax_tomb_")
-    landing = os.path.join(work, "landing")
-    target = os.path.join(work, "state")
-    os.makedirs(landing)
-    try:
-        G = 10**10
-        _land_generations(
-            landing,
-            [
-                _carved_tombstone_log(base, "o_orderkey", cols, None, sp1, 1 * G),
-                _carved_tombstone_log(base, "o_orderkey", cols, sp1, sp2, 2 * G),
-                _carved_tombstone_log(base, "o_orderkey", cols, sp2, sp3, 3 * G),
-            ],
-            prefix="log",
-        )
-        schema = (
-            "o_orderkey BIGINT, seq BIGINT, op STRING, "
-            "o_orderstatus STRING, cents BIGINT"
-        )
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(landing)
-        )
+
+    def run(stream, target, ckpt):
         view = ops.minmax_view_tombstone_foreach_batch(
             stream,
             target,
@@ -1811,24 +1602,15 @@ def streaming_minmax_tombstone_pipeline(
             seq_col="seq",
             group_cols=["o_orderstatus"],
             value_col="cents",
+            checkpoint_dir=ckpt,
         )
-        rows = (
-            view.filter(F.col("n") > 0)
-            .select(
-                "o_orderstatus",
-                F.col("n").alias("n_orders"),
-                F.col("mn").alias("min_cents"),
-                F.col("mx").alias("max_cents"),
-            )
-            .collect()
+        return _live(
+            view, "o_orderstatus", n_orders="n", min_cents="mn", max_cents="mx"
         )
-        return spark.createDataFrame(
-            rows,
-            "o_orderstatus STRING, n_orders BIGINT, min_cents BIGINT, "
-            "max_cents BIGINT",
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+    return _landed_stream_run(
+        spark, _orders_log_gens(spark, sf_dir, cols, _carved_tombstone_log), run
+    )
 
 
 @query(
@@ -1877,37 +1659,10 @@ def streaming_topk_tombstone_pipeline(
     rank window over |affected groups| × |group size|; no snapshot
     ever lands and the producer never supplies before-images (the
     shape a compacted key-value topic actually provides)."""
-    import os
-    import shutil
-    import tempfile
-
     # carved landing (r17) — see streaming_distinct_count_tombstone_pipeline
     cols = ["o_custkey", "cents"]
-    base, (sp1, sp2, sp3) = _orders_carved_base(spark, sf_dir, cols)
-    work = tempfile.mkdtemp(prefix="topk_tomb_")
-    landing = os.path.join(work, "landing")
-    target = os.path.join(work, "state")
-    os.makedirs(landing)
-    try:
-        G = 10**10
-        _land_generations(
-            landing,
-            [
-                _carved_tombstone_log(base, "o_orderkey", cols, None, sp1, 1 * G),
-                _carved_tombstone_log(base, "o_orderkey", cols, sp1, sp2, 2 * G),
-                _carved_tombstone_log(base, "o_orderkey", cols, sp2, sp3, 3 * G),
-            ],
-            prefix="log",
-        )
-        schema = (
-            "o_orderkey BIGINT, seq BIGINT, op STRING, "
-            "o_custkey BIGINT, cents BIGINT"
-        )
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(landing)
-        )
+
+    def run(stream, target, ckpt):
         view = ops.topk_view_tombstone_foreach_batch(
             stream,
             target,
@@ -1917,14 +1672,13 @@ def streaming_topk_tombstone_pipeline(
             group_cols=["o_custkey"],
             value_col="cents",
             k=3,
+            checkpoint_dir=ckpt,
         )
-        rows = view.select("o_custkey", "rnk", "o_orderkey", "cents").collect()
-        return spark.createDataFrame(
-            rows,
-            "o_custkey BIGINT, rnk BIGINT, o_orderkey BIGINT, cents BIGINT",
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+        return view.select("o_custkey", "rnk", "o_orderkey", "cents")
+
+    return _landed_stream_run(
+        spark, _orders_log_gens(spark, sf_dir, cols, _carved_tombstone_log), run
+    )
 
 
 @query(
@@ -1978,38 +1732,10 @@ def streaming_cdc_tombstone_pipeline(spark: SparkSession, sf_dir: str) -> DataFr
     Scale: per batch, delta-sized dedup/validation + touched-bucket
     image I/O + a |groups|-row merge + ONE manifest write — image cost
     tracks the keys the batch actually touches."""
-    import os
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
     # carved landing (r17) — see streaming_distinct_count_tombstone_pipeline
     cols = ["o_orderstatus", "cents"]
-    base, (sp1, sp2, sp3) = _orders_carved_base(spark, sf_dir, cols)
-    work = tempfile.mkdtemp(prefix="cdc_tombstone_")
-    landing = os.path.join(work, "landing")
-    target = os.path.join(work, "state")
-    os.makedirs(landing)
-    try:
-        _land_generations(
-            landing,
-            [
-                _carved_tombstone_log(base, "o_orderkey", cols, None, sp1, 1_0000000000),
-                _carved_tombstone_log(base, "o_orderkey", cols, sp1, sp2, 2_0000000000),
-                _carved_tombstone_log(base, "o_orderkey", cols, sp2, sp3, 3_0000000000),
-            ],
-            prefix="log",
-        )
-        schema = (
-            "o_orderkey BIGINT, seq BIGINT, op STRING, "
-            "o_orderstatus STRING, cents BIGINT"
-        )
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(landing)
-        )
+
+    def run(stream, target, ckpt):
         view = ops.cdc_tombstone_foreach_batch(
             stream,
             target,
@@ -2018,21 +1744,87 @@ def streaming_cdc_tombstone_pipeline(spark: SparkSession, sf_dir: str) -> DataFr
             seq_col="seq",
             group_cols=["o_orderstatus"],
             sum_cols=["cents"],
+            checkpoint_dir=ckpt,
         )
-        rows = (
-            view.filter(F.col("n") > 0)
-            .select(
-                "o_orderstatus",
-                F.col("n").alias("n_orders"),
-                F.col("sum_cents").alias("total_cents"),
-            )
-            .collect()
+        return _live(view, "o_orderstatus", n_orders="n", total_cents="sum_cents")
+
+    return _landed_stream_run(
+        spark, _orders_log_gens(spark, sf_dir, cols, _carved_tombstone_log), run
+    )
+
+
+def _join_view_run(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    """Shared body of the snapshot-fed join-view queries (inner and
+    left-outer differ only in ``how``): generation 1 carries orders v1
+    + dim s1, generation 2 orders v2 only (the dim is absent =
+    unchanged), generation 3 orders v3 + dim s2, each one micro-batch
+    into ``ops.join_view_foreach_batch``."""
+    from pyspark.sql import functions as F
+
+    from epe_data_wrangling_spark.catalog.evolve_q import (
+        _dim_versions,
+        _snapshot_version3,
+        _snapshot_versions,
+    )
+    from epe_data_wrangling_spark.sources.tables import load_table
+
+    v1, v2 = _snapshot_versions(load_table(spark, sf_dir, "orders"))
+    v3 = _snapshot_version3(v2)
+    s1, s2 = _dim_versions(load_table(spark, sf_dir, "customer"))
+
+    def tag_r(vdf: DataFrame, i: int) -> DataFrame:
+        return vdf.select(
+            F.lit("R").alias("rel"),
+            F.lit(i).alias("snapshot_version"),
+            "o_orderkey",
+            "o_custkey",
+            "cents",
+            "o_orderstatus",
+            F.lit(None).cast("bigint").alias("c_custkey"),
+            F.lit(None).cast("string").alias("c_mktsegment"),
         )
-        return spark.createDataFrame(
-            rows, "o_orderstatus STRING, n_orders BIGINT, total_cents BIGINT"
+
+    def tag_s(sdf: DataFrame, i: int) -> DataFrame:
+        return sdf.select(
+            F.lit("S").alias("rel"),
+            F.lit(i).alias("snapshot_version"),
+            F.lit(None).cast("bigint").alias("o_orderkey"),
+            F.lit(None).cast("bigint").alias("o_custkey"),
+            F.lit(None).cast("bigint").alias("cents"),
+            F.lit(None).cast("string").alias("o_orderstatus"),
+            "c_custkey",
+            "c_mktsegment",
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+    def run(stream, target, ckpt):
+        view = ops.join_view_foreach_batch(
+            stream,
+            target,
+            rel_col="rel",
+            version_col="snapshot_version",
+            r_tag="R",
+            s_tag="S",
+            r_key=["o_orderkey"],
+            s_key=["c_custkey"],
+            r_join="o_custkey",
+            s_join="c_custkey",
+            r_cols=["o_custkey", "cents", "o_orderstatus"],
+            s_cols=["c_custkey", "c_mktsegment"],
+            group_cols=["c_mktsegment", "o_orderstatus"],
+            sum_cols=["cents"],
+            how=how,
+            checkpoint_dir=ckpt,
+        )
+        return _live(
+            view, "c_mktsegment", "o_orderstatus", n_rows="n", cents_sum="sum_cents"
+        )
+
+    gens = (
+        tag_r(v1, 1).unionByName(tag_s(s1, 1)),
+        tag_r(v2, 2),  # dim absent: unchanged this generation
+        tag_r(v3, 3).unionByName(tag_s(s2, 3)),
+    )
+    return _landed_stream_run(spark, gens, run)
 
 
 @query(
@@ -2085,101 +1877,7 @@ def streaming_join_view_maintenance(spark: SparkSession, sf_dir: str) -> DataFra
     recompute(final). Scale: per generation, keyed diffs + three
     delta-sized equi-joins + a |groups|-row merge; neither standing
     image is ever re-joined wholesale."""
-    import os
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from epe_data_wrangling_spark.catalog.evolve_q import (
-        _dim_versions,
-        _snapshot_version3,
-        _snapshot_versions,
-    )
-    from epe_data_wrangling_spark.sources.tables import load_table
-
-    v1, v2 = _snapshot_versions(load_table(spark, sf_dir, "orders"))
-    v3 = _snapshot_version3(v2)
-    s1, s2 = _dim_versions(load_table(spark, sf_dir, "customer"))
-
-    def tag_r(vdf: DataFrame, i: int) -> DataFrame:
-        return vdf.select(
-            F.lit("R").alias("rel"),
-            F.lit(i).alias("snapshot_version"),
-            "o_orderkey",
-            "o_custkey",
-            "cents",
-            "o_orderstatus",
-            F.lit(None).cast("bigint").alias("c_custkey"),
-            F.lit(None).cast("string").alias("c_mktsegment"),
-        )
-
-    def tag_s(sdf: DataFrame, i: int) -> DataFrame:
-        return sdf.select(
-            F.lit("S").alias("rel"),
-            F.lit(i).alias("snapshot_version"),
-            F.lit(None).cast("bigint").alias("o_orderkey"),
-            F.lit(None).cast("bigint").alias("o_custkey"),
-            F.lit(None).cast("bigint").alias("cents"),
-            F.lit(None).cast("string").alias("o_orderstatus"),
-            "c_custkey",
-            "c_mktsegment",
-        )
-
-    gens = (
-        tag_r(v1, 1).unionByName(tag_s(s1, 1)),
-        tag_r(v2, 2),  # dim absent: unchanged this generation
-        tag_r(v3, 3).unionByName(tag_s(s2, 3)),
-    )
-    work = tempfile.mkdtemp(prefix="join_view_")
-    landing = os.path.join(work, "landing")
-    target = os.path.join(work, "state")
-    os.makedirs(landing)
-    try:
-        _land_generations(landing, gens)
-        schema = (
-            "rel STRING, snapshot_version INT, o_orderkey BIGINT, "
-            "o_custkey BIGINT, cents BIGINT, o_orderstatus STRING, "
-            "c_custkey BIGINT, c_mktsegment STRING"
-        )
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(landing)
-        )
-        view = ops.join_view_foreach_batch(
-            stream,
-            target,
-            rel_col="rel",
-            version_col="snapshot_version",
-            r_tag="R",
-            s_tag="S",
-            r_key=["o_orderkey"],
-            s_key=["c_custkey"],
-            r_join="o_custkey",
-            s_join="c_custkey",
-            r_cols=["o_custkey", "cents", "o_orderstatus"],
-            s_cols=["c_custkey", "c_mktsegment"],
-            group_cols=["c_mktsegment", "o_orderstatus"],
-            sum_cols=["cents"],
-        )
-        rows = (
-            view.filter(F.col("n") > 0)
-            .select(
-                "c_mktsegment",
-                "o_orderstatus",
-                F.col("n").alias("n_rows"),
-                F.col("sum_cents").alias("cents_sum"),
-            )
-            .collect()
-        )
-        return spark.createDataFrame(
-            rows,
-            "c_mktsegment STRING, o_orderstatus STRING, n_rows BIGINT, "
-            "cents_sum BIGINT",
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    return _join_view_run(spark, sf_dir, "inner")
 
 
 def _carved_oplog(base, key: str, cols: list[str], old_spec, new_spec, seq_base: int):
@@ -2264,6 +1962,105 @@ def _rel_oplog(old, new, key: str, cols: list[str], seq_base: int):
     )
 
 
+def _join_view_oplog_run(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    """Shared body of the op-log-fed join-view queries (inner and
+    left-outer differ only in ``how``): one operation log covers both
+    relations with a shared LSN-style seq — gen 1 bootstraps orders v1
+    + dim s1 as inserts, gen 2 carries only the orders v1→v2
+    changelog, gen 3 the orders v2→v3 AND dim s1→s2 changelogs — into
+    ``ops.join_view_oplog_foreach_batch``."""
+    from pyspark.sql import functions as F
+
+    # carved landings (r17): both relations' generations are carvings
+    # of their keyed bases (shared `_orders_specs` /
+    # `_customer_carved_base`) — row-wise `_carved_oplog` projections,
+    # pytest-pinned row-set-identical to the former `_rel_oplog`
+    # full-outer self-diffs; the shared-LSN interleaving is just the
+    # per-relation seq offsets riding the same tag/union as before
+    R_COLS = ["o_custkey", "cents", "o_orderstatus"]
+    S_COLS = ["c_mktsegment"]
+    rbase, (rp1, rp2, rp3) = _orders_carved_base(spark, sf_dir, R_COLS)
+    sbase, (ssp1, ssp2) = _customer_carved_base(spark, sf_dir)
+
+    def tag_r(log):
+        return log.select(
+            F.lit("R").alias("rel"),
+            "seq",
+            "op",
+            "o_orderkey",
+            *R_COLS,
+            *[f"prev_{c}" for c in R_COLS],
+            F.lit(None).cast("bigint").alias("c_custkey"),
+            F.lit(None).cast("string").alias("c_mktsegment"),
+            F.lit(None).cast("string").alias("prev_c_mktsegment"),
+        )
+
+    def tag_s(log):
+        return log.select(
+            F.lit("S").alias("rel"),
+            "seq",
+            "op",
+            F.lit(None).cast("bigint").alias("o_orderkey"),
+            *[F.lit(None).cast(t).alias(c) for c, t in
+              (("o_custkey", "bigint"), ("cents", "bigint"),
+               ("o_orderstatus", "string"))],
+            *[F.lit(None).cast(t).alias(f"prev_{c}") for c, t in
+              (("o_custkey", "bigint"), ("cents", "bigint"),
+               ("o_orderstatus", "string"))],
+            "c_custkey",
+            *S_COLS,
+            *[f"prev_{c}" for c in S_COLS],
+        )
+
+    def run(stream, target, ckpt):
+        view = ops.join_view_oplog_foreach_batch(
+            stream,
+            target,
+            rel_col="rel",
+            r_tag="R",
+            s_tag="S",
+            op_col="op",
+            seq_col="seq",
+            r_key=["o_orderkey"],
+            s_key=["c_custkey"],
+            r_join="o_custkey",
+            s_join="c_custkey",
+            r_cols=R_COLS,
+            s_cols=S_COLS,
+            group_cols=["c_mktsegment", "o_orderstatus"],
+            sum_cols=["cents"],
+            how=how,
+            checkpoint_dir=ckpt,
+        )
+        return _live(
+            view, "c_mktsegment", "o_orderstatus", n_rows="n", cents_sum="sum_cents"
+        )
+
+    G = 10**10
+    gens = (
+        tag_r(
+            _carved_oplog(rbase, "o_orderkey", R_COLS, None, rp1, 1 * G)
+        ).unionByName(
+            tag_s(
+                _carved_oplog(
+                    sbase, "c_custkey", S_COLS, None, ssp1, 1 * G + 5 * 10**9
+                )
+            )
+        ),
+        tag_r(_carved_oplog(rbase, "o_orderkey", R_COLS, rp1, rp2, 2 * G)),
+        tag_r(
+            _carved_oplog(rbase, "o_orderkey", R_COLS, rp2, rp3, 3 * G)
+        ).unionByName(
+            tag_s(
+                _carved_oplog(
+                    sbase, "c_custkey", S_COLS, ssp1, ssp2, 3 * G + 5 * 10**9
+                )
+            )
+        ),
+    )
+    return _landed_stream_run(spark, gens, run)
+
+
 @query(
     "streaming_join_view_oplog_pipeline",
     oracle="""
@@ -2318,127 +2115,7 @@ def streaming_join_view_oplog_pipeline(spark: SparkSession, sf_dir: str) -> Data
     deltas, touched-bucket image I/O on lookup and rewrite, three
     broadcast delta joins, a |groups|-row merge — nothing
     relation-sized except the buckets the change actually lands in."""
-    import os
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    # carved landings (r17): both relations' generations are carvings
-    # of their keyed bases (shared `_orders_specs` /
-    # `_customer_carved_base`) — row-wise `_carved_oplog` projections,
-    # pytest-pinned row-set-identical to the former `_rel_oplog`
-    # full-outer self-diffs; the shared-LSN interleaving is just the
-    # per-relation seq offsets riding the same tag/union as before
-    R_COLS = ["o_custkey", "cents", "o_orderstatus"]
-    S_COLS = ["c_mktsegment"]
-    rbase, (rp1, rp2, rp3) = _orders_carved_base(spark, sf_dir, R_COLS)
-    sbase, (ssp1, ssp2) = _customer_carved_base(spark, sf_dir)
-
-    def tag_r(log):
-        return log.select(
-            F.lit("R").alias("rel"),
-            "seq",
-            "op",
-            "o_orderkey",
-            *R_COLS,
-            *[f"prev_{c}" for c in R_COLS],
-            F.lit(None).cast("bigint").alias("c_custkey"),
-            F.lit(None).cast("string").alias("c_mktsegment"),
-            F.lit(None).cast("string").alias("prev_c_mktsegment"),
-        )
-
-    def tag_s(log):
-        return log.select(
-            F.lit("S").alias("rel"),
-            "seq",
-            "op",
-            F.lit(None).cast("bigint").alias("o_orderkey"),
-            *[F.lit(None).cast(t).alias(c) for c, t in
-              (("o_custkey", "bigint"), ("cents", "bigint"),
-               ("o_orderstatus", "string"))],
-            *[F.lit(None).cast(t).alias(f"prev_{c}") for c, t in
-              (("o_custkey", "bigint"), ("cents", "bigint"),
-               ("o_orderstatus", "string"))],
-            "c_custkey",
-            *S_COLS,
-            *[f"prev_{c}" for c in S_COLS],
-        )
-
-    G = 10**10
-    gens = (
-        tag_r(
-            _carved_oplog(rbase, "o_orderkey", R_COLS, None, rp1, 1 * G)
-        ).unionByName(
-            tag_s(
-                _carved_oplog(
-                    sbase, "c_custkey", S_COLS, None, ssp1, 1 * G + 5 * 10**9
-                )
-            )
-        ),
-        tag_r(_carved_oplog(rbase, "o_orderkey", R_COLS, rp1, rp2, 2 * G)),
-        tag_r(
-            _carved_oplog(rbase, "o_orderkey", R_COLS, rp2, rp3, 3 * G)
-        ).unionByName(
-            tag_s(
-                _carved_oplog(
-                    sbase, "c_custkey", S_COLS, ssp1, ssp2, 3 * G + 5 * 10**9
-                )
-            )
-        ),
-    )
-    work = tempfile.mkdtemp(prefix="join_view_oplog_")
-    landing = os.path.join(work, "landing")
-    target = os.path.join(work, "state")
-    os.makedirs(landing)
-    try:
-        _land_generations(landing, gens)
-        schema = (
-            "rel STRING, seq BIGINT, op STRING, o_orderkey BIGINT, "
-            "o_custkey BIGINT, cents BIGINT, o_orderstatus STRING, "
-            "prev_o_custkey BIGINT, prev_cents BIGINT, "
-            "prev_o_orderstatus STRING, c_custkey BIGINT, "
-            "c_mktsegment STRING, prev_c_mktsegment STRING"
-        )
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(landing)
-        )
-        view = ops.join_view_oplog_foreach_batch(
-            stream,
-            target,
-            rel_col="rel",
-            r_tag="R",
-            s_tag="S",
-            op_col="op",
-            seq_col="seq",
-            r_key=["o_orderkey"],
-            s_key=["c_custkey"],
-            r_join="o_custkey",
-            s_join="c_custkey",
-            r_cols=R_COLS,
-            s_cols=S_COLS,
-            group_cols=["c_mktsegment", "o_orderstatus"],
-            sum_cols=["cents"],
-        )
-        rows = (
-            view.filter(F.col("n") > 0)
-            .select(
-                "c_mktsegment",
-                "o_orderstatus",
-                F.col("n").alias("n_rows"),
-                F.col("sum_cents").alias("cents_sum"),
-            )
-            .collect()
-        )
-        return spark.createDataFrame(
-            rows,
-            "c_mktsegment STRING, o_orderstatus STRING, n_rows BIGINT, "
-            "cents_sum BIGINT",
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    return _join_view_oplog_run(spark, sf_dir, "inner")
 
 
 @query(
@@ -2490,128 +2167,7 @@ def streaming_outer_join_view_oplog_pipeline(
     gen 1's unmatched fact inserts fall out as ΔR∖K₂. The oracle
     recomputes γ(v3 ⟕ s2) directly — the hash certifies three
     generations of pure-delta outer maintenance ≡ recompute(final)."""
-    import os
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    # carved landings (r17): both relations' generations are carvings
-    # of their keyed bases (shared `_orders_specs` /
-    # `_customer_carved_base`) — row-wise `_carved_oplog` projections,
-    # pytest-pinned row-set-identical to the former `_rel_oplog`
-    # full-outer self-diffs; the shared-LSN interleaving is just the
-    # per-relation seq offsets riding the same tag/union as before
-    R_COLS = ["o_custkey", "cents", "o_orderstatus"]
-    S_COLS = ["c_mktsegment"]
-    rbase, (rp1, rp2, rp3) = _orders_carved_base(spark, sf_dir, R_COLS)
-    sbase, (ssp1, ssp2) = _customer_carved_base(spark, sf_dir)
-
-    def tag_r(log):
-        return log.select(
-            F.lit("R").alias("rel"),
-            "seq",
-            "op",
-            "o_orderkey",
-            *R_COLS,
-            *[f"prev_{c}" for c in R_COLS],
-            F.lit(None).cast("bigint").alias("c_custkey"),
-            F.lit(None).cast("string").alias("c_mktsegment"),
-            F.lit(None).cast("string").alias("prev_c_mktsegment"),
-        )
-
-    def tag_s(log):
-        return log.select(
-            F.lit("S").alias("rel"),
-            "seq",
-            "op",
-            F.lit(None).cast("bigint").alias("o_orderkey"),
-            *[F.lit(None).cast(t).alias(c) for c, t in
-              (("o_custkey", "bigint"), ("cents", "bigint"),
-               ("o_orderstatus", "string"))],
-            *[F.lit(None).cast(t).alias(f"prev_{c}") for c, t in
-              (("o_custkey", "bigint"), ("cents", "bigint"),
-               ("o_orderstatus", "string"))],
-            "c_custkey",
-            *S_COLS,
-            *[f"prev_{c}" for c in S_COLS],
-        )
-
-    G = 10**10
-    gens = (
-        tag_r(
-            _carved_oplog(rbase, "o_orderkey", R_COLS, None, rp1, 1 * G)
-        ).unionByName(
-            tag_s(
-                _carved_oplog(
-                    sbase, "c_custkey", S_COLS, None, ssp1, 1 * G + 5 * 10**9
-                )
-            )
-        ),
-        tag_r(_carved_oplog(rbase, "o_orderkey", R_COLS, rp1, rp2, 2 * G)),
-        tag_r(
-            _carved_oplog(rbase, "o_orderkey", R_COLS, rp2, rp3, 3 * G)
-        ).unionByName(
-            tag_s(
-                _carved_oplog(
-                    sbase, "c_custkey", S_COLS, ssp1, ssp2, 3 * G + 5 * 10**9
-                )
-            )
-        ),
-    )
-    work = tempfile.mkdtemp(prefix="outer_join_view_oplog_")
-    landing = os.path.join(work, "landing")
-    target = os.path.join(work, "state")
-    os.makedirs(landing)
-    try:
-        _land_generations(landing, gens)
-        schema = (
-            "rel STRING, seq BIGINT, op STRING, o_orderkey BIGINT, "
-            "o_custkey BIGINT, cents BIGINT, o_orderstatus STRING, "
-            "prev_o_custkey BIGINT, prev_cents BIGINT, "
-            "prev_o_orderstatus STRING, c_custkey BIGINT, "
-            "c_mktsegment STRING, prev_c_mktsegment STRING"
-        )
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(landing)
-        )
-        view = ops.join_view_oplog_foreach_batch(
-            stream,
-            target,
-            rel_col="rel",
-            r_tag="R",
-            s_tag="S",
-            op_col="op",
-            seq_col="seq",
-            r_key=["o_orderkey"],
-            s_key=["c_custkey"],
-            r_join="o_custkey",
-            s_join="c_custkey",
-            r_cols=R_COLS,
-            s_cols=S_COLS,
-            group_cols=["c_mktsegment", "o_orderstatus"],
-            sum_cols=["cents"],
-            how="left_outer",
-        )
-        rows = (
-            view.filter(F.col("n") > 0)
-            .select(
-                "c_mktsegment",
-                "o_orderstatus",
-                F.col("n").alias("n_rows"),
-                F.col("sum_cents").alias("cents_sum"),
-            )
-            .collect()
-        )
-        return spark.createDataFrame(
-            rows,
-            "c_mktsegment STRING, o_orderstatus STRING, n_rows BIGINT, "
-            "cents_sum BIGINT",
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    return _join_view_oplog_run(spark, sf_dir, "left_outer")
 
 
 @query(
@@ -2662,102 +2218,7 @@ def streaming_outer_join_view_maintenance(
     recompute(final). Scale: the inner sink's per-generation cost
     plus two key-transition joins built from the dim CHANGE and one
     anti-join of ΔR against the dim key set."""
-    import os
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from epe_data_wrangling_spark.catalog.evolve_q import (
-        _dim_versions,
-        _snapshot_version3,
-        _snapshot_versions,
-    )
-    from epe_data_wrangling_spark.sources.tables import load_table
-
-    v1, v2 = _snapshot_versions(load_table(spark, sf_dir, "orders"))
-    v3 = _snapshot_version3(v2)
-    s1, s2 = _dim_versions(load_table(spark, sf_dir, "customer"))
-
-    def tag_r(vdf: DataFrame, i: int) -> DataFrame:
-        return vdf.select(
-            F.lit("R").alias("rel"),
-            F.lit(i).alias("snapshot_version"),
-            "o_orderkey",
-            "o_custkey",
-            "cents",
-            "o_orderstatus",
-            F.lit(None).cast("bigint").alias("c_custkey"),
-            F.lit(None).cast("string").alias("c_mktsegment"),
-        )
-
-    def tag_s(sdf: DataFrame, i: int) -> DataFrame:
-        return sdf.select(
-            F.lit("S").alias("rel"),
-            F.lit(i).alias("snapshot_version"),
-            F.lit(None).cast("bigint").alias("o_orderkey"),
-            F.lit(None).cast("bigint").alias("o_custkey"),
-            F.lit(None).cast("bigint").alias("cents"),
-            F.lit(None).cast("string").alias("o_orderstatus"),
-            "c_custkey",
-            "c_mktsegment",
-        )
-
-    gens = (
-        tag_r(v1, 1).unionByName(tag_s(s1, 1)),
-        tag_r(v2, 2),  # dim absent: unchanged this generation
-        tag_r(v3, 3).unionByName(tag_s(s2, 3)),
-    )
-    work = tempfile.mkdtemp(prefix="outer_join_view_")
-    landing = os.path.join(work, "landing")
-    target = os.path.join(work, "state")
-    os.makedirs(landing)
-    try:
-        _land_generations(landing, gens)
-        schema = (
-            "rel STRING, snapshot_version INT, o_orderkey BIGINT, "
-            "o_custkey BIGINT, cents BIGINT, o_orderstatus STRING, "
-            "c_custkey BIGINT, c_mktsegment STRING"
-        )
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(landing)
-        )
-        view = ops.join_view_foreach_batch(
-            stream,
-            target,
-            rel_col="rel",
-            version_col="snapshot_version",
-            r_tag="R",
-            s_tag="S",
-            r_key=["o_orderkey"],
-            s_key=["c_custkey"],
-            r_join="o_custkey",
-            s_join="c_custkey",
-            r_cols=["o_custkey", "cents", "o_orderstatus"],
-            s_cols=["c_custkey", "c_mktsegment"],
-            group_cols=["c_mktsegment", "o_orderstatus"],
-            sum_cols=["cents"],
-            how="left_outer",
-        )
-        rows = (
-            view.filter(F.col("n") > 0)
-            .select(
-                "c_mktsegment",
-                "o_orderstatus",
-                F.col("n").alias("n_rows"),
-                F.col("sum_cents").alias("cents_sum"),
-            )
-            .collect()
-        )
-        return spark.createDataFrame(
-            rows,
-            "c_mktsegment STRING, o_orderstatus STRING, n_rows BIGINT, "
-            "cents_sum BIGINT",
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+    return _join_view_run(spark, sf_dir, "left_outer")
 
 
 # ---- the reference's monthly use case, end-to-end incremental --------
@@ -3040,6 +2501,30 @@ def _ann_index_oracle(
     """
 
 
+def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The embeddings corpus the ANN index queries land and serve."""
+    from epe_data_wrangling_spark.sources.tables import load_table
+
+    return load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+
+
+def _ann_queries(e: DataFrame, nq: int) -> DataFrame:
+    """The first ``nq`` corpus vectors as serve queries."""
+    from pyspark.sql import functions as F
+
+    return e.filter(F.col("vec_id") < nq).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").cast("array<double>").alias("qv"),
+    )
+
+
+def _ann_vectors(e: DataFrame) -> DataFrame:
+    """The exact-re-rank vectors table of the PQ serve (and rebuild)."""
+    from pyspark.sql import functions as F
+
+    return e.select("vec_id", F.col("embedding").cast("array<double>").alias("v"))
+
+
 @query("streaming_ann_index_refresh", oracle=_ann_index_oracle())
 def streaming_ann_index_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental ANN index maintenance — IVF refresh WITHOUT
@@ -3061,51 +2546,27 @@ def streaming_ann_index_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     touched-cell rewrite + manifest commit; a query scans
     ~{AIDX_PROBE}/{AIDX_CELLS} of the corpus. Replay skips, duplicate
     ids raise, k_cells drift raises (pytest-pinned)."""
-    import os
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as F
 
-    from epe_data_wrangling_spark.sources.tables import load_table
     from epe_data_wrangling_spark.streaming.ann_index import (
         ivf_index_foreach_batch,
         ivf_index_topk,
     )
 
-    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    work = tempfile.mkdtemp(prefix="ann_index_")
-    landing = os.path.join(work, "landing")
-    target = os.path.join(work, "state")
-    ckpt = os.path.join(work, "ckpt")
-    os.makedirs(landing)
-    try:
-        _land_generations(
-            landing,
-            [e.filter(F.col("vec_id") % 3 == i) for i in range(3)],
-        )
-        stream = (
-            spark.readStream.schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(landing)
-        )
+    e = _embeddings(spark, sf_dir)
+
+    def run(stream, target, ckpt):
         ivf_index_foreach_batch(
             stream, target,
             k_cells=AIDX_CELLS, train_iters=AIDX_ITERS, checkpoint_dir=ckpt,
         )
-        queries = e.filter(F.col("vec_id") < AIDX_NQ).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").cast("array<double>").alias("qv"),
+        return ivf_index_topk(
+            spark, target, _ann_queries(e, AIDX_NQ), probe=AIDX_PROBE, k=AIDX_K
         )
-        rows = ivf_index_topk(
-            spark, target, queries, probe=AIDX_PROBE, k=AIDX_K
-        ).collect()
-        return spark.createDataFrame(
-            rows,
-            "query_id BIGINT, neighbor_id BIGINT, rank INT, l2_dist DOUBLE",
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+    return _landed_stream_run(
+        spark, [e.filter(F.col("vec_id") % 3 == i) for i in range(3)], run
+    )
 
 
 AIDXQ_NQ = 10     #: queries served by the PQ-coded index
@@ -3280,57 +2741,30 @@ def streaming_ivfpq_index_refresh(spark: SparkSession, sf_dir: str) -> DataFrame
     batch = delta × K argmin + delta-residual encode against
     broadcast codebooks + touched-cell rewrite of CODE rows; a query
     scans ~{AIDXQ_PROBE}/{AIDX_CELLS} of the corpus as codes."""
-    import os
-    import shutil
-    import tempfile
-
     from pyspark.sql import functions as F
 
-    from epe_data_wrangling_spark.sources.tables import load_table
     from epe_data_wrangling_spark.streaming.ann_index import (
         ivfpq_index_foreach_batch,
         ivfpq_index_topk,
     )
 
-    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    work = tempfile.mkdtemp(prefix="ivfpq_index_")
-    landing = os.path.join(work, "landing")
-    target = os.path.join(work, "state")
-    ckpt = os.path.join(work, "ckpt")
-    os.makedirs(landing)
-    try:
-        _land_generations(
-            landing,
-            [e.filter(F.col("vec_id") % 3 == i) for i in range(3)],
-        )
-        stream = (
-            spark.readStream.schema("vec_id BIGINT, embedding ARRAY<FLOAT>")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(landing)
-        )
+    e = _embeddings(spark, sf_dir)
+
+    def run(stream, target, ckpt):
         ivfpq_index_foreach_batch(
             stream, target,
             k_cells=AIDX_CELLS, train_iters=AIDX_ITERS,
             pq_m=AIDXQ_M, pq_sub=AIDXQ_SUB, cbk=AIDXQ_CBK,
             checkpoint_dir=ckpt,
         )
-        queries = e.filter(F.col("vec_id") < AIDXQ_NQ).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").cast("array<double>").alias("qv"),
-        )
-        vectors = e.select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("v")
-        )
-        rows = ivfpq_index_topk(
-            spark, target, queries, vectors,
+        return ivfpq_index_topk(
+            spark, target, _ann_queries(e, AIDXQ_NQ), _ann_vectors(e),
             probe=AIDXQ_PROBE, cand=AIDXQ_CAND, k=AIDXQ_K,
-        ).collect()
-        return spark.createDataFrame(
-            rows,
-            "query_id BIGINT, neighbor_id BIGINT, rank INT, l2_dist DOUBLE",
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+    return _landed_stream_run(
+        spark, [e.filter(F.col("vec_id") % 3 == i) for i in range(3)], run
+    )
 
 
 def _upsert_change_batches(e):
@@ -3421,34 +2855,15 @@ def streaming_ann_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     serve scans ~probe/K of the corpus. Replay/duplicate/
     insert-over-present/delete-unknown/locator-drift witnesses and
     serve-plan pruning are pytest-pinned (tests/test_ann_index.py)."""
-    import os
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from epe_data_wrangling_spark.sources.tables import load_table
     from epe_data_wrangling_spark.streaming.ann_index import (
         ivf_index_changes_foreach_batch,
         ivf_index_topk,
         ivf_index_vacuum,
     )
 
-    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    work = tempfile.mkdtemp(prefix="ann_index_upsert_")
-    landing = os.path.join(work, "landing")
-    target = os.path.join(work, "state")
-    ckpt = os.path.join(work, "ckpt")
-    os.makedirs(landing)
-    try:
-        _land_generations(landing, _upsert_change_batches(e))
-        stream = (
-            spark.readStream.schema(
-                "op STRING, vec_id BIGINT, embedding ARRAY<FLOAT>"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(landing)
-        )
+    e = _embeddings(spark, sf_dir)
+
+    def run(stream, target, ckpt):
         ivf_index_changes_foreach_batch(
             stream, target,
             k_cells=AIDX_CELLS, train_iters=AIDX_ITERS, checkpoint_dir=ckpt,
@@ -3458,19 +2873,11 @@ def streaming_ann_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "ann_index_upsert: vacuum found nothing dead — the change "
                 "batch's deletes/upserts never tombstoned"
             )
-        queries = e.filter(F.col("vec_id") < AIDX_NQ).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").cast("array<double>").alias("qv"),
+        return ivf_index_topk(
+            spark, target, _ann_queries(e, AIDX_NQ), probe=AIDX_PROBE, k=AIDX_K
         )
-        rows = ivf_index_topk(
-            spark, target, queries, probe=AIDX_PROBE, k=AIDX_K
-        ).collect()
-        return spark.createDataFrame(
-            rows,
-            "query_id BIGINT, neighbor_id BIGINT, rank INT, l2_dist DOUBLE",
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+    return _landed_stream_run(spark, _upsert_change_batches(e), run)
 
 
 def _ivfpq_index_upsert_oracle() -> str:
@@ -3500,35 +2907,15 @@ def streaming_ivfpq_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     that tombstoned PQ maintenance + vacuum land exactly on
     recompute. Witnesses and serve-plan pruning shared with the raw
     CDC sink (one implementation) and pytest-pinned."""
-    import os
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from epe_data_wrangling_spark.sources.tables import load_table
     from epe_data_wrangling_spark.streaming.ann_index import (
         ivfpq_index_changes_foreach_batch,
         ivfpq_index_topk,
         ivfpq_index_vacuum,
     )
 
-    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    live = _live_corpus_df(e)
-    work = tempfile.mkdtemp(prefix="ivfpq_index_upsert_")
-    landing = os.path.join(work, "landing")
-    target = os.path.join(work, "state")
-    ckpt = os.path.join(work, "ckpt")
-    os.makedirs(landing)
-    try:
-        _land_generations(landing, _upsert_change_batches(e))
-        stream = (
-            spark.readStream.schema(
-                "op STRING, vec_id BIGINT, embedding ARRAY<FLOAT>"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(landing)
-        )
+    e = _embeddings(spark, sf_dir)
+
+    def run(stream, target, ckpt):
         ivfpq_index_changes_foreach_batch(
             stream, target,
             k_cells=AIDX_CELLS, train_iters=AIDX_ITERS,
@@ -3540,23 +2927,13 @@ def streaming_ivfpq_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "ivfpq_index_upsert: vacuum found nothing dead — the change "
                 "batch's deletes/upserts never tombstoned"
             )
-        queries = e.filter(F.col("vec_id") < AIDXQ_NQ).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").cast("array<double>").alias("qv"),
-        )
-        vectors = live.select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("v")
-        )
-        rows = ivfpq_index_topk(
-            spark, target, queries, vectors,
+        return ivfpq_index_topk(
+            spark, target, _ann_queries(e, AIDXQ_NQ),
+            _ann_vectors(_live_corpus_df(e)),
             probe=AIDXQ_PROBE, cand=AIDXQ_CAND, k=AIDXQ_K,
-        ).collect()
-        return spark.createDataFrame(
-            rows,
-            "query_id BIGINT, neighbor_id BIGINT, rank INT, l2_dist DOUBLE",
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+    return _landed_stream_run(spark, _upsert_change_batches(e), run)
 
 
 def _ann_index_retrain_oracle() -> str:
@@ -3578,34 +2955,15 @@ def _retrain_run(spark: SparkSession, sf_dir: str, init: str) -> DataFrame:
     """Shared body of the two retrain certifications: land the I/U/D
     change plan, retrain the standing index on its live corpus with
     the given seeding, serve from the NEW cells."""
-    import os
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from epe_data_wrangling_spark.sources.tables import load_table
     from epe_data_wrangling_spark.streaming.ann_index import (
         ivf_index_changes_foreach_batch,
         ivf_index_retrain,
         ivf_index_topk,
     )
 
-    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    work = tempfile.mkdtemp(prefix="ann_index_retrain_")
-    landing = os.path.join(work, "landing")
-    target = os.path.join(work, "state")
-    ckpt = os.path.join(work, "ckpt")
-    os.makedirs(landing)
-    try:
-        _land_generations(landing, _upsert_change_batches(e))
-        stream = (
-            spark.readStream.schema(
-                "op STRING, vec_id BIGINT, embedding ARRAY<FLOAT>"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(landing)
-        )
+    e = _embeddings(spark, sf_dir)
+
+    def run(stream, target, ckpt):
         ivf_index_changes_foreach_batch(
             stream, target,
             k_cells=AIDX_CELLS, train_iters=AIDX_ITERS, checkpoint_dir=ckpt,
@@ -3616,19 +2974,11 @@ def _retrain_run(spark: SparkSession, sf_dir: str, init: str) -> DataFrame:
         )
         if n <= 0:
             raise RuntimeError("ann_index_retrain: retrain re-assigned 0 rows")
-        queries = e.filter(F.col("vec_id") < AIDX_NQ).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").cast("array<double>").alias("qv"),
+        return ivf_index_topk(
+            spark, target, _ann_queries(e, AIDX_NQ), probe=AIDX_PROBE, k=AIDX_K
         )
-        rows = ivf_index_topk(
-            spark, target, queries, probe=AIDX_PROBE, k=AIDX_K
-        ).collect()
-        return spark.createDataFrame(
-            rows,
-            "query_id BIGINT, neighbor_id BIGINT, rank INT, l2_dist DOUBLE",
-        )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+    return _landed_stream_run(spark, _upsert_change_batches(e), run)
 
 
 @query("streaming_ann_index_retrain", oracle=_ann_index_retrain_oracle())
@@ -3741,63 +3091,33 @@ def _rebuild_run(spark: SparkSession, sf_dir: str, init: str) -> DataFrame:
     change plan, rebuild the PQ target from the system-of-record
     vectors table with the given coarse seeding, serve from the NEW
     cells with NEW ADC tables."""
-    import os
-    import shutil
-    import tempfile
-
-    from pyspark.sql import functions as F
-
-    from epe_data_wrangling_spark.sources.tables import load_table
     from epe_data_wrangling_spark.streaming.ann_index import (
         ivfpq_index_changes_foreach_batch,
         ivfpq_index_rebuild,
         ivfpq_index_topk,
     )
 
-    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    live = _live_corpus_df(e)
-    work = tempfile.mkdtemp(prefix="ivfpq_index_rebuild_")
-    landing = os.path.join(work, "landing")
-    target = os.path.join(work, "state")
-    ckpt = os.path.join(work, "ckpt")
-    os.makedirs(landing)
-    try:
-        _land_generations(landing, _upsert_change_batches(e))
-        stream = (
-            spark.readStream.schema(
-                "op STRING, vec_id BIGINT, embedding ARRAY<FLOAT>"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(landing)
-        )
+    e = _embeddings(spark, sf_dir)
+    vectors = _ann_vectors(_live_corpus_df(e))
+
+    def run(stream, target, ckpt):
         ivfpq_index_changes_foreach_batch(
             stream, target,
             k_cells=AIDX_CELLS, train_iters=AIDX_ITERS,
             pq_m=AIDXQ_M, pq_sub=AIDXQ_SUB, cbk=AIDXQ_CBK,
             checkpoint_dir=ckpt,
         )
-        vectors = live.select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("v")
-        )
         n = ivfpq_index_rebuild(spark, target, vectors, init=init)
         if n <= 0:
             raise RuntimeError(
                 "ivfpq_index_rebuild: rebuild re-encoded 0 rows"
             )
-        queries = e.filter(F.col("vec_id") < AIDXQ_NQ).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").cast("array<double>").alias("qv"),
-        )
-        rows = ivfpq_index_topk(
-            spark, target, queries, vectors,
+        return ivfpq_index_topk(
+            spark, target, _ann_queries(e, AIDXQ_NQ), vectors,
             probe=AIDXQ_PROBE, cand=AIDXQ_CAND, k=AIDXQ_K,
-        ).collect()
-        return spark.createDataFrame(
-            rows,
-            "query_id BIGINT, neighbor_id BIGINT, rank INT, l2_dist DOUBLE",
         )
-    finally:
-        shutil.rmtree(work, ignore_errors=True)
+
+    return _landed_stream_run(spark, _upsert_change_batches(e), run)
 
 
 def _ivfpq_index_rebuild_spread_oracle() -> str:
@@ -3934,10 +3254,9 @@ def _maintained_quality_report(
         staged_rank_weights,
     )
     from epe_data_wrangling_spark.functions import vectors as V
-    from epe_data_wrangling_spark.sources.tables import load_table
 
     dcg, rr, idcg = staged_rank_weights(k)
-    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    e = _embeddings(spark, sf_dir)
     qv = e.filter(F.col("vec_id") < nq).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").cast("array<double>").alias("q"),

@@ -40,12 +40,6 @@ def chunk_starts(col: Column | str, stride: int) -> Column:
     )
 
 
-def chunk_at(col: Column | str, start: Column, size: int) -> Column:
-    """The space-joined chunk of ``size`` words starting at 1-based
-    ``start`` (clamped at doc end — the final chunk may be short)."""
-    return F.concat_ws(" ", F.slice(words(col), start, size))
-
-
 def pii_counts(col: Column | str) -> dict[str, Column]:
     """Per-pattern match counts, ``{kind: count}``."""
     c = F.col(col) if isinstance(col, str) else col

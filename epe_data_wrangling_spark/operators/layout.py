@@ -8,16 +8,18 @@ columns' codes (the Z-order curve) gives useful min-max locality on
 ALL of them simultaneously — the standard layout for multi-dimension
 point lookups over immutable columnar data at scale (the same idea
 behind Delta/Iceberg OPTIMIZE ZORDER; re-expressed here with plain
-DataFrame expressions + repartitionByRange, no table format needed).
+DataFrame expressions, no table format needed). The z-value is a
+column expression (`zorder_key` over `_column_code` codes); the
+certified ``layout_zorder_skipping`` query builds its layouts from it.
 
-Scale shape: one tiny min/max aggregate (broadcast back), a narrow
-per-row code computation, and ONE range shuffle on the z-value —
-the same cost as any global sort-for-layout write.
+Scale shape: a narrow per-row code computation; the writer that
+clusters by the z-value pays one range shuffle, the same cost as any
+global sort-for-layout write.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 ZORDER_BITS = 16  #: bits per column code (16 → 65536 cells per dim)
@@ -42,33 +44,6 @@ def zorder_key(codes: list[Column], bits: int = ZORDER_BITS) -> Column:
             bit = F.shiftright(c, b).bitwiseAND(F.lit(1))
             z = F.shiftleft(z, 1).bitwiseOR(bit)
     return z
-
-
-def zorder_frame(
-    df: DataFrame, cols: list[str], n_ranges: int, bits: int = ZORDER_BITS
-) -> DataFrame:
-    """Cluster ``df`` along the Z-order curve of ``cols`` (numeric):
-    returns the frame range-partitioned into ``n_ranges`` splits of
-    the Morton index, ready for a partition-per-file columnar write
-    whose per-file min-max stats are narrow in EVERY listed column.
-
-    The min/max aggregate is one broadcast row; the only data
-    movement is the final range exchange (sampling + shuffle), which
-    any layout-producing write pays."""
-    aggs = []
-    for c in cols:
-        aggs += [F.min(c).alias(f"_mn_{c}"), F.max(c).alias(f"_mx_{c}")]
-    bounds = df.agg(*aggs)
-    with_bounds = df.crossJoin(F.broadcast(bounds))
-    codes = [
-        _column_code(c, F.col(f"_mn_{c}"), F.col(f"_mx_{c}"), bits) for c in cols
-    ]
-    keyed = with_bounds.withColumn("_z", zorder_key(codes, bits))
-    return (
-        keyed.repartitionByRange(n_ranges, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z", *[f"_mn_{c}" for c in cols], *[f"_mx_{c}" for c in cols])
-    )
 
 
 def compact_small_files(

@@ -18,6 +18,9 @@ Scale posture (local[32] test box → 1000-executor cluster):
   on a real cluster you'd set it to ~2-3× total executor cores and
   let AQE coalesce down.
 - Arrow enabled for any pandas interchange (ingest, mapInPandas).
+- The package's parent dir is on the Python workers' path
+  (``spark.executorEnv.PYTHONPATH``), so a UDF or Python parse that
+  imports the package runs whatever the driver's working directory.
 """
 
 from __future__ import annotations
@@ -58,6 +61,10 @@ def get_spark(
     confs = dict(DEFAULT_CONFS)
     confs["spark.sql.shuffle.partitions"] = str(shuffle_partitions or 2 * cpus)
     confs.setdefault("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
+    # the dir that holds the package, for the Python workers' imports
+    confs["spark.executorEnv.PYTHONPATH"] = os.path.dirname(
+        os.path.dirname(os.path.abspath(__file__))
+    )
     if extra_conf:
         confs.update(extra_conf)
     for k, v in confs.items():

@@ -2,32 +2,17 @@
 
 The reference ends in ``saveRDS`` (`tratamento_epe.R:290`) and
 narrates CSV/Excel/fwrite alternatives (`tratamento_epe.rmd:359`).
-The scale-correct analogues: partitioned columnar parquet as the
-primary sink (splittable, predicate-pruned on read), CSV/JSON as
-interchange formats. Excel is driver-side only (`toPandas`), gated
-to small results — it exists for parity with the reference's
-narrated options, not for scale.
+The scale-correct primary sink is month-partitioned parquet
+(``plans.epe_pipeline.write_fact``: splittable, partition-pruned on
+read), written with plain ``df.write``; this module holds the
+interchange formats, CSV and JSON. Excel is driver-side only
+(`toPandas`), gated to small results — it exists for parity with the
+reference's narrated options, not for scale.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-
-
-def write_parquet(
-    df: DataFrame,
-    path: str,
-    *,
-    partition_by: tuple[str, ...] = (),
-    mode: str = "overwrite",
-) -> None:
-    """Primary sink (S5). Partition columns become directory keys —
-    the read-side pruning contract (e.g. the EPE fact table by month:
-    a dashboard month-filter touches one directory of 100 TB)."""
-    w = df.write.mode(mode)
-    if partition_by:
-        w = w.partitionBy(*partition_by)
-    w.parquet(path)
 
 
 def write_csv(df: DataFrame, path: str, *, header: bool = True, mode: str = "overwrite") -> None:
@@ -53,11 +38,3 @@ def write_excel_small(df: DataFrame, path: str, *, max_rows: int = 100_000) -> N
     if len(pdf) > max_rows:
         raise ValueError(f"refusing Excel export of >{max_rows} rows")
     pdf.to_excel(path, index=False)
-
-
-def write_orc(df: DataFrame, path: str, *, mode: str = "overwrite") -> None:
-    """ORC columnar sink (S5/S6 family) — Spark-native alternative to
-    parquet where the surrounding stack (Hive/Presto ORC warehouses)
-    prefers it; same splittable, predicate-pushdown-capable scan
-    properties."""
-    df.write.mode(mode).orc(path)

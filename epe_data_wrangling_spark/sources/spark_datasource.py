@@ -92,7 +92,14 @@ def workbook_files(reader, path: str) -> DataFrame:
     batch load that finds no workbook; an empty landing zone is a
     normal stream state. A file listed but gone before its task reads
     it fails the query (Spark's ``ignoreMissingFiles`` is off by
-    default)."""
+    default).
+
+    Landing contract for a stream: land each drop WHOLE — write it
+    beside the zone (or under a ``_``/``.`` name) and then rename it
+    in. A drop listed while still being written is marked seen and
+    may be read half-written or, at 0 bytes, not at all (Spark's scan
+    skips empty files); the stream never reads it again once it is
+    complete."""
     try:
         files = (
             reader.format("binaryFile")

@@ -29,7 +29,6 @@ Spark contract implemented here:
 
 from __future__ import annotations
 
-import io
 import urllib.request
 from collections.abc import Sequence
 
@@ -86,34 +85,21 @@ def read_workbook_grids(path: str | bytes) -> dict[str, Grid]:
     stream source already read (``streaming.epe_monthly``), and they
     parse to the same grids as the file they came from.
 
-    Engines, in order: pandas' ExcelFile if an Excel engine (openpyxl
-    / xlrd / calamine) is installed; else the stdlib readers — OOXML
-    (``sources.xlsx``) or legacy BIFF8 (``sources.xls_biff``), chosen
-    by the file's MAGIC BYTES, not its extension (the reference's
-    real artifact is a ``.xls`` — `tratamento_epe.R:39,63`). This
-    container ships no Excel engine, so the stdlib paths are the ones
-    actually exercised end-to-end by ``tests/test_epe_pipeline.py``
-    and ``tests/test_xls_ingest.py``."""
-    import pandas as pd  # local import: optional dependency surface
+    One engine, chosen by the file's MAGIC BYTES, not its extension
+    (the reference's real artifact is a ``.xls`` —
+    `tratamento_epe.R:39,63`): the stdlib readers for legacy BIFF8
+    (``sources.xls_biff``) and OOXML (``sources.xlsx``). No Excel
+    library is needed, so the parse is the same wherever it runs.
+    ``tests/test_epe_pipeline.py`` and ``tests/test_xls_ingest.py``
+    exercise both end-to-end."""
+    from epe_data_wrangling_spark.sources.xls_biff import CFB_MAGIC, read_xls_grids
+    from epe_data_wrangling_spark.sources.xlsx import read_xlsx_grids
 
-    try:
-        xl = pd.ExcelFile(path if isinstance(path, str) else io.BytesIO(path))
-    except ImportError:
-        from epe_data_wrangling_spark.sources.xls_biff import CFB_MAGIC, read_xls_grids
-        from epe_data_wrangling_spark.sources.xlsx import read_xlsx_grids
-
-        if isinstance(path, str):
-            with open(path, "rb") as f:
-                magic = f.read(8)
-        else:
-            magic = path[:8]
-        if magic == CFB_MAGIC:
-            return read_xls_grids(path)
-        return read_xlsx_grids(path)
-    grids: dict[str, Grid] = {}
-    for sheet in xl.sheet_names:
-        pdf = xl.parse(sheet, header=None, dtype=str)
-        grids[sheet] = [
-            [None if pd.isna(v) else str(v) for v in row] for row in pdf.itertuples(index=False)
-        ]
-    return grids
+    if isinstance(path, str):
+        with open(path, "rb") as f:
+            magic = f.read(8)
+    else:
+        magic = path[:8]
+    if magic == CFB_MAGIC:
+        return read_xls_grids(path)
+    return read_xlsx_grids(path)

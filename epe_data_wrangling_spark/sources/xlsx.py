@@ -1,9 +1,10 @@
 """Stdlib-only ``.xlsx`` (ECMA-376 OOXML spreadsheet) reader/writer.
 
 The reference ingests a real Excel workbook (`tratamento_epe.R:39-47,
-57,63`); this container ships NO Excel engine (no openpyxl/xlrd/
-calamine), so ``sources.workbook.read_workbook_grids`` falls back to
-this module for ``.xlsx``: a ``.xlsx`` file is a ZIP of XML parts, and
+57,63`); ``sources.workbook.read_workbook_grids`` parses every
+``.xlsx`` with this module (and every ``.xls`` with
+``sources.xls_biff``), no Excel library needed: a ``.xlsx`` file is a
+ZIP of XML parts, and
 the subset a grid ingest needs — sheet order/names from
 ``xl/workbook.xml``, relationship targets from
 ``xl/_rels/workbook.xml.rels``, the shared-string table, and each

@@ -104,7 +104,9 @@ def epe_monthly_refresh(
     A drop is what ``sources.spark_datasource.workbook_files`` counts
     as a workbook: a top-level file of ``drops_dir`` whose name ends in
     ``.xls`` or ``.xlsx`` in any letter case and does not start with
-    ``.`` or ``_``."""
+    ``.`` or ``_``. Land each drop whole: write it beside the zone and
+    then rename it in. A drop listed while it is still being written
+    (a 0-byte file above all) is marked seen and never read again."""
     from epe_data_wrangling_spark.plans.epe_pipeline import run_pipeline
     from epe_data_wrangling_spark.sources import workbook
     from epe_data_wrangling_spark.sources.spark_datasource import workbook_files

@@ -252,7 +252,9 @@ def run_to_memory(
     either way. The set/restore mutates the SHARED session conf:
     safe for the sequential harness/driver, but callers running
     queries concurrently on one session should pass None and size
-    the session conf themselves."""
+    the session conf themselves. The run's checkpoint is a temporary
+    dir, removed once the query has stopped (the memory sink holds the
+    result)."""
     spark = result.sparkSession
     checkpoint = tempfile.mkdtemp(prefix=f"ckpt_{name}_")
     prev = spark.conf.get("spark.sql.shuffle.partitions")
@@ -281,6 +283,7 @@ def run_to_memory(
         # planning reads the conf asynchronously after start()
         if state_partitions is not None:
             spark.conf.set("spark.sql.shuffle.partitions", prev)
+        shutil.rmtree(checkpoint, ignore_errors=True)
     return result.sparkSession.table(name)
 
 
@@ -809,20 +812,27 @@ def _commit_target(stage: str, target_dir: str, batch_id: int, meta: dict) -> No
 
 
 def _run_foreach_batch(stream, apply_fn, checkpoint_dir, tag: str, timeout_sec: int) -> None:
-    """Drive a foreachBatch sink to completion under availableNow."""
+    """Drive a foreachBatch sink to completion under availableNow.
+    Without a ``checkpoint_dir`` the run checkpoints into a temporary
+    dir that is removed afterwards: its path is never handed out, so
+    nothing could resume from it."""
     checkpoint = checkpoint_dir or tempfile.mkdtemp(prefix=f"ckpt_{tag}_")
-    q = (
-        stream.writeStream.foreachBatch(apply_fn)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
     try:
-        finished = q.awaitTermination(timeout_sec)
-        if not finished:
-            raise TimeoutError(f"{tag} stream still running after {timeout_sec}s")
+        q = (
+            stream.writeStream.foreachBatch(apply_fn)
+            .option("checkpointLocation", checkpoint)
+            .trigger(availableNow=True)
+            .start()
+        )
+        try:
+            finished = q.awaitTermination(timeout_sec)
+            if not finished:
+                raise TimeoutError(f"{tag} stream still running after {timeout_sec}s")
+        finally:
+            q.stop()
     finally:
-        q.stop()
+        if checkpoint_dir is None:
+            shutil.rmtree(checkpoint, ignore_errors=True)
 
 
 def _exactly_once_sink(

@@ -43,14 +43,20 @@ def land_single_file(df: DataFrame, landing: str, name: str, order: int) -> None
     discovery order equals generation order). The before/after glob
     diff + rename + utime sequence is subtle enough to exist exactly
     once: fixture-side landers (`catalog.streaming_q._land_generations`,
-    tools/supp, tests) all call this."""
+    tools/supp, tests) all call this. ``maxRecordsPerFile`` is switched
+    off for the write, so a session-wide cap cannot split the file."""
     import glob as globmod
 
     os.makedirs(landing, exist_ok=True)
     before = set(globmod.glob(os.path.join(landing, "*.parquet")))
-    df.coalesce(1).write.mode("append").parquet(landing)
+    df.coalesce(1).write.mode("append").option("maxRecordsPerFile", 0).parquet(
+        landing
+    )
     new = set(globmod.glob(os.path.join(landing, "*.parquet"))) - before
-    assert len(new) == 1
+    if len(new) != 1:
+        raise RuntimeError(
+            f"landing {name!r} wrote {len(new)} files into {landing}, not one"
+        )
     path = os.path.join(landing, name)
     os.rename(new.pop(), path)
     t = os.path.getmtime(path)

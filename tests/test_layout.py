@@ -1,87 +1,13 @@
-"""Z-order layout: the written files' min-max stats must be narrow in
-BOTH clustered columns (that's the entire point — multi-column data
-skipping), measurably narrower than an unclustered write."""
+"""Layout maintenance: small-file compaction must keep the table's
+content while cutting its file count."""
 
 from __future__ import annotations
 
 import glob
 
-import pyarrow.parquet as pq
-from pyspark.sql import functions as F
-
-from epe_data_wrangling_spark.operators.layout import zorder_frame
 from epe_data_wrangling_spark.sources.tables import load_table
 
 SF_DIR = "/root/testdata/sf0.01"
-
-
-def _mean_file_span(path: str, col: str) -> float:
-    """Average per-file (max-min)/domain width of ``col`` across the
-    parquet files under ``path`` — 1.0 means every file spans the
-    whole domain (no skipping possible), small means good pruning."""
-    files = sorted(glob.glob(f"{path}/*.parquet"))
-    spans, lo, hi = [], None, None
-    per_file = []
-    for f in files:
-        md = pq.ParquetFile(f).metadata
-        fmn = min(
-            md.row_group(i).column(_col_idx(md, col)).statistics.min
-            for i in range(md.num_row_groups)
-        )
-        fmx = max(
-            md.row_group(i).column(_col_idx(md, col)).statistics.max
-            for i in range(md.num_row_groups)
-        )
-        per_file.append((fmn, fmx))
-        lo = fmn if lo is None else min(lo, fmn)
-        hi = fmx if hi is None else max(hi, fmx)
-    domain = (hi - lo) or 1
-    spans = [(fmx - fmn) / domain for fmn, fmx in per_file]
-    return sum(spans) / len(spans)
-
-
-def _col_idx(md, col: str) -> int:
-    names = [md.schema.column(i).name for i in range(md.num_columns)]
-    return names.index(col)
-
-
-def test_zorder_narrows_minmax_on_both_columns(spark, tmp_path):
-    li = load_table(spark, SF_DIR, "lineitem").select(
-        "l_partkey", "l_suppkey", "l_quantity"
-    )
-
-    plain_dir = str(tmp_path / "plain")
-    z_dir = str(tmp_path / "zorder")
-    # 16 range splits = 4 leading Morton bits = 2 bits per dimension:
-    # each file should cover ~1/4 of BOTH domains (plus boundary
-    # straddle); 8 splits would leave the second dimension only one
-    # effective bit (~1/2 spans)
-    li.repartition(16).write.mode("overwrite").parquet(plain_dir)
-    zorder_frame(li, ["l_partkey", "l_suppkey"], 16).write.mode("overwrite").parquet(
-        z_dir
-    )
-
-    for col in ("l_partkey", "l_suppkey"):
-        plain_span = _mean_file_span(plain_dir, col)
-        z_span = _mean_file_span(z_dir, col)
-        # round-robin files span ~the full domain; z-ordered files must
-        # be materially narrower in BOTH dimensions at once
-        assert plain_span > 0.9, f"{col}: plain layout unexpectedly clustered"
-        assert z_span < 0.5, f"{col}: z-order span {z_span:.2f} too wide"
-        assert z_span < plain_span / 2
-
-
-def test_zorder_preserves_rows(spark):
-    li = load_table(spark, SF_DIR, "lineitem").select(
-        "l_partkey", "l_suppkey", "l_quantity"
-    )
-    z = zorder_frame(li, ["l_partkey", "l_suppkey"], 8)
-    assert z.count() == li.count()
-    assert z.columns == ["l_partkey", "l_suppkey", "l_quantity"]
-    # layout must not alter content: same multiset of keys
-    a = li.groupBy("l_partkey").count()
-    b = z.groupBy("l_partkey").count()
-    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
 def test_small_file_compaction_preserves_content(spark, tmp_path):

@@ -13,24 +13,6 @@ from epe_data_wrangling_spark.sources.tables import load_table
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def test_partitioned_parquet_roundtrip_and_pruning(spark, tmp_path):
-    out = str(tmp_path / "fact")
-    nation = load_table(spark, SF_DIR, "nation")
-    sinks.write_parquet(nation, out, partition_by=("n_regionkey",))
-
-    back = spark.read.parquet(out)
-    assert back.count() == nation.count()
-    assert sorted(back.columns) == sorted(nation.columns)
-
-    # partition pruning: a filter on the partition key only plans the
-    # matching directories — visible as partition filters in the scan
-    pruned = back.filter(F.col("n_regionkey") == 1)
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "n_regionkey" in plan
-    expect = nation.filter(F.col("n_regionkey") == 1).count()
-    assert pruned.count() == expect
-
-
 def test_csv_roundtrip(spark, tmp_path):
     out = str(tmp_path / "csv")
     region = load_table(spark, SF_DIR, "region").select("r_regionkey", "r_name")
@@ -74,42 +56,6 @@ def test_epe_fact_month_partitioned_write(spark, tmp_path):
     plan = one_month._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters" in plan and "data" in plan.split("PartitionFilters")[1][:120]
     assert one_month.count() == fact.filter(F.col("data") == "2004-01-01").count()
-
-
-def test_orc_roundtrip_with_pushdown(spark, tmp_path):
-    from epe_data_wrangling_spark.sources.sinks import write_orc
-
-    o = load_table(spark, SF_DIR, "orders").select(
-        "o_orderkey", "o_orderpriority", "o_totalprice"
-    )
-    out = str(tmp_path / "orders_orc")
-    write_orc(o, out)
-    back = spark.read.orc(out)
-    assert back.count() == o.count()
-    assert set(back.columns) == set(o.columns)
-    # ORC scans take pushed filters like parquet ones
-    q = back.filter(F.col("o_totalprice") > 100000.0).select("o_orderkey")
-    plan = q._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters" in plan and "o_totalprice" in plan.split("PushedFilters")[1][:200]
-
-
-def test_parquet_schema_evolution_merge(spark, tmp_path):
-    """Appended batches with a widened schema read back as one table
-    under mergeSchema: old rows carry nulls in the new column — the
-    landing-zone evolution contract (a 100 TB corpus is never
-    rewritten when a field is added)."""
-    out = str(tmp_path / "evolving")
-    o = load_table(spark, SF_DIR, "orders")
-    o.select("o_orderkey", "o_totalprice").write.parquet(out, mode="append")
-    o.select("o_orderkey", "o_totalprice", "o_orderpriority").write.parquet(
-        out, mode="append"
-    )
-    back = spark.read.option("mergeSchema", "true").parquet(out)
-    assert set(back.columns) == {"o_orderkey", "o_totalprice", "o_orderpriority"}
-    n = o.count()
-    assert back.count() == 2 * n
-    # exactly the first batch's rows lack the late column
-    assert back.filter(F.col("o_orderpriority").isNull()).count() == n
 
 
 def test_csv_malformed_rows_permissive(spark, tmp_path):

@@ -380,3 +380,39 @@ def test_workbook_writer_null_cells_round_trip(spark, tmp_path):
         ["a", None, None],
         ["c", "d", None],
     ]
+
+
+def test_workbook_cells_runs_outside_the_repo_root(tmp_path):
+    """The Python workers find the package whatever the driver's
+    working directory: a fresh process started in ``tmp_path``, with
+    only its own ``sys.path`` pointing at the package, parses a
+    one-sheet workbook through `workbook_cells` (the parse runs in
+    the workers, which do not inherit the driver's ``sys.path``)."""
+    import subprocess
+    import sys
+
+    import epe_data_wrangling_spark
+
+    root = os.path.dirname(os.path.dirname(epe_data_wrangling_spark.__file__))
+    drop = tmp_path / "drop"
+    drop.mkdir()
+    write_xlsx(str(drop / "one.xlsx"), {"S1": [["a", "1"], ["b", None]]})
+    script = f"""
+import sys
+sys.path.insert(0, {root!r})
+from epe_data_wrangling_spark.session import get_spark
+from epe_data_wrangling_spark.sources.spark_datasource import (
+    workbook_cells, workbook_files,
+)
+spark = get_spark(app_name="cwd_probe", master="local[1]", shuffle_partitions=1)
+cells = workbook_cells(workbook_files(spark.read, {str(drop)!r}))
+print("cells", sorted(r.value for r in cells.collect() if r.value is not None))
+spark.stop()
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    done = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert done.returncode == 0, done.stderr[-3000:]
+    assert "cells ['1', 'a', 'b']" in done.stdout, done.stdout

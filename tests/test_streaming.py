@@ -17,12 +17,26 @@ def _rows(df):
     return sorted(map(tuple, df.collect()))
 
 
-def test_tumbling_stream_matches_batch(spark):
+def _temp_root(monkeypatch, tmp_path):
+    """Point ``tempfile``'s default dir at a fresh dir, so a test can
+    see what a run leaves behind in it."""
+    import tempfile
+
+    root = tmp_path / "tmp"
+    root.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(root))
+    return root
+
+
+def test_tumbling_stream_matches_batch(spark, monkeypatch, tmp_path):
+    tmp = _temp_root(monkeypatch, tmp_path)
     batch = ops.tumbling_counts(load_table(spark, SF_DIR, "events"))
     stream = ops.run_to_memory(
         ops.tumbling_counts(stream_events(spark, SF_DIR)), "t_tumbling"
     )
     assert _rows(stream) == _rows(batch)
+    # the run's own checkpoint is gone once the result is in memory
+    assert not list(tmp.glob("ckpt_*"))
 
 
 def test_session_stream_matches_batch(spark):
@@ -434,16 +448,18 @@ def test_tws_gated_api_surface_exists_in_installed_spark():
     )
 
 
-def test_foreach_batch_ivm_matches_full_recompute(spark, tmp_path):
+def test_foreach_batch_ivm_matches_full_recompute(spark, tmp_path, monkeypatch):
     """Multi-batch additive IVM must equal the direct aggregate over
     the whole table, and the maintained state must be groups-sized
     (one partial-state row per group — the structural evidence the
-    sink merges states instead of re-aggregating rows)."""
+    sink merges states instead of re-aggregating rows). Run without a
+    ``checkpoint_dir``, the sink leaves no temporary checkpoint."""
     from pyspark.sql import functions as F
 
     from epe_data_wrangling_spark.sources.tables import load_table
     from epe_data_wrangling_spark.streaming.ops import ivm_agg_foreach_batch
 
+    tmp = _temp_root(monkeypatch, tmp_path)
     o = load_table(spark, SF_DIR, "orders").select("o_orderpriority", "o_totalprice")
     src = tmp_path / "landing"
     o.repartition(3).write.parquet(str(src))
@@ -467,6 +483,7 @@ def test_foreach_batch_ivm_matches_full_recompute(spark, tmp_path):
     expect = {r["o_orderpriority"]: (r["n"], r["s"]) for r in partial(o).collect()}
     assert got == expect
     assert len(got) == o.select("o_orderpriority").distinct().count()
+    assert not list(tmp.glob("ckpt_*"))
 
 
 def test_foreach_batch_ivm_replay_does_not_double_count(spark, tmp_path):
@@ -3883,7 +3900,9 @@ def test_land_generations_one_file_per_generation(spark, tmp_path):
     the single-file fallback), the same schema and rows the per-
     generation `land_single_file` produces, and strictly increasing
     mtimes in generation order — the discovery-order contract the
-    snapshot sinks depend on."""
+    snapshot sinks depend on. The second case sets the session's
+    ``maxRecordsPerFile`` to 1, which must not split a generation,
+    and no ``_land-*`` tmp dir may be left beside the landing."""
     import os
 
     from epe_data_wrangling_spark.catalog.streaming_q import _land_generations
@@ -3893,16 +3912,28 @@ def test_land_generations_one_file_per_generation(spark, tmp_path):
         return spark.createDataFrame(rows, "k BIGINT, v STRING")
 
     gens = [gen([(1, "a"), (2, "b")]), gen([]), gen([(3, None), (4, "d")])]
-    landing, ref = str(tmp_path / "landing"), str(tmp_path / "ref")
-    _land_generations(landing, gens)
-    for i, g in enumerate(gens, start=1):
-        land_single_file(g, ref, f"g{i}.parquet", i)
     names = [f"g{i}.parquet" for i in range(1, len(gens) + 1)]
-    assert sorted(f for f in os.listdir(landing) if f.endswith(".parquet")) == names
-    for n in names:
-        got = spark.read.parquet(os.path.join(landing, n))
-        want = spark.read.parquet(os.path.join(ref, n))
-        assert got.schema == want.schema
-        assert _rows(got) == _rows(want)
-    mtimes = [os.path.getmtime(os.path.join(landing, n)) for n in names]
-    assert all(a < b for a, b in zip(mtimes, mtimes[1:])), mtimes
+    conf = "spark.sql.files.maxRecordsPerFile"
+    prev = spark.conf.get(conf)
+    for case, max_records in (("default", prev), ("capped", "1")):
+        root = tmp_path / case
+        landing, ref = str(root / "landing"), str(root / "ref")
+        spark.conf.set(conf, max_records)
+        try:
+            schema = _land_generations(landing, gens)
+            for i, g in enumerate(gens, start=1):
+                land_single_file(g, ref, f"g{i}.parquet", i)
+        finally:
+            spark.conf.set(conf, prev)
+        assert sorted(os.listdir(root)) == ["landing", "ref"], case
+        assert sorted(
+            f for f in os.listdir(landing) if f.endswith(".parquet")
+        ) == names, case
+        for n in names:
+            got = spark.read.parquet(os.path.join(landing, n))
+            want = spark.read.parquet(os.path.join(ref, n))
+            assert got.schema == want.schema
+            assert _rows(got) == _rows(want)
+        assert [f.name for f in schema.fields] == ["k", "v"]
+        mtimes = [os.path.getmtime(os.path.join(landing, n)) for n in names]
+        assert all(a < b for a, b in zip(mtimes, mtimes[1:])), mtimes

@@ -8,6 +8,12 @@ unknown; this is intentionally strict (string-exact after canonical
 formatting) so anything passing here should pass any reasonable
 driver comparison.
 
+Each ``ok``/``okro`` line also reports ``jobs=N``: the Spark jobs the
+query's run submitted (its plan, sinks and the final collect), read
+from the status store as the change in the newest job id. Job groups
+would miss a stream's micro-batch jobs, which run under the stream's
+own group.
+
 Usage: python tools/verify_local.py [--window] [sf_dir] [query ...]
   --window  also include the driver's 50-query certification window
             (catalog.PRIORITY_ORDER) in the selection
@@ -17,6 +23,7 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 import sys
 import time
 from datetime import date, datetime
@@ -24,7 +31,7 @@ from decimal import Decimal
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from epe_data_wrangling_spark.catalog import all_queries, resolve_oracle  # noqa: E402
 from epe_data_wrangling_spark.session import get_spark  # noqa: E402
@@ -64,12 +71,20 @@ def table_digest(cols: list[str], rows: list[tuple]) -> tuple[int, list[str], st
     return len(rows), sorted(cols), h
 
 
+def newest_job_id(spark) -> int:
+    """Id of the newest job in the status store (-1 before any), once
+    the listener bus has delivered every event posted so far."""
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()
+    jobs = sc.statusStore().jobsList(None)
+    return jobs.apply(0).jobId() if jobs.size() else -1
+
+
 def main() -> int:
     args = sys.argv[1:]
     window_only = "--window" in args
     if window_only:
         args.remove("--window")
-    import os
 
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     if args and not os.path.isdir(sf_dir):
@@ -103,6 +118,7 @@ def main() -> int:
         if only and name not in only:
             continue
         t0 = time.time()
+        job0 = newest_job_id(spark)
         try:
             sdf = q.fn(spark, sf_dir)
             dec_cols = [f.name for f in sdf.schema.fields
@@ -113,12 +129,13 @@ def main() -> int:
             srows = sdf.collect()
             scols = sdf.columns
             s_digest = table_digest(scols, [tuple(r) for r in srows])
+            jobs = newest_job_id(spark) - job0
         except Exception as e:
             failures.append(name)
             print(f"FAIL {name}: spark error: {type(e).__name__}: {e}")
             continue
         if q.oracle is None:
-            print(f"okro {name}: rows={s_digest[0]} (rows-only, no oracle) [{time.time()-t0:.1f}s]")
+            print(f"okro {name}: rows={s_digest[0]} jobs={jobs} (rows-only, no oracle) [{time.time()-t0:.1f}s]")
             if s_digest[0] == 0:
                 print(f"  WARN {name}: zero rows")
             continue
@@ -132,7 +149,7 @@ def main() -> int:
             print(f"FAIL {name}: duckdb error: {type(e).__name__}: {e}")
             continue
         if s_digest == o_digest:
-            print(f"ok   {name}: rows={s_digest[0]} hash={s_digest[2]} [{time.time()-t0:.1f}s]")
+            print(f"ok   {name}: rows={s_digest[0]} hash={s_digest[2]} jobs={jobs} [{time.time()-t0:.1f}s]")
             if s_digest[0] == 0:
                 print(f"  WARN {name}: zero rows")
         else:
