@@ -2339,36 +2339,40 @@ def _spread_init_ctes(k: int, sample_cap: int = SPREAD_SAMPLE_CAP) -> str:
     via LEAST exactly as Spark's flat F.least (min is exact, so flat
     vs chained agree bit-for-bit). Ends at ``c0l`` (cid = pick order,
     c) — a drop-in replacement for the lowest-id init block in
-    `_gen1_coarse_ctes(init_ctes=...)`."""
+    `_gen1_coarse_ctes(init_ctes=...)`. Every step is ``AS
+    MATERIALIZED``: each fs(i)/fm(i) reads the one before it, and an
+    inlined chain is re-expanded at every reference (DuckDB 1.0 spent
+    ~190 s of the spread-rebuild oracle there); materialized, each
+    step runs once. Rows are unchanged."""
     steps = [
-        "tvs AS (SELECT vec_id, v, vv FROM tv\n"
+        "tvs AS MATERIALIZED (SELECT vec_id, v, vv FROM tv\n"
         f"        ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id"
         f" LIMIT {sample_cap})",
-        "fs0 AS (SELECT vec_id, v, vv FROM tvs ORDER BY vec_id LIMIT 1)",
+        "fs0 AS MATERIALIZED (SELECT vec_id, v, vv FROM tvs ORDER BY vec_id LIMIT 1)",
     ]
     for i in range(1, k):
         if i == 1:
             steps.append(
-                "fm1 AS (SELECT t.vec_id, t.v, t.vv,\n"
+                "fm1 AS MATERIALIZED (SELECT t.vec_id, t.v, t.vv,\n"
                 "        (t.vv - 2 * list_dot_product(t.v, s.v)) + s.vv AS d\n"
                 "        FROM tvs t, fs0 s)"
             )
         else:
             steps.append(
-                f"fm{i} AS (SELECT m.vec_id, m.v, m.vv,\n"
+                f"fm{i} AS MATERIALIZED (SELECT m.vec_id, m.v, m.vv,\n"
                 f"        LEAST(m.d, (m.vv - 2 * list_dot_product(m.v, s.v))"
                 f" + s.vv) AS d\n"
                 f"        FROM fm{i - 1} m, fs{i - 1} s)"
             )
         steps.append(
-            f"fs{i} AS (SELECT vec_id, v, vv FROM fm{i}\n"
+            f"fs{i} AS MATERIALIZED (SELECT vec_id, v, vv FROM fm{i}\n"
             f"        ORDER BY d DESC, vec_id LIMIT 1)"
         )
     union = "\n        UNION ALL ".join(
         f"SELECT CAST({i} AS BIGINT) AS cid, v AS c FROM fs{i}"
         for i in range(k)
     )
-    steps.append(f"c0l AS ({union})")
+    steps.append(f"c0l AS MATERIALIZED ({union})")
     return ",\n    ".join(steps)
 
 

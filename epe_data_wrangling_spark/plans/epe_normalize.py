@@ -31,15 +31,15 @@ import re
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from epe_data_wrangling_spark.functions.cleaning import (
+    as_numeric,
     make_month_date,
     regexp_extract_na,
+    sql_lit,
     str_to_title,
     typed_null,
 )
-from epe_data_wrangling_spark.operators.windows import locf
 from epe_data_wrangling_spark.sources import workbook
 from epe_data_wrangling_spark.sources.workbook import Grid, readxl_names
 
@@ -47,6 +47,13 @@ PLACEHOLDER_RE = re.compile(r"^\.\.\.[0-9]+$")
 SECTION_PATTERN = "REGIÃO GEOGRÁFICA|SUBSISTEMA ELÉTRICO|SUBSISTEMA"
 YEAR_PATTERN = r"^[0-9]{4}(|\*)$"
 MONTHS = [str(m) for m in range(1, 13)]
+
+#: ``operators.windows.locf`` as SQL text: the last non-NULL value so
+#: far down the sheet (partition = sheet, order = physical row).
+_LOCF = (
+    "last({}, true) OVER (PARTITION BY atributo_1 ORDER BY _row_idx"
+    " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
+)
 
 _STR = pa.string()
 _TAGS = [pa.field("atributo_1", _STR), pa.field("atributo_2", _STR)]
@@ -69,8 +76,9 @@ def _melt(ids: list[str], cols: list[str], var: str) -> list[str]:
     plus ONE ``stack`` of (column number, ``as_numeric``(cell)) pairs.
     SQL text reaches the JVM in one call, where a Column built per cell
     column costs ~35 py4j round-trips on PySpark 4.1 (~1.7k for a
-    3-year workbook). A blank cell stays a NULL-valor row."""
-    pairs = ", ".join(f"{c}, try_cast(`{c}` AS DOUBLE)" for c in cols)
+    3-year workbook); every step of both shapes is built the same way.
+    A blank cell stays a NULL-valor row."""
+    pairs = ", ".join(f"{c}, {as_numeric(f'`{c}`')}" for c in cols)
     return [*ids, f"stack({len(cols)}, {pairs}) AS ({var}, valor)"]
 
 
@@ -100,25 +108,29 @@ def normalize_shape_a(spark: SparkSession, sheets: dict[str, Grid]) -> DataFrame
         + [pa.field(m, _STR) for m in MONTHS]
     )
     t = workbook.grid_to_df(spark, stacked, schema)
-    by_sheet = dict(partition_by=["atributo_1"], order_by=["_row_idx"])
+    month_cols = [f"`{m}`" for m in MONTHS]
 
     # W1 (`R:98-100`): 4-digit (optionally starred) year cell, digits
     # only, NA on miss (str_extract semantics), filled down the sheet;
     # section marker from column 1 + canonicalization (`R:102-104`).
     year = regexp_extract_na(regexp_extract_na("ano", YEAR_PATTERN), "[0-9]+")
     sec = regexp_extract_na("atributo_4", SECTION_PATTERN)
-    t = t.select(
-        "atributo_1", "atributo_2", "_row_idx", "atributo_4", *MONTHS,
-        locf(year, **by_sheet).alias("ano"),
-        F.when(sec.rlike("SUBSISTEMA"), "SUBSISTEMA ELÉTRICO").otherwise(sec).alias("atributo_3"),
+    t = t.selectExpr(
+        "atributo_1", "atributo_2", "_row_idx", "atributo_4", *month_cols,
+        f"{_LOCF.format(year)} AS ano",
+        f"CASE WHEN {sec} RLIKE {sql_lit('SUBSISTEMA')} THEN 'SUBSISTEMA ELÉTRICO'"
+        f" ELSE {sec} END AS atributo_3",
     )
     # F3+F4 (`R:136-138`): strip TOTAL/NC aggregate rows (TOTAL BRASIL
     # included) and unlabeled rows — a NULL label fails the predicate.
-    t = t.filter(~F.col("atributo_4").rlike("^TOTAL|^NC "))
+    t = t.filter(f"NOT atributo_4 RLIKE {sql_lit('^TOTAL|^NC ')}")
     # W2 (`R:140`): fill section markers down; F5 (`R:142`): a row is
     # data iff January is present.
-    t = t.withColumn("atributo_3", locf("atributo_3", **by_sheet))
-    t = t.filter(F.col("1").isNotNull())
+    t = t.selectExpr(
+        "atributo_1", "atributo_2", "_row_idx", "atributo_4", *month_cols, "ano",
+        f"{_LOCF.format('atributo_3')} AS atributo_3",
+    )
+    t = t.filter("`1` IS NOT NULL")
 
     # R5 cast (`R:144`) + R1 unpivot (`R:148`).
     ids = ["atributo_1", "atributo_2", "atributo_3", "atributo_4", "ano"]
@@ -127,17 +139,17 @@ def normalize_shape_a(spark: SparkSession, sheets: dict[str, Grid]) -> DataFrame
     # one tail projection; atributo_3's reroute reads the FIXED
     # atributo_4 (post-title-case), so the fixup expression appears in
     # both outputs — Catalyst CSE evaluates it once.
-    a4_fix = F.when(F.col("atributo_4") == "C.OESTE", "Centro-Oeste").otherwise(
-        str_to_title("atributo_4")
+    a4_fix = (
+        "CASE WHEN atributo_4 = 'C.OESTE' THEN 'Centro-Oeste'"
+        f" ELSE {str_to_title('atributo_4')} END"
     )
-    return t.select(
+    return t.selectExpr(
         "atributo_1",
         "atributo_2",
-        F.when(a4_fix.rlike("Resid|Comer|Indus|Outros"), "CLASSE")
-        .otherwise(F.col("atributo_3"))
-        .alias("atributo_3"),
-        a4_fix.alias("atributo_4"),
-        make_month_date("ano", "mes").alias("data"),
+        f"CASE WHEN {a4_fix} RLIKE {sql_lit('Resid|Comer|Indus|Outros')} THEN 'CLASSE'"
+        " ELSE atributo_3 END AS atributo_3",
+        f"{a4_fix} AS atributo_4",
+        f"{make_month_date('ano', 'mes')} AS data",
         "valor",
     )
 
@@ -181,7 +193,7 @@ def normalize_shape_b(spark: SparkSession, sheets: dict[str, Grid]) -> DataFrame
     # F6/F7/F8 (`R:175-179`): keep real data rows (3rd column non-null
     # — this also removes the year-header row itself), labeled, and
     # not TOTAL aggregates — a NULL label fails the rlike.
-    t = t.filter(F.col("2").isNotNull() & ~F.col("atributo_3").rlike("^TOTAL"))
+    t = t.filter(f"`2` IS NOT NULL AND NOT atributo_3 RLIKE {sql_lit('^TOTAL')}")
 
     # R5 cast (`R:182`) + R2 unpivot (`R:185`) + R3 split (`R:187`) by
     # position; slots past the sheet's 12·|years| are padding and never
@@ -189,17 +201,16 @@ def normalize_shape_b(spark: SparkSession, sheets: dict[str, Grid]) -> DataFrame
     # NULL-valor row.
     ids = ["atributo_1", "atributo_2", "atributo_3", "_years"]
     t = t.selectExpr(*_melt(ids, slots, "_slot"))
-    t = t.filter(F.col("_slot") <= 12 * F.size("_years"))
-    p = F.col("_slot") - 1
+    t = t.filter("_slot <= 12 * size(_years)")
 
     # X10 date (`R:189`) + X11 null pad (`R:192`) + P6 (`R:194`).
-    data = make_month_date(F.element_at("_years", (p / 12).cast("int") + 1), p % 12 + 1)
-    return t.select(
+    year = "element_at(_years, CAST((_slot - 1) / 12 AS INT) + 1)"
+    return t.selectExpr(
         "atributo_1",
         "atributo_2",
         "atributo_3",
-        typed_null("string").alias("atributo_4"),
-        data.alias("data"),
+        f"{typed_null('string')} AS atributo_4",
+        f"{make_month_date(year, '(_slot - 1) % 12 + 1')} AS data",
         "valor",
     )
 

@@ -44,15 +44,20 @@ view hash-match a from-scratch recompute of the latest workbook,
 which is exactly what the catalog queries certify against the frozen
 golden.
 
-Scale: per drop — one driver-side workbook parse + normalize (the
-producer artifact's own size: the workbook-small contract of SURVEY
-§4.3.1, and the drop's bytes are smaller than the cell rows an
-executor-side parse would collect), one keyed hash-diff shuffle
-against the standing image, a delta-sized signed aggregate, and a
-|groups|-row view merge. The file source starts no Python process,
-and the driver-side parse starts no executor Python worker: for a
-one-drop refresh either would cost more than the parse. Drops landing
-together parse serially on the driver; a fleet of them is the shape
+Scale: per batch — one driver-side workbook parse + plan per drop
+(the producer artifact's own size: the workbook-small contract of
+SURVEY §4.3.1, and the drop's bytes are smaller than the cell rows an
+executor-side parse would collect), then two writes. The last drop's
+hashed image goes straight to the stage's ``snapshot/``; the
+``view/`` write reads it back and runs the keyed hash-diff shuffle
+against the standing image, the delta-sized signed aggregate and the
+|groups|-row view merge as one plan, so nothing is checkpointed.
+Drops that land together telescope into one diff (see ``_step``).
+Every read names its schema (`LAYOUT`), so no job infers one. The
+file source starts no Python process, and the driver-side parse
+starts no executor Python worker: for a one-drop refresh either would
+cost more than the parse. Drops landing together parse serially on
+the driver; a fleet of them is the shape
 ``sources.spark_datasource.workbook_cells`` serves, which parses in
 executor tasks. The EPE fact is dimension-table-sized so the plain
 snapshot rewrite is the right plan here; a fact too large to rewrite
@@ -71,7 +76,9 @@ from pyspark.sql import functions as F
 from epe_data_wrangling_spark.streaming.ops import (
     STREAM_TIMEOUT_SEC,
     _additive_merge,
+    _check_layout,
     _exactly_once_sink,
+    _read_sink_meta,
     _row_digest,
     _signed_image_diff,
 )
@@ -84,6 +91,24 @@ FACT_DIMS = [
 #: valor staging factor: micro-units keep the additive view's sums in
 #: exact BIGINT algebra (the reference's values carry ≤6 decimals).
 MICRO = 1_000_000
+
+#: The two standing tables' declared schemas. Every read of them names
+#: its schema instead of inferring it (an inference is one Spark job
+#: per read), so the layout is committed in ``_ivm_meta.json`` and
+#: checked before any read: a target written with another layout
+#: raises instead of reading a missing column as NULL.
+SNAPSHOT_DDL = (
+    "k STRING, chave_seletora STRING, mercado STRING, dado STRING,"
+    " classe STRING, abertura STRING, atributo STRING, data DATE,"
+    " valor DOUBLE, rh STRING"
+)
+VIEW_DDL = "chave_seletora STRING, ano INT, n_meses BIGINT, valor_micro BIGINT"
+LAYOUT = {"snapshot": SNAPSHOT_DDL, "view": VIEW_DDL}
+
+
+def _read(spark, target_dir: str, table: str) -> DataFrame:
+    return spark.read.schema(LAYOUT[table]).parquet(os.path.join(target_dir, table))
+
 
 def epe_monthly_refresh(
     spark,
@@ -106,7 +131,11 @@ def epe_monthly_refresh(
     ``.xls`` or ``.xlsx`` in any letter case and does not start with
     ``.`` or ``_``. Land each drop whole: write it beside the zone and
     then rename it in. A drop listed while it is still being written
-    (a 0-byte file above all) is marked seen and never read again."""
+    (a 0-byte file above all) is marked seen and never read again.
+
+    Raises before reading the target when its committed ``layout``
+    differs from `LAYOUT`; a target committed before the layout was
+    recorded is adopted and records it on its next commit."""
     from epe_data_wrangling_spark.plans.epe_pipeline import run_pipeline
     from epe_data_wrangling_spark.sources import workbook
     from epe_data_wrangling_spark.sources.spark_datasource import workbook_files
@@ -127,62 +156,57 @@ def epe_monthly_refresh(
     def _step(batch_df: DataFrame, batch_id: int, meta: dict, stage: str):
         if not drops:
             return None
+        _check_layout(meta, "epe_monthly", "layout", LAYOUT)
+        # A batch may carry several drops (files). Each is a full
+        # cumulative publication, so the signed deltas of applying them
+        # in path order telescope: Σ(imgₖ − imgₖ₋₁) = img_last − img₀,
+        # exact in BIGINT micro-units. Every drop is still planned, so
+        # a malformed one fails the batch; only the last is diffed. The
+        # stored view may then lack a group whose count would have
+        # passed through zero; the returned annual (n_meses > 0) is
+        # the same.
+        facts = [run_pipeline(spark, grids) for grids in drops.values()]
         have = os.path.isdir(target_dir)
-        snap = (
-            spark.read.parquet(os.path.join(target_dir, "snapshot"))
-            if have
-            else None
-        )
-        view = (
-            spark.read.parquet(os.path.join(target_dir, "view")) if have else None
-        )
-        # a batch may carry several drops (files); they apply in path
-        # order (name order under the drop_NNN landing convention), and
-        # each drop is a full snapshot so they must apply in sequence
-        for grids in drops.values():
-            fact = run_pipeline(spark, grids)
-            img = fact.select(
-                _row_digest(FACT_DIMS).alias("k"),
-                *FACT_DIMS,
-                "valor",
-                _row_digest(FACT_DIMS + ["valor"]).alias("rh"),
-            ).localCheckpoint(eager=True)
-            signed = _signed_image_diff(
-                snap, img, ["k"], FACT_DIMS + ["valor"]
-            ).localCheckpoint(eager=True)
-            dview = signed.groupBy(
-                "chave_seletora", F.year("data").cast("int").alias("ano")
-            ).agg(
-                F.sum("_sign").cast("bigint").alias("n_meses"),
-                F.sum(
-                    F.col("_sign")
-                    * F.round(F.col("valor") * MICRO).cast("bigint")
-                )
-                .cast("bigint")
-                .alias("valor_micro"),
+        snap = _read(spark, target_dir, "snapshot") if have else None
+        view = _read(spark, target_dir, "view") if have else None
+        # the new image goes straight to the stage; the diff reads it
+        # back, so the image is computed once and nothing is cached
+        facts[-1].select(
+            _row_digest(FACT_DIMS).alias("k"),
+            *FACT_DIMS,
+            "valor",
+            _row_digest(FACT_DIMS + ["valor"]).alias("rh"),
+        ).write.mode("overwrite").parquet(os.path.join(stage, "snapshot"))
+        img = _read(spark, stage, "snapshot")
+        dview = (
+            _signed_image_diff(snap, img, ["k"], FACT_DIMS + ["valor"])
+            .groupBy("chave_seletora", F.expr("CAST(year(data) AS INT) AS ano"))
+            .agg(
+                F.expr("CAST(sum(_sign) AS BIGINT) AS n_meses"),
+                F.expr(
+                    f"CAST(sum(_sign * CAST(round(valor * {MICRO}) AS BIGINT))"
+                    " AS BIGINT) AS valor_micro"
+                ),
             )
-            view = _additive_merge(
-                view, dview, ["chave_seletora", "ano"], ["n_meses", "valor_micro"]
-            )
-            snap = img
-        snap.write.mode("overwrite").parquet(os.path.join(stage, "snapshot"))
-        view.write.mode("overwrite").parquet(os.path.join(stage, "view"))
-        return {}
+        )
+        _additive_merge(
+            view, dview, ["chave_seletora", "ano"], ["n_meses", "valor_micro"]
+        ).write.mode("overwrite").parquet(os.path.join(stage, "view"))
+        return {"layout": LAYOUT}
 
     _exactly_once_sink(
         stream, target_dir, "epe_monthly", _step, provenance=_drop_files,
         checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec,
     )
-    fact = spark.read.parquet(os.path.join(target_dir, "snapshot")).select(
-        *FACT_DIMS, "valor"
-    )
+    _check_layout(_read_sink_meta(target_dir), "epe_monthly", "layout", LAYOUT)
+    fact = _read(spark, target_dir, "snapshot").select(*FACT_DIMS, "valor")
     annual = (
-        spark.read.parquet(os.path.join(target_dir, "view"))
-        .filter(F.col("n_meses") > 0)
-        .select(
+        _read(spark, target_dir, "view")
+        .filter("n_meses > 0")
+        .selectExpr(
             "chave_seletora",
             "ano",
-            (F.col("valor_micro").cast("double") / MICRO).alias("valor_ano"),
+            f"CAST(valor_micro AS DOUBLE) / {MICRO} AS valor_ano",
             "n_meses",
         )
     )

@@ -381,12 +381,13 @@ def _row_digest(cols: list[str]) -> F.Column:
     then the fixed-width digests concatenate. A ``concat_ws`` digest
     would be wrong twice over — it SKIPS null columns (so a value
     sliding between adjacent nullable columns hashes identically) and
-    a delimiter character inside a value shifts field boundaries."""
-    parts = [
-        F.coalesce(F.md5(F.col(c).cast("string")), F.lit("0" * 32))
-        for c in cols
-    ]
-    return F.md5(F.concat(*parts))
+    a delimiter character inside a value shifts field boundaries.
+    Built as one SQL expression: one py4j call, not a dozen per
+    column."""
+    parts = ", ".join(
+        f"coalesce(md5(CAST(`{c}` AS STRING)), '{'0' * 32}')" for c in cols
+    )
+    return F.expr(f"md5(concat({parts}))")
 
 
 def _additive_merge(
@@ -401,26 +402,17 @@ def _additive_merge(
     value is a legitimate group (SQL GROUP BY semantics), and a plain
     equality join would never match it against its stored row —
     silently accumulating one duplicate state row per refresh.
-    ``view is None`` = bootstrap: the delta IS the state."""
+    ``view is None`` = bootstrap: the delta IS the state. The join
+    condition and projection are SQL text (one py4j call each)."""
     if view is None:
         return dview
     types = dict(view.dtypes)
-    vw, d = view.alias("vw"), dview.alias("d")
-    cond = F.lit(True)
-    for c in group_cols:
-        cond = cond & F.col(f"vw.{c}").eqNullSafe(F.col(f"d.{c}"))
-    return vw.join(d, cond, "full_outer").select(
+    on = " AND ".join(f"vw.`{c}` <=> d.`{c}`" for c in group_cols) or "true"
+    return view.alias("vw").join(dview.alias("d"), F.expr(on), "full_outer").selectExpr(
+        *[f"coalesce(vw.`{c}`, d.`{c}`) AS `{c}`" for c in group_cols],
         *[
-            F.coalesce(F.col(f"vw.{c}"), F.col(f"d.{c}")).alias(c)
-            for c in group_cols
-        ],
-        *[
-            (
-                F.coalesce(F.col(f"vw.{c}"), F.lit(0).cast(types[c]))
-                + F.coalesce(F.col(f"d.{c}"), F.lit(0).cast(types[c]))
-            )
-            .cast(types[c])
-            .alias(c)
+            f"CAST(coalesce(vw.`{c}`, CAST(0 AS {types[c]}))"
+            f" + coalesce(d.`{c}`, CAST(0 AS {types[c]})) AS {types[c]}) AS `{c}`"
             for c in state_cols
         ],
     )
@@ -436,24 +428,18 @@ def _signed_image_diff(
     keyed shuffle per side, change detection via the one narrow hash
     column. Bootstrap (``snap is None``) = every row an insertion."""
     if snap is None:
-        return img.select(*cols, F.lit(1).alias("_sign"))
-    a, b = snap.alias("a"), img.alias("b")
-    cond = F.lit(True)
-    for k in keys:
-        cond = cond & (F.col(f"a.{k}") == F.col(f"b.{k}"))
-    j = a.join(b, cond, "full_outer").filter(
-        F.col(f"a.{keys[0]}").isNull()
-        | F.col(f"b.{keys[0]}").isNull()
-        | (F.col("a.rh") != F.col("b.rh"))
+        return img.selectExpr(*[f"`{c}`" for c in cols], "1 AS _sign")
+    on = " AND ".join(f"a.`{k}` = b.`{k}`" for k in keys)
+    a_absent, b_absent = f"a.`{keys[0]}` IS NULL", f"b.`{keys[0]}` IS NULL"
+    changed = "a.rh != b.rh"
+    j = snap.alias("a").join(img.alias("b"), F.expr(on), "full_outer").filter(
+        f"{a_absent} OR {b_absent} OR {changed}"
     )
-    a_absent = F.col(f"a.{keys[0]}").isNull()
-    b_absent = F.col(f"b.{keys[0]}").isNull()
-    changed = F.col("a.rh") != F.col("b.rh")
-    retract = j.filter(~a_absent & (b_absent | changed)).select(
-        *[F.col(f"a.{c}").alias(c) for c in cols], F.lit(-1).alias("_sign")
+    retract = j.filter(f"NOT {a_absent} AND ({b_absent} OR {changed})").selectExpr(
+        *[f"a.`{c}` AS `{c}`" for c in cols], "-1 AS _sign"
     )
-    insert = j.filter(~b_absent & (a_absent | changed)).select(
-        *[F.col(f"b.{c}").alias(c) for c in cols], F.lit(1).alias("_sign")
+    insert = j.filter(f"NOT {b_absent} AND ({a_absent} OR {changed})").selectExpr(
+        *[f"b.`{c}` AS `{c}`" for c in cols], "1 AS _sign"
     )
     return retract.unionByName(insert)
 
@@ -1448,11 +1434,12 @@ def _write_bucketed_support(
 
 
 def _check_layout(meta: dict, tag: str, key: str, configured) -> None:
-    """Fail-loud layout guard for every sink that keeps bucketed
-    standing state: the committed layout parameter ``key`` (e.g.
-    ``n_buckets`` — the committed ``_kb`` values are
-    pmod(hash(...), n_buckets-at-write-time) — or an index's
-    ``k_cells`` / ``pq_layout`` / ``loc_buckets``) rides
+    """Fail-loud layout guard for every sink whose standing state has
+    a layout the reader assumes: the committed layout parameter ``key``
+    (e.g. ``n_buckets`` — the committed ``_kb`` values are
+    pmod(hash(...), n_buckets-at-write-time) — an index's
+    ``k_cells`` / ``pq_layout`` / ``loc_buckets``, or the declared
+    table schemas the EPE monthly refresh reads with) rides
     ``_ivm_meta.json``, and resuming a target with a DIFFERENT value
     (config drift, changed default) would silently misread the layout
     — touched-bucket filters load the wrong rows, old counts read as
@@ -1465,8 +1452,8 @@ def _check_layout(meta: dict, tag: str, key: str, configured) -> None:
             f"{tag} sink: target was committed with {key}={committed} "
             f"but the sink is configured with {key}={configured} — the "
             "stored layout would be misread (wrong touched-bucket "
-            "filters, spurious transitions); use the committed value or "
-            "rebuild the target"
+            "filters, spurious transitions, missing columns read as "
+            "NULL); use the committed value or rebuild the target"
         )
 
 

@@ -1,24 +1,22 @@
 """Unit tests for the R-parity scalar traps (SURVEY §4.3 'parity
 traps to encode as tests'), including behavior under ANSI mode —
-the driver may run any session configuration."""
+the driver may run any session configuration. The helpers return SQL
+text, so each test runs them the way the plans do: through
+``selectExpr``."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from epe_data_wrangling_spark.functions.cleaning import (
     as_numeric,
     make_month_date,
     paste,
     regexp_extract_na,
+    sql_lit,
     str_to_title,
     typed_null,
 )
-
-
-def _one(spark, col):
-    return spark.range(1).select(col.alias("v")).collect()[0].v
 
 
 @pytest.fixture()
@@ -33,15 +31,28 @@ def test_regexp_extract_na_miss_is_null_not_empty(spark):
     """X1: R str_extract gives NA on no-match; Spark's regexp_extract
     gives '' — the difference feeds LOCF and not-null filters."""
     df = spark.createDataFrame([("2004",), ("abc",), (None,)], "s string")
-    got = [r.y for r in df.select(regexp_extract_na("s", r"^[0-9]{4}$").alias("y")).collect()]
+    got = [r.y for r in df.selectExpr(f"{regexp_extract_na('s', '^[0-9]{4}$')} AS y").collect()]
     assert got == ["2004", None, None]
+
+
+def test_regexp_extract_na_keeps_backslashes(spark):
+    """The pattern reaches the regex engine as written: ``\\*`` is a
+    literal star (the normalizer's starred-year pattern), not an escape
+    the SQL parser consumes."""
+    from epe_data_wrangling_spark.plans.epe_normalize import YEAR_PATTERN
+
+    df = spark.createDataFrame([("2005*",), ("2005",), ("2005x",)], "s string")
+    got = [r.y for r in df.selectExpr(f"{regexp_extract_na('s', YEAR_PATTERN)} AS y").collect()]
+    assert got == ["2005*", "2005", None]
+    with pytest.raises(ValueError, match="no quote"):
+        sql_lit("it's")
 
 
 def test_as_numeric_never_errors_under_ansi(spark, ansi):
     """X12: as.numeric('abc') is NA with a warning, never an error —
     try_cast keeps that true even with spark.sql.ansi.enabled=true."""
     df = spark.createDataFrame([("1.5",), ("abc",), ("",), (None,)], "s string")
-    got = [r.v for r in df.select(as_numeric("s").alias("v")).collect()]
+    got = [r.v for r in df.selectExpr(f"{as_numeric('s')} AS v").collect()]
     assert got == [1.5, None, None, None]
 
 
@@ -50,18 +61,18 @@ def test_str_to_title_accented_words(spark):
     reference actually feeds through str_to_title (R:154)."""
     cases = {"NORDESTE": "Nordeste", "SÃO PAULO": "São Paulo", "REGIÃO NORTE": "Região Norte"}
     df = spark.createDataFrame([(k,) for k in cases], "s string")
-    got = {r.s: r.t for r in df.select("s", str_to_title("s").alias("t")).collect()}
+    got = {r.s: r.t for r in df.selectExpr("s", f"{str_to_title('s')} AS t").collect()}
     assert got == cases
 
 
 def test_paste_single_space_separator(spark):
     """X9: R paste default sep=' ' — chave_seletora layout (R:274)."""
-    v = _one(spark, paste(F.lit("CONSUMO"), F.lit("-"), F.lit("MERCADO"), F.lit("TOTAL")))
-    assert v == "CONSUMO - MERCADO TOTAL"
+    expr = paste("'CONSUMO'", "'-'", "'MERCADO'", "'TOTAL'")
+    assert spark.range(1).selectExpr(f"{expr} AS v").first().v == "CONSUMO - MERCADO TOTAL"
 
 
 def test_typed_null_aligns_unions(spark):
-    df = spark.range(1).select(typed_null("string").alias("s"))
+    df = spark.range(1).selectExpr(f"{typed_null('string')} AS s")
     assert dict(df.dtypes) == {"s": "string"} and df.collect()[0].s is None
 
 
@@ -72,5 +83,8 @@ def test_make_month_date_unpadded_and_invalid(spark, ansi):
         [("2004", "3"), ("2004", "12"), ("bad", "1"), ("2004", "13")],
         "y string, m string",
     )
-    got = [str(r.d) if r.d else None for r in df.select(make_month_date("y", "m").alias("d")).collect()]
+    got = [
+        str(r.d) if r.d else None
+        for r in df.selectExpr(f"{make_month_date('y', 'm')} AS d").collect()
+    ]
     assert got == ["2004-03-01", "2004-12-01", None, None]

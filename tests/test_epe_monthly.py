@@ -8,6 +8,7 @@ checkpoint."""
 
 import json
 import os
+import shutil
 import time
 
 import pytest
@@ -19,7 +20,8 @@ from epe_data_wrangling_spark.plans.epe_demo import (
     workbook_grids,
 )
 from epe_data_wrangling_spark.sources.xlsx import write_xlsx
-from epe_data_wrangling_spark.streaming.epe_monthly import epe_monthly_refresh
+from epe_data_wrangling_spark.streaming.epe_monthly import LAYOUT, epe_monthly_refresh
+from tests.crash import COMMIT_POINTS, CrashOnce, crash_commit_at
 
 
 def _fact_set(df):
@@ -217,7 +219,9 @@ def test_monthly_refresh_fresh_checkpoint_skips_replay_raises_on_new_drop(
         spark, drops, target, checkpoint_dir=str(tmp_path / "ckpt")
     )
     committed = _meta(target)
-    assert committed == {"last_batch_id": 0, "applied_files": [_uri(first)]}
+    assert committed == {
+        "last_batch_id": 0, "applied_files": [_uri(first)], "layout": LAYOUT,
+    }
     f0 = _fact_set(fact)
     a0 = {tuple(r) for r in annual.collect()}
 
@@ -233,4 +237,198 @@ def test_monthly_refresh_fresh_checkpoint_skips_replay_raises_on_new_drop(
         epe_monthly_refresh(
             spark, drops, target, checkpoint_dir=str(tmp_path / "ckpt_fresh_2")
         )
+    assert _meta(target) == committed
+
+
+def _annual_set(df):
+    return {tuple(r) for r in df.collect()}
+
+
+def _refresh_sets(spark, drops, target, ckpt):
+    fact, annual = epe_monthly_refresh(spark, drops, target, checkpoint_dir=ckpt)
+    return _fact_set(fact), _annual_set(annual)
+
+
+@pytest.fixture(scope="module")
+def two_drop_refresh(spark, tmp_path_factory):
+    """Drops v1 then v2 of the demo workbook, refreshed one at a time
+    without a crash: the standing ``(fact, annual)`` as row sets."""
+    base = tmp_path_factory.mktemp("monthly_two_drops")
+    drops = str(base / "drops")
+    os.makedirs(drops)
+    v1, v2, _ = monthly_workbook_versions()
+    for k, v in enumerate((v1, v2), 1):
+        write_xlsx(os.path.join(drops, f"drop_{k:03d}.xlsx"), v)
+        got = _refresh_sets(spark, drops, str(base / "state"), str(base / "ckpt"))
+    return got
+
+
+@pytest.mark.parametrize("point", ["after_image_write", *COMMIT_POINTS])
+def test_monthly_refresh_crash_at_every_commit_step_recovers(
+    spark, tmp_path, monkeypatch, two_drop_refresh, point
+):
+    """The refresh's second drop crashed at each step of its write and
+    commit — after the new image reached the stage's ``snapshot/`` but
+    before the ``view/`` write, after the step, after the meta write,
+    between `_atomic_swap`'s two renames, and after promotion but
+    before the old dir's rmtree — then restarted on the SAME
+    checkpoint: the returned fact and annual equal the no-crash run, no
+    ``.stage-*``/``.old-*`` dir survives, and a forced replay of the
+    committed batch skips."""
+    import glob
+
+    from epe_data_wrangling_spark.streaming import epe_monthly
+
+    drops = str(tmp_path / "drops")
+    os.makedirs(drops)
+    target, ckpt = str(tmp_path / "state"), str(tmp_path / "ckpt")
+    v1, v2, _ = monthly_workbook_versions()
+    write_xlsx(os.path.join(drops, "drop_001.xlsx"), v1)
+    _refresh_sets(spark, drops, target, ckpt)  # batch 0 commits
+    write_xlsx(os.path.join(drops, "drop_002.xlsx"), v2)
+    if point == "after_image_write":
+        stage = f"{target}.stage-1"
+        monkeypatch.setattr(epe_monthly, "_additive_merge", CrashOnce(
+            epe_monthly._additive_merge,
+            lambda *a: os.path.isdir(os.path.join(stage, "snapshot"))
+            and not os.path.exists(os.path.join(stage, "view")),
+        ))
+    else:
+        crash_commit_at(monkeypatch, point, target, 1)
+    with pytest.raises(Exception, match="injected crash"):
+        _refresh_sets(spark, drops, target, ckpt)
+    monkeypatch.undo()
+    assert _refresh_sets(spark, drops, target, ckpt) == two_drop_refresh
+    assert not glob.glob(f"{glob.escape(target)}.stage-*")
+    assert not glob.glob(f"{glob.escape(target)}.old-*")
+    for f in ("1", ".1.crc"):  # un-commit batch 1 in the checkpoint
+        os.remove(os.path.join(ckpt, "commits", f))
+    assert _refresh_sets(spark, drops, target, ckpt) == two_drop_refresh
+    assert _meta(target)["last_batch_id"] == 1
+
+
+def _rewrite_meta(target, **fields):
+    meta = {**_meta(target), **fields}
+    with open(os.path.join(target, "_ivm_meta.json"), "w") as f:
+        json.dump(meta, f)
+    return meta
+
+
+def test_monthly_refresh_layout_guard_raises_before_any_read(
+    spark, tmp_path, monkeypatch
+):
+    """A target committed with another ``layout`` raises before any of
+    its tables is read, with or without a new drop, and the committed
+    meta stays as it was."""
+    from epe_data_wrangling_spark.streaming import epe_monthly
+
+    drops = str(tmp_path / "drops")
+    os.makedirs(drops)
+    target, ckpt = str(tmp_path / "state"), str(tmp_path / "ckpt")
+    v1, v2, _ = monthly_workbook_versions()
+    write_xlsx(os.path.join(drops, "drop_001.xlsx"), v1)
+    epe_monthly_refresh(spark, drops, target, checkpoint_dir=ckpt)
+    other = {**LAYOUT, "snapshot": LAYOUT["snapshot"].replace("valor DOUBLE", "valor FLOAT")}
+    committed = _rewrite_meta(target, layout=other)
+
+    reads = []
+    real_read = epe_monthly._read
+    monkeypatch.setattr(
+        epe_monthly, "_read", lambda *a: reads.append(a) or real_read(*a)
+    )
+    with pytest.raises(Exception, match="layout"):
+        epe_monthly_refresh(spark, drops, target, checkpoint_dir=ckpt)  # no new drop
+    write_xlsx(os.path.join(drops, "drop_002.xlsx"), v2)
+    with pytest.raises(Exception, match="layout"):
+        epe_monthly_refresh(spark, drops, target, checkpoint_dir=ckpt)
+    assert reads == []
+    assert _meta(target) == committed
+
+
+def test_monthly_refresh_layout_guard_catches_missing_column(spark, tmp_path):
+    """A target whose ``view/`` was rewritten without ``valor_micro``
+    (and committed that layout) raises: read with the declared schema,
+    the missing column would come back as NULL instead."""
+    drops = str(tmp_path / "drops")
+    os.makedirs(drops)
+    target, ckpt = str(tmp_path / "state"), str(tmp_path / "ckpt")
+    write_xlsx(os.path.join(drops, "drop_001.xlsx"), workbook_grids())
+    epe_monthly_refresh(spark, drops, target, checkpoint_dir=ckpt)
+    view = os.path.join(target, "view")
+    narrow = str(tmp_path / "narrow")
+    spark.read.parquet(view).drop("valor_micro").write.parquet(narrow)
+    shutil.rmtree(view)
+    os.rename(narrow, view)
+    narrow_ddl = "chave_seletora STRING, ano INT, n_meses BIGINT"
+    assert "valor_micro" not in spark.read.parquet(view).columns
+    _rewrite_meta(target, layout={**LAYOUT, "view": narrow_ddl})
+    # what an unguarded declared-schema read would return
+    declared = spark.read.schema(LAYOUT["view"]).parquet(view)
+    assert {r.valor_micro for r in declared.collect()} == {None}
+    with pytest.raises(RuntimeError, match="layout"):
+        epe_monthly_refresh(spark, drops, target, checkpoint_dir=ckpt)
+
+
+def test_monthly_refresh_adopts_target_without_layout(spark, tmp_path):
+    """A target committed before the layout was recorded (no ``layout``
+    key) is read as it is, and records the layout on its next commit."""
+    from epe_data_wrangling_spark.plans.epe_pipeline import run_pipeline
+
+    drops = str(tmp_path / "drops")
+    os.makedirs(drops)
+    target, ckpt = str(tmp_path / "state"), str(tmp_path / "ckpt")
+    v1, v2, _ = monthly_workbook_versions()
+    write_xlsx(os.path.join(drops, "drop_001.xlsx"), v1)
+    first = _refresh_sets(spark, drops, target, ckpt)
+    meta = _meta(target)
+    del meta["layout"]
+    with open(os.path.join(target, "_ivm_meta.json"), "w") as f:
+        json.dump(meta, f)
+    assert _refresh_sets(spark, drops, target, ckpt) == first
+    assert "layout" not in _meta(target)  # a run with no drop commits nothing
+    write_xlsx(os.path.join(drops, "drop_002.xlsx"), v2)
+    fact, _ = _refresh_sets(spark, drops, target, ckpt)
+    assert _meta(target)["layout"] == LAYOUT
+    assert fact == _fact_set(run_pipeline(spark, v2))
+
+
+def test_monthly_refresh_drops_landed_together(spark, tmp_path):
+    """Three drops landed together return the same fact and annual as
+    the same drops refreshed one at a time: each drop is a cumulative
+    publication, so one diff against the last drop nets out the whole
+    sequence. A malformed middle drop (a Shape-A sheet with 11 unnamed
+    columns) still fails its batch, and the committed meta stays as it
+    was."""
+    versions = monthly_workbook_versions()
+
+    def landed(name, together):
+        drops = str(tmp_path / name / "drops")
+        os.makedirs(drops)
+        target, ckpt = str(tmp_path / name / "state"), str(tmp_path / name / "ckpt")
+        for k, v in enumerate(versions, 1):
+            write_xlsx(os.path.join(drops, f"drop_{k:03d}.xlsx"), v)
+            if not together:
+                got = _refresh_sets(spark, drops, target, ckpt)
+        if together:
+            got = _refresh_sets(spark, drops, target, ckpt)
+        return got, target
+
+    one_by_one, _ = landed("one_by_one", together=False)
+    together, target = landed("together", together=True)
+    assert together == one_by_one
+    assert _meta(target)["last_batch_id"] == 0
+
+    drops = str(tmp_path / "bad" / "drops")
+    os.makedirs(drops)
+    target, ckpt = str(tmp_path / "bad" / "state"), str(tmp_path / "bad" / "ckpt")
+    write_xlsx(os.path.join(drops, "drop_001.xlsx"), versions[0])
+    epe_monthly_refresh(spark, drops, target, checkpoint_dir=ckpt)
+    committed = _meta(target)
+    # TOTAL's 12 unnamed month columns cut to 11
+    bad = {s: [r[:12] for r in g] if s == "TOTAL" else g for s, g in versions[1].items()}
+    write_xlsx(os.path.join(drops, "drop_002.xlsx"), versions[1])
+    write_xlsx(os.path.join(drops, "drop_003.xlsx"), bad)
+    write_xlsx(os.path.join(drops, "drop_004.xlsx"), versions[2])
+    with pytest.raises(Exception, match="11 unnamed columns"):
+        epe_monthly_refresh(spark, drops, target, checkpoint_dir=ckpt)
     assert _meta(target) == committed

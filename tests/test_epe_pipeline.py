@@ -331,30 +331,62 @@ def test_plan_has_one_local_relation_per_sheet_shape(spark):
 
 
 def _new_job_ids(spark, after: int) -> list[int]:
-    jobs = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()  # job events arrive asynchronously
+    jobs = sc.statusStore().jobsList(None)
     ids = [jobs.apply(i).jobId() for i in range(jobs.size())]
     return sorted(j for j in ids if j > after)
+
+
+def _refresh_jobs(spark, drops, tmp_path) -> tuple[list[int], object]:
+    """The job ids one ``epe_monthly_refresh`` run submits, and its fact."""
+    from epe_data_wrangling_spark.streaming.epe_monthly import epe_monthly_refresh
+
+    before = max(_new_job_ids(spark, -1), default=-1)
+    fact, _ = epe_monthly_refresh(
+        spark, drops, str(tmp_path / "state"), checkpoint_dir=str(tmp_path / "ckpt")
+    )
+    return _new_job_ids(spark, before), fact
 
 
 def test_monthly_refresh_parses_each_drop_once(spark, tmp_path):
     """One drop through ``epe_monthly_refresh`` runs a fixed number of
     Spark jobs, counted from the status store: the provenance collect
     parses the drop once and hands its grids to the step, so no other
-    job reads the drop's cells."""
+    job reads the drop's cells. A bootstrap runs 4: the collect, the
+    image write, and the view write's aggregate shuffle and write."""
     import os
 
     from epe_data_wrangling_spark.sources.xlsx import write_xlsx
-    from epe_data_wrangling_spark.streaming.epe_monthly import epe_monthly_refresh
 
     drops = str(tmp_path / "drops")
     os.makedirs(drops)
     write_xlsx(os.path.join(drops, "drop_001.xlsx"), workbook_grids())
-    before = max(_new_job_ids(spark, -1), default=-1)
-    fact, _ = epe_monthly_refresh(
-        spark, drops, str(tmp_path / "state"), checkpoint_dir=str(tmp_path / "ckpt")
-    )
-    jobs = _new_job_ids(spark, before)
-    # a distinct-file collect (2 jobs), a cell checkpoint or a second
-    # cell collect would each raise this
-    assert len(jobs) == 8, jobs
+    jobs, fact = _refresh_jobs(spark, drops, tmp_path)
+    # a distinct-file collect (2 jobs), a cell checkpoint, a second
+    # cell collect or a schema-inferring read would each raise this
+    assert len(jobs) == 4, jobs
     assert fact.count() == 288
+
+
+def test_monthly_refresh_warm_drop_job_count(spark, tmp_path):
+    """A drop onto a standing target runs a fixed number of Spark jobs:
+    the provenance collect, the image write, and the view write, whose
+    diff, delta aggregate and merge run as one plan (adaptive execution
+    submits each of its shuffle stages as a job: 6). Reads of the
+    committed tables name their schema, so none infers one, and
+    neither the image nor the signed diff is checkpointed."""
+    import os
+
+    from epe_data_wrangling_spark.plans.epe_demo import monthly_workbook_versions
+    from epe_data_wrangling_spark.sources.xlsx import write_xlsx
+
+    drops = str(tmp_path / "drops")
+    os.makedirs(drops)
+    v1, v2, _ = monthly_workbook_versions()
+    write_xlsx(os.path.join(drops, "drop_001.xlsx"), v1)
+    _refresh_jobs(spark, drops, tmp_path)
+    write_xlsx(os.path.join(drops, "drop_002.xlsx"), v2)
+    jobs, fact = _refresh_jobs(spark, drops, tmp_path)
+    assert len(jobs) == 8, jobs
+    assert fact.count() == run_pipeline(spark, v2).count()

@@ -9,6 +9,7 @@ import pytest
 from epe_data_wrangling_spark.sources.tables import load_table
 from epe_data_wrangling_spark.streaming import ops
 from epe_data_wrangling_spark.streaming.sources import stream_events
+from tests.crash import COMMIT_POINTS, crash_commit_at
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -581,34 +582,7 @@ def ivm_two_file_landing(spark, tmp_path_factory):
     return o.schema, src, expect
 
 
-class _CrashOnce:
-    """Delegate to ``real`` but raise once when ``hit(*args)``."""
-
-    def __init__(self, real, hit):
-        self.real, self.hit, self.fired = real, hit, False
-
-    def __call__(self, *args, **kw):
-        if not self.fired and self.hit(*args):
-            self.fired = True
-            raise RuntimeError("injected crash")
-        return self.real(*args, **kw)
-
-
-class _ModuleProxy:
-    """A stand-in for a module imported by `streaming.ops` with one
-    function replaced — the crash stays local to the commit code."""
-
-    def __init__(self, module, name, fn):
-        self._module, self._name, self._fn = module, name, fn
-
-    def __getattr__(self, attr):
-        return self._fn if attr == self._name else getattr(self._module, attr)
-
-
-@pytest.mark.parametrize(
-    "point",
-    ["after_step", "after_meta_write", "between_renames", "before_old_rmtree"],
-)
+@pytest.mark.parametrize("point", COMMIT_POINTS)
 def test_foreach_batch_ivm_crash_at_every_commit_step_recovers(
     spark, tmp_path, monkeypatch, ivm_two_file_landing, point
 ):
@@ -621,14 +595,12 @@ def test_foreach_batch_ivm_crash_at_every_commit_step_recovers(
     and a forced replay of the committed batch skips."""
     import glob
     import os
-    import shutil
 
     from pyspark.sql import functions as F
 
     schema, src, expect = ivm_two_file_landing
     target = str(tmp_path / "state")
     ckpt = str(tmp_path / "ckpt")
-    stage1 = f"{target}.stage-1"
 
     def partial(df):
         return df.groupBy("o_orderpriority").agg(F.count(F.lit(1)).alias("n"))
@@ -641,18 +613,7 @@ def test_foreach_batch_ivm_crash_at_every_commit_step_recovers(
         )
         return {r["o_orderpriority"]: r["n"] for r in state.collect()}
 
-    if point == "after_step":
-        monkeypatch.setattr(ops, "_commit_target", _CrashOnce(
-            ops._commit_target, lambda stage, *a: stage == stage1))
-    elif point == "after_meta_write":
-        monkeypatch.setattr(ops, "_atomic_swap", _CrashOnce(
-            ops._atomic_swap, lambda stage, *a: stage == stage1))
-    elif point == "between_renames":
-        monkeypatch.setattr(ops, "os", _ModuleProxy(os, "rename", _CrashOnce(
-            os.rename, lambda src_, dst: src_ == stage1)))
-    else:
-        monkeypatch.setattr(ops, "shutil", _ModuleProxy(shutil, "rmtree", _CrashOnce(
-            shutil.rmtree, lambda p, *a: p == f"{target}.old-1")))
+    crash_commit_at(monkeypatch, point, target, 1)
     with pytest.raises(Exception, match="injected crash"):
         run_once()  # batch 0 commits, batch 1 crashes at `point`
     monkeypatch.undo()
