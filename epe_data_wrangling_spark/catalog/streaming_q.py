@@ -24,16 +24,16 @@ QUERIES: dict[str, CatalogQuery] = {}
 query = make_registrar(QUERIES)
 
 
-def _await_or_stop(q, tag: str, timeout_sec: int = STREAM_TIMEOUT_SEC) -> None:
+def _await_or_stop(q, tag: str) -> None:
     """`awaitTermination` with the return value CHECKED — the idiom
     `streaming.ops._run_foreach_batch` uses, shared by the catalog
     queries that drive a query handle directly: a hung stream must
     raise, not silently fall through to reading partial output as the
     certified result. Stops the query either way."""
     try:
-        if not q.awaitTermination(timeout_sec):
+        if not q.awaitTermination(STREAM_TIMEOUT_SEC):
             raise TimeoutError(
-                f"{tag} stream still running after {timeout_sec}s"
+                f"{tag} stream still running after {STREAM_TIMEOUT_SEC}s"
             )
     finally:
         q.stop()

@@ -264,60 +264,35 @@ def audio_energy(assets: DataFrame, *, mode: str = "fake") -> DataFrame:
 # audio/video).
 
 
+def decode_bmp_pixels(b: bytes) -> tuple[int, int, bytes] | None:
+    """REAL 24-bit BMP pixel decode with ``struct``: parses
+    BITMAPINFOHEADER and walks the bottom-up padded pixel rows.
+    Returns (width, height, rgb) — the interleaved 8-bit samples,
+    reordered from BMP's BGR — or None for non-BMP payloads and BMPs
+    outside the envelope (header < 40 bytes, not 24 bpp, empty)."""
+    if b[:2] != b"BM":
+        return None
+    (data_off,) = struct.unpack_from("<I", b, 10)
+    hdr_size, w, h = struct.unpack_from("<Iii", b, 14)
+    bpp = struct.unpack_from("<H", b, 28)[0]
+    if hdr_size < 40 or bpp != 24 or w <= 0 or h == 0:
+        return None
+    stride = (w * 3 + 3) // 4 * 4
+    bgr = bytearray()
+    for row in range(abs(h)):
+        off = data_off + row * stride
+        bgr += b[off : off + w * 3]
+    bgr += bytes(-len(bgr) % 3)  # a truncated last pixel sums as zeros
+    rgb = bytearray(bgr)
+    rgb[0::3], rgb[2::3] = bgr[2::3], bgr[0::3]
+    return w, abs(h), bytes(rgb)
+
+
 def bmp_pixel_stats(assets: DataFrame) -> DataFrame:
     """REAL BMP decode → per-image channel statistics:
-    (asset_id, width, height, sum_r, sum_g, sum_b, mean_r/g/b).
-
-    Parses BITMAPINFOHEADER with ``struct``, walks the bottom-up
-    padded pixel rows, and accumulates exact integer channel sums —
-    so the oracle comparison has no float accumulation hazard; the
-    means are one shared double tree. Narrow mapInPandas: payload
-    bytes never shuffle."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {k: [] for k in
-                ("asset_id", "width", "height", "sum_r", "sum_g", "sum_b")}
-            for aid, payload in zip(pdf["asset_id"], pdf["payload"]):
-                b = bytes(payload)
-                if b[:2] != b"BM":
-                    continue
-                (data_off,) = struct.unpack_from("<I", b, 10)
-                hdr_size, w, h = struct.unpack_from("<Iii", b, 14)
-                bpp = struct.unpack_from("<H", b, 28)[0]
-                if hdr_size < 40 or bpp != 24 or w <= 0 or h == 0:
-                    continue
-                bottom_up, h_abs = h > 0, abs(h)
-                stride = (w * 3 + 3) // 4 * 4
-                sr = sg = sb = 0
-                for row in range(h_abs):
-                    off = data_off + row * stride
-                    px = b[off : off + w * 3]
-                    sb += sum(px[0::3])
-                    sg += sum(px[1::3])
-                    sr += sum(px[2::3])
-                out["asset_id"].append(aid)
-                out["width"].append(w)
-                out["height"].append(h_abs)
-                out["sum_r"].append(sr)
-                out["sum_g"].append(sg)
-                out["sum_b"].append(sb)
-            yield pd.DataFrame(out)
-
-    decoded = assets.select("asset_id", "payload").mapInPandas(
-        fn,
-        "asset_id BIGINT, width INT, height INT, "
-        "sum_r BIGINT, sum_g BIGINT, sum_b BIGINT",
-    )
-    from pyspark.sql import functions as F
-
-    npx = (F.col("width") * F.col("height")).cast("double")
-    return decoded.select(
-        "asset_id", "width", "height", "sum_r", "sum_g", "sum_b",
-        F.round(F.col("sum_r") / npx, 6).alias("mean_r"),
-        F.round(F.col("sum_g") / npx, 6).alias("mean_g"),
-        F.round(F.col("sum_b") / npx, 6).alias("mean_b"),
-    )
+    (asset_id, width, height, sum_r, sum_g, sum_b, mean_r/g/b), exact
+    integer channel sums (shared ``_rgb_pixel_stats`` shape)."""
+    return _rgb_pixel_stats(assets, decode_bmp_pixels)
 
 
 def decode_png_pixels(b: bytes) -> tuple[int, int, int, bytes] | None:
@@ -396,7 +371,7 @@ def decode_png_pixels(b: bytes) -> tuple[int, int, int, bytes] | None:
 
 def _rgb_pixel_stats(assets: DataFrame, decode_fn) -> DataFrame:
     """Shared decode→exact-integer-channel-sums builder for the image
-    formats (PNG/GIF/JPEG): narrow mapInPandas, payloads never
+    formats (BMP/PNG/GIF/JPEG): narrow mapInPandas, payloads never
     shuffle; undecodable payloads are skipped, not errored. PNG's
     decoder returns (w, h, channels, samples); the RGB decoders
     return (w, h, rgb)."""

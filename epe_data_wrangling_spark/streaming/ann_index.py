@@ -34,6 +34,24 @@ compaction), plus one touched-cell read for the duplicate-id witness
 the broadcast centroids and scan ~probe/K of the index, exactly the
 trained-IVF serve path of `ann_ivf_trained_topk`.
 
+**Two index forms, one body per lifecycle step.** A raw index
+(`_RawForm`) stores the vectors themselves in ``vectors`` and keeps
+the centroids as its quantizer; its layout rides the meta as
+``k_cells``. A PQ-coded index (`_PQForm`, FAISS IVFPQ by residual)
+stores ``pq_m`` codebook ids per vector in ``codes`` and keeps the
+centroids plus residual codebooks; its layout rides as ``pq_layout``
+= [k_cells, pq_m, pq_sub, cbk]. `_form_of` maps a committed meta to
+its form, and every step — the append and CDC sinks, serve's probe,
+vacuum, retrain/rebuild and the drift loop — runs one shared body
+over it. What differs per form lives in the form: how an assigned
+row becomes store rows (raw: as is; PQ: residual split, then
+`operators.pq.assign_codes`), what the bootstrap trains beside the
+centroids (PQ: the codebooks), the PQ ``pq_m*pq_sub`` dimension
+witness, and where a retrain reads the live corpus (raw: the index's
+own store; PQ: the caller's system-of-record table). Each step
+assigns once per id; the cell counts, witnesses and locator rows come
+from that one row per id.
+
 Exactly-once: appends double-count on re-application, so every sink
 here commits through `streaming.ops._exactly_once_sink` (replays
 skip, new data under a fresh checkpoint raises unless the caller
@@ -52,7 +70,7 @@ append discipline with the tombstone + key-locator machinery the
 top-k sinks established (`ops._key_index_guard_and_rewrite`):
 
 - ``locator/`` — (id → cell) sidecar, bucketed by ``pmod(hash(id),
-  loc_buckets)`` so a change batch reads/rewrites ONLY the key
+  LOC_BUCKETS)`` so a change batch reads/rewrites ONLY the key
   buckets its ids hash to. It answers the question a delete arrives
   WITHOUT the answer to: which cell holds this id's standing row
   (the vector is gone client-side; recomputing the cell needs the
@@ -90,6 +108,12 @@ from epe_data_wrangling_spark.operators.kmeans import (
     lloyd_means,
     means_to_centroids,
 )
+from epe_data_wrangling_spark.operators.pq import (
+    assign_codes,
+    split_residual_subspaces,
+    train_residual_codebooks,
+    with_cc,
+)
 from epe_data_wrangling_spark.streaming.manifest import (
     carry_store,
     read_manifest,
@@ -98,13 +122,23 @@ from epe_data_wrangling_spark.streaming.manifest import (
     write_store_delta,
 )
 from epe_data_wrangling_spark.streaming.ops import (
-    STREAM_TIMEOUT_SEC,
     _check_layout,
     _commit_target,
     _exactly_once_sink,
     _open_target,
     _read_sink_meta,
 )
+
+#: The stream columns every index sink reads: the id (also the id
+#: column of every store), the vector (array<float|double>) and, on a
+#: change stream, the op ('I', 'U' or 'D').
+ID, VEC, OP = "vec_id", "embedding", "op"
+
+#: Key buckets of the CDC sinks' locator sidecar (meta ``loc_buckets``).
+LOC_BUCKETS = 32
+
+#: Schema of a serve over probed cells that hold no rows.
+_TOPK_SCHEMA = "query_id BIGINT, neighbor_id BIGINT, rank INT, l2_dist DOUBLE"
 
 
 def _next_gen(meta: dict) -> int:
@@ -115,10 +149,9 @@ def _next_gen(meta: dict) -> int:
     standing rows committed under the old checkpoint's higher ids.
     Seeds from last_batch_id when ``last_gen`` is absent (a target
     whose commits all predate the counter ALSO predates the stores'
-    ``_gen`` column, and the CDC sinks refuse it — see the
-    `_cdc_locate_and_retire` schema witness — so the seed only ever
-    bridges metas written mid-upgrade, never reinterprets old
-    stores)."""
+    ``_gen`` column, and every sink refuses it — see
+    `_require_gen_schema` — so the seed only ever bridges metas
+    written mid-upgrade, never reinterprets old stores)."""
     return int(meta.get("last_gen", meta.get("last_batch_id", -1))) + 1
 
 
@@ -138,14 +171,14 @@ def _dense_cids(cents: DataFrame) -> DataFrame:
     )
 
 
-def _require_unique_ids(batch: DataFrame, id_col: str, sink: str) -> None:
+def _require_unique_ids(batch: DataFrame, sink: str) -> None:
     """Intra-batch duplicate-id witness: two rows sharing an id WITHIN
     one micro-batch (re-delivery landing in the same trigger) would
     both append silently — the standing-rows join can't see them — and
     serve would then return the vector twice, inflating ranks. One
     delta-sized limit-1 job."""
     dup = (
-        batch.groupBy(id_col)
+        batch.groupBy(ID)
         .agg(F.count(F.lit(1)).alias("n"))
         .filter(F.col("n") > 1)
         .limit(1)
@@ -160,12 +193,13 @@ def _require_unique_ids(batch: DataFrame, id_col: str, sink: str) -> None:
 
 
 def _require_gen_schema(manifest: dict | None, store: str, sink: str) -> None:
-    """Pre-upgrade-target witness shared by the plain-append sinks
-    (the CDC path has its own copy with tombstone-specific wording,
-    `_cdc_locate_and_retire`): a store committed before deltas carried
-    the ``_gen`` generation column would fail the manifest layer's
-    schema check on the next append with a generic "schema drift"
-    error — refuse up front with the actionable message instead."""
+    """Pre-upgrade-target witness: a store committed before deltas
+    carried the ``_gen`` generation column would fail the manifest
+    layer's schema check on the next append with a generic "schema
+    drift" error, and could not order tombstones against its rows (a
+    delete-only batch would commit tombstones every later serve or
+    vacuum crashes on) — refuse up front with the actionable message
+    instead."""
     if manifest is not None and manifest.get("schema"):
         fields = [
             f["name"] for f in json.loads(manifest["schema"])["fields"]
@@ -234,12 +268,12 @@ def _occupancy_meta(
     return out
 
 
-def _assign_cells(batch: DataFrame, cents: DataFrame, id_col: str) -> DataFrame:
+def _assign_cells(vecs: DataFrame, cents: DataFrame) -> DataFrame:
     """Nearest-trained-centroid assignment (dist² argmin against the
     broadcast centroids — the Lloyd metric, so the index is coherent
-    with its trainer). Returns (id, v, _kb = cell, cv = the cell's
-    centroid vector — the residual encoders need it; plain callers
-    drop it)."""
+    with its trainer) of ``vecs`` (id, v, _gen). Returns (id, v,
+    _kb = cell, _gen, cv = the cell's centroid vector — the residual
+    encoder needs it)."""
     # broadcast-array argmin (V.nearest_centroid): same (dist2, cid)
     # winner as the former per-id window over a k-way crossJoin, with
     # the batch scanned once and never shuffled by the assignment
@@ -247,21 +281,21 @@ def _assign_cells(batch: DataFrame, cents: DataFrame, id_col: str) -> DataFrame:
     cands = V.centroid_array(c.select("cid", "c", "cc"))
     best = V.nearest_centroid(F.col("_cands"), F.col("v"), F.col("vv"))
     return (
-        batch.withColumn("vv", V.dot(F.col("v"), F.col("v")))
+        vecs.withColumn("vv", V.dot(F.col("v"), F.col("v")))
         .crossJoin(F.broadcast(cands))
         .withColumn("_best", best)
         .filter(F.col("_best").isNotNull())  # empty-centroids parity
         .select(
-            id_col, "v", F.col("_best.cid").cast("int").alias("_kb"),
+            ID, "v", F.col("_best.cid").cast("int").alias("_kb"), "_gen",
             F.col("_best.c").alias("cv"),
         )
     )
 
 
-def _train_quantizer(vecs: DataFrame, k: int, iters: int, id_col: str,
+def _train_quantizer(vecs: DataFrame, k: int, iters: int,
                      init: str = "lowest") -> DataFrame:
-    """Train the coarse quantizer on ``vecs`` (``id_col``, ``v``) with
-    the shared Lloyd trainer and re-key it to DENSE 0..k-1 cell ids
+    """Train the coarse quantizer on ``vecs`` (id, ``v``) with the
+    shared Lloyd trainer and re-key it to DENSE 0..k-1 cell ids
     (`_dense_cids`), checkpointed — it feeds every later job. 'lowest'
     seeds with the k lowest ids; 'spread' seeds farthest-first on the
     MATERIALIZED corpus (the sample draw scans it once and Lloyd once
@@ -271,19 +305,18 @@ def _train_quantizer(vecs: DataFrame, k: int, iters: int, id_col: str,
     seeds = None
     if init == "spread":
         ev = ev.localCheckpoint(eager=True)
-        seeds = farthest_first_seeds(ev, k, id_col=id_col)
+        seeds = farthest_first_seeds(ev, k, id_col=ID)
     return _dense_cids(
-        means_to_centroids(lloyd_means(ev, k, iters, id_col=id_col, init=seeds))
+        means_to_centroids(lloyd_means(ev, k, iters, id_col=ID, init=seeds))
     ).localCheckpoint(eager=True)
 
 
-def _cell_counts(rows: DataFrame, rows_per_entry: int = 1) -> list:
-    """(cell, entries) pairs of a ``_kb``-bucketed frame, from one
-    delta-sized agg (cell-count rows collected). PQ codes carry
-    ``pq_m`` rows per vector — pass it so occupancy counts VECTORS."""
+def _cell_counts(assigned: DataFrame) -> list:
+    """(cell, ids) pairs of the one-row-per-id ``assigned`` frame, from
+    one delta-sized agg (cell-count rows collected)."""
     return [
-        (int(r["_kb"]), int(r["c"]) // rows_per_entry)
-        for r in rows.groupBy("_kb").agg(F.count(F.lit(1)).alias("c")).collect()
+        (int(r["_kb"]), int(r["c"]))
+        for r in assigned.groupBy("_kb").agg(F.count(F.lit(1)).alias("c")).collect()
     ]
 
 
@@ -300,116 +333,362 @@ def _stage_quantizers(target_dir: str, stage: str, fresh: dict) -> None:
             df.write.mode("overwrite").parquet(os.path.join(stage, sub))
 
 
-def ivf_index_foreach_batch(
-    vectors: DataFrame,
-    target_dir: str,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k_cells: int = 8,
-    train_iters: int = 2,
-    warn_skew: float = OCCUPANCY_SKEW_WARN,
-    adopt: bool = False,
-    timeout_sec: int = STREAM_TIMEOUT_SEC,
-    checkpoint_dir: str | None = None,
-) -> None:
-    """Maintain the IVF index at ``target_dir`` from an append-only
-    vector stream (rows: ``id_col``, ``vec_col`` array<float|double>).
-    The bootstrap batch trains the quantizer; every batch (bootstrap
-    included) appends its vectors to the cell-bucketed store."""
+def _store_pairs(rows: DataFrame) -> DataFrame:
+    """(id, cell) pairs of a store's rows — one per id and cell (a PQ
+    vector has ``pq_m`` code rows)."""
+    return rows.select(ID, F.col("_kb").alias("cell")).distinct()
+
+
+# ---- the two index forms ----------------------------------------------
+
+
+class _RawForm:
+    """Raw vectors: store rows (vec_id, v, _kb, _gen); the quantizer is
+    the centroids alone."""
+
+    store, layout_key, kind, tag, verb = (
+        "vectors", "k_cells", "raw-vector", "ivf_index", "retrain"
+    )
+    remedy = (
+        "a commit of the other form would drop its vectors store; use "
+        "the ivf_index_* functions (ivf_index_retrain to retrain) or a "
+        "fresh target"
+    )
+    rows_per_id = 1
+
+    def __init__(self, k_cells: int):
+        self.k_cells = k_cells
+        self.layout = k_cells
+
+    def with_cells(self, k: int) -> "_RawForm":
+        return _RawForm(k)
+
+    def check_dims(self, vecs: DataFrame, tag: str) -> None:
+        """Any dimension indexes as is."""
+
+    def assign(self, vecs: DataFrame, cents: DataFrame) -> DataFrame:
+        return _assign_cells(vecs, cents).drop("cv")
+
+    def train(self, assigned: DataFrame) -> dict:
+        return {}
+
+    def load(self, spark, target_dir: str) -> dict:
+        return {}
+
+    def rows(self, assigned: DataFrame, quant: dict) -> DataFrame:
+        return assigned
+
+    def remediate(self, spark, target_dir, vectors, **kw) -> int:
+        return ivf_index_retrain(spark, target_dir, **kw)
+
+
+class _PQForm:
+    """PQ codes: store rows (vec_id, m, cid, _kb, _gen), one per
+    subspace; the quantizer is the centroids plus the residual
+    codebooks."""
+
+    store, layout_key, kind, tag, verb = (
+        "codes", "pq_layout", "PQ-coded", "ivfpq_index", "rebuild"
+    )
+    remedy = (
+        "a commit of the other form would drop its codes store, which "
+        "holds no vectors; use the ivfpq_index_* functions "
+        "(ivfpq_index_rebuild, with the system-of-record vectors table, "
+        "to retrain) or a fresh target"
+    )
+
+    def __init__(self, k_cells: int, pq_m: int, pq_sub: int, cbk: int):
+        self.k_cells, self.pq_m, self.pq_sub, self.cbk = k_cells, pq_m, pq_sub, cbk
+        self.layout = [k_cells, pq_m, pq_sub, cbk]
+        self.rows_per_id = pq_m
+
+    def with_cells(self, k: int) -> "_PQForm":
+        return _PQForm(k, self.pq_m, self.pq_sub, self.cbk)
+
+    def check_dims(self, vecs: DataFrame, tag: str) -> None:
+        """pq_m*pq_sub must cover the vector exactly — the subspace
+        slices would otherwise silently encode only a PREFIX of each
+        residual (ADC on half the dims = quiet recall collapse, no
+        error anywhere). One delta-sized limit-1 job."""
+        n = self.pq_m * self.pq_sub
+        bad = (
+            vecs.filter(F.col("v").isNull() | (F.size("v") != n))
+            .limit(1)
+            .collect()
+        )
+        if bad:
+            dim = "NULL" if bad[0]["v"] is None else len(bad[0]["v"])
+            raise RuntimeError(
+                f"{tag}: vector dim {dim} != pq_m*pq_sub = {n} — the "
+                "subspace slices would drop trailing dimensions; fix the "
+                "layout or the source vectors"
+            )
+
+    def assign(self, vecs: DataFrame, cents: DataFrame) -> DataFrame:
+        return _assign_cells(vecs, cents).select(
+            ID, "_kb", "_gen",
+            F.zip_with(F.col("v"), F.col("cv"), lambda a, b: a - b).alias("r"),
+        )
+
+    def _subspaces(self, assigned: DataFrame) -> DataFrame:
+        return split_residual_subspaces(
+            assigned, self.pq_m, self.pq_sub, keep=[ID, "_kb", "_gen"]
+        )
+
+    def train(self, assigned: DataFrame) -> dict:
+        # the training residuals ARE the assigned rows' residuals — one
+        # assignment feeds training and encoding
+        cb = train_residual_codebooks(
+            self._subspaces(assigned), self.cbk, ID
+        ).localCheckpoint(eager=True)
+        return {"codebooks": cb.drop("cc")}
+
+    def load(self, spark, target_dir: str) -> dict:
+        return {"codebooks": spark.read.parquet(os.path.join(target_dir, "codebooks"))}
+
+    def rows(self, assigned: DataFrame, quant: dict) -> DataFrame:
+        return assign_codes(
+            self._subspaces(assigned), with_cc(quant["codebooks"]), ID
+        ).select(ID, "m", "cid", "_kb", "_gen")
+
+    def remediate(self, spark, target_dir, vectors, **kw) -> int:
+        if vectors is None:
+            raise RuntimeError(
+                "ann_index_maintain: the PQ target's advisory is firing "
+                "but no system-of-record vectors table was passed — the "
+                "codes store holds no vectors, so the rebuild needs "
+                "vectors=<the table serve-time re-rank already reads>"
+            )
+        return ivfpq_index_rebuild(spark, target_dir, vectors, **kw)
+
+
+def _form_of(meta: dict):
+    """The index form of a committed target, named by the layout key
+    its meta carries (a target without one reads as raw)."""
+    layout = meta.get("pq_layout")
+    if layout is not None:
+        return _PQForm(*(int(x) for x in layout))
+    return _RawForm(int(meta.get("k_cells") or 8))
+
+
+def _require_form(meta: dict, form_cls, tag: str, target_dir: str) -> None:
+    """Cross-form witness: a commit of one form over the other's target
+    would let the whole-dir atomic swap silently DROP the other form's
+    store and quantizers (and the next sweep_orphans reclaim their
+    pool)."""
+    committed = _form_of(meta)
+    if not isinstance(committed, form_cls) and meta.get(committed.layout_key) is not None:
+        raise RuntimeError(
+            f"{tag}: target {target_dir} is a {committed.kind} index "
+            f"(meta carries {committed.layout_key}) — {committed.remedy}"
+        )
+
+
+def _encode(spark, form, target_dir: str, vecs: DataFrame, train: bool,
+            train_iters: int, init: str = "lowest"):
+    """Assign ``vecs`` (id, v, _gen) to their cells under a quantizer
+    trained on them when ``train`` (a bootstrap batch IS the training
+    corpus; a retrain trains on the live corpus), else under the
+    committed frozen one. Returns the assigned rows — one per id,
+    checkpointed: they feed the cell counts, the witnesses, the store
+    rows and the locator — and the quantizer frames by dir name."""
+    if train:
+        cents = _train_quantizer(vecs.select(ID, "v"), form.k_cells, train_iters, init)
+    else:
+        cents = spark.read.parquet(os.path.join(target_dir, "centroids"))
+    assigned = form.assign(vecs, cents).localCheckpoint(eager=True)
+    rest = form.train(assigned) if train else form.load(spark, target_dir)
+    return assigned, {"centroids": cents, **rest}
+
+
+def _is_virgin(target_dir: str, manifest: dict | None) -> bool:
+    return manifest is None and not os.path.isdir(os.path.join(target_dir, "centroids"))
+
+
+def _write_rows(spark, form, assigned, quant, counts, target_dir, stage,
+                batch_id, manifest, touched, append=True) -> None:
+    """Commit the store rows of ``assigned`` into the stage; ``counts``
+    (the per-cell id tally) hands the writer its row tally."""
+    write_store_delta(
+        spark, form.rows(assigned, quant), target_dir, form.store, stage,
+        batch_id=batch_id, touched=touched, manifest=manifest, append=append,
+        counts=[{"_kb": b, "c": c * form.rows_per_id} for b, c in counts],
+    )
+
+
+def _append_sink(stream, target_dir, form, train_iters, warn_skew, adopt,
+                 checkpoint_dir) -> None:
+    """The append-only sink of either form: the bootstrap batch trains
+    the quantizer; every batch (bootstrap included) appends its rows
+    to the cell-bucketed store."""
+    tag = form.tag
 
     def _step(batch_df: DataFrame, batch_id: int, meta: dict, stage: str):
         spark = batch_df.sparkSession
         if batch_df.isEmpty():
             return None
         gen = _next_gen(meta)
-        if meta.get("pq_layout") is not None:
-            # cross-sink witness: the whole-dir atomic swap would
-            # silently DROP the PQ target's codes store and codebooks
-            # (and the next sweep_orphans would reclaim their pool)
-            raise RuntimeError(
-                f"ivf_index sink: target {target_dir} is a PQ-coded index "
-                "(meta carries pq_layout) — committing raw vectors over it "
-                "would destroy the codes store; use "
-                "ivfpq_index_foreach_batch or a fresh target"
-            )
+        _require_form(meta, type(form), f"{tag} sink", target_dir)
         if meta.get("cdc"):
             # cross-sink witness: a plain append neither consults nor
             # maintains the CDC target's locator sidecar — its (id →
             # cell) map would silently go stale and every later
             # delete/upsert would retire the wrong (or no) entry
             raise RuntimeError(
-                f"ivf_index sink: target {target_dir} is CDC-maintained "
+                f"{tag} sink: target {target_dir} is CDC-maintained "
                 "(meta carries cdc) — a plain append would leave the "
-                "locator sidecar stale; use "
-                "ivf_index_changes_foreach_batch (op='I') instead"
+                f"locator sidecar stale; use {tag}_changes_foreach_batch "
+                "(op='I') instead"
             )
-        _check_layout(meta, "ivf_index", "k_cells", k_cells)
-        batch = batch_df.select(
-            id_col, F.col(vec_col).cast("array<double>").alias("v")
+        _check_layout(meta, tag, form.layout_key, form.layout)
+        batch = batch_df.select(ID, F.col(VEC).cast("array<double>").alias("v"))
+        _require_unique_ids(batch, tag)
+        form.check_dims(batch, f"{tag} sink")
+        manifest = read_manifest(target_dir, form.store)
+        _require_gen_schema(manifest, form.store, tag)
+        # _gen: the committing generation (_next_gen — monotone per
+        # target, checkpoint-handoff safe) — inert for a pure-append
+        # index, load-bearing the moment the CDC sink tombstones a row
+        # (dead iff a (id, cell) tombstone with tgen > _gen exists);
+        # written by both sinks so one store schema serves both
+        # lifecycles
+        assigned, quant = _encode(
+            spark, form, target_dir,
+            batch.withColumn("_gen", F.lit(gen).cast("bigint")),
+            _is_virgin(target_dir, manifest), train_iters,
         )
-        _require_unique_ids(batch, id_col, "ivf_index")
-        cent_dir = os.path.join(target_dir, "centroids")
-        manifest = read_manifest(target_dir, "vectors")
-        _require_gen_schema(manifest, "vectors", "ivf_index")
-        if manifest is None and not os.path.isdir(cent_dir):
-            # bootstrap: this batch IS the training corpus
-            cents = _train_quantizer(batch, k_cells, train_iters, id_col)
-        else:
-            cents = spark.read.parquet(cent_dir)
-        delta = (
-            _assign_cells(batch, cents, id_col)
-            .drop("cv")
-            # _gen: the committing generation (_next_gen — monotone
-            # per target, checkpoint-handoff safe) — inert for a
-            # pure-append index, load-bearing the moment the CDC sink
-            # tombstones a row (dead iff a (id, cell) tombstone with
-            # tgen > _gen exists); written by both sinks so one
-            # vectors-store schema serves both lifecycles
-            .withColumn("_gen", F.lit(gen).cast("bigint"))
-            .localCheckpoint(
-                eager=True  # assignment feeds the guard, the commit
-            )
-        )
-        delta_counts = _cell_counts(delta)
-        touched = sorted(b for b, _ in delta_counts)
+        counts = _cell_counts(assigned)
+        touched = sorted(b for b, _ in counts)
         existing = read_store(
-            spark, target_dir, "vectors", buckets=touched, manifest=manifest
+            spark, target_dir, form.store, buckets=touched, manifest=manifest
         )
         if existing is not None:
             # duplicate witness only — the standing rows are never
             # rewritten (segment-append commit below)
             dup = (
-                delta.select(id_col)
-                .join(existing.select(id_col), id_col)
+                assigned.select(ID)
+                .join(existing.select(ID), ID)
                 .limit(1)
                 .collect()
             )
             if dup:
                 raise RuntimeError(
-                    f"ivf_index sink: id {dup[0][0]} already present in its "
+                    f"{tag} sink: id {dup[0][0]} already present in its "
                     "assigned cell — the stream re-delivered a vector outside "
                     "batch replay (appending would duplicate it); dedup "
                     "upstream or rebuild the target"
                 )
         os.makedirs(stage, exist_ok=True)
-        write_store_delta(
-            spark, delta, target_dir, "vectors", stage,
-            batch_id=batch_id, touched=touched, manifest=manifest,
-            append=True,
-        )
-        _stage_quantizers(target_dir, stage, {"centroids": cents})
+        _write_rows(spark, form, assigned, quant, counts, target_dir, stage,
+                    batch_id, manifest, touched)
+        _stage_quantizers(target_dir, stage, quant)
         return {
             "last_gen": gen,
-            "k_cells": k_cells,
+            form.layout_key: form.layout,
             **_occupancy_meta(
-                meta.get("cell_counts"), delta_counts, warn_skew=warn_skew,
+                meta.get("cell_counts"), counts, warn_skew=warn_skew,
             ),
         }
 
     _exactly_once_sink(
-        vectors, target_dir, "ivf_index", _step, adopt=adopt,
-        checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec,
+        stream, target_dir, tag, _step, adopt=adopt,
+        checkpoint_dir=checkpoint_dir,
+    )
+
+
+def ivf_index_foreach_batch(
+    vectors: DataFrame,
+    target_dir: str,
+    *,
+    k_cells: int = 8,
+    train_iters: int = 2,
+    warn_skew: float = OCCUPANCY_SKEW_WARN,
+    adopt: bool = False,
+    checkpoint_dir: str | None = None,
+) -> None:
+    """Maintain the IVF index at ``target_dir`` from an append-only
+    vector stream (rows: ``vec_id``, ``embedding`` array<float|double>).
+    The bootstrap batch trains the quantizer; every batch (bootstrap
+    included) appends its vectors to the cell-bucketed store."""
+    _append_sink(vectors, target_dir, _RawForm(k_cells), train_iters,
+                 warn_skew, adopt, checkpoint_dir)
+
+
+def ivfpq_index_foreach_batch(
+    vectors: DataFrame,
+    target_dir: str,
+    *,
+    k_cells: int = 8,
+    train_iters: int = 2,
+    pq_m: int = 4,
+    pq_sub: int = 16,
+    cbk: int = 32,
+    warn_skew: float = OCCUPANCY_SKEW_WARN,
+    adopt: bool = False,
+    checkpoint_dir: str | None = None,
+) -> None:
+    """PQ-coded twin of `ivf_index_foreach_batch` — the
+    billion-scale ingestion form (FAISS IVFPQ, by_residual=true,
+    maintained incrementally): the bootstrap batch trains the coarse
+    quantizer AND the residual codebooks (both via the shared
+    trainers — `operators.kmeans.lloyd_means`,
+    `operators.pq.train_residual_codebooks` — so the batch
+    `ann_ivfpq_topk` and this sink cannot drift), then BOTH are
+    frozen; every batch's vectors are assigned to their cell,
+    residual-encoded to ``pq_m`` codebook ids, and the CODES (one
+    (id, m, cid) row per subspace — ~``pq_sub``× smaller than the
+    float vectors) append into the cell-bucketed manifest store. The
+    raw vectors are never stored: serve-time exact re-rank reads them
+    from the caller's source table (`ivfpq_index_topk(vectors=...)`),
+    which is where they live at 100 TB anyway. Same exactly-once /
+    duplicate-id / layout-drift discipline as the raw-vector sink."""
+    _append_sink(vectors, target_dir, _PQForm(k_cells, pq_m, pq_sub, cbk),
+                 train_iters, warn_skew, adopt, checkpoint_dir)
+
+
+def _probe(spark, target_dir: str, queries: DataFrame, probe: int):
+    """Serve's probe step, shared by both forms: each query (query_id,
+    qv) picks its ``probe`` nearest cells against the broadcast
+    centroids. Returns (queries with ``qq`` = qv·qv, the probe rows
+    (query_id, qv, qq, _kb, cv = the cell's centroid), the sorted
+    probed cells)."""
+    cents = spark.read.parquet(os.path.join(target_dir, "centroids"))
+    c = cents.withColumn("cc", V.dot(F.col("c"), F.col("c")))
+    q = queries.withColumn("qq", V.dot(F.col("qv"), F.col("qv")))
+    d2c = (F.col("qq") - 2 * V.dot(F.col("qv"), F.col("c"))) + F.col("cc")
+    w_p = Window.partitionBy("query_id").orderBy(F.col("d2c"), F.col("cid"))
+    probes = (
+        q.crossJoin(F.broadcast(c.select("cid", "c", "cc")))
+        .withColumn("d2c", d2c)
+        .withColumn("rn", F.row_number().over(w_p))
+        .filter(F.col("rn") <= probe)
+        .select(
+            "query_id", "qv", "qq",
+            F.col("cid").cast("int").alias("_kb"),
+            F.col("c").alias("cv"),
+        )
+    )
+    cells = sorted(
+        int(r["_kb"]) for r in probes.select("_kb").distinct().collect()
+    )
+    return q, probes, cells
+
+
+def _ranked(pairs: DataFrame, k: int) -> DataFrame:
+    """Top-``k`` (query_id, neighbor_id, rank, l2_dist) of ``pairs``
+    (query_id, neighbor_id, d2_r = round(d²·1e9))."""
+    w_k = Window.partitionBy("query_id").orderBy("d2_r", "neighbor_id")
+    return (
+        pairs.withColumn("rank", F.row_number().over(w_k).cast("int"))
+        .filter(F.col("rank") <= k)
+        .select(
+            "query_id",
+            "neighbor_id",
+            "rank",
+            F.round(F.col("d2_r").cast("double") / F.lit(1e9), 6).alias(
+                "l2_dist"
+            ),
+        )
     )
 
 
@@ -428,21 +707,7 @@ def ivf_index_topk(
     ``_kb`` filter to the parquet scan). Distances are emitted as
     round(d2·1e9)/1e9 so ranking and values are order-free exact
     cross-engine. Returns (query_id, neighbor_id, rank, l2_dist)."""
-    cents = spark.read.parquet(os.path.join(target_dir, "centroids"))
-    c = cents.withColumn("cc", V.dot(F.col("c"), F.col("c")))
-    q = queries.withColumn("qq", V.dot(F.col("qv"), F.col("qv")))
-    d2c = (F.col("qq") - 2 * V.dot(F.col("qv"), F.col("c"))) + F.col("cc")
-    w_p = Window.partitionBy("query_id").orderBy(F.col("d2c"), F.col("cid"))
-    probes = (
-        q.crossJoin(F.broadcast(c.select("cid", "c", "cc")))
-        .withColumn("d2c", d2c)
-        .withColumn("rn", F.row_number().over(w_p))
-        .filter(F.col("rn") <= probe)
-        .select("query_id", "qv", "qq", F.col("cid").cast("int").alias("_kb"))
-    )
-    cells = sorted(
-        int(r["_kb"]) for r in probes.select("_kb").distinct().collect()
-    )
+    _q, probes, cells = _probe(spark, target_dir, queries, probe)
     manifest = read_manifest(target_dir, "vectors")
     if manifest is None:
         raise RuntimeError(
@@ -455,16 +720,12 @@ def ivf_index_topk(
         # committed index, but every probed cell is vector-empty (a
         # skewed corpus can leave trained cells unpopulated): IVF
         # serve semantics = zero candidates, not an error
-        return spark.createDataFrame(
-            [],
-            "query_id BIGINT, neighbor_id BIGINT, rank INT, l2_dist DOUBLE",
-        )
-    id_col = [c for c in vecs.columns if c not in ("v", "_kb", "_gen")][0]
+        return spark.createDataFrame([], _TOPK_SCHEMA)
     tombs = read_store(spark, target_dir, "tombs", buckets=cells)
     if tombs is not None:
         # probed-cell tombstones only; vacuum restores the
         # filter-free path (see _live_rows for the liveness rule)
-        vecs = _live_rows(vecs, tombs, id_col)
+        vecs = _live_rows(vecs, tombs)
     d2 = F.round(
         (
             (F.col("qq") - 2 * V.dot(F.col("qv"), F.col("v")))
@@ -472,69 +733,147 @@ def ivf_index_topk(
         )
         * F.lit(1e9)
     ).cast("bigint")
-    w_k = Window.partitionBy("query_id").orderBy("d2_r", "neighbor_id")
-    return (
+    return _ranked(
         vecs.join(F.broadcast(probes), "_kb")
-        .filter(F.col("query_id") != F.col(id_col))
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            d2.alias("d2_r"),
-        )
-        .withColumn("rank", F.row_number().over(w_k).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "rank",
-            F.round(F.col("d2_r").cast("double") / F.lit(1e9), 6).alias(
-                "l2_dist"
-            ),
-        )
+        .filter(F.col("query_id") != F.col(ID))
+        .select("query_id", F.col(ID).alias("neighbor_id"), d2.alias("d2_r")),
+        k,
     )
 
 
-def _live_rows(rows: DataFrame, tombs: DataFrame, id_col: str) -> DataFrame:
+def ivfpq_index_topk(
+    spark,
+    target_dir: str,
+    queries: DataFrame,
+    vectors: DataFrame,
+    *,
+    probe: int = 4,
+    cand: int = 50,
+    k: int = 5,
+) -> DataFrame:
+    """Serve from the PQ-coded index: queries probe their ``probe``
+    nearest cells, build per-(cell, subspace) asymmetric-distance
+    tables of their OWN residual against the frozen codebooks
+    (broadcast), score the probed cells' CODES by table lookups
+    (ADC — the index scan reads codes only, pruned to the probed
+    cells), and the ADC top-``cand`` are re-ranked by EXACT L2
+    against ``vectors`` (the caller's raw-vector table): the
+    ≤ |queries|×cand candidate ids are collected driver-side and
+    PUSHED DOWN as an id-membership filter on the vectors scan
+    (plan-asserted), so the re-rank reads candidate rows, not the
+    corpus. Returns (query_id, neighbor_id, rank, l2_dist),
+    BIGINT-staged like the batch twin."""
+    # read-only: serve must not run `_open_target`, whose stage cleanup
+    # and orphan sweep would race a live writer
+    form = _form_of(_read_sink_meta(target_dir))
+    if not isinstance(form, _PQForm):
+        raise RuntimeError(
+            f"ivfpq_index serve: no committed index at {target_dir}"
+        )
+    cb = with_cc(spark.read.parquet(os.path.join(target_dir, "codebooks")))
+    q, probes, cells = _probe(spark, target_dir, queries, probe)
+    qres = probes.select(
+        "query_id", "_kb",
+        F.zip_with(F.col("qv"), F.col("cv"), lambda a, b: a - b).alias("r"),
+    )
+    qsub = split_residual_subspaces(
+        qres, form.pq_m, form.pq_sub, keep=["query_id", "_kb"]
+    )
+    d2q = (F.col("rvv") - 2 * V.dot(F.col("rv"), F.col("c"))) + F.col("cc")
+    dtab = qsub.join(F.broadcast(cb), "m").select(
+        "query_id", "_kb", "m", "cid",
+        F.round(d2q * F.lit(1e9)).cast("bigint").alias("d2_r"),
+    )
+    codes = read_store(spark, target_dir, "codes", buckets=cells)
+    if codes is None:
+        # committed index, but every probed cell is code-empty
+        return spark.createDataFrame([], _TOPK_SCHEMA)
+    tombs = read_store(spark, target_dir, "tombs", buckets=cells)
+    if tombs is not None:
+        # filtered BEFORE the ADC so retired codes are never scored
+        # (see _live_rows for the liveness rule)
+        codes = _live_rows(codes, tombs)
+    adc = (
+        codes.join(F.broadcast(dtab), ["_kb", "m", "cid"])
+        .filter(F.col("query_id") != F.col(ID))
+        .groupBy("query_id", ID)
+        .agg(F.sum("d2_r").alias("adc_r"))
+    )
+    w_c = Window.partitionBy("query_id").orderBy("adc_r", ID)
+    cand_df = (
+        adc.withColumn("rn", F.row_number().over(w_c))
+        .filter(F.col("rn") <= cand)
+        .select("query_id", ID)
+    )
+    # candidate ids driver-side (≤ |queries|×cand rows — already the
+    # size of the final answer×cand) so the raw-vector read is a
+    # PUSHED-DOWN membership filter, not a corpus scan
+    cand_ids = [
+        r[0] for r in cand_df.select(ID).distinct().collect()
+    ]
+    ev = vectors.filter(
+        vectors[ID].isin(cand_ids)
+    ).withColumn("vv", V.dot(F.col("v"), F.col("v")))
+    d2x = F.round(
+        (
+            (F.col("qq") - 2 * V.dot(F.col("qv"), F.col("v")))
+            + F.col("vv")
+        )
+        * F.lit(1e9)
+    ).cast("bigint")
+    return _ranked(
+        ev.join(F.broadcast(cand_df), ev[ID] == cand_df[ID])
+        .drop(cand_df[ID])
+        .join(F.broadcast(q.select("query_id", "qv", "qq")), "query_id")
+        .select("query_id", F.col(ID).alias("neighbor_id"), d2x.alias("d2_r")),
+        k,
+    )
+
+
+def _live_rows(rows: DataFrame, tombs: DataFrame) -> DataFrame:
     """The merge-on-read tombstone filter — THE definition of 'live',
     shared by serve, vacuum and retrain so the three can never
     disagree: a row is dead iff a tombstone for its (id, cell) with
     ``tgen > _gen`` exists (strict, so an upsert re-landing in the
     same cell — same gen as its predecessor's tombstone — survives).
     The dead set is tombstone-sized and broadcast."""
-    dead = tombs.groupBy(id_col, "_kb").agg(F.max("tgen").alias("_tg"))
+    dead = tombs.groupBy(ID, "_kb").agg(F.max("tgen").alias("_tg"))
     return (
-        rows.join(F.broadcast(dead), [id_col, "_kb"], "left")
+        rows.join(F.broadcast(dead), [ID, "_kb"], "left")
         .filter(F.col("_tg").isNull() | (F.col("_gen") >= F.col("_tg")))
         .select(*rows.columns)  # committed column order (schema guard)
     )
 
 
-def _typed_empty_locator(ops: DataFrame, id_col: str) -> DataFrame:
+def _key_bucket():
+    """The locator's key bucket of an id."""
+    return F.pmod(F.hash(F.col(ID)), F.lit(LOC_BUCKETS)).cast("int")
+
+
+def _typed_empty_locator(ops: DataFrame) -> DataFrame:
     return (
-        ops.select(id_col)
+        ops.select(ID)
         .withColumn("cell", F.lit(0).cast("int"))
         .withColumn("_kb", F.lit(0).cast("int"))
         .filter(F.lit(False))
     )
 
 
-def _cdc_validate_ops(
-    batch_df: DataFrame, id_col: str, vec_col: str, op_col: str, tag: str
-) -> DataFrame:
-    """Normalize + witness a change batch (shared by the raw and PQ
-    CDC sinks): op ∈ {I,U,D}, unique ids within the batch, vectors
-    present on I/U. Returns the checkpointed (op, id, v) frame."""
+def _cdc_validate_ops(batch_df: DataFrame, tag: str) -> DataFrame:
+    """Normalize + witness a change batch: op ∈ {I,U,D}, unique ids
+    within the batch, vectors present on I/U. Returns the checkpointed
+    (op, id, v) frame."""
     ops = batch_df.select(
-        F.upper(F.col(op_col)).alias("op"),
-        id_col,
-        F.col(vec_col).cast("array<double>").alias("v"),
+        F.upper(F.col(OP)).alias("op"),
+        ID,
+        F.col(VEC).cast("array<double>").alias("v"),
     ).localCheckpoint(eager=True)  # feeds every witness + commit job
     bad_op = ops.filter(~F.col("op").isin("I", "U", "D")).limit(1).collect()
     if bad_op:
         raise RuntimeError(
             f"{tag} sink: op {bad_op[0]['op']!r} outside " "{'I','U','D'}"
         )
-    _require_unique_ids(ops, id_col, tag)
+    _require_unique_ids(ops, tag)
     bad_v = (
         ops.filter(F.col("op").isin("I", "U") & F.col("v").isNull())
         .limit(1)
@@ -542,7 +881,7 @@ def _cdc_validate_ops(
     )
     if bad_v:
         raise RuntimeError(
-            f"{tag} sink: id {bad_v[0][id_col]} has op "
+            f"{tag} sink: id {bad_v[0][ID]} has op "
             f"{bad_v[0]['op']} but a null vector — only deletes may "
             "omit the vector"
         )
@@ -553,39 +892,20 @@ def _cdc_locate_and_retire(
     spark,
     target_dir: str,
     ops: DataFrame,
-    id_col: str,
-    loc_buckets: int,
     tag: str,
     *,
     store: str,
     store_manifest: dict | None,
-    backfill_pairs,
 ):
-    """Shared locator-side machinery of the CDC sinks: resolve the
-    batch ids' key buckets, read (or one-time-backfill via
-    ``backfill_pairs()`` → (id, cell) rows) the locator, run the
-    exact insert-over-present / delete-of-unknown witnesses, compute
-    the retired (id, old-cell) entries, and run the locator↔store
-    divergence witness against the ``store``'s retired cells.
-    Returns (kk expr, touched_kk, loc_manifest, loc_backfill,
-    old_loc, retire, retire_counts, retire_cells)."""
-    if store_manifest is not None and store_manifest.get("schema"):
-        fields = [
-            f["name"]
-            for f in json.loads(store_manifest["schema"])["fields"]
-        ]
-        if "_gen" not in fields:
-            # a store committed before the generation column cannot
-            # order tombstones against its rows: a delete-only batch
-            # would commit tombstones that every later serve/vacuum
-            # crashes on (unresolved `_gen`), permanently wedging the
-            # target — refuse the adoption instead
-            raise RuntimeError(
-                f"{tag} sink: target's {store} store predates the _gen "
-                "generation column — tombstone ordering against its rows "
-                "cannot be established; rebuild the target from the stream"
-            )
-    kk = F.pmod(F.hash(F.col(id_col)), F.lit(loc_buckets)).cast("int")
+    """Locator-side machinery of the CDC sink: resolve the batch ids'
+    key buckets, read (or one-time-backfill from the ``store``'s
+    (id, cell) pairs) the locator, run the exact insert-over-present /
+    delete-of-unknown witnesses, compute the retired (id, old-cell)
+    entries, and run the locator↔store divergence witness against the
+    ``store``'s retired cells. Returns (kk expr, touched_kk,
+    loc_manifest, loc_backfill, old_loc, retire, retire_counts,
+    retire_cells)."""
+    kk = _key_bucket()
     touched_kk = sorted(
         int(r["b"]) for r in ops.select(kk.alias("b")).distinct().collect()
     )
@@ -601,23 +921,25 @@ def _cdc_locate_and_retire(
             buckets=touched_kk, manifest=loc_manifest,
         )
         if old_loc is None:
-            old_loc = _typed_empty_locator(ops, id_col)
+            old_loc = _typed_empty_locator(ops)
     elif loc_backfill:
         # one-time adoption of a plain-append target: derive the full
         # (id → cell) map from the index store (corpus-sized, ONCE; a
         # plain target has no tombstones, so every stored row is
         # live). This batch then commits the FULL locator; later
         # batches are touched-bucket-sized.
-        old_loc = backfill_pairs().withColumn("_kb", kk)
+        old_loc = _store_pairs(
+            read_store(spark, target_dir, store, manifest=store_manifest)
+        ).withColumn("_kb", kk)
     else:
-        old_loc = _typed_empty_locator(ops, id_col)
+        old_loc = _typed_empty_locator(ops)
     # witnesses the locator makes EXACT (delta-sized joins; the
     # locator side is touched-bucket pruned, or the one-time full
     # backfill)
     ins_over = (
         ops.filter(F.col("op") == "I")
-        .select(id_col)
-        .join(old_loc.select(id_col), id_col)
+        .select(ID)
+        .join(old_loc.select(ID), ID)
         .limit(1)
         .collect()
     )
@@ -630,8 +952,8 @@ def _cdc_locate_and_retire(
         )
     del_unknown = (
         ops.filter(F.col("op") == "D")
-        .select(id_col)
-        .join(old_loc.select(id_col), id_col, "left_anti")
+        .select(ID)
+        .join(old_loc.select(ID), ID, "left_anti")
         .limit(1)
         .collect()
     )
@@ -644,8 +966,8 @@ def _cdc_locate_and_retire(
     # retired entries: U/D ids the locator holds → (id, old cell)
     retire = (
         ops.filter(F.col("op").isin("U", "D"))
-        .select(id_col)
-        .join(old_loc.select(id_col, "cell"), id_col)
+        .select(ID)
+        .join(old_loc.select(ID, "cell"), ID)
         .localCheckpoint(eager=True)
     )
     retire_counts = [
@@ -666,13 +988,7 @@ def _cdc_locate_and_retire(
         missing = (
             retire
             if standing is None
-            else retire.join(
-                standing.select(
-                    id_col, F.col("_kb").alias("cell")
-                ).distinct(),
-                [id_col, "cell"],
-                "left_anti",
-            )
+            else retire.join(_store_pairs(standing), [ID, "cell"], "left_anti")
         ).limit(1).collect()
         if missing:
             raise RuntimeError(
@@ -693,7 +1009,6 @@ def _cdc_commit_tombs_and_locator(
     stage: str,
     batch_id: int,
     gen: int,
-    id_col: str,
     ops: DataFrame,
     old_loc: DataFrame,
     new_pairs: DataFrame,
@@ -704,14 +1019,14 @@ def _cdc_commit_tombs_and_locator(
     retire: DataFrame,
     retire_cells: list,
 ) -> None:
-    """Shared commit tail of the CDC sinks: tombstone append for the
-    retired entries + locator rewrite (survivors ⊎ ``new_pairs`` —
-    (id, cell) rows of this batch's inserted/upserted entries), both
-    into the caller's staging dir."""
+    """Commit tail of the CDC sink: tombstone append for the retired
+    entries + locator rewrite (survivors ⊎ ``new_pairs`` — (id, cell)
+    rows of this batch's inserted/upserted entries), both into the
+    caller's staging dir."""
     tombs_manifest = read_manifest(target_dir, "tombs")
     if retire_cells:
         tomb_delta = retire.select(
-            id_col,
+            ID,
             F.col("cell").cast("int").alias("_kb"),
             F.lit(gen).cast("bigint").alias("tgen"),
         )
@@ -723,11 +1038,11 @@ def _cdc_commit_tombs_and_locator(
     else:
         carry_store(target_dir, "tombs", stage)
     survivors = old_loc.join(
-        F.broadcast(ops.select(id_col)), id_col, "left_anti"
+        F.broadcast(ops.select(ID)), ID, "left_anti"
     )
     final_loc = new_pairs.withColumn("_kb", kk)
-    new_loc = survivors.select(id_col, "cell", "_kb").unionByName(
-        final_loc.select(id_col, "cell", "_kb")
+    new_loc = survivors.select(ID, "cell", "_kb").unionByName(
+        final_loc.select(ID, "cell", "_kb")
     )
     loc_touched = (
         sorted(
@@ -746,32 +1061,99 @@ def _cdc_commit_tombs_and_locator(
     )
 
 
+def _changes_sink(changes, target_dir, form, train_iters, warn_skew, adopt,
+                  checkpoint_dir) -> None:
+    """The CDC sink of either form (see
+    `ivf_index_changes_foreach_batch` for the contract)."""
+    tag = f"{form.tag}_changes"
+
+    def _step(batch_df: DataFrame, batch_id: int, meta: dict, stage: str):
+        spark = batch_df.sparkSession
+        if batch_df.isEmpty():
+            return None
+        gen = _next_gen(meta)
+        _require_form(meta, type(form), f"{tag} sink", target_dir)
+        _check_layout(meta, tag, form.layout_key, form.layout)
+        _check_layout(meta, tag, "loc_buckets", LOC_BUCKETS)
+        ops = _cdc_validate_ops(batch_df, tag)
+        present = ops.filter(F.col("op").isin("I", "U")).select(ID, "v")
+        form.check_dims(present, f"{tag} sink")
+        manifest = read_manifest(target_dir, form.store)
+        _require_gen_schema(manifest, form.store, tag)
+        train = _is_virgin(target_dir, manifest)
+        if train and present.isEmpty():
+            raise RuntimeError(
+                f"{tag} sink: virgin target and the first batch carries "
+                "no I/U vectors — nothing to train the quantizer on"
+            )
+        (
+            kk, touched_kk, loc_manifest, loc_backfill,
+            old_loc, retire, retire_counts, retire_cells,
+        ) = _cdc_locate_and_retire(
+            spark, target_dir, ops, tag,
+            store=form.store, store_manifest=manifest,
+        )
+        # --- new rows under the frozen quantizer --------------------
+        assigned, quant = _encode(
+            spark, form, target_dir,
+            present.withColumn("_gen", F.lit(gen).cast("bigint")),
+            train, train_iters,
+        )
+        counts = _cell_counts(assigned)
+        touched = sorted(b for b, _ in counts)
+        # --- commit: store append + tombs append + locator rewrite --
+        os.makedirs(stage, exist_ok=True)
+        if touched:
+            _write_rows(spark, form, assigned, quant, counts, target_dir,
+                        stage, batch_id, manifest, touched)
+        else:
+            carry_store(target_dir, form.store, stage)
+        _cdc_commit_tombs_and_locator(
+            spark, target_dir, stage, batch_id, gen, ops,
+            old_loc, assigned.select(ID, F.col("_kb").alias("cell")),
+            kk, touched_kk, loc_backfill, loc_manifest,
+            retire, retire_cells,
+        )
+        _stage_quantizers(target_dir, stage, quant)
+        return {
+            "last_gen": gen,
+            form.layout_key: form.layout,
+            "loc_buckets": LOC_BUCKETS,
+            "cdc": True,
+            **_occupancy_meta(
+                meta.get("cell_counts"), counts, retire_counts,
+                warn_skew=warn_skew,
+            ),
+        }
+
+    _exactly_once_sink(
+        changes, target_dir, tag, _step, adopt=adopt,
+        checkpoint_dir=checkpoint_dir,
+    )
+
+
 def ivf_index_changes_foreach_batch(
     changes: DataFrame,
     target_dir: str,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    op_col: str = "op",
     k_cells: int = 8,
     train_iters: int = 2,
-    loc_buckets: int = 32,
     warn_skew: float = OCCUPANCY_SKEW_WARN,
     adopt: bool = False,
-    timeout_sec: int = STREAM_TIMEOUT_SEC,
     checkpoint_dir: str | None = None,
 ) -> None:
     """Maintain the IVF index from a CHANGE stream — rows
-    (``op_col`` ∈ {'I','U','D'}, ``id_col``, ``vec_col``; D rows may
+    (``op`` ∈ {'I','U','D'}, ``vec_id``, ``embedding``; D rows may
     carry a null vector, which is the whole point: a delete arrives
     without the vector, so the cell holding its standing row must
     come from the ``locator/`` sidecar). Per batch:
 
     - inserts/upserts assign against the FROZEN centroids and
       SEGMENT-APPEND into the cell-bucketed vectors store, ``_gen`` =
-      batch id (cost: the batch — identical to the append sink);
+      the batch's generation (cost: the batch — identical to the
+      append sink);
     - deletes and upserts-over-present APPEND a tombstone (id,
-      old-cell, tgen = batch id) retiring the standing entry —
+      old-cell, tgen = the generation) retiring the standing entry —
       standing rows are never read or rewritten on the change path;
     - the locator rewrites exactly the key buckets the batch's ids
       hash to (survivors ⊎ final entries — the
@@ -797,93 +1179,36 @@ def ivf_index_changes_foreach_batch(
     the plain append sink refuses the target (meta ``cdc`` flag) —
     the two lifecycles cannot interleave and strand the locator
     stale."""
+    _changes_sink(changes, target_dir, _RawForm(k_cells), train_iters,
+                  warn_skew, adopt, checkpoint_dir)
 
-    def _step(batch_df: DataFrame, batch_id: int, meta: dict, stage: str):
-        spark = batch_df.sparkSession
-        if batch_df.isEmpty():
-            return None
-        gen = _next_gen(meta)
-        if meta.get("pq_layout") is not None:
-            raise RuntimeError(
-                f"ivf_index_changes sink: target {target_dir} is a PQ-coded "
-                "index (meta carries pq_layout) — committing raw vectors "
-                "over it would destroy the codes store; use a fresh target"
-            )
-        _check_layout(meta, "ivf_index_changes", "k_cells", k_cells)
-        _check_layout(meta, "ivf_index_changes", "loc_buckets", loc_buckets)
-        ops = _cdc_validate_ops(
-            batch_df, id_col, vec_col, op_col, "ivf_index_changes"
-        )
-        cent_dir = os.path.join(target_dir, "centroids")
-        vec_manifest = read_manifest(target_dir, "vectors")
-        present = ops.filter(F.col("op").isin("I", "U")).select(id_col, "v")
-        if vec_manifest is None and not os.path.isdir(cent_dir):
-            if present.isEmpty():
-                raise RuntimeError(
-                    "ivf_index_changes sink: virgin target and the first "
-                    "batch carries no I/U vectors — nothing to train the "
-                    "quantizer on"
-                )
-            cents = _train_quantizer(present, k_cells, train_iters, id_col)
-        else:
-            cents = spark.read.parquet(cent_dir)
 
-        def backfill_pairs():
-            allv = read_store(
-                spark, target_dir, "vectors", manifest=vec_manifest
-            )
-            return allv.select(id_col, F.col("_kb").alias("cell"))
-
-        (
-            kk, touched_kk, loc_manifest, loc_backfill,
-            old_loc, retire, retire_counts, retire_cells,
-        ) = _cdc_locate_and_retire(
-            spark, target_dir, ops, id_col, loc_buckets,
-            "ivf_index_changes",
-            store="vectors", store_manifest=vec_manifest,
-            backfill_pairs=backfill_pairs,
-        )
-        # --- new rows under the frozen quantizer --------------------
-        delta = (
-            _assign_cells(present, cents, id_col)
-            .drop("cv")
-            .withColumn("_gen", F.lit(gen).cast("bigint"))
-            .localCheckpoint(eager=True)
-        )
-        delta_counts = _cell_counts(delta)
-        touched = sorted(b for b, _ in delta_counts)
-        # --- commit: vectors append + tombs append + locator rewrite
-        os.makedirs(stage, exist_ok=True)
-        if touched:
-            write_store_delta(
-                spark, delta, target_dir, "vectors", stage,
-                batch_id=batch_id, touched=touched, manifest=vec_manifest,
-                append=True,
-            )
-        else:
-            carry_store(target_dir, "vectors", stage)
-        _cdc_commit_tombs_and_locator(
-            spark, target_dir, stage, batch_id, gen, id_col, ops,
-            old_loc, delta.select(id_col, F.col("_kb").alias("cell")),
-            kk, touched_kk, loc_backfill, loc_manifest,
-            retire, retire_cells,
-        )
-        _stage_quantizers(target_dir, stage, {"centroids": cents})
-        return {
-            "last_gen": gen,
-            "k_cells": k_cells,
-            "loc_buckets": loc_buckets,
-            "cdc": True,
-            **_occupancy_meta(
-                meta.get("cell_counts"), delta_counts, retire_counts,
-                warn_skew=warn_skew,
-            ),
-        }
-
-    _exactly_once_sink(
-        changes, target_dir, "ivf_index_changes", _step, adopt=adopt,
-        checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec,
-    )
+def ivfpq_index_changes_foreach_batch(
+    changes: DataFrame,
+    target_dir: str,
+    *,
+    k_cells: int = 8,
+    train_iters: int = 2,
+    pq_m: int = 4,
+    pq_sub: int = 16,
+    cbk: int = 32,
+    warn_skew: float = OCCUPANCY_SKEW_WARN,
+    adopt: bool = False,
+    checkpoint_dir: str | None = None,
+) -> None:
+    """CDC form of the PQ-coded index — `ivf_index_changes_foreach_
+    batch`'s billion-scale twin, the same sink body over the PQ form:
+    I/U vectors are residual-encoded under the FROZEN coarse quantizer
+    + codebooks and their CODES segment-append; deletes and superseded
+    upserts tombstone the retired (id, old-cell) entry via the same
+    locator sidecar, serve (`ivfpq_index_topk`) filters probed-cell
+    tombstones before ADC so retired codes are never scored, and
+    `ivfpq_index_vacuum` physically drops dead code rows. Re-rank
+    note: serve reads raw vectors from the CALLER's vectors table —
+    after an upsert that table must reflect the new embedding (it is
+    the system of record; the index stores codes only)."""
+    _changes_sink(changes, target_dir, _PQForm(k_cells, pq_m, pq_sub, cbk),
+                  train_iters, warn_skew, adopt, checkpoint_dir)
 
 
 def ivf_index_vacuum(spark, target_dir: str) -> int:
@@ -902,7 +1227,7 @@ def ivf_index_vacuum(spark, target_dir: str) -> int:
     store is resolved from the committed meta); ``ivfpq_index_vacuum``
     is the same function under the PQ name."""
     meta = _open_target(target_dir)
-    store = "codes" if meta.get("pq_layout") else "vectors"
+    store = _form_of(meta).store
     tombs_manifest = read_manifest(target_dir, "tombs")
     if not store_has_files(tombs_manifest):
         return 0
@@ -920,10 +1245,7 @@ def ivf_index_vacuum(spark, target_dir: str) -> int:
             f"ivf_index_vacuum: tombstones reference cells {dead_cells[:8]} "
             f"but the {store} store holds no rows there — the stores diverged"
         )
-    id_col = [
-        c for c in vecs.columns if c not in ("v", "_kb", "_gen", "m", "cid")
-    ][0]
-    live = _live_rows(vecs, tombs, id_col)
+    live = _live_rows(vecs, tombs)
     batch_id = int(meta.get("last_batch_id", 0))
     stage = f"{target_dir}.stage-vacuum-{batch_id}"
     os.makedirs(stage, exist_ok=True)
@@ -944,6 +1266,156 @@ def ivf_index_vacuum(spark, target_dir: str) -> int:
 #: PQ-name alias — the vacuum resolves the store from the committed
 #: meta, so one implementation serves both index forms.
 ivfpq_index_vacuum = ivf_index_vacuum
+
+
+def _empty_corpus(tag: str) -> RuntimeError:
+    # a fully-tombstoned corpus would train ZERO centroids and commit
+    # an empty quantizer — after which every later insert assigns
+    # against nothing, emits an empty delta, and records its files as
+    # applied: the rows would vanish silently and be unreplayable
+    return RuntimeError(
+        f"{tag}: the live corpus is empty (every row tombstoned) — "
+        "training on it would commit an empty quantizer that silently "
+        "swallows all future inserts; rebuild the target from the "
+        "stream instead"
+    )
+
+
+def _store_corpus(live: DataFrame, form, tag: str) -> DataFrame:
+    """A raw index's live corpus: its own live store rows."""
+    if live.isEmpty():
+        raise _empty_corpus(tag)
+    return live.select(ID, "v", "_gen")
+
+
+def _source_corpus(vectors: DataFrame):
+    """A PQ index's live corpus: the live ids' vectors from the
+    system-of-record table ``vectors`` (vec_id, v)."""
+
+    def corpus(live: DataFrame, form, tag: str) -> DataFrame:
+        # one (id, _gen) row per live vector (its pq_m code rows share
+        # one generation by construction — they land in one commit)
+        gen_of = (
+            live.groupBy(ID)
+            .agg(F.max("_gen").alias("_gen"))
+            .localCheckpoint(eager=True)  # feeds the witness join + encode
+        )
+        if gen_of.isEmpty():
+            raise _empty_corpus(tag)
+        src = vectors.select(ID, "v")
+        missing = gen_of.join(src, ID, "left_anti").limit(1).collect()
+        if missing:
+            raise RuntimeError(
+                f"{tag}: live id {missing[0][0]} is not in the "
+                "system-of-record vectors table — the source must cover "
+                "every live index row (rebuilding without it would "
+                "silently drop the row); fix the source table or delete "
+                "the id first"
+            )
+        # no broadcast hint: the live id set is CORPUS-sized (one row
+        # per live vector) — at index scale it must shuffle-join
+        # against the source table (AQE still broadcasts it when it is
+        # actually small)
+        out = src.join(gen_of, ID)
+        _require_unique_ids(out, tag)
+        form.check_dims(out, tag)
+        return out
+
+    return corpus
+
+
+def _retrain(spark, target_dir: str, form_cls, corpus, k_cells, train_iters,
+             init, warn_skew) -> int:
+    """Retrain/rebuild of either form: re-train the quantizer on the
+    live corpus (``corpus(live store rows, form, tag)`` → (id, v,
+    _gen)), re-assign every live row, and commit in one atomic swap:
+    every committed and new bucket rewritten, tombstones cleared, the
+    locator (on a CDC target) rewritten to the new cells, the
+    quantizers written, occupancy rebuilt. Returns the rows
+    re-assigned."""
+    tag = f"{form_cls.tag}_{form_cls.verb}"
+    if init not in ("lowest", "spread"):
+        # before any I/O or side-effectful maintenance: a bad literal
+        # is known bad at call time
+        raise ValueError(
+            f"{tag}: init={init!r} — use 'lowest' (the certified "
+            "default) or 'spread' (farthest-first coarse seeding for "
+            "drifted multi-cluster corpora; see "
+            "operators.kmeans.farthest_first_seeds)"
+        )
+    meta = _open_target(target_dir)
+    _require_form(meta, form_cls, tag, target_dir)
+    manifest = read_manifest(target_dir, form_cls.store)
+    if not store_has_files(manifest):
+        raise RuntimeError(
+            f"{tag}: no committed {form_cls.store} at {target_dir}"
+        )
+    # the retrain reads _gen per live row to preserve CDC ordering, so
+    # a pre-_gen target must refuse actionably, not with an
+    # unresolved-column error
+    _require_gen_schema(manifest, form_cls.store, tag)
+    form = _form_of(meta)
+    form = form.with_cells(int(k_cells or form.k_cells))
+    rows = read_store(spark, target_dir, form.store, manifest=manifest)
+    tombs_manifest = read_manifest(target_dir, "tombs")
+    tombs = (
+        read_store(spark, target_dir, "tombs", manifest=tombs_manifest)
+        if store_has_files(tombs_manifest)
+        else None
+    )
+    live = rows if tombs is None else _live_rows(rows, tombs)
+    assigned, quant = _encode(
+        spark, form, target_dir, corpus(live, form, tag), True,
+        train_iters, init,
+    )
+    counts = _cell_counts(assigned)
+    batch_id = int(meta.get("last_batch_id", 0))
+    stage = f"{target_dir}.stage-{form.verb}-{batch_id}"
+    os.makedirs(stage, exist_ok=True)
+    # every committed bucket is replaced (old cells dissolve into the
+    # new partitioning)
+    _write_rows(
+        spark, form, assigned, quant, counts, target_dir, stage, batch_id,
+        manifest,
+        sorted({int(b) for b in manifest["buckets"]} | {b for b, _ in counts}),
+        append=False,
+    )
+    if tombs is not None:
+        write_store_delta(
+            spark, tombs.filter(F.lit(False)), target_dir, "tombs", stage,
+            batch_id=batch_id,
+            touched=sorted(int(b) for b in tombs_manifest["buckets"]),
+            manifest=tombs_manifest,
+        )
+    else:
+        carry_store(target_dir, "tombs", stage)
+    loc_manifest = read_manifest(target_dir, "locator")
+    if loc_manifest is not None:
+        new_loc = assigned.select(ID, F.col("_kb").alias("cell")).withColumn(
+            "_kb", _key_bucket()
+        )
+        write_store_delta(
+            spark, new_loc, target_dir, "locator", stage,
+            batch_id=batch_id,
+            touched=sorted(
+                set(int(b) for b in loc_manifest["buckets"])
+                | {
+                    int(r["_kb"])
+                    for r in new_loc.select("_kb").distinct().collect()
+                }
+            ),
+            manifest=loc_manifest,
+        )
+    for sub, df in quant.items():
+        df.write.mode("overwrite").parquet(os.path.join(stage, sub))
+    new_meta = {
+        k: v for k, v in meta.items()
+        if k not in ("occupancy_warning", "occupancy_skew", "cell_counts")
+    }
+    new_meta[form.layout_key] = form.layout
+    new_meta.update(_occupancy_meta(None, counts, warn_skew=warn_skew))
+    _commit_target(stage, target_dir, batch_id, new_meta)
+    return sum(c for _, c in counts)
 
 
 def ivf_index_retrain(
@@ -978,576 +1450,20 @@ def ivf_index_retrain(
     `ivfpq_index_rebuild` (the same contract, corpus re-read from the
     caller's system-of-record vectors table). Returns the number of
     live rows re-assigned."""
-    if init not in ("lowest", "spread"):
-        # before any I/O or side-effectful maintenance: a bad literal
-        # is known bad at call time
-        raise ValueError(
-            f"ivf_index_retrain: init={init!r} — use 'lowest' (the "
-            "certified default) or 'spread' (farthest-first seeding "
-            "for drifted multi-cluster corpora; see "
-            "operators.kmeans.farthest_first_seeds)"
-        )
-    meta = _open_target(target_dir)
-    if meta.get("pq_layout"):
-        raise RuntimeError(
-            "ivf_index_retrain: target is a PQ-coded index — its store "
-            "holds codes, not vectors; use ivfpq_index_rebuild with the "
-            "system-of-record vectors table instead"
-        )
-    vec_manifest = read_manifest(target_dir, "vectors")
-    if not store_has_files(vec_manifest):
-        raise RuntimeError(
-            f"ivf_index_retrain: no committed vectors at {target_dir}"
-        )
-    # same pre-upgrade witness the append sinks carry: retrain reads
-    # _gen per live row to preserve CDC ordering, so a pre-_gen target
-    # must refuse actionably, not with an unresolved-column error
-    _require_gen_schema(vec_manifest, "vectors", "ivf_index_retrain")
-    k = int(k_cells or meta.get("k_cells") or 8)
-    vecs = read_store(spark, target_dir, "vectors", manifest=vec_manifest)
-    id_col = [c for c in vecs.columns if c not in ("v", "_kb", "_gen")][0]
-    tombs_manifest = read_manifest(target_dir, "tombs")
-    tombs = (
-        read_store(spark, target_dir, "tombs", manifest=tombs_manifest)
-        if store_has_files(tombs_manifest)
-        else None
-    )
-    live = vecs if tombs is None else _live_rows(vecs, tombs, id_col)
-    if live.isEmpty():
-        # a fully-tombstoned corpus would train ZERO centroids and
-        # commit an empty quantizer — after which every later insert
-        # assigns against nothing, emits an empty delta, and records
-        # its files as applied: the rows would vanish silently and be
-        # unreplayable. Refuse instead.
-        raise RuntimeError(
-            "ivf_index_retrain: the live corpus is empty (every row "
-            "tombstoned) — retraining would commit an empty quantizer "
-            "that silently swallows all future inserts; rebuild the "
-            "target from the stream instead"
-        )
-    cents = _train_quantizer(
-        live.select(id_col, "v"), k, train_iters, id_col, init
-    )
-    gen_of = live.select(id_col, "_gen")
-    reassigned = (
-        _assign_cells(live.select(id_col, "v"), cents, id_col)
-        .drop("cv")
-        .join(gen_of, id_col)
-        .select(id_col, "v", "_kb", "_gen")
-        .localCheckpoint(eager=True)  # feeds counts, store, locator
-    )
-    new_counts = _cell_counts(reassigned)
-    n_rows = sum(c for _, c in new_counts)
-    batch_id = int(meta.get("last_batch_id", 0))
-    stage = f"{target_dir}.stage-retrain-{batch_id}"
-    os.makedirs(stage, exist_ok=True)
-    # every committed bucket is replaced (old cells dissolve into the
-    # new partitioning)
-    old_buckets = sorted(int(b) for b in vec_manifest["buckets"])
-    all_touched = sorted(set(old_buckets) | {b for b, _ in new_counts})
-    write_store_delta(
-        spark, reassigned, target_dir, "vectors", stage,
-        batch_id=batch_id, touched=all_touched, manifest=vec_manifest,
-    )
-    if tombs is not None:
-        write_store_delta(
-            spark, tombs.filter(F.lit(False)), target_dir, "tombs", stage,
-            batch_id=batch_id,
-            touched=sorted(int(b) for b in tombs_manifest["buckets"]),
-            manifest=tombs_manifest,
-        )
-    else:
-        carry_store(target_dir, "tombs", stage)
-    loc_manifest = read_manifest(target_dir, "locator")
-    if loc_manifest is not None:
-        loc_buckets = int(meta.get("loc_buckets", 32))
-        kk = F.pmod(F.hash(F.col(id_col)), F.lit(loc_buckets)).cast("int")
-        new_loc = reassigned.select(
-            id_col, F.col("_kb").alias("cell")
-        ).withColumn("_kb", kk)
-        write_store_delta(
-            spark, new_loc, target_dir, "locator", stage,
-            batch_id=batch_id,
-            touched=sorted(
-                set(int(b) for b in loc_manifest["buckets"])
-                | {
-                    int(r["_kb"])
-                    for r in new_loc.select("_kb").distinct().collect()
-                }
-            ),
-            manifest=loc_manifest,
-        )
-    cents.write.mode("overwrite").parquet(os.path.join(stage, "centroids"))
-    new_meta = dict(meta)
-    new_meta["k_cells"] = k
-    new_meta.pop("occupancy_warning", None)
-    new_meta.pop("occupancy_skew", None)
-    new_meta.pop("cell_counts", None)
-    new_meta.update(_occupancy_meta(None, new_counts, warn_skew=warn_skew))
-    _commit_target(stage, target_dir, batch_id, new_meta)
-    return n_rows
+    return _retrain(spark, target_dir, _RawForm, _store_corpus, k_cells,
+                    train_iters, init, warn_skew)
 
-
-def _pq_residual_subspaces(batch, cents, id_col, pq_m, pq_sub):
-    """Assign ``batch`` (id, v) against the frozen centroids and split
-    the residuals into PQ subspaces — the encode front half shared by
-    the plain and CDC PQ sinks (one implementation, no drift)."""
-    from epe_data_wrangling_spark.operators.pq import (
-        split_residual_subspaces,
-    )
-
-    asg = _assign_cells(batch, cents, id_col)
-    res = asg.select(
-        id_col, "_kb",
-        F.zip_with(F.col("v"), F.col("cv"), lambda a, b: a - b).alias("r"),
-    )
-    return split_residual_subspaces(res, pq_m, pq_sub, keep=[id_col, "_kb"])
-
-
-def ivfpq_index_foreach_batch(
-    vectors: DataFrame,
-    target_dir: str,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k_cells: int = 8,
-    train_iters: int = 2,
-    pq_m: int = 4,
-    pq_sub: int = 16,
-    cbk: int = 32,
-    warn_skew: float = OCCUPANCY_SKEW_WARN,
-    adopt: bool = False,
-    timeout_sec: int = STREAM_TIMEOUT_SEC,
-    checkpoint_dir: str | None = None,
-) -> None:
-    """PQ-coded twin of `ivf_index_foreach_batch` — the
-    billion-scale ingestion form (FAISS IVFPQ, by_residual=true,
-    maintained incrementally): the bootstrap batch trains the coarse
-    quantizer AND the residual codebooks (both via the shared
-    trainers — `operators.kmeans.lloyd_means`,
-    `operators.pq.train_residual_codebooks` — so the batch
-    `ann_ivfpq_topk` and this sink cannot drift), then BOTH are
-    frozen; every batch's vectors are assigned to their cell,
-    residual-encoded to ``pq_m`` codebook ids, and the CODES (one
-    (id, m, cid) row per subspace — ~``pq_sub``× smaller than the
-    float vectors) append into the cell-bucketed manifest store. The
-    raw vectors are never stored: serve-time exact re-rank reads them
-    from the caller's source table (`ivfpq_index_topk(vectors=...)`),
-    which is where they live at 100 TB anyway. Same exactly-once /
-    duplicate-id / layout-drift discipline as the raw-vector sink."""
-
-    from epe_data_wrangling_spark.operators.pq import (
-        assign_codes,
-        split_residual_subspaces,
-        train_residual_codebooks,
-        with_cc,
-    )
-
-    def _step(batch_df: DataFrame, batch_id: int, meta: dict, stage: str):
-        spark = batch_df.sparkSession
-        if batch_df.isEmpty():
-            return None
-        gen = _next_gen(meta)
-        if meta.get("cdc"):
-            # cross-sink witness (as in the raw sink): a plain append
-            # neither consults nor maintains the CDC target's locator
-            raise RuntimeError(
-                f"ivfpq_index sink: target {target_dir} is CDC-maintained "
-                "(meta carries cdc) — a plain append would leave the "
-                "locator sidecar stale; use "
-                "ivfpq_index_changes_foreach_batch (op='I') instead"
-            )
-        if meta.get("k_cells") is not None:
-            # cross-sink witness (twin of the raw sink's): swapping a
-            # PQ commit over a raw-vector target would drop its store
-            raise RuntimeError(
-                f"ivfpq_index sink: target {target_dir} is a raw-vector "
-                "index (meta carries k_cells) — committing codes over it "
-                "would destroy the vectors store; use "
-                "ivf_index_foreach_batch or a fresh target"
-            )
-        layout = [k_cells, pq_m, pq_sub, cbk]  # [k_cells, m, sub, cbk]
-        _check_layout(meta, "ivfpq_index", "pq_layout", layout)
-        batch = batch_df.select(
-            id_col, F.col(vec_col).cast("array<double>").alias("v")
-        )
-        _require_unique_ids(batch, id_col, "ivfpq_index")
-        # pq_m*pq_sub must cover the vector exactly — the subspace
-        # slices would otherwise silently encode only a PREFIX of each
-        # residual (ADC on half the dims = quiet recall collapse, no
-        # error anywhere). One delta-sized limit-1 job.
-        bad = batch.filter(F.size("v") != pq_m * pq_sub).limit(1).collect()
-        if bad:
-            raise RuntimeError(
-                f"ivfpq_index sink: vector dim {len(bad[0]['v'])} != "
-                f"pq_m*pq_sub = {pq_m * pq_sub} — the subspace slices "
-                "would drop trailing dimensions; fix the layout"
-            )
-        cent_dir = os.path.join(target_dir, "centroids")
-        cb_dir = os.path.join(target_dir, "codebooks")
-        manifest = read_manifest(target_dir, "codes")
-        _require_gen_schema(manifest, "codes", "ivfpq_index")
-        bootstrap = manifest is None and not os.path.isdir(cent_dir)
-        if bootstrap:
-            # bootstrap: this batch trains BOTH frozen stages
-            cents = _train_quantizer(batch, k_cells, train_iters, id_col)
-        else:
-            cents = spark.read.parquet(cent_dir)
-        rsub = _pq_residual_subspaces(batch, cents, id_col, pq_m, pq_sub)
-        if bootstrap:
-            # the training residuals ARE this batch's residuals — one
-            # assignment/split, reused for training and encoding (the
-            # bootstrap batch is the largest one by contract)
-            rsub = rsub.localCheckpoint(eager=True)
-            cb = train_residual_codebooks(
-                rsub, cbk, id_col
-            ).localCheckpoint(eager=True)
-        else:
-            cb = with_cc(spark.read.parquet(cb_dir))
-        delta = (
-            assign_codes(rsub, cb, id_col)
-            .select(id_col, "m", "cid", "_kb")
-            .withColumn("_gen", F.lit(gen).cast("bigint"))
-            .localCheckpoint(eager=True)
-        )
-        delta_counts = _cell_counts(delta, pq_m)
-        touched = sorted(b for b, _ in delta_counts)
-        existing = read_store(
-            spark, target_dir, "codes", buckets=touched, manifest=manifest
-        )
-        if existing is not None:
-            # duplicate witness only — standing codes never rewritten
-            dup = (
-                delta.select(id_col)
-                .distinct()
-                .join(existing.select(id_col).distinct(), id_col)
-                .limit(1)
-                .collect()
-            )
-            if dup:
-                raise RuntimeError(
-                    f"ivfpq_index sink: id {dup[0][0]} already present in "
-                    "its assigned cell — the stream re-delivered a vector "
-                    "outside batch replay (appending would duplicate its "
-                    "codes); dedup upstream or rebuild the target"
-                )
-        os.makedirs(stage, exist_ok=True)
-        write_store_delta(
-            spark, delta, target_dir, "codes", stage,
-            batch_id=batch_id, touched=touched, manifest=manifest,
-            append=True,
-        )
-        _stage_quantizers(
-            target_dir, stage, {"centroids": cents, "codebooks": cb.drop("cc")}
-        )
-        return {
-            "last_gen": gen,
-            "pq_layout": layout,
-            **_occupancy_meta(
-                meta.get("cell_counts"), delta_counts, warn_skew=warn_skew,
-            ),
-        }
-
-    _exactly_once_sink(
-        vectors, target_dir, "ivfpq_index", _step, adopt=adopt,
-        checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec,
-    )
-
-
-def ivfpq_index_topk(
-    spark,
-    target_dir: str,
-    queries: DataFrame,
-    vectors: DataFrame,
-    *,
-    probe: int = 4,
-    cand: int = 50,
-    k: int = 5,
-) -> DataFrame:
-    """Serve from the PQ-coded index: queries probe their ``probe``
-    nearest cells, build per-(cell, subspace) asymmetric-distance
-    tables of their OWN residual against the frozen codebooks
-    (broadcast), score the probed cells' CODES by table lookups
-    (ADC — the index scan reads codes only, pruned to the probed
-    cells), and the ADC top-``cand`` are re-ranked by EXACT L2
-    against ``vectors`` (the caller's raw-vector table): the
-    ≤ |queries|×cand candidate ids are collected driver-side and
-    PUSHED DOWN as an id-membership filter on the vectors scan
-    (plan-asserted), so the re-rank reads candidate rows, not the
-    corpus. Returns (query_id, neighbor_id, rank, l2_dist),
-    BIGINT-staged like the batch twin."""
-    from epe_data_wrangling_spark.operators.pq import (
-        split_residual_subspaces,
-        with_cc,
-    )
-
-    # read-only: serve must not run `_open_target`, whose stage cleanup
-    # and orphan sweep would race a live writer
-    meta = _read_sink_meta(target_dir)
-    layout = meta.get("pq_layout")
-    if layout is None:
-        raise RuntimeError(
-            f"ivfpq_index serve: no committed index at {target_dir}"
-        )
-    _k_cells, pq_m, pq_sub, _cbk = layout
-    cents = spark.read.parquet(os.path.join(target_dir, "centroids"))
-    cb = with_cc(spark.read.parquet(os.path.join(target_dir, "codebooks")))
-    c = cents.withColumn("cc", V.dot(F.col("c"), F.col("c")))
-    q = queries.withColumn("qq", V.dot(F.col("qv"), F.col("qv")))
-    d2c = (F.col("qq") - 2 * V.dot(F.col("qv"), F.col("c"))) + F.col("cc")
-    w_p = Window.partitionBy("query_id").orderBy(F.col("d2c"), F.col("cid"))
-    probes = (
-        q.crossJoin(F.broadcast(c.select("cid", "c", "cc")))
-        .withColumn("d2c", d2c)
-        .withColumn("rn", F.row_number().over(w_p))
-        .filter(F.col("rn") <= probe)
-        .select(
-            "query_id", "qv", "qq",
-            F.col("cid").cast("int").alias("_kb"),
-            F.col("c").alias("cv"),
-        )
-    )
-    qres = probes.select(
-        "query_id", "_kb",
-        F.zip_with(F.col("qv"), F.col("cv"), lambda a, b: a - b).alias("r"),
-    )
-    qsub = split_residual_subspaces(
-        qres, pq_m, pq_sub, keep=["query_id", "_kb"]
-    )
-    d2q = (F.col("rvv") - 2 * V.dot(F.col("rv"), F.col("c"))) + F.col("cc")
-    dtab = qsub.join(F.broadcast(cb), "m").select(
-        "query_id", "_kb", "m", "cid",
-        F.round(d2q * F.lit(1e9)).cast("bigint").alias("d2_r"),
-    )
-    cells = sorted(
-        int(r["_kb"]) for r in probes.select("_kb").distinct().collect()
-    )
-    codes = read_store(spark, target_dir, "codes", buckets=cells)
-    if codes is None:
-        # committed index, but every probed cell is code-empty
-        return spark.createDataFrame(
-            [],
-            "query_id BIGINT, neighbor_id BIGINT, rank INT, l2_dist DOUBLE",
-        )
-    id_col = [
-        c for c in codes.columns if c not in ("m", "cid", "_kb", "_gen")
-    ][0]
-    tombs = read_store(spark, target_dir, "tombs", buckets=cells)
-    if tombs is not None:
-        # filtered BEFORE the ADC so retired codes are never scored
-        # (see _live_rows for the liveness rule)
-        codes = _live_rows(codes, tombs, id_col)
-    adc = (
-        codes.join(F.broadcast(dtab), ["_kb", "m", "cid"])
-        .filter(F.col("query_id") != F.col(id_col))
-        .groupBy("query_id", id_col)
-        .agg(F.sum("d2_r").alias("adc_r"))
-    )
-    w_c = Window.partitionBy("query_id").orderBy("adc_r", id_col)
-    cand_df = (
-        adc.withColumn("rn", F.row_number().over(w_c))
-        .filter(F.col("rn") <= cand)
-        .select("query_id", id_col)
-    )
-    # candidate ids driver-side (≤ |queries|×cand rows — already the
-    # size of the final answer×cand) so the raw-vector read is a
-    # PUSHED-DOWN membership filter, not a corpus scan
-    cand_ids = [
-        r[0] for r in cand_df.select(id_col).distinct().collect()
-    ]
-    ev = vectors.filter(
-        vectors[id_col].isin(cand_ids)
-    ).withColumn("vv", V.dot(F.col("v"), F.col("v")))
-    d2x = F.round(
-        (
-            (F.col("qq") - 2 * V.dot(F.col("qv"), F.col("v")))
-            + F.col("vv")
-        )
-        * F.lit(1e9)
-    ).cast("bigint")
-    w_k = Window.partitionBy("query_id").orderBy("d2_r", "neighbor_id")
-    return (
-        ev.join(F.broadcast(cand_df), ev[id_col] == cand_df[id_col])
-        .drop(cand_df[id_col])
-        .join(F.broadcast(q.select("query_id", "qv", "qq")), "query_id")
-        .select(
-            "query_id",
-            F.col(id_col).alias("neighbor_id"),
-            d2x.alias("d2_r"),
-        )
-        .withColumn("rank", F.row_number().over(w_k).cast("int"))
-        .filter(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "rank",
-            F.round(F.col("d2_r").cast("double") / F.lit(1e9), 6).alias(
-                "l2_dist"
-            ),
-        )
-    )
-
-
-def ivfpq_index_changes_foreach_batch(
-    changes: DataFrame,
-    target_dir: str,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    op_col: str = "op",
-    k_cells: int = 8,
-    train_iters: int = 2,
-    pq_m: int = 4,
-    pq_sub: int = 16,
-    cbk: int = 32,
-    loc_buckets: int = 32,
-    warn_skew: float = OCCUPANCY_SKEW_WARN,
-    adopt: bool = False,
-    timeout_sec: int = STREAM_TIMEOUT_SEC,
-    checkpoint_dir: str | None = None,
-) -> None:
-    """CDC form of the PQ-coded index — `ivf_index_changes_foreach_
-    batch`'s billion-scale twin: I/U vectors are residual-encoded
-    under the FROZEN coarse quantizer + codebooks and their CODES
-    segment-append; deletes and superseded upserts tombstone the
-    retired (id, old-cell) entry via the same locator sidecar, serve
-    (`ivfpq_index_topk`) filters probed-cell tombstones before ADC so
-    retired codes are never scored, and `ivfpq_index_vacuum`
-    physically drops dead code rows. One shared implementation for
-    the witnesses, locator, tombstones and vacuum
-    (`_cdc_validate_ops` / `_cdc_locate_and_retire` /
-    `_cdc_commit_tombs_and_locator`), so the raw and PQ delete
-    contracts cannot drift. Re-rank note: serve reads raw vectors
-    from the CALLER's vectors table — after an upsert that table must
-    reflect the new embedding (it is the system of record; the index
-    stores codes only)."""
-    from epe_data_wrangling_spark.operators.pq import (
-        assign_codes,
-        train_residual_codebooks,
-        with_cc,
-    )
-
-    def _step(batch_df: DataFrame, batch_id: int, meta: dict, stage: str):
-        spark = batch_df.sparkSession
-        if batch_df.isEmpty():
-            return None
-        gen = _next_gen(meta)
-        if meta.get("k_cells") is not None:
-            raise RuntimeError(
-                f"ivfpq_index_changes sink: target {target_dir} is a "
-                "raw-vector index (meta carries k_cells) — committing codes "
-                "over it would destroy the vectors store; use "
-                "ivf_index_changes_foreach_batch or a fresh target"
-            )
-        layout = [k_cells, pq_m, pq_sub, cbk]  # [k_cells, m, sub, cbk]
-        _check_layout(meta, "ivfpq_index_changes", "pq_layout", layout)
-        _check_layout(meta, "ivfpq_index_changes", "loc_buckets", loc_buckets)
-        ops = _cdc_validate_ops(
-            batch_df, id_col, vec_col, op_col, "ivfpq_index_changes"
-        )
-        present = ops.filter(F.col("op").isin("I", "U")).select(id_col, "v")
-        bad = present.filter(F.size("v") != pq_m * pq_sub).limit(1).collect()
-        if bad:
-            raise RuntimeError(
-                f"ivfpq_index_changes sink: vector dim {len(bad[0]['v'])} "
-                f"!= pq_m*pq_sub = {pq_m * pq_sub} — the subspace slices "
-                "would drop trailing dimensions; fix the layout"
-            )
-        cent_dir = os.path.join(target_dir, "centroids")
-        cb_dir = os.path.join(target_dir, "codebooks")
-        codes_manifest = read_manifest(target_dir, "codes")
-        bootstrap = codes_manifest is None and not os.path.isdir(cent_dir)
-        if bootstrap:
-            if present.isEmpty():
-                raise RuntimeError(
-                    "ivfpq_index_changes sink: virgin target and the first "
-                    "batch carries no I/U vectors — nothing to train the "
-                    "quantizer/codebooks on"
-                )
-            cents = _train_quantizer(present, k_cells, train_iters, id_col)
-            rsub = _pq_residual_subspaces(
-                present, cents, id_col, pq_m, pq_sub
-            ).localCheckpoint(eager=True)
-            cb = train_residual_codebooks(
-                rsub, cbk, id_col
-            ).localCheckpoint(eager=True)
-        else:
-            cents = spark.read.parquet(cent_dir)
-            cb = with_cc(spark.read.parquet(cb_dir))
-            rsub = _pq_residual_subspaces(
-                present, cents, id_col, pq_m, pq_sub
-            )
-
-        def backfill_pairs():
-            allc = read_store(
-                spark, target_dir, "codes", manifest=codes_manifest
-            )
-            return allc.select(
-                id_col, F.col("_kb").alias("cell")
-            ).distinct()
-
-        (
-            kk, touched_kk, loc_manifest, loc_backfill,
-            old_loc, retire, retire_counts, retire_cells,
-        ) = _cdc_locate_and_retire(
-            spark, target_dir, ops, id_col, loc_buckets,
-            "ivfpq_index_changes",
-            store="codes", store_manifest=codes_manifest,
-            backfill_pairs=backfill_pairs,
-        )
-        delta = (
-            assign_codes(rsub, cb, id_col)
-            .select(id_col, "m", "cid", "_kb")
-            .withColumn("_gen", F.lit(gen).cast("bigint"))
-            .localCheckpoint(eager=True)
-        )
-        delta_counts = _cell_counts(delta, pq_m)
-        touched = sorted(b for b, _ in delta_counts)
-        os.makedirs(stage, exist_ok=True)
-        if touched:
-            write_store_delta(
-                spark, delta, target_dir, "codes", stage,
-                batch_id=batch_id, touched=touched, manifest=codes_manifest,
-                append=True,
-            )
-        else:
-            carry_store(target_dir, "codes", stage)
-        _cdc_commit_tombs_and_locator(
-            spark, target_dir, stage, batch_id, gen, id_col, ops,
-            old_loc,
-            delta.select(id_col, F.col("_kb").alias("cell")).distinct(),
-            kk, touched_kk, loc_backfill, loc_manifest,
-            retire, retire_cells,
-        )
-        _stage_quantizers(
-            target_dir, stage, {"centroids": cents, "codebooks": cb.drop("cc")}
-        )
-        return {
-            "last_gen": gen,
-            "pq_layout": layout,
-            "loc_buckets": loc_buckets,
-            "cdc": True,
-            **_occupancy_meta(
-                meta.get("cell_counts"), delta_counts, retire_counts,
-                warn_skew=warn_skew,
-            ),
-        }
-
-    _exactly_once_sink(
-        changes, target_dir, "ivfpq_index_changes", _step, adopt=adopt,
-        checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec,
-    )
 
 def ivfpq_index_rebuild(
     spark, target_dir: str, vectors: DataFrame, *,
-    id_col: str = "vec_id", k_cells: int | None = None,
+    k_cells: int | None = None,
     train_iters: int = 2, init: str = "lowest",
     warn_skew: float = OCCUPANCY_SKEW_WARN,
 ) -> int:
     """Drift remediation for the PQ-CODED index — the rebuild
     `ivf_index_retrain` points PQ targets at: the codes store holds no
     vectors, so re-training means going back to the SYSTEM OF RECORD
-    (``vectors``: the caller's raw-vector table, (``id_col``, ``v``
+    (``vectors``: the caller's raw-vector table, (``vec_id``, ``v``
     array<double>) — the same table serve-time exact re-rank already
     reads). The index's own stores contribute exactly one thing: the
     LIVE id set (codes minus tombstones under the shared `_live_rows`
@@ -1580,164 +1496,9 @@ def ivfpq_index_rebuild(
     duplicate source ids and a source dim != pq_m·pq_sub refuse (the
     plain sink's layout witness, re-checked because the corpus is
     re-read from outside the index)."""
-    from epe_data_wrangling_spark.operators.pq import (
-        assign_codes,
-        train_residual_codebooks,
-    )
+    return _retrain(spark, target_dir, _PQForm, _source_corpus(vectors),
+                    k_cells, train_iters, init, warn_skew)
 
-    if init not in ("lowest", "spread"):
-        # before any I/O or side-effectful maintenance: a bad literal
-        # is known bad at call time
-        raise ValueError(
-            f"ivfpq_index_rebuild: init={init!r} — use 'lowest' (the "
-            "certified default) or 'spread' (farthest-first coarse "
-            "seeding for drifted multi-cluster corpora; the residual "
-            "codebooks keep the lowest-id init — cell subtraction "
-            "removes the drift component the coarse stage absorbs)"
-        )
-    meta = _open_target(target_dir)
-    layout = meta.get("pq_layout")
-    if layout is None:
-        raise RuntimeError(
-            "ivfpq_index_rebuild: target is a raw-vector index (no "
-            "pq_layout) — its store holds the vectors themselves; use "
-            "ivf_index_retrain"
-        )
-    _k_old, pq_m, pq_sub, cbk = (int(x) for x in layout)
-    k = int(k_cells or _k_old)
-    codes_manifest = read_manifest(target_dir, "codes")
-    if not store_has_files(codes_manifest):
-        raise RuntimeError(
-            f"ivfpq_index_rebuild: no committed codes at {target_dir}"
-        )
-    # same pre-upgrade witness the append sinks carry: the rebuild
-    # reads _gen per live code row to preserve CDC ordering, so a
-    # pre-_gen target must refuse actionably
-    _require_gen_schema(codes_manifest, "codes", "ivfpq_index_rebuild")
-    codes = read_store(spark, target_dir, "codes", manifest=codes_manifest)
-    tombs_manifest = read_manifest(target_dir, "tombs")
-    tombs = (
-        read_store(spark, target_dir, "tombs", manifest=tombs_manifest)
-        if store_has_files(tombs_manifest)
-        else None
-    )
-    live_codes = codes if tombs is None else _live_rows(codes, tombs, id_col)
-    # one (id, _gen) row per live vector (its pq_m code rows share one
-    # generation by construction — they land in one commit)
-    gen_of = (
-        live_codes.groupBy(id_col)
-        .agg(F.max("_gen").alias("_gen"))
-        .localCheckpoint(eager=True)  # feeds the witness join + encode
-    )
-    if gen_of.isEmpty():
-        raise RuntimeError(
-            "ivfpq_index_rebuild: the live corpus is empty (every row "
-            "tombstoned) — rebuilding would commit an empty quantizer "
-            "that silently swallows all future inserts; rebuild the "
-            "target from the stream instead"
-        )
-    src = vectors.select(id_col, "v")
-    missing = gen_of.join(src, id_col, "left_anti").limit(1).collect()
-    if missing:
-        raise RuntimeError(
-            f"ivfpq_index_rebuild: live id {missing[0][0]} is not in the "
-            "system-of-record vectors table — the source must cover every "
-            "live index row (rebuilding without it would silently drop "
-            "the row); fix the source table or delete the id first"
-        )
-    # no broadcast hint: the live id set is CORPUS-sized (one row per
-    # live vector) — at index scale it must shuffle-join against the
-    # source table (AQE still broadcasts it when it is actually small)
-    live = src.join(gen_of.select(id_col), id_col)
-    _require_unique_ids(live, id_col, "ivfpq_index_rebuild")
-    bad = (
-        live.filter(
-            F.col("v").isNull() | (F.size("v") != pq_m * pq_sub)
-        )
-        .limit(1)
-        .collect()
-    )
-    if bad:
-        dim = "NULL" if bad[0]["v"] is None else len(bad[0]["v"])
-        raise RuntimeError(
-            f"ivfpq_index_rebuild: source vector dim {dim} "
-            f"!= pq_m*pq_sub = {pq_m * pq_sub} — the subspace slices "
-            "would drop trailing dimensions; fix the source table"
-        )
-    cents = _train_quantizer(live, k, train_iters, id_col, init)
-    # one assignment/split feeds BOTH codebook training and encoding —
-    # the bootstrap path's idiom (the rebuild corpus IS the training
-    # corpus, by definition of rebuild-from-source)
-    rsub = _pq_residual_subspaces(
-        live, cents, id_col, pq_m, pq_sub
-    ).localCheckpoint(eager=True)
-    cb = train_residual_codebooks(rsub, cbk, id_col).localCheckpoint(
-        eager=True
-    )
-    recoded = (
-        assign_codes(rsub, cb, id_col)
-        .select(id_col, "m", "cid", "_kb")
-        .join(gen_of, id_col)
-        .select(id_col, "m", "cid", "_kb", "_gen")  # committed order
-        .localCheckpoint(eager=True)  # feeds counts, store, locator
-    )
-    delta_counts = _cell_counts(recoded, pq_m)
-    n_rows = sum(c for _, c in delta_counts)
-    batch_id = int(meta.get("last_batch_id", 0))
-    stage = f"{target_dir}.stage-rebuild-{batch_id}"
-    os.makedirs(stage, exist_ok=True)
-    # every committed bucket is replaced (old cells dissolve into the
-    # new partitioning)
-    old_buckets = sorted(int(b) for b in codes_manifest["buckets"])
-    all_touched = sorted(set(old_buckets) | {b for b, _ in delta_counts})
-    write_store_delta(
-        spark, recoded, target_dir, "codes", stage,
-        batch_id=batch_id, touched=all_touched, manifest=codes_manifest,
-    )
-    if tombs is not None:
-        write_store_delta(
-            spark, tombs.filter(F.lit(False)), target_dir, "tombs", stage,
-            batch_id=batch_id,
-            touched=sorted(int(b) for b in tombs_manifest["buckets"]),
-            manifest=tombs_manifest,
-        )
-    else:
-        carry_store(target_dir, "tombs", stage)
-    loc_manifest = read_manifest(target_dir, "locator")
-    if loc_manifest is not None:
-        loc_buckets = int(meta.get("loc_buckets", 32))
-        kk = F.pmod(F.hash(F.col(id_col)), F.lit(loc_buckets)).cast("int")
-        new_loc = (
-            recoded.select(id_col, F.col("_kb").alias("cell"))
-            .distinct()
-            .withColumn("_kb", kk)
-        )
-        write_store_delta(
-            spark, new_loc, target_dir, "locator", stage,
-            batch_id=batch_id,
-            touched=sorted(
-                set(int(b) for b in loc_manifest["buckets"])
-                | {
-                    int(r["_kb"])
-                    for r in new_loc.select("_kb").distinct().collect()
-                }
-            ),
-            manifest=loc_manifest,
-        )
-    cents.write.mode("overwrite").parquet(os.path.join(stage, "centroids"))
-    cb.drop("cc").write.mode("overwrite").parquet(
-        os.path.join(stage, "codebooks")
-    )
-    new_meta = dict(meta)
-    new_meta["pq_layout"] = [k, pq_m, pq_sub, cbk]
-    new_meta.pop("occupancy_warning", None)
-    new_meta.pop("occupancy_skew", None)
-    new_meta.pop("cell_counts", None)
-    new_meta.update(
-        _occupancy_meta(None, delta_counts, warn_skew=warn_skew)
-    )
-    _commit_target(stage, target_dir, batch_id, new_meta)
-    return n_rows
 
 def ann_index_maintain(
     spark, target_dir: str, vectors: DataFrame | None = None, *,
@@ -1783,8 +1544,8 @@ def ann_index_maintain(
     # <target>.old-N — reading meta without opening the target first
     # would report a half-swapped index as a healthy virgin sink
     meta = _open_target(target_dir)
-    store = "codes" if meta.get("pq_layout") else "vectors"
-    if not store_has_files(read_manifest(target_dir, store)):
+    form = _form_of(meta)
+    if not store_has_files(read_manifest(target_dir, form.store)):
         # refuse loudly like the sibling entry points: a typo'd path
         # in a maintenance loop must not report 'healthy' forever
         raise RuntimeError(
@@ -1801,13 +1562,9 @@ def ann_index_maintain(
             # remediation return so loop callers can key on it safely
         }
     tuned = float(warning.get("threshold", OCCUPANCY_SKEW_WARN))
-    layout = meta.get("pq_layout")
-    k_committed = int(
-        layout[0] if layout is not None else (meta.get("k_cells") or 8)
-    )
-    if init == "spread" and k_committed > SPREAD_SEED_MAX_K:
+    if init == "spread" and form.k_cells > SPREAD_SEED_MAX_K:
         warnings.warn(
-            f"ann_index_maintain: committed k_cells={k_committed} exceeds "
+            f"ann_index_maintain: committed k_cells={form.k_cells} exceeds "
             f"the farthest-first seeding bound ({SPREAD_SEED_MAX_K}: the "
             "accumulated min-dist expression is O(k) deep and codegen "
             "cost dominates past it) — falling back to init='lowest' for "
@@ -1816,25 +1573,11 @@ def ann_index_maintain(
             stacklevel=2,
         )
         init = "lowest"
-    if layout is not None:
-        if vectors is None:
-            raise RuntimeError(
-                "ann_index_maintain: the PQ target's advisory is firing "
-                "but no system-of-record vectors table was passed — the "
-                "codes store holds no vectors, so the rebuild needs "
-                "vectors=<the table serve-time re-rank already reads>"
-            )
-        n = ivfpq_index_rebuild(
-            spark, target_dir, vectors, init=init,
-            train_iters=train_iters, warn_skew=tuned,
-        )
-        action = "rebuild"
-    else:
-        n = ivf_index_retrain(
-            spark, target_dir, init=init, train_iters=train_iters,
-            warn_skew=tuned,
-        )
-        action = "retrain"
+    n = form.remediate(
+        spark, target_dir, vectors, init=init, train_iters=train_iters,
+        warn_skew=tuned,
+    )
+    action = form.verb
     new_meta = _open_target(target_dir)
     skew_before = warning["skew"]
     skew_after = new_meta.get("occupancy_skew")

@@ -74,7 +74,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from epe_data_wrangling_spark.streaming.ops import (
-    STREAM_TIMEOUT_SEC,
     _additive_merge,
     _check_layout,
     _exactly_once_sink,
@@ -116,7 +115,6 @@ def epe_monthly_refresh(
     target_dir: str,
     *,
     checkpoint_dir: str | None = None,
-    timeout_sec: int = STREAM_TIMEOUT_SEC,
 ) -> tuple[DataFrame, DataFrame]:
     """Run the landing-zone stream to completion (availableNow) and
     return ``(fact, annual)`` as batch DataFrames: the standing
@@ -196,7 +194,7 @@ def epe_monthly_refresh(
 
     _exactly_once_sink(
         stream, target_dir, "epe_monthly", _step, provenance=_drop_files,
-        checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec,
+        checkpoint_dir=checkpoint_dir,
     )
     _check_layout(_read_sink_meta(target_dir), "epe_monthly", "layout", LAYOUT)
     fact = _read(spark, target_dir, "snapshot").select(*FACT_DIMS, "valor")

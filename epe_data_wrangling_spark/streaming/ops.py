@@ -68,6 +68,16 @@ from epe_data_wrangling_spark.streaming.manifest import (
 #: harness needs tighter or looser bounds.
 STREAM_TIMEOUT_SEC: int = int(os.environ.get("EPE_STREAM_TIMEOUT_SEC", "900"))
 
+#: Column prefix of the before-image on an op-log row (``prev_<c>``).
+PREV_PREFIX = "prev_"
+
+#: Group value an outer join view gives the S-sourced group columns of
+#: an R row with no S match.
+NULL_GROUP = "(none)"
+
+#: Stateful shuffle partitions of a `run_to_memory` query (see there).
+STATE_PARTITIONS = 8
+
 
 def with_watermark(events: DataFrame, delay: str) -> DataFrame:
     """Event-time watermark on the streaming path; no-op for batch
@@ -228,8 +238,6 @@ def run_to_memory(
     name: str,
     *,
     output_mode: str = "complete",
-    timeout_sec: int = STREAM_TIMEOUT_SEC,
-    state_partitions: int | None = 8,
 ) -> DataFrame:
     """Execute a streaming plan to completion with availableNow and
     return the materialized result as a batch DataFrame.
@@ -238,28 +246,24 @@ def run_to_memory(
     driver's collect-and-compare contract: process everything
     available, one final state flush, read the memory sink back.
 
-    ``state_partitions`` sizes the stateful shuffle for THIS query
+    `STATE_PARTITIONS` sizes the stateful shuffle for THIS query
     (applied to ``spark.sql.shuffle.partitions`` around start and
     restored): streaming has no AQE, the state-store partition count
     is frozen into the first checkpoint, and every partition pays
     per-micro-batch store/commit overhead — so a production job sizes
-    it to expected KEY CARDINALITY at submission, exactly what this
-    parameter models. The harness corpora carry thousands of state
-    keys at most, where 8 right-sizes; pass None to inherit the
-    session setting (measured at sf0.1: 32 partitions cost ~2× the
-    wall-time of 8 on the tumbling query, all of it fixed per-
-    partition state overhead). Results are partition-count-invariant
-    either way. The set/restore mutates the SHARED session conf:
-    safe for the sequential harness/driver, but callers running
-    queries concurrently on one session should pass None and size
-    the session conf themselves. The run's checkpoint is a temporary
-    dir, removed once the query has stopped (the memory sink holds the
-    result)."""
+    it to expected KEY CARDINALITY at submission. The harness corpora
+    carry thousands of state keys at most, where 8 right-sizes
+    (measured at sf0.1: 32 partitions cost ~2× the wall-time of 8 on
+    the tumbling query, all of it fixed per-partition state
+    overhead). Results are partition-count-invariant either way. The
+    set/restore mutates the SHARED session conf: safe for the
+    sequential harness/driver, not for queries run concurrently on
+    one session. The run's checkpoint is a temporary dir, removed
+    once the query has stopped (the memory sink holds the result)."""
     spark = result.sparkSession
     checkpoint = tempfile.mkdtemp(prefix=f"ckpt_{name}_")
     prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if state_partitions is not None:
-        spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+    spark.conf.set("spark.sql.shuffle.partitions", str(STATE_PARTITIONS))
     try:
         q = (
             result.writeStream.format("memory")
@@ -270,19 +274,18 @@ def run_to_memory(
             .start()
         )
         try:
-            finished = q.awaitTermination(timeout_sec)
-            if not finished:
+            if not q.awaitTermination(STREAM_TIMEOUT_SEC):
                 # never hand back a partially-filled sink as if complete
                 raise TimeoutError(
-                    f"streaming query {name!r} still running after {timeout_sec}s"
+                    f"streaming query {name!r} still running after "
+                    f"{STREAM_TIMEOUT_SEC}s"
                 )
         finally:
             q.stop()
     finally:
         # restore only after the query is fully done: micro-batch
         # planning reads the conf asynchronously after start()
-        if state_partitions is not None:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
         shutil.rmtree(checkpoint, ignore_errors=True)
     return result.sparkSession.table(name)
 
@@ -293,7 +296,6 @@ def upsert_latest_foreach_batch(
     *,
     key_cols: list[str],
     order_cols: list[str],
-    timeout_sec: int = STREAM_TIMEOUT_SEC,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Streaming upsert (CDC-apply) via ``foreachBatch``: each
@@ -334,7 +336,7 @@ def upsert_latest_foreach_batch(
         latest.write.mode("overwrite").parquet(stage)  # full materialize first
         _atomic_swap(stage, target_dir, batch_id)
 
-    _run_foreach_batch(events, _apply, checkpoint_dir, "upsert", timeout_sec)
+    _run_foreach_batch(events, _apply, checkpoint_dir, "upsert")
     return events.sparkSession.read.parquet(target_dir)
 
 
@@ -797,7 +799,7 @@ def _commit_target(stage: str, target_dir: str, batch_id: int, meta: dict) -> No
     _atomic_swap(stage, target_dir, batch_id)
 
 
-def _run_foreach_batch(stream, apply_fn, checkpoint_dir, tag: str, timeout_sec: int) -> None:
+def _run_foreach_batch(stream, apply_fn, checkpoint_dir, tag: str) -> None:
     """Drive a foreachBatch sink to completion under availableNow.
     Without a ``checkpoint_dir`` the run checkpoints into a temporary
     dir that is removed afterwards: its path is never handed out, so
@@ -811,9 +813,8 @@ def _run_foreach_batch(stream, apply_fn, checkpoint_dir, tag: str, timeout_sec: 
             .start()
         )
         try:
-            finished = q.awaitTermination(timeout_sec)
-            if not finished:
-                raise TimeoutError(f"{tag} stream still running after {timeout_sec}s")
+            if not q.awaitTermination(STREAM_TIMEOUT_SEC):
+                raise TimeoutError(f"{tag} stream still running after {STREAM_TIMEOUT_SEC}s")
         finally:
             q.stop()
     finally:
@@ -831,7 +832,6 @@ def _exactly_once_sink(
     adopt: bool = False,
     provenance: Callable[[DataFrame], set] = _batch_provenance,
     checkpoint_dir: str | None,
-    timeout_sec: int,
 ) -> None:
     """THE exactly-once commit protocol for every non-idempotent
     foreachBatch sink — the one place it lives. Per micro-batch:
@@ -879,7 +879,7 @@ def _exactly_once_sink(
             record["n_buckets"] = n_buckets
         _commit_target(stage, target_dir, batch_id, {**record, **fields})
 
-    _run_foreach_batch(stream, _apply, checkpoint_dir, tag, timeout_sec)
+    _run_foreach_batch(stream, _apply, checkpoint_dir, tag)
 
 
 def _committed_view(spark, target_dir: str) -> DataFrame | None:
@@ -931,7 +931,6 @@ def ivm_agg_foreach_batch(
     *,
     group_cols: list[str],
     partial_agg: Callable[[DataFrame], DataFrame],
-    timeout_sec: int = STREAM_TIMEOUT_SEC,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """TRUE incremental view maintenance over a stream: the target
@@ -972,7 +971,7 @@ def ivm_agg_foreach_batch(
 
     _exactly_once_sink(
         stream, target_dir, "ivm", _step,
-        checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec,
+        checkpoint_dir=checkpoint_dir,
     )
     return stream.sparkSession.read.parquet(target_dir)
 
@@ -986,7 +985,6 @@ def cdc_retraction_foreach_batch(
     group_cols: list[str],
     sum_cols: list[str],
     n_buckets: int = 64,
-    timeout_sec: int = STREAM_TIMEOUT_SEC,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """END-TO-END CDC with RETRACTIONS, no table format: the stream
@@ -1054,7 +1052,7 @@ def cdc_retraction_foreach_batch(
 
     _exactly_once_sink(
         snapshots, target_dir, "cdc", _step, n_buckets=n_buckets,
-        checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec,
+        checkpoint_dir=checkpoint_dir,
     )
     return snapshots.sparkSession.read.parquet(os.path.join(target_dir, "view"))
 
@@ -1112,7 +1110,6 @@ def _oplog_changes(
     op_col: str,
     seq_col: str,
     business: list[str],
-    prev_prefix: str,
     tag: str,
 ):
     """Before-image op-log changelog producer: one validation pass
@@ -1128,7 +1125,7 @@ def _oplog_changes(
         return None
     op = F.col(op_col)
     retract = batch_df.filter(op.isin("U", "D")).select(
-        *[F.col(f"{prev_prefix}{c}").alias(c) for c in business],
+        *[F.col(f"{PREV_PREFIX}{c}").alias(c) for c in business],
         F.lit(-1).alias("_sign"),
     )
     insert = batch_df.filter(op.isin("I", "U")).select(
@@ -1230,8 +1227,6 @@ def cdc_oplog_foreach_batch(
     seq_col: str,
     group_cols: list[str],
     sum_cols: list[str],
-    prev_prefix: str = "prev_",
-    timeout_sec: int = STREAM_TIMEOUT_SEC,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """TRUE-DELTA CDC: the stream carries an OPERATION LOG (the
@@ -1278,7 +1273,7 @@ def cdc_oplog_foreach_batch(
     def _step(batch_df: DataFrame, batch_id: int, meta: dict, stage: str):
         changes = _oplog_changes(
             batch_df, meta, op_col=op_col, seq_col=seq_col,
-            business=business, prev_prefix=prev_prefix, tag="cdc_oplog",
+            business=business, tag="cdc_oplog",
         )
         if changes is None:
             return None
@@ -1291,7 +1286,7 @@ def cdc_oplog_foreach_batch(
 
     _exactly_once_sink(
         oplog, target_dir, "cdc_oplog", _step,
-        checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec,
+        checkpoint_dir=checkpoint_dir,
     )
     return oplog.sparkSession.read.parquet(os.path.join(target_dir, "view"))
 
@@ -1581,7 +1576,6 @@ def cdc_tombstone_foreach_batch(
     group_cols: list[str],
     sum_cols: list[str],
     n_buckets: int = 64,
-    timeout_sec: int = STREAM_TIMEOUT_SEC,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """CDC from a changelog WITHOUT before-images — the Kafka
@@ -1640,7 +1634,7 @@ def cdc_tombstone_foreach_batch(
 
     _exactly_once_sink(
         oplog, target_dir, "cdc_tombstone", _step, n_buckets=n_buckets,
-        checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec,
+        checkpoint_dir=checkpoint_dir,
     )
     return oplog.sparkSession.read.parquet(os.path.join(target_dir, "view"))
 
@@ -1672,7 +1666,6 @@ def distinct_count_view_foreach_batch(
     group_col: str,
     value_col: str,
     n_buckets: int = 64,
-    timeout_sec: int = STREAM_TIMEOUT_SEC,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Streaming maintenance of a COUNT(DISTINCT) view — the
@@ -1732,7 +1725,7 @@ def distinct_count_view_foreach_batch(
 
     _exactly_once_sink(
         snapshots, target_dir, "distinct_count", _step, n_buckets=n_buckets,
-        checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec,
+        checkpoint_dir=checkpoint_dir,
     )
     return snapshots.sparkSession.read.parquet(os.path.join(target_dir, "view"))
 
@@ -1821,9 +1814,7 @@ def distinct_count_oplog_foreach_batch(
     seq_col: str,
     group_col: str,
     value_col: str,
-    prev_prefix: str = "prev_",
     n_buckets: int = 64,
-    timeout_sec: int = STREAM_TIMEOUT_SEC,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """TRUE-DELTA COUNT(DISTINCT) maintenance — the op-log input shape
@@ -1882,7 +1873,7 @@ def distinct_count_oplog_foreach_batch(
     def _step(batch_df: DataFrame, batch_id: int, meta: dict, stage: str):
         changes = _oplog_changes(
             batch_df, meta, op_col=op_col, seq_col=seq_col,
-            business=[group_col, value_col], prev_prefix=prev_prefix,
+            business=[group_col, value_col],
             tag="distinct_oplog",
         )
         if changes is None:
@@ -1896,7 +1887,7 @@ def distinct_count_oplog_foreach_batch(
 
     _exactly_once_sink(
         oplog, target_dir, "distinct_oplog", _step, n_buckets=n_buckets,
-        checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec,
+        checkpoint_dir=checkpoint_dir,
     )
     return oplog.sparkSession.read.parquet(os.path.join(target_dir, "view"))
 
@@ -1911,7 +1902,6 @@ def distinct_count_tombstone_foreach_batch(
     group_col: str,
     value_col: str,
     n_buckets: int = 64,
-    timeout_sec: int = STREAM_TIMEOUT_SEC,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """COUNT(DISTINCT) maintenance from a changelog WITHOUT
@@ -1969,7 +1959,7 @@ def distinct_count_tombstone_foreach_batch(
 
     _exactly_once_sink(
         oplog, target_dir, "distinct_tombstone", _step, n_buckets=n_buckets,
-        checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec,
+        checkpoint_dir=checkpoint_dir,
     )
     return oplog.sparkSession.read.parquet(os.path.join(target_dir, "view"))
 
@@ -2091,9 +2081,7 @@ def minmax_view_oplog_foreach_batch(
     seq_col: str,
     group_cols: list[str],
     value_col: str,
-    prev_prefix: str = "prev_",
     n_buckets: int = 64,
-    timeout_sec: int = STREAM_TIMEOUT_SEC,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Streaming MIN/MAX maintenance from a before-image op log — the
@@ -2149,7 +2137,7 @@ def minmax_view_oplog_foreach_batch(
         changes = _oplog_changes(
             batch_df, meta, op_col=op_col, seq_col=seq_col,
             business=list(group_cols) + [value_col],
-            prev_prefix=prev_prefix, tag="minmax_oplog",
+            tag="minmax_oplog",
         )
         if changes is None:
             return None
@@ -2162,7 +2150,7 @@ def minmax_view_oplog_foreach_batch(
 
     _exactly_once_sink(
         oplog, target_dir, "minmax_oplog", _step, n_buckets=n_buckets,
-        checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec,
+        checkpoint_dir=checkpoint_dir,
     )
     return oplog.sparkSession.read.parquet(os.path.join(target_dir, "view"))
 
@@ -2177,7 +2165,6 @@ def minmax_view_tombstone_foreach_batch(
     group_cols: list[str],
     value_col: str,
     n_buckets: int = 64,
-    timeout_sec: int = STREAM_TIMEOUT_SEC,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """MIN/MAX maintenance from a changelog WITHOUT before-images —
@@ -2234,7 +2221,7 @@ def minmax_view_tombstone_foreach_batch(
 
     _exactly_once_sink(
         oplog, target_dir, "minmax_tombstone", _step, n_buckets=n_buckets,
-        checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec,
+        checkpoint_dir=checkpoint_dir,
     )
     return oplog.sparkSession.read.parquet(os.path.join(target_dir, "view"))
 
@@ -2309,7 +2296,6 @@ def topk_view_tombstone_foreach_batch(
     value_col: str,
     k: int,
     n_buckets: int = 64,
-    timeout_sec: int = STREAM_TIMEOUT_SEC,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """TOP-K maintenance from a changelog WITHOUT before-images — the
@@ -2476,7 +2462,7 @@ def topk_view_tombstone_foreach_batch(
 
     _exactly_once_sink(
         oplog, target_dir, "topk_tombstone", _step, n_buckets=n_buckets,
-        checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec,
+        checkpoint_dir=checkpoint_dir,
     )
     out = read_store(oplog.sparkSession, target_dir, "view")
     if out is None:
@@ -2497,10 +2483,8 @@ def topk_view_oplog_foreach_batch(
     group_cols: list[str],
     value_col: str,
     k: int,
-    prev_prefix: str = "prev_",
     n_buckets: int = 64,
     verify_before_images: bool = True,
-    timeout_sec: int = STREAM_TIMEOUT_SEC,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Streaming TOP-K view maintenance from a before-image op log —
@@ -2563,7 +2547,7 @@ def topk_view_oplog_foreach_batch(
 
     def _prev(c: str):
         # a key column has no prev_ twin (keys are immutable within U)
-        return F.col(c) if c in key_cols else F.col(f"{prev_prefix}{c}")
+        return F.col(c) if c in key_cols else F.col(f"{PREV_PREFIX}{c}")
 
     prev_kb = F.pmod(F.hash(*[_prev(g) for g in group_cols]), F.lit(n_buckets))
 
@@ -2627,7 +2611,7 @@ def topk_view_oplog_foreach_batch(
                     *key_cols,
                     op,
                     _row_digest(
-                        [c if c in key_cols else f"{prev_prefix}{c}" for c in business]
+                        [c if c in key_cols else f"{PREV_PREFIX}{c}" for c in business]
                     ).alias("_prev_rh"),
                 )
                 .alias("fo")
@@ -2711,7 +2695,7 @@ def topk_view_oplog_foreach_batch(
 
     _exactly_once_sink(
         oplog, target_dir, "topk_oplog", _step, n_buckets=n_buckets,
-        checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec,
+        checkpoint_dir=checkpoint_dir,
     )
     out = read_store(oplog.sparkSession, target_dir, "view")
     if out is None:
@@ -2739,9 +2723,7 @@ def join_view_foreach_batch(
     group_cols: list[str],
     sum_cols: list[str],
     how: str = "inner",
-    null_group: str = "(none)",
     n_buckets: int = 64,
-    timeout_sec: int = STREAM_TIMEOUT_SEC,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Streaming maintenance of a JOIN view — ``cdc_retraction_foreach_batch``
@@ -2768,7 +2750,7 @@ def join_view_foreach_batch(
 
     ``how="left_outer"`` maintains γ(R ⟕ S) instead (requires
     ``s_join`` unique in S — the FK-dim regime): S-sourced group
-    columns take ``null_group`` for unmatched R rows, and each
+    columns take `NULL_GROUP` for unmatched R rows, and each
     version's delta gains the counting-problem terms (matching the
     batch twin ``catalog.evolve_q.ivm_outer_join_maintenance``):
     ΔR rows landing outside the NEW dim key set (sign kept, ∅-group),
@@ -2932,11 +2914,11 @@ def join_view_foreach_batch(
             terms = t1.unionByName(t2).unionByName(t3)
             if how == "left_outer":
                 # the counting-problem ∅-terms (see docstring): select
-                # against the R side, S-sourced group cols → null_group
+                # against the R side, S-sourced group cols → NULL_GROUP
                 def _null_pick(side: str, c: str) -> F.Column:
                     if c in r_cols:
                         return F.col(f"{side}.{c}").alias(c)
-                    return F.lit(null_group).alias(c)
+                    return F.lit(NULL_GROUP).alias(c)
 
                 if not dpi_s.has_image():  # bootstrap version without the dim
                     raise RuntimeError(
@@ -3002,7 +2984,7 @@ def join_view_foreach_batch(
 
     _exactly_once_sink(
         snapshots, target_dir, "join_view", _step, n_buckets=n_buckets,
-        checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec,
+        checkpoint_dir=checkpoint_dir,
     )
     return snapshots.sparkSession.read.parquet(os.path.join(target_dir, "view"))
 
@@ -3025,11 +3007,8 @@ def join_view_oplog_foreach_batch(
     group_cols: list[str],
     sum_cols: list[str],
     how: str = "inner",
-    null_group: str = "(none)",
-    prev_prefix: str = "prev_",
     n_buckets: int = 64,
     verify_before_images: bool = True,
-    timeout_sec: int = STREAM_TIMEOUT_SEC,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """TRUE-DELTA maintenance of a JOIN view — the composition of this
@@ -3090,7 +3069,7 @@ def join_view_oplog_foreach_batch(
     S's key — the FK-dim regime — and ``sum_cols ⊆ r_cols``): the
     Gupta–Mumick counting-problem terms are evaluated from the log
     with the same pruning discipline as everything else — ΔR rows
-    landing outside the batch-FINAL dim key set take ``null_group``
+    landing outside the batch-FINAL dim key set take `NULL_GROUP`
     (K₂ computed only on ΔR's buckets: pruned old keys ∖ batch
     deletes ∪ batch upserts), and R_old rows of dim keys whose net
     presence changed migrate in (+1, key left S) or out (−1, key
@@ -3168,7 +3147,7 @@ def join_view_oplog_foreach_batch(
             ops_df = ops_df.localCheckpoint(eager=True)  # feeds 4+ consumers
             retract = ops_df.filter(op.isin("U", "D")).select(
                 *keys,
-                *[F.col(f"{prev_prefix}{c}").alias(c) for c in cols],
+                *[F.col(f"{PREV_PREFIX}{c}").alias(c) for c in cols],
                 F.lit(-1).alias("_sign"),
             )
             insert = ops_df.filter(op.isin("I", "U")).select(
@@ -3196,7 +3175,7 @@ def join_view_oplog_foreach_batch(
         def _null_pick(side: str, c: str):
             if c in r_cols:
                 return F.col(f"{side}.{c}").alias(c)
-            return F.lit(null_group).alias(c)
+            return F.lit(NULL_GROUP).alias(c)
 
         def _buckets(delta, join_col):
             return [
@@ -3363,7 +3342,7 @@ def join_view_oplog_foreach_batch(
             prev_join = (
                 F.col(join_col)
                 if join_col in keys
-                else F.col(f"{prev_prefix}{join_col}")
+                else F.col(f"{PREV_PREFIX}{join_col}")
             )
             # Gate each side on the OP TYPE, not value nullability: an I
             # op has no before-image and a D op no after-image, so those
@@ -3407,7 +3386,7 @@ def join_view_oplog_foreach_batch(
                         *keys,
                         op,
                         _row_digest(
-                            [f"{prev_prefix}{c}" for c in cols]
+                            [f"{PREV_PREFIX}{c}" for c in cols]
                         ).alias("_prev_rh"),
                     )
                     .alias("fo")
@@ -3518,7 +3497,7 @@ def join_view_oplog_foreach_batch(
 
     _exactly_once_sink(
         oplog, target_dir, "join_view_oplog", _step, n_buckets=n_buckets,
-        checkpoint_dir=checkpoint_dir, timeout_sec=timeout_sec,
+        checkpoint_dir=checkpoint_dir,
     )
     return oplog.sparkSession.read.parquet(os.path.join(target_dir, "view"))
 
@@ -3740,7 +3719,6 @@ def incremental_dedup_runs(
     increments: "list[tuple[str, DataFrame]]",
     *,
     work_dir: str,
-    timeout_sec: int = STREAM_TIMEOUT_SEC,
 ) -> DataFrame:
     """Streaming nightly-ingest dedup: each (name, docs) increment is
     landed as files in a watched directory, processed by ONE
@@ -3844,15 +3822,5 @@ def incremental_dedup_runs(
             .option("recursiveFileLookup", "true")
             .parquet(landing)
         )
-        q = (
-            stream.writeStream.foreachBatch(apply)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            if not q.awaitTermination(timeout_sec):
-                raise TimeoutError(f"incremental dedup run {i} still running")
-        finally:
-            q.stop()
+        _run_foreach_batch(stream, apply, checkpoint, "incremental_dedup")
     return spark.read.parquet(audit_dir)

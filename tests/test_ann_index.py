@@ -1780,3 +1780,127 @@ def test_ivfpq_index_quality_report_matches_duckdb(spark):
         g.method, g.n_queries, g.n_answered, g.mrr, g.mean_ndcg
     ) == tuple(w)
     assert 0.0 <= g.mean_ndcg <= 1.0 and 0.0 <= g.mrr <= 1.0
+
+
+# ---- one CDC sink body: crash at every commit step, jobs per batch ---
+
+from tests.crash import COMMIT_POINTS, crash_commit_at  # noqa: E402
+
+
+def _mixed_change_batches(e):
+    """A bootstrap batch inserting two thirds of the corpus, then one
+    batch carrying inserts (the rest), an upsert cohort (landed ids
+    re-embedded as NEGATED vectors) and a delete cohort — the live
+    corpus after both is `_cdc_live_corpus`."""
+    landed = F.col("vec_id") % 3 != 2
+    return [
+        _as_ops(e.filter(landed), "I"),
+        _as_ops(e.filter(~landed), "I")
+        .union(_as_ops(
+            e.filter(landed & (F.col("vec_id") % 5 == 2)).withColumn(
+                "embedding", F.transform("embedding", lambda x: -x)
+            ),
+            "U",
+        ))
+        .union(_as_ops(e.filter(landed & (F.col("vec_id") % 5 == 4)), "D")),
+    ]
+
+
+def _job_ids_after(spark, after: int) -> list[int]:
+    sc = spark.sparkContext._jsc.sc()
+    sc.listenerBus().waitUntilEmpty()  # job events arrive asynchronously
+    jobs = sc.statusStore().jobsList(None)
+    return sorted(
+        j for j in (jobs.apply(i).jobId() for i in range(jobs.size()))
+        if j > after
+    )
+
+
+_CDC_RUNS = {"raw": _chg_run, "pq": _pq_chg_run}
+
+
+def _index_state(spark, target: str, form: str, e) -> tuple:
+    """What a committed CDC target answers: the serve set, the locator
+    rows and the tombstones."""
+    from epe_data_wrangling_spark.streaming.manifest import read_store
+
+    live = _cdc_live_corpus(e)
+    serve = (
+        _serve_set(spark, target, live) if form == "raw"
+        else _pq_cdc_serve(spark, target, live)
+    )
+    return (
+        serve,
+        sorted(map(tuple, read_store(spark, target, "locator").collect())),
+        sorted(map(tuple, read_store(spark, target, "tombs").collect())),
+    )
+
+
+@pytest.fixture(scope="module")
+def warm_cdc(spark, tmp_path_factory):
+    """Per index form: an uncrashed target after `_mixed_change_batches`,
+    its committed state (`_index_state`), and the Spark jobs its warm
+    second batch ran (status-store job ids)."""
+    _, e = _gens(spark)
+    out = {}
+    for form, run in _CDC_RUNS.items():
+        root = tmp_path_factory.mktemp(f"warm_{form}")
+        landing, target, ck = (str(root / d) for d in ("landing", "state", "ck"))
+        b0, b1 = _mixed_change_batches(e)
+        _land(b0, landing, "c1.parquet", 1)
+        run(spark, landing, target, ck)
+        _land(b1, landing, "c2.parquet", 2)
+        before = max(_job_ids_after(spark, -1), default=-1)
+        run(spark, landing, target, ck)
+        jobs = _job_ids_after(spark, before)
+        out[form] = (_index_state(spark, target, form, e), jobs)
+    return out
+
+
+@pytest.mark.parametrize(
+    "form,point",
+    [("raw", p) for p in COMMIT_POINTS] + [("pq", "between_renames")],
+)
+def test_ann_index_changes_crash_at_every_commit_step_recovers(
+    spark, tmp_path, monkeypatch, warm_cdc, form, point
+):
+    """The CDC index sink (one body for both forms) crashed at each
+    step of its commit — after the step wrote the stage, after the
+    meta write, between `_atomic_swap`'s two renames, and after
+    promotion but before the old dir's rmtree — on a batch carrying
+    inserts, an upsert and a delete, then restarted on the SAME
+    checkpoint: serve, the locator and the tombstones equal the
+    uncrashed run's, and no ``.stage-*``/``.old-*`` dir survives. The
+    PQ form shares the body, so one crash point covers it."""
+    import glob
+
+    _, e = _gens(spark)
+    run = _CDC_RUNS[form]
+    landing, target, ck = (str(tmp_path / d) for d in ("landing", "state", "ck"))
+    for i, b in enumerate(_mixed_change_batches(e), start=1):
+        _land(b, landing, f"c{i}.parquet", i)
+    crash_commit_at(monkeypatch, point, target, 1)
+    with pytest.raises(Exception, match="injected crash"):
+        run(spark, landing, target, ck)  # batch 0 commits, batch 1 crashes
+    monkeypatch.undo()
+    run(spark, landing, target, ck)  # restart: batch 1 re-applies (or skips)
+    assert not glob.glob(f"{glob.escape(target)}.stage-*")
+    assert not glob.glob(f"{glob.escape(target)}.old-*")
+    assert _index_state(spark, target, form, e) == warm_cdc[form][0]
+
+
+@pytest.mark.parametrize("form,n_jobs", [("raw", 39), ("pq", 43)])
+def test_ann_index_changes_warm_batch_job_count(warm_cdc, form, n_jobs):
+    """One warm CDC batch (inserts, an upsert and a delete onto a
+    bootstrapped target) runs a fixed number of Spark jobs, counted
+    from the status store: every job the stream submitted while
+    applying the batch — the provenance distinct, the op checkpoint
+    and its witnesses, the locator read and witnesses, the retire
+    checkpoint, count and divergence witness, the one-row-per-id
+    assignment checkpoint and its cell count, the store, tombstone
+    and locator pool writes (AQE map stages included), and the
+    broadcast exchanges, which run in the stream's job group here and
+    read the same on every run measured. The PQ form adds its own
+    jobs to the same body, its pq_m*pq_sub dimension witness among
+    them."""
+    assert len(warm_cdc[form][1]) == n_jobs, warm_cdc[form][1]
